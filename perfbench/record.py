@@ -1,13 +1,12 @@
 #!/usr/bin/env python3
 """Record the output digests a workload's runs are checked against.
 
-    python3 perfbench/record.py <workload> [checker]
+    python3 perfbench/record.py <workload>
 
 Builds the benchmark, generates the workload's input, and has the client
 write every op's output as parquet (the graft.Verify layout) next to its
-digest. The checker (default tools/check_oracle.py, which compares each
-output with its DuckDB twin from SparkEntry.oracleSql) then decides what is
-recorded in perfbench/digests/<workload>.tsv:
+digest. tools/check_oracle.py, which compares each output with its DuckDB
+twin from SparkEntry.oracleSql, then decides what is recorded in perfbench/digests/<workload>.tsv:
 
 * ``twin``: the output matched its DuckDB twin;
 * ``digest-only``: the op has no twin, or its twin timed out at this size
@@ -25,6 +24,7 @@ import sys
 import run
 
 OUT = os.path.join(run.DATA, "record")
+CHECKER = os.path.join(run.ROOT, "tools", "check_oracle.py")
 
 
 def record_once(workload: str, pairs: list, out: str) -> dict:
@@ -38,8 +38,6 @@ def record_once(workload: str, pairs: list, out: str) -> dict:
 
 def main() -> None:
     workload = sys.argv[1]
-    checker = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        run.ROOT, "tools", "check_oracle.py")
     spec = run.load_spec()
     run.build()
     pairs = run.op_dirs(spec, workload)
@@ -51,7 +49,7 @@ def main() -> None:
         out = os.path.join(OUT, workload, os.path.basename(data))
         first.update(record_once(workload, group, out + "-a"))
         second.update(record_once(workload, group, out + "-b"))
-        res = subprocess.run([sys.executable, checker, out + "-a", data],
+        res = subprocess.run([sys.executable, CHECKER, out + "-a", data],
                              capture_output=True, text=True, env=env)
         for line in res.stdout.splitlines():
             word, _, rest = line.partition(" ")

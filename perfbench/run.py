@@ -134,8 +134,12 @@ def java_cmd(args: list, work: str) -> list:
     jars = os.path.join(spark_home(), "jars", "*")
     opens = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in ADD_OPENS]
     return (["java", "-cp", f"{CLASSES}:{jars}"] + opens + [
-        # a fixed heap: no resizing inside the timed window
-        "-Xms2g", "-Xmx2g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+        # a fixed heap: no resizing inside the timed window; the parallel
+        # collector runs no concurrent GC threads beside the timed ops
+        "-Xms2g", "-Xmx2g", "-XX:+UseParallelGC",
+        # room for Spark's and graft's classes from the start: no full
+        # collections for metaspace growth during set-up
+        "-XX:MetaspaceSize=512m", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         f"-Djava.io.tmpdir={work}/tmp",
         # no hsperfdata file outside the checkout
         "-XX:-UsePerfData",
@@ -183,11 +187,12 @@ def pass_s(op_s: dict) -> float:
 
 
 def e2e_metrics(rec: dict) -> dict:
-    ops = [t for ts in rec["op_s"].values() for t in ts]
     return {
         "setup_s": rec["setup_s"],
         "wall_s": pass_s(rec["op_s"]),
-        "op_p50_s": median(ops),
+        # the median op, each op at its median time: with few ops of very
+        # different cost, the median of all samples would jump between ops
+        "op_p50_s": median([median(ts) for ts in rec["op_s"].values()]),
     }
 
 
@@ -198,6 +203,7 @@ def layer_metrics(rec: dict, names: list, workload: str, spec: dict) -> dict:
     eff = median([p.get("plans.rule_effective", 0.0) for p in passes])
     m["plans.rule_effective_ratio"] = eff / runs if runs else 0.0
     m["heap_peak_mb"] = rec["heap_peak_mb"]
+    # traced and untraced passes alternate within one window
     untraced, traced = pass_s(rec["op_s"]), pass_s(rec["traced_op_s"])
     m["trace.overhead_frac"] = traced / untraced - 1.0 if untraced else 0.0
     spans = rec.get("spans") or {}
@@ -257,6 +263,8 @@ def main() -> None:
                                 "n": tl[2]}
     e2e = e2e_metrics(rec)
     summary.update(e2e)
+    if rec.get("spans_match") is not None:
+        summary["spans_match_flagshipLabels"] = rec["spans_match"]
 
     if a.trace:
         names = [m["name"] for m in bench["per_layer"]]

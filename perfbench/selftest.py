@@ -1,18 +1,21 @@
 #!/usr/bin/env python3
 """Self-test of the benchmark at sf0.001.
 
-    python3 perfbench/selftest.py [workload]
+    python3 perfbench/selftest.py
 
 On a tiny generated input (its own directory under benchdata/perfbench/)
-it records the workload's digests, then runs perfbench/run.py three times
-and checks that
+it records every workload's digests, runs
+perfbench/run.py with --trace 0 and --trace 1 on each, and checks that
 
 * the last line of every run parses as JSON with exactly the keys
   correct / attempted / failed / metrics;
 * --trace 0 emits every end_to_end metric of BENCHMARK.json and --trace 1
   every per_layer metric, each with its unit and a numeric value;
-* with the recorded digests no op fails, and with one digest deliberately
-  wrong exactly that op's checks fail and the run reports correct=false.
+* with the recorded digests no op fails;
+* where the workload has the flagship op, the traced run's stage spans
+  label the documents exactly as SparkEntry.flagshipLabels does;
+* with one digest deliberately wrong (first workload only) exactly that
+  op's checks fail and the run reports correct=false.
 
 Exits 0 when every check holds, 1 otherwise.
 """
@@ -27,24 +30,39 @@ import run
 SF = 0.001
 
 
-def last_json(cmd: list) -> dict:
+def last_json(cmd: list) -> tuple:
+    """The run's result line, and its summary line (the one before)."""
     out = subprocess.run(cmd, cwd=run.ROOT, capture_output=True, text=True,
                          timeout=200)
     lines = out.stdout.strip().splitlines()
-    if out.returncode != 0 or not lines:
+    if out.returncode != 0 or len(lines) < 2:
         raise AssertionError(f"{cmd} exited {out.returncode}: {out.stderr[-800:]}")
-    return json.loads(lines[-1])
+    return json.loads(lines[-1]), json.loads(lines[-2])
 
 
 def main() -> None:
-    workload = sys.argv[1] if len(sys.argv) > 1 else "eda-stream"
     spec = run.load_spec()
+    workloads = sorted(spec["workloads"])
     bench = json.load(open(os.path.join(run.ROOT, "BENCHMARK.json")))
     run.build()
     data = os.path.join(run.DATA, "selftest")
     if not os.path.exists(os.path.join(data, "stats.json")):
         gen_data.generate(data, SF)
-    out = os.path.join(run.DATA, "selftest-record")
+    problems = []
+
+    def check(cond: bool, what: str) -> None:
+        print(("ok   " if cond else "FAIL ") + what)
+        if not cond:
+            problems.append(what)
+
+    for i, workload in enumerate(workloads):
+        selftest(workload, spec, bench, data, check, wrong_digest=i == 0)
+    sys.exit(1 if problems else 0)
+
+
+def selftest(workload: str, spec: dict, bench: dict, data: str, check,
+             wrong_digest: bool) -> None:
+    out = os.path.join(run.DATA, "selftest-record", workload)
     work = os.path.join(run.DATA, "selftest-run")
     run.run_jvm(["--workload", workload, "--ops", run.ops_arg(run.op_dirs(spec, workload, data)),
                  "--seed", "0", "--seconds", "0", "--cores", str(run.cores()),
@@ -58,30 +76,29 @@ def main() -> None:
 
     base = [sys.executable, os.path.join(run.HERE, "run.py"), "--workload", workload,
             "--seed", "7", "--seconds", "1", "--data", data]
-    problems = []
-
-    def check(cond: bool, what: str) -> None:
-        print(("ok   " if cond else "FAIL ") + what)
-        if not cond:
-            problems.append(what)
+    flagship = "m_flagship_shape" in spec["workloads"][workload]["ops"]
 
     for trace, kind in ((0, "end_to_end"), (1, "per_layer")):
-        r = last_json(base + ["--trace", str(trace), "--digests", good])
+        r, summary = last_json(base + ["--trace", str(trace), "--digests", good])
+        what = f"{workload} trace {trace}"
         check(set(r) == {"correct", "attempted", "failed", "metrics"},
-              f"trace {trace}: result keys")
+              f"{what}: result keys")
         want = {m["name"]: m["unit"] for m in bench[kind]}
         got = r["metrics"]
-        check(set(got) == set(want), f"trace {trace}: every {kind} metric emitted")
+        check(set(got) == set(want), f"{what}: every {kind} metric emitted")
         check(all(got[n]["unit"] == u and isinstance(got[n]["value"], (int, float))
                   for n, u in want.items() if n in got),
-              f"trace {trace}: units and numeric values")
+              f"{what}: units and numeric values")
         check(r["correct"] and r["failed"] == 0 and r["attempted"] > 0,
-              f"trace {trace}: recorded digests pass ({r['failed']} failed)")
+              f"{what}: recorded digests pass ({r['failed']} failed)")
+        if trace and flagship:
+            check(summary.get("spans_match_flagshipLabels") is True,
+                  f"{what}: span labels equal flagshipLabels' labels")
 
-    r = last_json(base + ["--trace", "0", "--digests", bad])
-    check(not r["correct"] and r["failed"] == 1,
-          f"wrong digest for {victim}: {r['failed']} failed ops, expected 1")
-    sys.exit(1 if problems else 0)
+    if wrong_digest:
+        r, _ = last_json(base + ["--trace", "0", "--digests", bad])
+        check(not r["correct"] and r["failed"] == 1,
+              f"wrong digest for {victim}: {r['failed']} failed ops, expected 1")
 
 
 if __name__ == "__main__":

@@ -13,13 +13,25 @@ import graft.text.Clean
   * default caps) and `m7_m9_cluster_pipeline` use them, each stage
   * materialized before the next starts so its time is its own:
   * clean+tokenize → word2vec → sentence2vec → kNN curve → Kneedle ε →
-  * DBSCAN → cluster stats, and TF-IDF → KMeans.
+  * DBSCAN → cluster stats, and TF-IDF → KMeans. The caps and seeds
+  * restate flagshipLabels' defaults; the client checks every traced run's
+  * labels against flagshipLabels itself, so a change there that this copy
+  * misses fails the run.
   */
 object Flagship {
   private val CurveCap = 2000L
   private val FitCap = 20000L
 
-  def spans(spark: SparkSession, dir: String): Map[String, Double] = {
+  /** The documents as `m_flagship_shape` feeds them to flagshipLabels:
+    * hash-partitioned on doc_id, sorted within partitions. */
+  def docs(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id", "text")
+      .repartition(8, col("doc_id")).sortWithinPartitions("doc_id")
+
+  /** The stage spans, and the labeled documents (doc_id, text, label)
+    * the chain produced. */
+  def spans(spark: SparkSession, dir: String): (Map[String, Double], DataFrame) = {
     val out = mutable.LinkedHashMap.empty[String, Double]
     def span[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
@@ -27,9 +39,7 @@ object Flagship {
       out(name) = (System.nanoTime() - t0) / 1e9
       r
     }
-    val docs0 = spark.read.parquet(s"$dir/documents.parquet")
-      .select("doc_id", "text")
-      .repartition(8, col("doc_id")).sortWithinPartitions("doc_id")
+    val docs0 = docs(spark, dir)
 
     val (toks, n0) = span("text.clean_tokenize_s") {
       val docs = docs0.select(col("doc_id"), Clean.cleanMessage(col("text")).as("text"))
@@ -80,7 +90,7 @@ object Flagship {
       materialize(TextPipeline.clusterDocuments(docs0, "text", k = 5, nInit = 1)
         .groupBy("cluster").agg(count(lit(1)).as("n_docs")))
     }
-    out.toMap
+    (out.toMap, labeled)
   }
 
   private def materialize(df: DataFrame): Unit =

@@ -20,19 +20,22 @@ import graft.SparkEntry
   * (session start with graft's extensions, then one pass that checks every
   * op's output digest), [[WarmupPasses]] untimed passes that let the JIT
   * reach steady state, and then timed passes, which write to the noop
-  * sink. With --trace 1 the timed window is split: untraced
-  * passes first, then passes with the listeners of [[Trace]] registered.
+  * sink. With --trace 1 the timed passes alternate between untraced ones
+  * and ones with the listeners of [[Trace]] registered (in the order
+  * U T T U, repeated), so both sides see the same JIT state; on a
+  * workload with the flagship op a span pass ([[Flagship]]) follows.
   * The run prints one JSON line of raw samples; perfbench/run.py turns it
   * into the reported metrics. --record OUT instead dumps every op's output
   * as parquet (the graft.Verify layout, with oracle_sql.json) next to its
   * digest, for recording digests against the DuckDB twins.
   */
 object Main {
-  /** Untimed passes between set-up and timing, while the JIT compiles
-    * Spark's planning and scheduling paths and graft's kernels: per-pass
-    * time falls steeply over the first passes after the checked one. More
-    * would settle further but not fit the run-time budget. */
-  val WarmupPasses = 2
+  /** Untimed passes between set-up and timing, on top of the checked one,
+    * while the JIT compiles Spark's planning and scheduling paths and
+    * graft's kernels. Per-pass time keeps falling slowly for a minute or
+    * more; within a fixed run-time budget every extra warm-up pass is one
+    * timed pass fewer, and timed passes are what average out host noise. */
+  val WarmupPasses = 1
 
   final case class Failure(op: String, phase: String, error: String)
 
@@ -55,7 +58,8 @@ object Main {
 
     val failures = mutable.ArrayBuffer.empty[Failure]
     var attempted = 0
-    // traced passes: the body's own analysis never reaches a listener
+    // set during traced passes: the body's own analysis never reaches a
+    // listener, so runOp records it
     var trace: Option[Trace] = None
     val rng = new scala.util.Random(seed)
 
@@ -123,53 +127,73 @@ object Main {
       case None =>
     }
 
+    def log(msg: String): Unit = System.err.println(s"perfbench: $msg")
     val t0 = System.nanoTime()
     val spark = session()
+    log(f"session up after ${(System.nanoTime() - t0) / 1e9}%.2f s")
     checkPass(spark)
     val setupS = (System.nanoTime() - t0) / 1e9
+    log(f"set-up took $setupS%.2f s")
     val heap = new HeapSampler()
     val opTimes = mutable.ArrayBuffer.empty[(String, Double)]
     val tracedOpTimes = mutable.ArrayBuffer.empty[(String, Double)]
     val layers = mutable.ArrayBuffer.empty[Map[String, Double]]
     var spans = Map.empty[String, Double]
+    var spansMatch: Option[Boolean] = None
 
     /** Passes until the next one would end past the budget, but never
-      * fewer than `minPasses`: whole passes keep every op in each one. */
-    def timedPasses(budgetS: Double, minPasses: Int): Unit = {
+      * fewer than `minPasses`: whole passes keep every op in each one.
+      * With `tr`, passes 1 and 2 of every four run with its listeners
+      * registered, for that pass only. */
+    def timedPasses(budgetS: Double, minPasses: Int, tr: Option[Trace]): Unit = {
       val start = System.nanoTime()
       val walls = mutable.ArrayBuffer.empty[Double]
       def elapsed = (System.nanoTime() - start) / 1e9
       while (walls.size < minPasses || elapsed + Stats.median(walls.toSeq) <= budgetS) {
+        trace = tr.filter(_ => walls.size % 4 == 1 || walls.size % 4 == 2)
+        trace.foreach(_.register(spark))
         val t0 = System.nanoTime()
         var bodyS = 0.0
         for (op <- rng.shuffle(ops); (b, t) <- runOp(spark, op, "timed")(noop)) {
           bodyS += b
           (if (trace.isEmpty) opTimes else tracedOpTimes) += op -> t
         }
+        val wall = (System.nanoTime() - t0) / 1e9
         trace.foreach { tr =>
           PerfbenchBus.drain(spark.sparkContext)
+          tr.unregister(spark)
           tr.add("SparkEntry.body_s", bodyS)
-          layers += tr.snapshot((System.nanoTime() - t0) / 1e9)
+          layers += tr.snapshot(wall)
         }
-        walls += (System.nanoTime() - t0) / 1e9
+        trace = None
+        walls += wall
       }
     }
 
-    for (_ <- 1 to WarmupPasses; op <- rng.shuffle(ops)) runOp(spark, op, "warm-up")(noop)
+    // a traced run reports no set-up time, so it warms up one pass longer:
+    // its first untraced pass then no longer sits on the steep part of
+    // the warm-up curve, which would bias trace.overhead_frac
+    val warmup = WarmupPasses + (if (traced) 1 else 0)
+    for (_ <- 1 to warmup; op <- rng.shuffle(ops)) runOp(spark, op, "warm-up")(noop)
+    log(f"warm-up done after ${(System.nanoTime() - t0) / 1e9}%.2f s")
     heap.start()
-    if (!traced) timedPasses(seconds, minPasses = 3)
+    if (!traced) timedPasses(seconds, minPasses = 3, None)
     else {
-      timedPasses(seconds / 2, minPasses = 2)
-      // Spark records call sites 20 frames deep by default; traced jobs
-      // need the whole stack to reach their innermost graft frame
-      System.setProperty("spark.callstack.depth", "400")
-      val tr = new Trace(cores)
-      tr.register(spark)
-      trace = Some(tr)
-      timedPasses(seconds / 2, minPasses = 2)
-      trace = None
-      for (d <- dir.get("m_flagship_shape")) spans = Flagship.spans(spark, d)
+      timedPasses(seconds, minPasses = 4, Some(new Trace(cores)))
+      for (d <- dir.get("m_flagship_shape")) {
+        val (s, labeled) = Flagship.spans(spark, d)
+        spans = s
+        // the spans re-run flagshipLabels' stages one by one: they must
+        // still label every document as flagshipLabels itself does
+        val want = Digest.of(graft.PerfbenchAccess.flagshipLabels(Flagship.docs(spark, d)))
+        val got = Digest.of(labeled)
+        spansMatch = Some(want == got)
+        attempted += 1
+        if (want != got) failures += Failure("m_flagship_shape", "spans",
+          s"span labels digest $got != flagshipLabels digest $want")
+      }
     }
+    log(f"timed passes done after ${(System.nanoTime() - t0) / 1e9}%.2f s")
     heap.finish()
     spark.stop()
 
@@ -188,7 +212,8 @@ object Main {
       "heap_peak_mb" -> j.num(heap.peakMb),
       "layers" -> j.arr(layers.toSeq.map(l => j.obj(
         l.toSeq.sortBy(_._1).map { case (k, v) => k -> j.num(v) }: _*))),
-      "spans" -> j.obj(spans.toSeq.map { case (k, v) => k -> j.num(v) }: _*)))
+      "spans" -> j.obj(spans.toSeq.map { case (k, v) => k -> j.num(v) }: _*),
+      "spans_match" -> spansMatch.map(_.toString).getOrElse("null")))
   }
 
   private def byOp(times: Seq[(String, Double)]): String =
@@ -242,23 +267,33 @@ object Digest {
   }
 }
 
-/** Peak driver heap live after garbage collection while the timed passes
-  * run: the sum over heap pools of their usage after each pool's latest
-  * collection, sampled every 10 ms. Instantaneous usage would mostly
+/** Peak driver heap in use after garbage collection while the timed
+  * passes run: the heap pools' usage right after each collection, from
+  * the collectors' notifications. Instantaneous usage would mostly
   * measure how full the young generation happened to be. */
-final class HeapSampler extends Thread("perfbench-heap") {
-  setDaemon(true)
-  @volatile private var running = true
+final class HeapSampler {
+  import java.lang.management.{ManagementFactory, MemoryType}
+  import javax.management.{Notification, NotificationEmitter, NotificationListener}
+  import javax.management.openmbean.CompositeData
+  import com.sun.management.GarbageCollectionNotificationInfo
+  import scala.jdk.CollectionConverters._
+
   @volatile var peakMb = 0.0
-  private val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-    .toArray(Array.empty[java.lang.management.MemoryPoolMXBean])
-    .filter(_.getType == java.lang.management.MemoryType.HEAP)
-  override def run(): Unit = while (running) {
-    val live = pools.map(p => Option(p.getCollectionUsage).map(_.getUsed).getOrElse(0L)).sum
-    peakMb = math.max(peakMb, live / (1024.0 * 1024.0))
-    Thread.sleep(10)
+  private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+  private val emitters = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    .collect { case e: NotificationEmitter => e }
+  private val listener = new NotificationListener {
+    override def handleNotification(n: Notification, handback: AnyRef): Unit =
+      if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+        val after = GarbageCollectionNotificationInfo
+          .from(n.getUserData.asInstanceOf[CompositeData]).getGcInfo.getMemoryUsageAfterGc
+        val used = after.asScala.collect { case (p, u) if heapPools(p) => u.getUsed }.sum
+        peakMb = math.max(peakMb, used / (1024.0 * 1024.0))
+      }
   }
-  def finish(): Unit = { running = false; join() }
+  def start(): Unit = emitters.foreach(_.addNotificationListener(listener, null, null))
+  def finish(): Unit = emitters.foreach(_.removeNotificationListener(listener))
 }
 
 /** Minimal JSON writer: strings are escaped, numbers pass through. */

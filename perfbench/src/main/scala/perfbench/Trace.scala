@@ -152,6 +152,12 @@ final class Trace(cores: Int) {
     spark.listenerManager.register(queries)
     spark.streams.addListener(streams)
   }
+
+  def unregister(spark: SparkSession): Unit = {
+    spark.sparkContext.removeSparkListener(jobs)
+    spark.listenerManager.unregister(queries)
+    spark.streams.removeListener(streams)
+  }
 }
 
 object Trace {
