@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.Util.jsonString
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Failures are reported per-query (ok:false) and are
@@ -121,12 +122,13 @@ object Bench {
       loadEnd: Double, loadWaited: Int, contended: Boolean, anchor: String,
       idleRetries: Int, gatePayer: String): String =
     s"""{"metric":"total_ok","value":$total,"unit":"sec","n_ok":$nOk,""" +
-      s""""n_fail":$nFail,"sf":"$sfDir","sweep":"$sweepNote",""" +
-      s""""escalated":$escalated,"action":"$Action","load_start":$loadStart,""" +
+      s""""n_fail":$nFail,"sf":${jsonString(sfDir)},""" +
+      s""""sweep":${jsonString(sweepNote)},"escalated":$escalated,""" +
+      s""""action":${jsonString(Action)},"load_start":$loadStart,""" +
       s""""load_end":$loadEnd,"load_waited_s":$loadWaited,""" +
-      s""""contended":$contended,"anchor":"$anchor",""" +
-      s""""idle_retries":$idleRetries,"gate_payer":"$gatePayer",""" +
-      s""""value_end":$total}"""
+      s""""contended":$contended,"anchor":${jsonString(anchor)},""" +
+      s""""idle_retries":$idleRetries,""" +
+      s""""gate_payer":${jsonString(gatePayer)},"value_end":$total}"""
 
   /** The newest BENCH_r*.json strictly older than the in-flight round, so a
     * re-run inside a round that already wrote its own BENCH file never
@@ -203,8 +205,8 @@ object Bench {
       if (!hist.exists()) Seq.empty
       else scala.util.Using(scala.io.Source.fromFile(hist)) { src =>
         src.getLines()
-          .filter(l => l.contains("\"sf\":\"" + sfDir + "\"") &&
-            l.contains("\"action\":\"" + Action + "\""))
+          .filter(l => l.contains("\"sf\":" + jsonString(sfDir)) &&
+            l.contains("\"action\":" + jsonString(Action)))
           .map(parsePrevTimes).toSeq
       }.getOrElse(Seq.empty)
     }
@@ -238,8 +240,8 @@ object Bench {
       if (!hist.exists()) None
       else scala.util.Using(scala.io.Source.fromFile(hist)) { src =>
         val marks = src.getLines()
-          .filter(l => l.contains("\"sf\":\"" + sfDir + "\"") &&
-            l.contains("\"action\":\"" + Action + "\""))
+          .filter(l => l.contains("\"sf\":" + jsonString(sfDir)) &&
+            l.contains("\"action\":" + jsonString(Action)))
           .flatMap(l => "\"load_(?:start|end)\":([0-9.]+)".r
             .findAllMatchIn(l).map(_.group(1).toDouble))
           .toSeq
@@ -467,7 +469,7 @@ object Bench {
         f"$name=${t / sessionMedian(name)}%.2fx"
     }.mkString(",")
     val qs = shipped.map { case (k, v, ok) =>
-      "\"" + k + "\":" + (if (ok) f"$v%.3f" else "null")
+      jsonString(k) + ":" + (if (ok) f"$v%.3f" else "null")
     }.mkString("{", ",", "}")
     val okTimes = shipped.collect { case (_, v, true) => v }
     val total = okTimes.sum
@@ -504,7 +506,7 @@ object Bench {
     val anchorRatio = ratioOf(shipped)
     val contended = anchorRatio.exists(_ > 1.05)
     val anchor = anchorRatio.map(r => f"$r%.3f").getOrElse("none")
-    val line = s"""{"metric":"total_ok","value":$total,"unit":"sec","queries":$qs,"n_ok":${okTimes.size},"n_fail":$nFail,"sf":"$sfDir","sweep":"$sweepNote","escalated":$escalated,"action":"$Action","load_start":$loadStart,"load_end":$loadEnd,"load_waited_s":$loadWaited,"contended":$contended,"anchor":"$anchor","idle_retries":$idleRetries,"gate_payer":"$gatePayer","value_end":$total}"""
+    val line = s"""{"metric":"total_ok","value":$total,"unit":"sec","queries":$qs,"n_ok":${okTimes.size},"n_fail":$nFail,"sf":${jsonString(sfDir)},"sweep":${jsonString(sweepNote)},"escalated":$escalated,"action":${jsonString(Action)},"load_start":$loadStart,"load_end":$loadEnd,"load_waited_s":$loadWaited,"contended":$contended,"anchor":${jsonString(anchor)},"idle_retries":$idleRetries,"gate_payer":${jsonString(gatePayer)},"value_end":$total}"""
     println(line)
     // compact headline-only final line — survives the driver's ~2 KB
     // stdout-tail capture, which the full line above has overflowed since

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.core.Util.jsonString
 
 /** Dev harness: dump ONE query's result + its oracle SQL in the Verify
   * layout, so `tools/check_oracle.py <out> <sfDir>` can gate a single
@@ -12,17 +13,8 @@ object One {
     SparkEntry.queries(name)(spark, sfDir)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     val sql = SparkEntry.oracleSql.get(name)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      sql.map(s => s"{${q(name)}: ${q(s)}}").getOrElse("{}"))
+      sql.map(s => s"{${jsonString(name)}: ${jsonString(s)}}").getOrElse("{}"))
     spark.stop()
   }
 }

@@ -704,34 +704,30 @@ object PlanAudit {
         (_.contains("rangepartitioning"))))(
       SparkEntry.queries("j7e_keyed_range_agg")(spark, dir))
 
-    // r18: exact min/max-in-range must plan the predecessor scans —
-    // two RangeExtrema execs (max + negated min) over range exchanges;
-    // the only joins are the 1:1 stitch of the two q-row AGGREGATES
-    // (and the NaN re-attach), never a join touching the point stream.
-    // The tree check walks the executed plan: no join node may have a
-    // RangeExtrema-free subtree containing a parquet scan of points on
-    // BOTH sides — cheaper proxy: every join in the plan sits ABOVE
-    // both extrema aggregates, so the string between the first scan
-    // and the first RangeExtrema contains no join node.
-    audit("j7f_range_extrema (join-free predecessor scans)", Seq(
-      "RangeExtrema exec planned" -> (_.contains("RangeExtrema")),
-      "two extrema scans (max + negated min)" ->
-        (p => "RangeExtrema".r.findAllIn(p).size >= 2),
-      "range exchanges feed the scans" -> (_.contains("rangepartitioning")),
+    // exact min/max-in-range is the value-extrema scan with f = pt:
+    // ONE RangeValueExtrema exec over ONE range exchange answers min
+    // AND max; the only join is the NaN re-attach stitch (absent on
+    // this fixture), never a nested loop. Formatted explain names a
+    // node twice (tree line + detail header), so the count reads the
+    // numbered detail headers.
+    def valueScans(p: String): Int =
+      "\\(\\d+\\) RangeValueExtrema".r.findAllIn(p).size
+    audit("j7f_range_extrema (one join-free value scan)", Seq(
+      "exactly one RangeValueExtrema scan" -> (p => valueScans(p) == 1),
+      "range exchange feeds the scan" -> (_.contains("rangepartitioning")),
       "no nested loop / cartesian anywhere" ->
         (p => !p.contains("BroadcastNestedLoopJoin") &&
           !p.contains("CartesianProduct"))))(
       SparkEntry.queries("j7f_range_extrema")(spark, dir))
 
-    // r18: KEYED extrema — the equi key must lead the predecessor
-    // scans' range sort (per-key runs contiguous; the exec carries the
-    // last point's key), and the NaN re-attach is a per-key semi join,
-    // never a nested loop
-    audit("j7g_keyed_extrema (keyed predecessor scans)", Seq(
-      "two RangeExtrema scans planned" ->
-        (p => "RangeExtrema".r.findAllIn(p).size >= 2),
-      "equi key leads the range sort" -> (_.contains("_graft_k0")),
-      "range exchanges feed the scans" -> (_.contains("rangepartitioning")),
+    // KEYED extrema — the same single scan with the equi key leading
+    // its range sort (per-key runs contiguous); the NaN re-attach is a
+    // per-key aggregate join, never a nested loop
+    audit("j7g_keyed_extrema (one keyed value scan)", Seq(
+      "exactly one RangeValueExtrema scan" -> (p => valueScans(p) == 1),
+      "equi key leads the range sort" ->
+        (p => "rangepartitioning\\(_graft_k0".r.findFirstIn(p).isDefined),
+      "range exchange feeds the scan" -> (_.contains("rangepartitioning")),
       "no nested loop / cartesian anywhere" ->
         (p => !p.contains("BroadcastNestedLoopJoin") &&
           !p.contains("CartesianProduct"))))(
@@ -905,8 +901,9 @@ object PlanAudit {
 
     // r13 cost-based gating: in the default `auto` mode the rewrite
     // must fire on the stats-proven win regime (quadratic kernel ×
-    // high dup factor × long keys) and decline the Scale9-measured
-    // loss regimes (cheap kernel; near-unique key) — both directions
+    // high dup factor × long keys) and decline the measured loss
+    // regimes of PLANS.md calibration `dedupc` (cheap kernel;
+    // near-unique key) — both directions
     // checked on ANALYZE'd fixtures with cbo on, no conf force
     locally {
       import org.apache.spark.sql.functions.{call_function, col, lit}

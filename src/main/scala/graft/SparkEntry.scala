@@ -1094,7 +1094,8 @@ object SparkEntry {
     // `auto` mode must fire from Catalyst column statistics alone
     // (ANALYZE'd catalog table, cbo scoped on): 10k rows over 10
     // distinct ~1.2KB texts × the quadratic difflib kernel clears the
-    // Scale9-calibrated break-even ((n−d)·0.25·len² ≈ 3.7 s > 1.2 s).
+    // break-even of PLANS.md calibration `dedupc` ((n−d)·0.25·len² ≈
+    // 3.7 s > 1.2 s).
     // The fixture is built so the ratio has a CLOSED FORM the twin
     // re-derives exactly: the 1000-char reference "w "×500 is a prefix
     // of every text_g = "w " × (500+25g), so difflib matches = 1000
@@ -2397,7 +2398,7 @@ object SparkEntry {
     // 8 slices of 8 bits keyed on all C(8,2)=28 slice-PAIRS (16-bit
     // buckets): pigeonhole still guarantees FULL recall at hamming<=6
     // (>=2 clean slices exist). KEPT at the fixed keying after the r14
-    // ladder measurement (Scale9 `simhashq` hit decomposition): widening
+    // ladder measurement (PLANS.md calibration `simhashq`): widening
     // to (9,3) — 32x the key space — cut false candidate hits only 22%
     // (25.9M -> 20.1M at sf1) while tripling the explode fan-out and
     // DOUBLING wall time (9.7 -> 19.2 s), because the candidate mass is
@@ -2577,8 +2578,8 @@ object SparkEntry {
       // k ∝ n off-fixture (n/k ≈ 1000, the published SemDeDup cell
       // sizing): with FIXED k the per-cell pair work grows n²/k —
       // measured ×9.4 super-linear at ×10→×100 (161 s at sf10) vs
-      // 32 s with k∝n (Scale9 `semdedupk`, r14). The fixture arm keeps
-      // k=16 so the sf0.01 golden hash is untouched; at sf0.1
+      // 32 s with k∝n (PLANS.md calibration `semdedup`). The fixture
+      // arm keeps k=16 so the sf0.01 golden hash is untouched; at sf0.1
       // (2000 vecs) the formula still yields 16, so that scale's
       // behavior is unchanged too.
       val kCells =

@@ -3,8 +3,8 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Small shared utilities that had started to be re-derived inline
-  * (r12 review): conf scoping, filesystem recursive delete, and the
-  * shuffle-write meter used by scale measurements and specs.
+  * (r12 review): conf scoping, JSON string escaping, filesystem
+  * recursive delete, and the shuffle-write meter used by specs.
   */
 object Util {
 
@@ -20,6 +20,19 @@ object Util {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** `s` as a JSON string literal: quote, backslash and ALL control
+    * chars (< 0x20) escaped — a tab or CR in query SQL or a data path
+    * would otherwise make a strict JSON reader reject the record. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Recursive delete; closes the walk stream (a bare Files.walk holds
     * a directory fd until GC). No-op when the path doesn't exist. */

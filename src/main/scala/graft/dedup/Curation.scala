@@ -537,7 +537,7 @@ object Curation {
     * the threshold passes each re-execute the score's lineage (~5 pruned
     * scans), so an expensive kernel upstream is paid ~6×. Measured at
     * ×100 local: 12.8 s recomputing a kernel score vs 1.7 s with the
-    * score persisted (Scale9 / PLANS.md). */
+    * score persisted (PLANS.md calibration `pctl`). */
   def percentileFilter(df: DataFrame, scoreCol: String, pct: Double,
                        keepUpper: Boolean = true): DataFrame = {
     require(pct > 0 && pct < 1, s"pct must be in (0,1), got $pct")

@@ -337,8 +337,8 @@ object Dedup {
     * bits uncovered — harmless for recall (an uncovered flipped bit
     * dirties NO slice).
     *
-    * WHEN TO USE (r14 measurement, Scale9 `simhashq` hit
-    * decomposition): wider keys prune RANDOM key-space collisions, not
+    * WHEN TO USE (r14 measurement, PLANS.md calibration `simhashq`
+    * hit decomposition): wider keys prune RANDOM key-space collisions, not
     * near-threshold pairs that share whole slices. On the
     * duplication-heavy sf1 corpus (9,3) cut false candidate hits only
     * 22% while tripling explode fan-out — a net wall-time LOSS — so the
@@ -353,12 +353,10 @@ object Dedup {
     (maxHamming + 2 + step, 2 + step)
   }
 
-  /** The banded keying of [[simHashNearDup]], exposed so diagnostics
-    * (Scale9 `simhashq` candidate counting) decompose the SAME keying
-    * the production join uses instead of re-implementing it: each row
-    * of `hashed` (id, simhash) explodes into one (band, bucket) key per
+  /** The banded keying of [[simHashNearDup]]: each row of `hashed`
+    * (id, simhash) explodes into one (band, bucket) key per
     * `combine`-subset of the ⌊64/bands⌋-bit slices. */
-  def simHashKeyed(hashed: DataFrame, bands: Int, combine: Int)
+  private def simHashKeyed(hashed: DataFrame, bands: Int, combine: Int)
       : DataFrame = {
     val bits = 64 / bands
     val mask = if (bits == 64) -1L else (1L << bits) - 1
@@ -396,7 +394,8 @@ object Dedup {
     // 16 B/doc (id + hash), NOT the corpus — at 100 TB / ~100 B docs
     // that's ~16 TB of executor storage, so `materialize = false`
     // recomputes the one-scan kernel per side instead. Measured at ×100
-    // (500k docs, Scale9 `simhash`): checkpoint 5.4 s vs recompute 7.0 s
+    // (500k docs, PLANS.md calibration `simhash`): checkpoint 5.4 s vs
+    // recompute 7.0 s
     // warm — the checkpoint wins ~25% while the hash frame fits storage;
     // recompute trades that for zero storage; both forms stay linear.
     // fanOut: the 64-vote simhash kernel is the scan's whole cost and
@@ -408,14 +407,14 @@ object Dedup {
     val hashed =
       if (materialize) hashedBase.localCheckpoint(true) else hashedBase
     val keyedRaw = simHashKeyed(hashed, bands, combine)
-    // hot-bucket cap, same contract as nearDupPairs: the 16-bit key
-    // space per combo is FIXED, so once n outgrows it in-bucket
-    // candidates go quadratic (Scale9 `simhashq`: 23x candidates for
-    // 10x docs). Overflowing buckets drop from CANDIDATE GENERATION
-    // only — members still pair through their other C(bands,combine)-1
-    // keys, so recall degrades gracefully instead of the join
-    // degenerating. Default uncapped: the oracled query keeps exact
-    // full-recall semantics; the 100 TB path sets a cap.
+    // hot-bucket cap, same contract as nearDupPairs: the 16-bit key space per
+    // combo is FIXED, so once n outgrows it in-bucket candidates go quadratic
+    // (PLANS.md calibration `simhashq`: 23x candidates for 10x docs).
+    // Overflowing buckets drop from CANDIDATE GENERATION only — members still
+    // pair through their other C(bands,combine)-1 keys, so recall degrades
+    // gracefully instead of the join degenerating. Default uncapped: the
+    // oracled query keeps exact full-recall semantics; the 100 TB path sets a
+    // cap.
     val keyed =
       if (maxBucketSize == Int.MaxValue) keyedRaw
       else keyedRaw.join(

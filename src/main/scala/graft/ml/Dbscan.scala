@@ -153,10 +153,10 @@ object Dbscan {
     def exploded(idAs: String, fAs: String, hAs: String) = hashed.select(
       col("id").as(idAs), col("farr").as(fAs), col("hvals").as(hAs),
       posexplode(col("hashes")).as(Seq("entry", "hv")))
-    // DENSE-BUCKET ROUTE (r17): the ×100 candidate census (Scale9
-    // `dbscancand`) measured the operating point's bucket structure as
-    // DEGENERATE — 2-3 buckets per table, max occupancy ~n/2, so ~87%
-    // of ALL pairs are candidates (6e10 enumerations at n=200k) and
+    // DENSE-BUCKET ROUTE (r17): the ×100 candidate census (PLANS.md
+    // calibration `dbscancand`) measured the operating point's bucket
+    // structure as DEGENERATE — 2-3 buckets per table, max occupancy ~n/2, so
+    // ~87% of ALL pairs are candidates (6e10 enumerations at n=200k) and
     // every lossless 1-D window passes 100% of them (sub-split window
     // survival 1.000 at bl2 = eps/2, eps/4, eps/8 — the
     // occupancy-adaptive SPLIT is refuted by direct measurement: eps

@@ -37,10 +37,11 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * the auto rewrite's davg test). MIN/MAX correctly DECLINE the
   * prefix REWRITE (an extremum is not a difference of two prefix
   * values, and the exact NaN contract needs a data probe a logical
-  * rewrite cannot run) — but when the aggregated value IS the point
-  * expression they are answered join-free by the PREDECESSOR-scan
-  * operators [[extremaInRangeAgg]] / [[keyedExtremaInRangeAgg]]
-  * (r18, plans/RangeExtrema). Plain DOUBLE sums always decline:
+  * rewrite cannot run) — they are answered join-free by the ONE
+  * value-extrema scan (plans/RangeValueExtrema), which serves both
+  * point extrema ([[extremaInRangeAgg]] / [[keyedExtremaInRangeAgg]],
+  * f = pt) and arbitrary-column extrema ([[valueExtremaInRangeAgg]] /
+  * [[keyedValueExtremaInRangeAgg]]). Plain DOUBLE sums always decline:
   * float re-association drifts. The family also covers exact
   * DISTINCT-in-range ([[distinctPointsInRangeAgg]]) and
   * interval×interval overlap counting ([[intervalOverlapAgg]]). */
@@ -97,141 +98,34 @@ object RangeAgg {
   }
 
   /** Exact per-interval-key (min_v, max_v) of `ptCol` values in
-    * [loCol, hiCol] (inclusive both ends), JOIN-FREE (r18 — the r17
-    * VERDICT's "ship it or refute" item). The prefix rewrite correctly
-    * declines extrema (a per-interval max is not a difference of two
-    * prefixes), but when the aggregated value IS the point expression
-    * the answer degenerates to a PREDECESSOR query over the same
-    * value-ordered stream: max{pt ∈ [lo, hi]} = last point ≤ hi
-    * (valid iff ≥ lo), min by negation — see
-    * [[graft.plans.RangeExtrema]]. Two range exchanges (one per
-    * extreme), two linear scans each, driver state = partitions ×
-    * (bool, double); no pair ever materialized, cost independent of
-    * band density. Duplicate key values aggregate together exactly as
-    * min/max-over-join would (extrema are union-compatible — the SQL
-    * group extreme over duplicate-key instances is the extreme over
-    * the union of their point sets). Keys with zero qualifying points
-    * drop (inner semantics).
+    * [loCol, hiCol] (inclusive both ends), JOIN-FREE. The prefix
+    * rewrite correctly declines extrema (a per-interval max is not a
+    * difference of two prefixes); this is [[valueExtremaInRangeAgg]]
+    * with f = pt — one range exchange and one
+    * [[graft.plans.RangeValueExtrema]] scan answer min and max
+    * together, and the pt and f null/NaN filters coincide, so its
+    * contract carries over unchanged. Duplicate key values aggregate
+    * together exactly as min/max-over-join would (extrema are
+    * union-compatible). Keys with zero qualifying points drop (inner
+    * semantics).
     *
     * NaN handling matches the join form under Spark's total order: a
     * NaN point qualifies exactly when hi is NaN; such groups have
     * max = NaN (NaN is SQL-max-greatest) and min = NaN only when no
-    * finite point qualifies. The finite extremes come from the scan
-    * plans; the NaN-qualifying groups are re-attached here from two
-    * tiny aggregates (intervals with NaN hi × whether any NaN point
-    * exists). Zero signs are normalized (−0.0 in, +0.0 out — SQL
-    * equality treats them as the same value).
+    * finite point qualifies. Zero signs are normalized (−0.0 in, +0.0
+    * out — SQL equality treats them as the same value).
     *
     * Output: (idCol — original type preserved, min_v: double,
     * max_v: double). */
   def extremaInRangeAgg(points: DataFrame, ptCol: String,
                         intervals: DataFrame, idCol: String,
                         loCol: String, hiCol: String): DataFrame =
-    extremaImpl(points, ptCol, intervals, idCol, loCol, hiCol, None)
+    pointExtrema(valueExtremaImpl(points, ptCol, ptCol, intervals, idCol,
+      loCol, hiCol, None))
 
-  /** Shared implementation of the (keyed) extrema operators: builds
-    * the two predecessor-scan plans, stitches them 1:1 (identical
-    * membership: keys with ≥1 FINITE qualifying point), and
-    * re-attaches the NaN-qualifying groups.
-    *
-    * NaN branch, both forms: a NaN point satisfies pt >= lo for any
-    * lo and pt <= hi exactly when hi is NaN (Spark total order) and —
-    * keyed — when its key matches; intervals with a NULL lo never
-    * match anything (pt >= NULL is NULL — the r18 review's finding),
-    * so they are excluded from the NaN-hi set. TYPE-GATED: only
-    * floating pt/hi types can hold NaN. Existence is settled
-    * CHEAP-SIDE-FIRST: one bounded probe over the already-filtered
-    * NaN-hi interval set (tiny; empty in the overwhelmingly common
-    * case, skipping everything), then — unkeyed — one bounded probe
-    * over the points (limit(1): early-exits on the first NaN) or —
-    * keyed — an in-plan LEFT SEMI hash join of the NaN-hi intervals
-    * against the NaN points' keys (a scalar join would plan a nested
-    * loop, which the plan gates forbid).
-    *
-    * STATIC-SOURCE ASSUMPTION (r19, ADVICE item): those two driver-side
-    * existence probes run ONCE, at operator-build time, and their
-    * verdict is baked into the returned plan. If the underlying source
-    * mutates between build and (re-)execution — e.g. parquet files
-    * appended under the same path — the finite scans re-read the new
-    * data but the NaN re-attach decision does not, and the result can
-    * silently diverge from the join form. This is the standard Spark
-    * source-snapshot contract (cached plans, checkpoints and AQE
-    * broadcasts make the same assumption), and the alternative — an
-    * always-on in-plan existence subquery — would charge every
-    * caller a full extra scan of the points for a probe that
-    * early-exits on the first NaN today. Rebuild the operator after a
-    * source mutation. */
-  private def extremaImpl(points: DataFrame, ptCol: String,
-                          intervals: DataFrame, idCol: String,
-                          loCol: String, hiCol: String,
-                          keyCols: Option[(String, String)]): DataFrame = {
-    requireClean(points, "point")
-    requireClean(intervals, "interval")
-    val spark = points.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val ptPlan = points.queryExecution.analyzed
-    val ivPlan = intervals.queryExecution.analyzed
-    def attr(p: LogicalPlan, n: String, what: String): Attribute =
-      p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"RangeAgg: no $what column '$n' in ${p.output.map(_.name)}"))
-    val pt = attr(ptPlan, ptCol, "point")
-    val id = attr(ivPlan, idCol, "interval id")
-    val lo = attr(ivPlan, loCol, "interval lo")
-    val hi = attr(ivPlan, hiCol, "interval hi")
-    val equiKeys = keyCols.toSeq.map { case (pkc, ikc) =>
-      (attr(ptPlan, pkc, "point key"): org.apache.spark.sql.catalyst
-        .expressions.Expression,
-        attr(ivPlan, ikc, "interval key"): org.apache.spark.sql.catalyst
-        .expressions.Expression)
-    }
-    def build(neg: Boolean, name: String): DataFrame =
-      org.apache.spark.sql.classic.GraftBridge.ofRows(spark,
-        graft.plans.RangeExtrema.tryBuildSingle(Seq(id), pt, lo, hi,
-          neg, ptPlan, ivPlan, name, equiKeys)
-          .getOrElse(throw new IllegalArgumentException(
-            s"RangeAgg: '$ptCol'/'$loCol'/'$hiCol' must be order-exact " +
-              "numeric (double/float/int or narrower)" +
-              keyCols.map { case (pkc, ikc) =>
-                s" and '$pkc'/'$ikc' sort-exact equal types" }
-                .getOrElse("") +
-              s"; got ${pt.dataType}/${lo.dataType}/${hi.dataType}")))
-    val maxDf = build(neg = false, "max_v")
-    val minDf = build(neg = true, "min_v").withColumnRenamed(idCol, "_gx_id")
-    // identical membership (both = keys with ≥1 FINITE qualifying
-    // point), so this is a 1:1 stitch of two q-row aggregates
-    val finite = maxDf.join(minDf, col(idCol) <=> col("_gx_id"))
-      .select(col(idCol), col("min_v"), col("max_v"))
-    def floating(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt == DoubleType || dt == org.apache.spark.sql.types.FloatType
-    if (!(floating(pt.dataType) && floating(hi.dataType))) return finite
-    // NaN-hi intervals that can match at all: lo must be non-null
-    // (and, keyed, the key non-null — SQL `=` never matches null)
-    val nanHi = intervals.filter(isnan(col(hiCol).cast("double")) &&
-      col(loCol).isNotNull &&
-      keyCols.map(k => col(k._2).isNotNull).getOrElse(lit(true)))
-    // cheap side first: no NaN-hi interval ⇒ no NaN membership, skip
-    // the points scan entirely
-    if (nanHi.limit(1).count() == 0) return finite
-    val nanKeys = (keyCols match {
-      case None =>
-        if (points.filter(isnan(col(ptCol).cast("double")))
-            .limit(1).count() == 0) return finite
-        nanHi.select(col(idCol)).distinct()
-      case Some((pkc, _)) =>
-        nanHi.join(points.filter(isnan(col(ptCol).cast("double")))
-            .select(col(pkc).as("_gx_pk")),
-          col(keyCols.get._2) === col("_gx_pk"), "left_semi")
-          .select(col(idCol)).distinct()
-    }).select(col(idCol), lit(Double.NaN).as("_gx_nan"))
-      .withColumnRenamed(idCol, "_gx_id")
-    finite.join(nanKeys, col(idCol) <=> col("_gx_id"), "full")
-      .select(coalesce(col(idCol), col("_gx_id")).as(idCol),
-        // min: the finite minimum when any finite point qualifies,
-        // else NaN (the group is then NaN-only); max: NaN dominates
-        coalesce(col("min_v"), col("_gx_nan")).as("min_v"),
-        when(col("_gx_nan").isNotNull, Double.NaN)
-          .otherwise(col("max_v")).as("max_v"))
-  }
+  /** The point-extrema operators' output names over the value scan's. */
+  private def pointExtrema(df: DataFrame): DataFrame =
+    df.withColumnsRenamed(Map("min_f" -> "min_v", "max_f" -> "max_v"))
 
   /** Exact per-A-interval count of OVERLAPPING B intervals, join-free
     * (r18 — the interval×interval sibling of the point-in-interval
@@ -539,55 +433,47 @@ object RangeAgg {
   /** KEYED exact per-interval (min_v, max_v): extrema of `ptCol` over
     * points whose `ptKeyCol` equals the interval's `ivKeyCol` AND whose
     * value lies in [loCol, hiCol] — "largest/smallest event value in
-    * each session's window, per user", join-free (r18). The stream
-    * sorts by (key, v, tag) and the predecessor scan carries the last
-    * point's key: the predecessor is valid exactly when that key
-    * equals the probe's (the last point before a probe has key ≤ the
-    * probe's key, equal iff same run — no reset machinery needed).
-    * Null keys never match (SQL `=`); NaN keys match each other
-    * (bit-image compare in the exec, matching Spark's `=`); the
-    * NaN-POINT branch is a per-key semi join here (fully in-plan — a
-    * NaN point qualifies an interval iff the keys match and hi is
-    * NaN), no driver probe needed. Groups are per `idCol` (duplicate
-    * ids exact — extrema are union-compatible); keys with zero
-    * qualifying points drop. Output: (idCol, min_v, max_v). */
+    * each session's window, per user", join-free: the keyed value scan
+    * ([[keyedValueExtremaInRangeAgg]]) with f = pt. Null keys never
+    * match (SQL `=`); NaN keys match each other; a NaN point qualifies
+    * an interval iff the keys match and hi is NaN. Groups are per
+    * `idCol` (duplicate ids exact — extrema are union-compatible);
+    * keys with zero qualifying points drop. Output: (idCol, min_v,
+    * max_v). */
   def keyedExtremaInRangeAgg(points: DataFrame, ptCol: String,
                              ptKeyCol: String,
                              intervals: DataFrame, idCol: String,
                              ivKeyCol: String,
                              loCol: String, hiCol: String): DataFrame =
-    extremaImpl(points, ptCol, intervals, idCol, loCol, hiCol,
-      Some((ptKeyCol, ivKeyCol)))
+    pointExtrema(valueExtremaImpl(points, ptCol, ptCol, intervals, idCol,
+      loCol, hiCol, Some((ptKeyCol, ivKeyCol))))
 
   /** Exact per-interval-key (min_f, max_f) of an ARBITRARY point-side
     * column `fCol` over points with `ptCol ∈ [loCol, hiCol]`
-    * (inclusive), JOIN-FREE (r19 — the decline RangeExtrema documented,
-    * shipped: "largest transfer size among events in each window").
-    * `max(f)` over the membership is not a predecessor query — it is a
-    * RANGE-MAXIMUM over the value-sorted point run — so the plan is
-    * the [[graft.plans.RangeValueExtrema]] scan: ONE range exchange of
+    * (inclusive), JOIN-FREE (r19: "largest transfer size among events
+    * in each window"). `max(f)` over the membership is a RANGE-MAXIMUM
+    * over the value-sorted point run, so the plan is the
+    * [[graft.plans.RangeValueExtrema]] scan: ONE range exchange of
     * points + two probes per interval, each partition answering its
     * probes' [lo, hi] queries from a local segment tree, partitions
     * fully inside a band covered by a per-partition stats table
     * (driver state: partitions × 6 values). min and max come from the
-    * SAME scan (idempotent combines need no negation trick), so this
-    * is one exchange where the pt-extrema operator needs two. No pair
-    * is ever materialized; cost is independent of band density.
+    * SAME scan. No pair is ever materialized; cost is independent of
+    * band density.
     *
     * CONTRACT: rows with null `ptCol` or null `fCol` are excluded —
-    * membership is "qualifying point with non-null f", i.e. the join
-    * form `JOIN ON pt BETWEEN lo AND hi WHERE f IS NOT NULL` (SQL's
-    * min/max skip nulls anyway; the filter only changes which GROUPS
-    * exist, and this operator's groups are those with ≥1 non-null-f
-    * qualifying point). NaN points qualify exactly when hi is NaN
-    * (Spark total order) and are re-attached from two tiny aggregates
-    * exactly like [[extremaInRangeAgg]] — same static-source
-    * assumption (see [[extremaImpl]]). NaN `f` values participate
-    * normally (max of a set containing NaN is NaN; min prefers finite
-    * — both engines' total order). Duplicate interval keys are exact
-    * for free (extrema are union-compatible); keys with zero
-    * qualifying points drop. LongType pt/f decline (order-exactness of
-    * the double image); cast to int/double when the domain allows.
+    * membership is "qualifying point with non-null f", i.e. the join form
+    * `JOIN ON pt BETWEEN lo AND hi WHERE f IS NOT NULL` (SQL's min/max
+    * skip nulls anyway; the filter only changes which GROUPS exist, and
+    * this operator's groups are those with ≥1 non-null-f qualifying
+    * point). NaN points qualify exactly when hi is NaN (Spark total
+    * order) and are re-attached from two tiny aggregates (static-source
+    * assumption: see [[valueExtremaImpl]]). NaN `f` values participate
+    * normally (max of a set containing NaN is NaN; min prefers finite —
+    * both engines' total order). Duplicate interval keys are exact for
+    * free (extrema are union-compatible); keys with zero qualifying
+    * points drop. LongType pt/f decline (order-exactness of the double
+    * image); cast to int/double when the domain allows.
     *
     * Output: (idCol, min_f: double, max_f: double). */
   def valueExtremaInRangeAgg(points: DataFrame, ptCol: String,
@@ -619,6 +505,31 @@ object RangeAgg {
     valueExtremaImpl(points, ptCol, fCol, intervals, idCol, loCol,
       hiCol, Some((ptKeyCol, ivKeyCol)))
 
+  /** Shared implementation of the four extrema operators: the finite
+    * answer is one [[graft.plans.RangeValueExtrema]] plan, and the
+    * NaN-point groups are re-attached here.
+    *
+    * NaN branch: a NaN point satisfies pt >= lo for any lo and pt <= hi
+    * exactly when hi is NaN (Spark total order) and — keyed — when its
+    * key matches; intervals with a NULL lo never match anything
+    * (pt >= NULL is NULL), so they are excluded from the NaN-hi set.
+    * TYPE-GATED: only floating pt/hi types can hold NaN. Existence is
+    * settled CHEAP-SIDE-FIRST: one bounded probe over the NaN-hi
+    * interval set (empty in the overwhelmingly common case, skipping
+    * everything), then one bounded probe over the NaN points
+    * (limit(1): early-exits on the first NaN).
+    *
+    * STATIC-SOURCE ASSUMPTION (r19): those two driver-side existence
+    * probes run ONCE, at operator-build time, and their verdict is
+    * baked into the returned plan. If the underlying source mutates
+    * between build and (re-)execution — e.g. parquet files appended
+    * under the same path — the finite scan re-reads the new data but
+    * the NaN re-attach decision does not, and the result can silently
+    * diverge from the join form. This is the standard Spark
+    * source-snapshot contract (cached plans, checkpoints and AQE
+    * broadcasts make the same assumption); an always-on in-plan
+    * existence subquery would charge every caller a full extra scan of
+    * the points. Rebuild the operator after a source mutation. */
   private def valueExtremaImpl(points: DataFrame, ptCol: String,
                                fCol: String,
                                intervals: DataFrame, idCol: String,
@@ -660,10 +571,10 @@ object RangeAgg {
     def floating(dt: org.apache.spark.sql.types.DataType): Boolean =
       dt == DoubleType || dt == org.apache.spark.sql.types.FloatType
     if (!(floating(pt.dataType) && floating(hi.dataType))) return finite
-    // NaN-point branch (type-gated; static-source assumption as in
-    // extremaImpl): a NaN point qualifies an interval iff hi is NaN,
-    // lo is non-null and — keyed — the keys match; those groups union
-    // the (per-key) NaN points' f extrema into their finite answer
+    // NaN-point branch (type-gated; see the scaladoc): a NaN point
+    // qualifies an interval iff hi is NaN, lo is non-null and — keyed —
+    // the keys match; those groups union the (per-key) NaN points' f
+    // extrema into their finite answer
     val nanHi = intervals.filter(isnan(col(hiCol).cast("double")) &&
       col(loCol).isNotNull &&
       keyCols.map(k => col(k._2).isNotNull).getOrElse(lit(true)))

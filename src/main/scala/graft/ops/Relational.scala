@@ -466,9 +466,9 @@ object Relational {
                hintBroadcast: Boolean = false): DataFrame = {
     // a freshly derived changelog has no stats, so without the hint the
     // anti-join sort-merges — shuffling the whole base (measured 6.6 s
-    // sort-merge vs 1.1 s broadcast at ×100 = 15M base rows, Scale9
-    // r10new). Hint when the day's changes are known-small; leave to
-    // AQE otherwise.
+    // sort-merge vs 1.1 s broadcast at ×100 = 15M base rows, PLANS.md
+    // calibration `r10new`). Hint when the day's changes are
+    // known-small; leave to AQE otherwise.
     val keyList = changes.select(keys.map(col): _*)
     // null-SAFE comparison: a malformed NULL-op row must behave as an
     // upsert (its key leaves the base AND the row survives) — the
@@ -487,8 +487,8 @@ object Relational {
     *
     * BOTH α and 1−α are passed explicitly: `1.0 - 0.3` is not the
     * double literal `0.7`, and the SQL twin mirrors the literals
-    * verbatim. Shared by the registered w6_ewma query and the Scale9
-    * probe so the measured code IS the shipped code. Dataset (not RDD)
+    * verbatim. The registered w6_ewma query runs it, and PLANS.md
+    * calibration `r10new` timed this same code. Dataset (not RDD)
     * mapPartitions keeps the exchange visible to plan audits. */
   def ewmaTyped(ds: Dataset[(Long, Long, Long, Double)],
                 alpha: Double, oneMinusAlpha: Double)

@@ -34,8 +34,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * Gating (`spark.graft.dedupCompute.enabled`): whether distinct(k) ≪ n
   * is a DATA decision (over a near-unique key the rewrite is a pure
   * loss), so the default mode is COST-BASED (`auto`): the rule fires
-  * only when Catalyst column statistics prove the Scale9-measured
-  * break-even —
+  * only when Catalyst column statistics prove the measured break-even
+  * (PLANS.md calibration `dedupc`) —
   *
   *   (n − d) · kernelNs  >  n · ProbeNs + FixedNs
   *
@@ -43,8 +43,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * (min(∏ per-column distinctCount, n)), kernelNs = per-row cost of the
   * hoisted expressions estimated from the kernel class × the key
   * columns' avgLen, and ProbeNs/FixedNs are the rewrite's own measured
-  * costs (one extra exchange + key-pruned rescan + join probe — Scale9
-  * `dedupc` rows, COVERAGE.md). Missing statistics (no ANALYZE, or
+  * costs (one extra exchange + key-pruned rescan + join probe — the
+  * `dedupc` calibration rows). Missing statistics (no ANALYZE, or
   * spark.sql.cbo.enabled=false, so attributeStats don't propagate) fall
   * back to a bounded LIVE PROBE of the same inputs for scan-shaped
   * children under `probeMaxBytes` whose kernels have measured win
@@ -52,7 +52,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * knows the data, decline conservatively. `true` forces the rewrite
   * regardless of
   * stats (the pre-r13 behavior, and the j3b query's arm); `false`
-  * disables it. Calibration (Scale9 `dedupc` at ×1/×10/×100): the
+  * disables it. Calibration (`dedupc` at ×1/×10/×100): the
   * quadratic difflib kernel over 5k-distinct text wins 2–3× at dup
   * factor 100 but LOSES at ≤10 (fixed two-exchange cost), bit-parallel
   * levenshtein (~0.6 µs/row) and single-path probes of 9-char JSON
@@ -84,7 +84,7 @@ object DedupComputeRewrite extends Rule[LogicalPlan] {
     conf.getConfString("spark.graft.dedupCompute.enabled", "auto")
       .toLowerCase(java.util.Locale.ROOT)
 
-  /** Scale9 `dedupc` calibration (local[32], COVERAGE.md): the rewrite
+  /** PLANS.md calibration `dedupc` (local[32]): the rewrite
     * adds ~1.2 s of fixed cost (the distinct exchange + the key-pruned
     * rescan's extra stage) plus ~1.5 µs/row of hash-join probe. At
     * cluster scale the fixed term is pessimistic (it amortizes over
@@ -94,7 +94,7 @@ object DedupComputeRewrite extends Rule[LogicalPlan] {
 
   /** Estimated per-row cost (ns) of one kernel node over key columns of
     * total average length `len` chars. Coefficients are backed out of
-    * the Scale9 `dedupc` measurements: the difflib-parity SeqRatio ran
+    * the `dedupc` calibration rows: the difflib-parity SeqRatio ran
     * ~22 µs/row on ~300-char-per-side pairs (pairwise, ~0.25 ns per
     * char-PAIR — its cost is O(|a|·|b|), so each operand contributes
     * its OWN length: a long column against a short literal is cheap,
@@ -313,8 +313,8 @@ object DedupComputeRewrite extends Rule[LogicalPlan] {
     // low-cardinality column (log `props` fields repeat endlessly; the
     // p3 query's predicate is unpushable for exactly this reason).
     // Pays when the documents are real log JSON (KBs); measured
-    // breakeven-to-loss on toy single-key strings (Scale9 `dedupc`
-    // cheapJson rows) — which is exactly what the auto gate's
+    // breakeven-to-loss on toy single-key strings (`dedupc` cheapJson
+    // calibration rows) — which is exactly what the auto gate's
     // avgLen-scaled linear cost distinguishes
     case _: GetJsonObject | _: JsonTuple | _: JsonToStructs => true
     case other => other.getClass.getName.startsWith("graft.")

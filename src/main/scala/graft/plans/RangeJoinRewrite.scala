@@ -65,8 +65,8 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType,
   * as a post-join filter — pair-enumerating again for dense bands.
   *
   * min/max(pt) is deliberately NOT auto-rewritten even though the
-  * join-free plan exists ([[graft.ops.RangeAgg.extremaInRangeAgg]] /
-  * RangeExtrema): the extrema plan's NaN contract needs to know
+  * join-free plan exists ([[graft.ops.RangeAgg.extremaInRangeAgg]],
+  * the RangeValueExtrema scan with f = pt): its NaN contract needs to know
   * whether any NaN point exists — a bounded DATA probe the operator
   * layer runs at build time, which a pure logical rewrite cannot
   * (and silently diverging on (NaN point, NaN hi) inputs is exactly

@@ -11,15 +11,14 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types._
 
 /** Join-free per-interval MIN/MAX of an ARBITRARY point-side column
-  * (r19 — VERDICT r18 Next #1, the decline documented at
-  * [[RangeExtrema]]: "largest transfer size among events in each
-  * window"), optionally KEYED (r19 follow-through: the same query PER
-  * USER — `ptK = ivK AND pt ∈ [lo, hi]`).
+  * (r19: "largest transfer size among events in each window"),
+  * optionally KEYED (the same query PER USER — `ptK = ivK AND
+  * pt ∈ [lo, hi]`). The point extrema (`max(pt)` over
+  * `pt ∈ [lo, hi]`) are the special case f = pt, so this one scan
+  * serves both.
   *
-  * [[RangeExtrema]] answers `max(pt)` over `pt ∈ [lo, hi]` as a
-  * predecessor query, but `max(f)` over the same membership is NOT a
-  * predecessor: the answer is a RANGE-MAXIMUM over the contiguous run
-  * of the value-sorted point sequence between the two bounds. The
+  * `max(f)` over the membership is a RANGE-MAXIMUM over the contiguous
+  * run of the value-sorted point sequence between the two bounds. The
   * distributed decomposition here:
   *
   *  - points and TWO probes per interval (an L-probe at position lo,
@@ -82,9 +81,9 @@ import org.apache.spark.sql.types._
   *    WHERE filters f IS NOT NULL.
   *  - equi keys: null keys never match (filtered both sides, SQL `=`);
   *    NaN keys match each other (compared through their raw-bits
-  *    image, the same convention as [[RangeExtrema]]); −0.0 keys are
-  *    normalized by [[RangeAggPrefix.normKey]] so sort contiguity
-  *    coincides with SQL equality.
+  *    image, matching Spark's `=`); −0.0 keys are normalized by
+  *    [[RangeAggPrefix.normKey]] so sort contiguity coincides with
+  *    SQL equality.
   *
   * Memory contract (the one non-streaming piece): job 2 buffers each
   * partition's points (two double arrays + e boxed key columns,

@@ -187,8 +187,6 @@ object GraftStrategies extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case RangeAggPrefixNode(nEquiKeys, nKeys, accOut, child) =>
       RangeAggPrefixExec(nEquiKeys, nKeys, accOut, planLater(child)) :: Nil
-    case RangeExtremaNode(nEquiKeys, nKeys, predOut, child) =>
-      RangeExtremaExec(nEquiKeys, nKeys, predOut, planLater(child)) :: Nil
     case RangeValueExtremaNode(nEquiKeys, nKeys, maxOut, minOut, child) =>
       RangeValueExtremaExec(nEquiKeys, nKeys, maxOut, minOut,
         planLater(child)) :: Nil
@@ -196,7 +194,8 @@ object GraftStrategies extends SparkStrategy {
       // two-phase by default: the partial exec caps each mapper at k
       // rows per group, EnsureRequirements puts the group-key exchange
       // between it and the final exec. Conf-gated so the single-phase
-      // form stays measurable (Scale9/spec compare shuffle volume).
+      // form stays measurable (PLANS.md calibration `topk` and the spec
+      // compare shuffle volume).
       val twoPhase = org.apache.spark.sql.internal.SQLConf.get
         .getConfString("spark.graft.topk.partialEnabled", "true").toBoolean
       val base = planLater(child)

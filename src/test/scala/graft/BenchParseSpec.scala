@@ -195,6 +195,20 @@ class BenchParseSpec extends AnyFunSuite {
     assert(Bench.parsePrevTimes(c).isEmpty, Bench.parsePrevTimes(c).toString)
   }
 
+  test("compact line stays strict JSON when the data path holds quote, backslash and tab") {
+    // SPARK_GRAFT_SF_DIR is user input: a quote, backslash or tab in it
+    // must still leave one strict JSON object
+    val sf = "/tmp/a\"b\\c\td"
+    val c = Bench.compactLine(total = 1.5, nOk = 1, nFail = 0, sfDir = sf,
+      sweepNote = "q1=2.00x", escalated = false, loadStart = 0.5,
+      loadEnd = 0.6, loadWaited = 0, contended = false, anchor = "none",
+      idleRetries = 0, gatePayer = "")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(c)
+    assert(node.get("sf").asText == sf)
+    assert(node.get("sweep").asText == "q1=2.00x")
+    assert(node.get("n_ok").asInt == 1)
+  }
+
   test("r19 artifact fields (anchor, idle_retries) never parse as query times") {
     // anchor is a QUOTED decimal and idle_retries an un-dotted int —
     // neither matches the "name":1.23 shape — and both sit in

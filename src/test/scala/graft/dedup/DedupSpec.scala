@@ -150,13 +150,13 @@ class DedupSpec extends SparkSpec {
 
   test("simHashNearDup hot-bucket cap drops only single-band-covered " +
     "pairs; multi-band pairs survive") {
-    // the 100 TB knob (r13, Scale9 `simhashq`: 23x candidates for 10x
-    // docs once the fixed 16-bit key space saturates): an overflowing
-    // bucket leaves candidate generation, but a true near-pair collides
-    // in MANY of the C(8,2)=28 keys, so a moderate cap keeps it. Cap at
-    // 1: every bucket with >1 doc is dropped — pairs vanish entirely
-    // (each pair needs a shared bucket of >= 2). Uncapped (default) is
-    // bitwise-identical to the pre-cap behavior.
+    // the 100 TB knob (r13, PLANS.md calibration `simhashq`: 23x
+    // candidates for 10x docs once the fixed 16-bit key space saturates):
+    // an overflowing bucket leaves candidate generation, but a true
+    // near-pair collides in MANY of the C(8,2)=28 keys, so a moderate cap
+    // keeps it. Cap at 1: every bucket with >1 doc is dropped — pairs
+    // vanish entirely (each pair needs a shared bucket of >= 2). Uncapped
+    // (default) is bitwise-identical to the pre-cap behavior.
     // filter, not limit: LIMIT without ORDER BY can hand each of the
     // three independent executions a different 500-row subset
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,10 +1,23 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 class RangeAggSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Class names of every extrema exec in the AQE final plan (query
+    * stages included) — executes the frame first. */
+  private def extremaExecs(df: DataFrame): Seq[String] = {
+    df.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) {
+      case p if p.getClass.getSimpleName.contains("Extrema") =>
+        p.getClass.getSimpleName
+    }
+  }
 
   test("prefix range-agg equals the pair-join-then-aggregate form (orders fixture)") {
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -186,12 +199,10 @@ class RangeAggSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
       .toSet
     assert(got == truth && truth.nonEmpty)
-    // the plan is join-free: two RangeExtrema scans + a tiny stitch of
-    // two q-row aggregates — no join node touches the point stream
-    val p = RangeAgg.extremaInRangeAgg(points, "price",
-      intervals, "cust_id", "lo", "hi")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("RangeExtrema"), p)
+    // one value scan (f = pt) answers min and max: exactly one
+    // RangeValueExtremaExec, no predecessor-scan exec
+    assert(extremaExecs(RangeAgg.extremaInRangeAgg(points, "price",
+      intervals, "cust_id", "lo", "hi")) == Seq("RangeValueExtremaExec"))
   }
 
   test("extrema-in-range equals brute force on adversarial randoms (NaN/inf/-0.0)") {
@@ -267,6 +278,9 @@ class RangeAggSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
       .toSet
     assert(got == truth && truth.nonEmpty)
+    assert(extremaExecs(RangeAgg.keyedExtremaInRangeAgg(points, "price",
+        "pkey", intervals, "iid", "ikey", "lo", "hi")) ==
+      Seq("RangeValueExtremaExec"))
     // cross-key isolation actually matters on this fixture: the
     // UNKEYED answer must differ (else the key tested nothing)
     val unkeyed = RangeAgg.extremaInRangeAgg(

@@ -80,7 +80,7 @@ class RelationalSpec extends SparkSpec {
 
   test("AQE skew handling actually splits the hot partition " +
     "(isSkewJoin pinned), and the salted twin needs no split") {
-    // the Scale9 `skew` section's comparison (salted 2.5 s vs AQE-split
+    // the PLANS.md calibration `skew` comparison (salted 2.5 s vs AQE-split
     // 5.1 s vs plain 5.3 s at x100) is only meaningful if the AQE arm
     // demonstrably splits — pin it on the executed plan's SMJ flag, not
     // on timing. 90% of fact rows on one key, broadcast disabled,

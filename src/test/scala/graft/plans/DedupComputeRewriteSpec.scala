@@ -124,7 +124,7 @@ class DedupComputeRewriteSpec extends SparkSpec {
       graft.core.Util.dropTableAndLocation(spark, "dcr_auto_r13")
       // 10k rows, 10 distinct ~1.2KB texts (dup factor 1000) plus a
       // near-unique long column and a 10-distinct SHORT column — the
-      // Scale9 `dedupc` regimes in fixture form
+      // PLANS.md calibration `dedupc` regimes in fixture form
       spark.range(10000).selectExpr(
         "id",
         "repeat(concat('tok', cast(id % 10 as string), ' '), 240) AS text",
@@ -234,7 +234,7 @@ class DedupComputeRewriteSpec extends SparkSpec {
     // measured-loss kernel classes stay ANALYZE-gated (no probe scan):
     // regexp/JSON are linear, and the bit-parallel levenshtein — though
     // priced quadratically like seq_ratio — is ~36x cheaper per char
-    // pair (0.007 vs 0.25 ns) and LOST at every Scale9-measured dup
+    // pair (0.007 vs 0.25 ns) and LOST at every `dedupc`-measured dup
     // factor at realistic lengths; a corpus that defies that still has
     // ANALYZE'd stats or the conf force as levers
     def lev = tbl.select(col("id"),
