@@ -165,16 +165,7 @@ object Bench {
         .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Tables.session("graft-bench", "32")
     spark.sparkContext.setLogLevel("ERROR")
     // min of 2 runs per query: the first run pays one-off codegen/JIT
     // compilation (measured ~7x inflation on small inputs), which is not

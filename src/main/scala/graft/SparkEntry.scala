@@ -103,7 +103,7 @@ object SparkEntry {
   /** CDC chunk rows (doc_id, chunk_idx, start, len, chunk_md5) shared by
     * the llm_cdc_* queries — the graft_cdc_cuts ends array exploded into
     * per-chunk spans with md5 content hashes. Package-visible un-sorted
-    * form for PlanAudit's zero-exchange gate. */
+    * form for PlanShapeSpec's zero-exchange gate. */
   private[graft] def cdcChunksCore(s: SparkSession, dir: String): DataFrame =
     cdcChunks(s, dir)
 
@@ -111,7 +111,7 @@ object SparkEntry {
     graft.expr.GraftFunctions.ensureRegistered(s)
     // deliberately NOT fanned out: llm_cdc_chunks pins a zero-Exchange
     // kernel-scan plan and llm_cdc_dedup pins "no text crosses an
-    // exchange" (PlanAudit) — those 100-TB contracts outrank fixture
+    // exchange" (PlanShapeSpec) — those 100-TB contracts outrank fixture
     // parallelism here
     t(s, dir, "documents")
       .select(col("doc_id"), col("text"),
@@ -193,7 +193,7 @@ object SparkEntry {
       .select(col("doc_id"), Clean.splitWs(col("text")).as("tokens"))
 
   /** The j7 frame: EXPLICITLY binned pair join + aggregate,
-    * un-checkpointed. Shared with PlanAudit so the gate sees the exact
+    * un-checkpointed. Shared with PlanShapeSpec so the gate sees the exact
     * pipeline the query runs (under the same aggPrefix-off scope the
     * registry query pins). */
   def rangeJoinAggFrame(s: SparkSession, dir: String): DataFrame = {
@@ -212,7 +212,7 @@ object SparkEntry {
   }
 
   /** The j7b band join in its NAIVE inequality form (the shape a user
-    * would write), un-checkpointed: shared with PlanAudit so the no-NLJ
+    * would write), un-checkpointed: shared with PlanShapeSpec so the no-NLJ
     * gate inspects exactly the frame the query materializes. Same
     * inputs and ground truth as j7's hand-binned form. */
   def bandJoinNaive(s: SparkSession, dir: String): DataFrame = {
@@ -234,7 +234,7 @@ object SparkEntry {
   /** The j3b dedup-compute in its NAIVE formulation (the shape a user
     * writes: a per-row edit-distance kernel straight over the
     * 31-distinct-value lang column), un-checkpointed: shared with
-    * PlanAudit so the j3b plan gate inspects exactly the frame the
+    * PlanShapeSpec so the j3b plan gate inspects exactly the frame the
     * query materializes. Under DedupComputeRewrite this plans as
     * distinct(lang) → kernel once per value → join-back — the same
     * answer j3's explicit Relational.dedupCompute computes by hand. */
@@ -261,7 +261,7 @@ object SparkEntry {
   def withDedupCompute[T](s: SparkSession)(body: => T): T =
     withConf(s, "spark.graft.dedupCompute.enabled", "true")(body)
 
-  /** j3c's naive projection, PRE-checkpoint, shared with PlanAudit (the
+  /** j3c's naive projection, PRE-checkpoint, shared with PlanShapeSpec (the
     * cmsBuild precedent) so the plan gate can prove the auto-mode
     * rewrite actually FIRED inside the registry query — the hash gate
     * alone can't tell a fired rewrite from a declined one (both return
@@ -311,7 +311,7 @@ object SparkEntry {
     withConf(s, "spark.graft.rangeJoin.aggPrefix", "false")(body)
 
   /** The CMS sketch-build aggregate of llm_cms_counts, BEFORE its
-    * driver-side head(): shared with PlanAudit so the plan gate covers
+    * driver-side head(): shared with PlanShapeSpec so the plan gate covers
     * the exact pipeline the query runs (a hand-rebuilt audit copy would
     * silently drift if the tokenization or sketch params changed). */
   def cmsSketchAgg(s: SparkSession, dir: String): DataFrame =
@@ -323,7 +323,7 @@ object SparkEntry {
   /** The a23 off-fixture exact set-algebra aggregation — the three
     * exact counts (|c|, |p|, |c∩p|) in ONE scan + one user-keyed
     * exchange + one global reduce — BEFORE its driver-side head():
-    * shared with PlanAudit so the r15 gate fusion (was 4 scans + 3
+    * shared with PlanShapeSpec so the r15 gate fusion (was 4 scans + 3
     * exchanges per sweep) stays pinned as a plan gate. */
   def a23ExactSetAgg(ev: DataFrame): DataFrame =
     ev.filter((col("event_type") === "click" ||
@@ -339,7 +339,7 @@ object SparkEntry {
 
   /** The a6 off-fixture tie-aware rank-gate aggregation — n plus all
     * six two-sided rank counts in ONE scan (r15 fused from 7) —
-    * shared with PlanAudit for the same reason as [[a23ExactSetAgg]]. */
+    * shared with PlanShapeSpec for the same reason as [[a23ExactSetAgg]]. */
   def a6RankGateAgg(orders: DataFrame, ps: Seq[Double],
                     qs: Seq[Double]): DataFrame = {
     val rankAggs = count(col("o_totalprice")).as("n") +:
@@ -657,7 +657,7 @@ object SparkEntry {
     // reader walks the pushed range BACKWARD, so ORDER BY doc_id DESC
     // LIMIT k is a bare single-partition BatchScan of exactly k rows —
     // no Sort, no TakeOrderedAndProject (SynthV2Spec pins the plan;
-    // PlanAudit gates order=desc + absence of TakeOrdered). "Last k
+    // PlanShapeSpec gates order=desc + absence of TakeOrdered). "Last k
     // before this key" answered by the index-shaped source.
     "s22b_topn_desc_push" -> ((s, dir) =>
       s.read.format("graft.sources.v2.SynthSource")
@@ -1248,7 +1248,7 @@ object SparkEntry {
     // binned join's own bin-equality + band as equi + band and would
     // replace the pair join this query exists to gate — the join IS
     // the contract here (the eager materialization pins the plan
-    // inside the scope; PlanAudit gates the raw frame under the same
+    // inside the scope; PlanShapeSpec gates the raw frame under the same
     // scope)
     "j7_range_join" -> ((s, dir) => withAggPrefixOff(s) {
       rangeJoinAggFrame(s, dir).localCheckpoint(true)
@@ -2839,7 +2839,7 @@ object SparkEntry {
     // by the stride (31)
     "llm_winnow_fingerprint" -> ((s, dir) =>
       // fanOut here, NOT in winnowSampledDocs: llm_winnow_kr_core shares
-      // the helper and pins a zero-Exchange plan (PlanAudit gate)
+      // the helper and pins a zero-Exchange plan (PlanShapeSpec gate)
       Tables.fanOut(winnowSampledDocs(s, dir), col("doc_id"))
         .select(col("doc_id"),
           explode(call_function("graft_winnow",
@@ -3381,7 +3381,7 @@ object SparkEntry {
         val ps = Seq(0.25, 0.5, 0.75)
         // ONE scan for n and all six rank counts (r15: was 7 scans —
         // the quantile gate's whole per-sweep bill is this pass);
-        // extracted to a6RankGateAgg so PlanAudit pins the fusion
+        // extracted to a6RankGateAgg so PlanShapeSpec pins the fusion
         val r = a6RankGateAgg(orders, ps, qs).head()
         val n = r.getLong(0)
         val flags = ps.zip(qs).zipWithIndex.map { case ((p, v), i) =>
@@ -4461,7 +4461,7 @@ object SparkEntry {
     }),
     // Correlated LATERAL subquery: per-order aggregate over its
     // lineitems written as a lateral — Catalyst DECORRELATES it into a
-    // left outer aggregate join (PlanAudit pins no nested-loop/cross
+    // left outer aggregate join (PlanShapeSpec pins no nested-loop/cross
     // node survives), so the "run a subquery per row" shape executes
     // as one shuffle, which is the only plan that survives 100 TB.
     // Orders with no lineitems keep the SQL-mandated one-row aggregate
@@ -4517,7 +4517,7 @@ object SparkEntry {
     // Null-safe equality (<=>) as a JOIN KEY: NULL matches NULL instead
     // of vanishing (three-valued logic suspended), and Spark still
     // plans it as a HASH join — EqualNullSafe is a legal equi-key, so
-    // the "null bucket" costs nothing over a plain join (PlanAudit pins
+    // the "null bucket" costs nothing over a plain join (PlanShapeSpec pins
     // it). clicks are nullif'd to NULL and must land on the dim's NULL
     // row; purchase/signup match nothing and drop (inner join).
     "j11_nullsafe_join" -> ((s, dir) => {
@@ -7550,7 +7550,7 @@ object SparkEntry {
     * (doc_id, n_tokens). Exposed (package-private) because the registered
     * query's FINAL plan starts from tokenPack's pinned RDD — the upstream
     * stages execute eagerly inside the two-pass prefix sum and are
-    * invisible to a plan audit of the query result. PlanAudit gates THIS
+    * invisible to a plan audit of the query result. PlanShapeSpec gates THIS
     * frame for the stage shapes (scan-form decontamination: gram_hits
     * kernel, no Generate, no gram join) and the query result for the
     * packing shape.

@@ -107,8 +107,10 @@ object Tables {
     val shuffledUpstream = try {
       import org.apache.spark.sql.catalyst.plans.logical._
       df.queryExecution.analyzed.collectFirst {
-        case p @ (_: Join | _: Aggregate | _: Window | _: Sort |
+        case p @ (_: Join | _: Aggregate | _: Window |
                   _: Distinct | _: Deduplicate | _: RepartitionOperation) => p
+        // a local sort (sortWithinPartitions) stays on the scan's split
+        case s: Sort if s.global => s
       }.isDefined
     } catch { case _: Exception => false }
     if (shuffledUpstream) return df

@@ -315,7 +315,7 @@ object Curation {
     val bc = spark.sparkContext.broadcast(offsets)
     import spark.implicits._
     // tuple RDD + toDF (not createDataFrame(Row)) so the plan keeps the
-    // "mapPartitionsWithIndex at Curation.scala" callsite PlanAudit pins
+    // "mapPartitionsWithIndex at Curation.scala" callsite PlanShapeSpec pins
     data.rdd
       .mapPartitionsWithIndex { (i, it) =>
         var cum = bc.value(i)

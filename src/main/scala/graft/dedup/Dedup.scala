@@ -19,7 +19,7 @@ object Dedup {
     * needed because min(id) identifies the kept row. */
   def exactDedupKeepers(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // deliberately NOT fanned out: llm_exact_dedup pins an at-most-2-
-    // exchange plan (PlanAudit) — the one-hash-exchange contract is the
+    // exchange plan (PlanShapeSpec) — the one-hash-exchange contract is the
     // operator's 100-TB story and outranks fixture parallelism
     df.select(TextStats.fingerprintMd5(col(textCol)).as("fingerprint"),
         col(idCol))

@@ -442,7 +442,7 @@ object Similarity {
     * (package-private) because the public operator's FINAL plan starts at
     * the GraphX CC RDD — the pair search executes inside `dupGroups` and
     * is invisible to a plan audit of the result (the same reason
-    * SparkEntry.curationPipelineTrain exists). PlanAudit gates THIS
+    * SparkEntry.curationPipelineTrain exists). PlanShapeSpec gates THIS
     * frame: the join must key on the cluster id (hash exchange on _cell,
     * no CartesianProduct / BroadcastNestedLoopJoin — a corpus-wide
     * all-pairs plan is exactly what the operator exists to avoid). */

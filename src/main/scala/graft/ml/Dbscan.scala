@@ -116,7 +116,7 @@ object Dbscan {
     *    for decompression + unsafe-row overhead, because what actually
     *    broadcasts is the EXPLODED relation — (id, flattened double
     *    array, table, hashValue) duplicated per hash table.
-    * private[graft] so PlanAudit gates the plan shape (broadcast bucket
+    * private[graft] so PlanShapeSpec gates the plan shape (broadcast bucket
     * join, pair-only dedup — no struct exchange). Input: (id: long,
     * features: ml Vector), un-persisted (callers own caching). */
   private[graft] def epsEdges(pts: DataFrame, eps: Double,
@@ -437,14 +437,6 @@ object Dbscan {
                   denseChunk: Int = 2048): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // phase timings to stderr when GRAFT_TIMING is set (perf triage aid)
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[dbscan] $phase: ${(now - tLast) / 1e9}%.3f s")
-      tLast = now
-    }
     val pts = df.select(col(idCol).cast("long").as("id"),
       col(featuresCol).as("features"))
     // PERSISTED: the edge relation feeds multiple consumers (the probe,
@@ -468,11 +460,10 @@ object Dbscan {
     // broadcast join. Past the cap the fully-distributed path (GraphX
     // Pregel CC) engages unchanged. Both routes produce
     // label = min core member id, indistinguishable downstream.
-    // this collect is where the LAZY chain above actually executes:
-    // the phase mark covers LSH fit + bucket join + probe together
+    // this collect is where the LAZY chain above actually executes
+    // (LSH fit + bucket join + probe together)
     val edgeSample =
       joined.as[(Long, Long)].limit(smallGraphEdgeCap + 1).collect()
-    mark("fit_join_probe")
     if (edgeSample.length <= smallGraphEdgeCap) {
       joined.unpersist(blocking = false)
       // degree = ε-neighbor count + 1 (self counts once, matching
@@ -507,12 +498,10 @@ object Dbscan {
           labels(a) = math.min(labels.getOrElse(a, Long.MaxValue), l)
         }
       }
-      mark("cc_driver")
       val labelDf = spark.createDataset(labels.toSeq).toDF("id", "label")
       // broadcast join onto the full id set; no checkpoint needed — the
       // lineage is one scan plus a local relation, nothing cached
-      // remains (and LAZY: the caller's action pays for it, so there is
-      // deliberately no timing mark here — it would measure nothing)
+      // remains (and LAZY: the caller's action pays for it)
       return pts.select("id")
         .join(broadcast(labelDf), Seq("id"), "left")
         .select(col("id").as(idCol),
@@ -532,10 +521,8 @@ object Dbscan {
       val edgeRdd =
         coreEdges.as[(Long, Long)].rdd.map { case (a, b) => Edge(a, b, ()) }
       val vertRdd = core.as[Long].rdd.map(id => (id, ()))
-      val r = Graph(vertRdd, edgeRdd).connectedComponents()
+      Graph(vertRdd, edgeRdd).connectedComponents()
         .vertices.toDF("id", "label") // label = min vertex id in component
-      mark("cc_graphx_built")
-      r
     }
     // border points: any non-core point with a core ε-neighbor joins that
     // cluster (lowest label for determinism); everything else is noise
@@ -553,7 +540,6 @@ object Dbscan {
     // checkpointed result itself (n rows of two longs — the data the
     // caller holds), reclaimed by the ContextCleaner when it drops.
     borderLabels.count()
-    mark("border_labels")
     joined.unpersist(blocking = false)
     val result = pts.select("id")
       .join(cc, Seq("id"), "left")
@@ -561,7 +547,6 @@ object Dbscan {
       .select(col("id").as(idCol),
         coalesce(col("label"), col("border_label"), lit(-1L)).as("label"))
       .localCheckpoint(true)
-    mark("result_checkpoint")
     borderLabels.unpersist(blocking = false)
     result
   }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * r17 note: the r16 implementation's localCheckpoint / broadcast-var /
   * persist lifecycle (and its undocumented unique-id requirement) are
   * gone — the plan is now a single declarative pipeline whose physical
-  * shape PlanAudit inspects directly, duplicate interval ids aggregate
+  * shape PlanShapeSpec inspects directly, duplicate interval ids aggregate
   * correctly by construction, and the only driver state is one tiny
   * per-partition totals row inside the exec.
   *

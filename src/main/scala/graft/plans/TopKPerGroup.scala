@@ -191,18 +191,12 @@ object GraftStrategies extends SparkStrategy {
       RangeValueExtremaExec(nEquiKeys, nKeys, maxOut, minOut,
         planLater(child)) :: Nil
     case TopKPerGroupNode(g, o, k, child, budget) =>
-      // two-phase by default: the partial exec caps each mapper at k
-      // rows per group, EnsureRequirements puts the group-key exchange
-      // between it and the final exec. Conf-gated so the single-phase
-      // form stays measurable (PLANS.md calibration `topk` and the spec
-      // compare shuffle volume).
-      val twoPhase = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.topk.partialEnabled", "true").toBoolean
-      val base = planLater(child)
-      val lower =
-        if (twoPhase) TopKPerGroupExec(g, o, k, base, budget, partial = true)
-        else base
-      TopKPerGroupExec(g, o, k, lower, budget) :: Nil
+      // two-phase: the partial exec caps each mapper at k rows per
+      // group, EnsureRequirements puts the group-key exchange between it
+      // and the final exec
+      val partial = TopKPerGroupExec(g, o, k, planLater(child), budget,
+        partial = true)
+      TopKPerGroupExec(g, o, k, partial, budget) :: Nil
     case _ => Nil
   }
 }

@@ -28,6 +28,15 @@ class FanOutSpec extends SparkSpec {
       col("doc_id"))))
   }
 
+  test("one-split scan + sortWithinPartitions is fanned to shuffle.partitions") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val out = Tables.fanOut(docs.sortWithinPartitions("doc_id"), col("doc_id"))
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(out.queryExecution.analyzed.collect {
+      case r: RepartitionByExpression => r.numPartitions
+    } == Seq(n))
+  }
+
   test("post-join / post-aggregate / post-distinct frames are NOT fanned") {
     val ids = docs.select(col("doc_id"))
     val joined = docs.join(ids, Seq("doc_id"), "left_semi")

@@ -1,8 +1,7 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{PlanShape, SparkSpec}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 class RangeAggSpec extends SparkSpec {
@@ -10,14 +9,9 @@ class RangeAggSpec extends SparkSpec {
 
   /** Class names of every extrema exec in the AQE final plan (query
     * stages included) — executes the frame first. */
-  private def extremaExecs(df: DataFrame): Seq[String] = {
-    df.collect()
-    object Plans extends AdaptiveSparkPlanHelper
-    Plans.collect(df.queryExecution.executedPlan) {
-      case p if p.getClass.getSimpleName.contains("Extrema") =>
-        p.getClass.getSimpleName
-    }
-  }
+  private def extremaExecs(df: DataFrame): Seq[String] =
+    PlanShape.executed(df).nodes.map(_.getClass.getSimpleName)
+      .filter(_.contains("Extrema"))
 
   test("prefix range-agg equals the pair-join-then-aggregate form (orders fixture)") {
     val o = spark.read.parquet(s"$sfDir/orders.parquet")

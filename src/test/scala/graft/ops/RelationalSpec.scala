@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{PlanShape, SparkSpec}
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.functions._
 
 class RelationalSpec extends SparkSpec {
@@ -27,8 +28,8 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("topK plans as TakeOrderedAndProject (no full sort at scale)") {
-    val plan = Relational.topK(sales, "k", 2).queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), s"unexpected plan:\n$plan")
+    val plan = PlanShape(Relational.topK(sales, "k", 2))
+    assert(plan.has[TakeOrderedAndProjectExec], s"unexpected plan:\n$plan")
   }
 
   test("semiJoinTopN keeps only rows of top-n keys") {
@@ -86,7 +87,8 @@ class RelationalSpec extends SparkSpec {
     // on timing. 90% of fact rows on one key, broadcast disabled,
     // thresholds scaled down so the spec fixture trips the same
     // factor/threshold/advisory machinery the big run relies on.
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val confs = Seq(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -104,30 +106,23 @@ class RelationalSpec extends SparkSpec {
           .as("k"), (col("id") * 3).as("v"))
       val dim = spark.range(0, 100)
         .select(col("id").as("k"), (col("id") * 7).as("w"))
-      // AQE decides skew at runtime; query-stage nodes hide their plans
-      // from tree collect, so pin on the executed FINAL plan's string —
-      // SortMergeJoinExec prints its isSkewJoin flag as "(skew=true)"
-      // and the split reader as "AQEShuffleRead skewed"
-      def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
-        df.collect() // execute first
-        (df.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case other => other
-        }).toString
-      }
+      // AQE decides skew at runtime: pin on the executed FINAL plan —
+      // the join's isSkewJoin flag and the split shuffle reader
+      def skewSplit(p: PlanShape) =
+        p.of[SortMergeJoinExec].exists(_.isSkewJoin)
       val aqe = fact.join(dim, Seq("k"))
         .agg(count(lit(1)).as("n"), sum(col("v") + col("w")).as("s"))
-      val aqePlan = finalPlan(aqe)
-      assert(aqePlan.contains("SortMergeJoin"), aqePlan)
-      assert(aqePlan.contains("(skew=true)") &&
-        aqePlan.contains("AQEShuffleRead skewed"),
+      val aqePlan = PlanShape.executed(aqe)
+      assert(aqePlan.has[SortMergeJoinExec], aqePlan)
+      assert(skewSplit(aqePlan) &&
+        aqePlan.of[AQEShuffleReadExec].exists(_.hasSkewedPartition),
         "AQE did not split the hot partition:\n" + aqePlan)
       // the salted form spreads the hot key BY CONSTRUCTION — same
       // answer, no skew split needed even with the machinery armed
       val salted = Relational.skewSafeJoin(fact, dim, "k", salt = 16)
         .agg(count(lit(1)).as("n"), sum(col("v") + col("w")).as("s"))
-      val saltedPlan = finalPlan(salted)
-      assert(!saltedPlan.contains("(skew=true)"), saltedPlan)
+      val saltedPlan = PlanShape.executed(salted)
+      assert(!skewSplit(saltedPlan), saltedPlan)
       assert(salted.collect().toSeq.map(_.toString) ==
         aqe.collect().toSeq.map(_.toString))
     } finally saved.foreach {

@@ -1,7 +1,8 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{PlanShape, SparkSpec}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
 /** The automatic band-join rewrite: a bare inequality join must become
@@ -28,16 +29,16 @@ class RangeJoinRewriteSpec extends SparkSpec {
     try body finally spark.conf.unset(WidthKey)
   }
 
-  private def plan(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString
+  private def binned(p: PlanShape): Boolean =
+    p.attrNames.exists(_.startsWith("_graft_bin"))
 
   test("band join rewrites to a binned equi-join, same rows") {
     val naive = bandJoin().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(plan(bandJoin()).contains("BroadcastNestedLoopJoin"))
+    assert(PlanShape(bandJoin()).has[BroadcastNestedLoopJoinExec])
     withWidth("10.0") {
-      val p = plan(bandJoin())
-      assert(!p.contains("BroadcastNestedLoopJoin"), p)
-      assert(p.contains("_graft_bin"), p)
+      val p = PlanShape(bandJoin())
+      assert(!p.has[BroadcastNestedLoopJoinExec], p)
+      assert(binned(p), p)
       val got = bandJoin().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == naive)
@@ -50,7 +51,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
       val df = points.join(intervals,
           col("lo") <= col("p") && col("hi") >= col("p"))
         .select("pid", "iid")
-      assert(!plan(df).contains("BroadcastNestedLoopJoin"))
+      assert(!PlanShape(df).has[BroadcastNestedLoopJoinExec])
       assert(df.count() == 3)
     }
   }
@@ -60,7 +61,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
       val df = points.join(intervals,
           col("p") > col("lo") && col("p") < col("hi"))
         .select("pid", "iid")
-      assert(!plan(df).contains("BroadcastNestedLoopJoin"))
+      assert(!PlanShape(df).has[BroadcastNestedLoopJoinExec])
       // (1,10): 0 < 5 < 10 keeps; boundary-equal rows would drop here
       assert(df.count() == 3)
     }
@@ -101,18 +102,18 @@ class RangeJoinRewriteSpec extends SparkSpec {
       val df = points.join(intervals,
         col("pid") === col("iid") && col("p") >= col("lo") &&
           col("p") <= col("hi"))
-      assert(!plan(df).contains("_graft_bin"))
+      assert(!binned(PlanShape(df)))
       // band whose "point" references both sides — untouched
       val df2 = points.join(intervals,
         col("p") + col("lo") >= col("lo") && col("p") <= col("hi"))
-      assert(!plan(df2).contains("_graft_bin"))
+      assert(!binned(PlanShape(df2)))
     }
   }
 
   test("unset or nonpositive width disables the rewrite") {
-    assert(plan(bandJoin()).contains("BroadcastNestedLoopJoin"))
+    assert(PlanShape(bandJoin()).has[BroadcastNestedLoopJoinExec])
     withWidth("0") {
-      assert(plan(bandJoin()).contains("BroadcastNestedLoopJoin"))
+      assert(PlanShape(bandJoin()).has[BroadcastNestedLoopJoinExec])
     }
   }
 
@@ -136,9 +137,9 @@ class RangeJoinRewriteSpec extends SparkSpec {
 
   test("aggregate over a band join auto-plans the join-free prefix form") {
     val df = aggOverBand(points, intervals)
-    val p = plan(df)
-    assert(p.contains("RangeAggPrefix"), p)
-    assert(!p.contains("Join"), p)
+    val p = PlanShape(df)
+    assert(p.has[RangeAggPrefixExec], p)
+    assert(p.joins.isEmpty, p)
     // ground truth: the pair-enumerating plan with BOTH rewrites off
     val truth = withPrefixOff(rows(aggOverBand(points, intervals)))
     assert(rows(df) == truth && truth.nonEmpty)
@@ -152,7 +153,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     val dup = Seq((20L, 0.0, 10.0), (20L, 12.0, 30.0), (30L, 24.0, 26.0))
       .toDF("iid", "lo", "hi")
     val df = aggOverBand(points, dup)
-    assert(plan(df).contains("RangeAggPrefix"))
+    assert(PlanShape(df).has[RangeAggPrefixExec])
     assert(rows(df) == withPrefixOff(rows(aggOverBand(points, dup))))
   }
 
@@ -164,7 +165,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = points.join(ivs, col("p") > col("lo") && col("p") < col("hi"))
       .groupBy("iid").agg(count(lit(1)).as("cnt"),
         graft.core.Tables.dsum(col("p")).as("s"))
-    assert(plan(q()).contains("RangeAggPrefix"))
+    assert(PlanShape(q()).has[RangeAggPrefixExec])
     assert(rows(q()) == withPrefixOff(rows(q())))
     // inclusive form on the same data disagrees with strict (boundary
     // rows) and must also match its own join-form truth
@@ -182,7 +183,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
       .groupBy("iid").agg(count(lit(1)).as("cnt"),
         graft.core.Tables.dsum(col("p")).as("s"))
-    assert(plan(q()).contains("RangeAggPrefix"))
+    assert(PlanShape(q()).has[RangeAggPrefixExec])
     assert(rows(q()) == withPrefixOff(rows(q())))
   }
 
@@ -204,7 +205,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
       .groupBy("iid").agg(count(lit(1)).as("cnt"),
         graft.core.Tables.dsum(col("p")).as("s"))
-    assert(plan(q()).contains("RangeAggPrefix"))
+    assert(PlanShape(q()).has[RangeAggPrefixExec])
     val got = q().collect()
       .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)))).toSet
     val truth = withPrefixOff(q().collect()
@@ -217,7 +218,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     // none — the strict probe tag must sort BEFORE the NaN points
     def qs() = pts.join(ivs, col("p") > col("lo") && col("p") < col("hi"))
       .groupBy("iid").agg(count(lit(1)).as("cnt"))
-    assert(plan(qs()).contains("RangeAggPrefix"))
+    assert(PlanShape(qs()).has[RangeAggPrefixExec])
     assert(qs().collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       withPrefixOff(qs().collect().map(r => (r.getLong(0), r.getLong(1))).toSet))
   }
@@ -227,7 +228,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
       .join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
       .agg(count(lit(1)).as("cnt"), graft.core.Tables.dsum(col("p")).as("s"))
     val some = q(intervals)
-    assert(plan(some).contains("RangeAggPrefix"))
+    assert(PlanShape(some).has[RangeAggPrefixExec])
     assert(some.collect().toSeq == withPrefixOff(q(intervals).collect().toSeq))
     // zero qualifying pairs: ONE row (0, null) — inner-join-then-global-agg
     val none = Seq((9L, 100.0, 200.0)).toDF("iid", "lo", "hi")
@@ -241,7 +242,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
       .join(intervals, col("p") >= col("lo") && col("p") <= col("hi"))
       .groupBy("iid")
       .agg(graft.core.Tables.davg(col("p")).as("a"))
-    assert(plan(q()).contains("RangeAggPrefix"))
+    assert(PlanShape(q()).has[RangeAggPrefixExec])
     val got = q().collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got == withPrefixOff(
       q().collect().map(r => (r.getLong(0), r.getDouble(1))).toSet))
@@ -254,17 +255,17 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = points
       .join(intervals, col("p") >= col("lo") && col("p") <= col("hi"))
       .groupBy("iid").agg(sum(col("p")).as("s"))
-    assert(!plan(q()).contains("RangeAggPrefix"))
+    assert(!PlanShape(q()).has[RangeAggPrefixExec])
     withWidth("10.0") {
-      val p = plan(q())
-      assert(!p.contains("RangeAggPrefix") && p.contains("_graft_bin"), p)
+      val p = PlanShape(q())
+      assert(!p.has[RangeAggPrefixExec] && binned(p), p)
     }
     // min/max stay on the join path too: running extrema are not
     // differences of prefixes (order-dependent across boundaries)
     def qm() = points
       .join(intervals, col("p") >= col("lo") && col("p") <= col("hi"))
       .groupBy("iid").agg(max(col("p")).as("m"))
-    assert(!plan(qm()).contains("RangeAggPrefix"))
+    assert(!PlanShape(qm()).has[RangeAggPrefixExec])
   }
 
   test("the SQL surface gets the prefix plan too (BETWEEN band join)") {
@@ -275,8 +276,8 @@ class RangeJoinRewriteSpec extends SparkSpec {
         "CAST(sum(CAST(p AS DECIMAL(18,2))) AS DOUBLE) AS s " +
         "FROM rj_pts JOIN rj_ivs ON p BETWEEN lo AND hi " +
         "GROUP BY iid")
-    val pl = plan(q)
-    assert(pl.contains("RangeAggPrefix") && !pl.contains("Join"), pl)
+    val pl = PlanShape(q)
+    assert(pl.has[RangeAggPrefixExec] && pl.joins.isEmpty, pl)
     val got = rows(q)
     assert(got == withPrefixOff(rows(spark.sql(
       "SELECT iid, count(*) AS cnt, " +
@@ -291,8 +292,8 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = spark.sql(
       "SELECT iid, count(*) AS cnt FROM rj_pts JOIN rj_ivs " +
         "ON p BETWEEN lo AND hi GROUP BY iid HAVING count(*) >= 2")
-    val pl = plan(q())
-    assert(pl.contains("RangeAggPrefix") && !pl.contains("Join"), pl)
+    val pl = PlanShape(q())
+    assert(pl.has[RangeAggPrefixExec] && pl.joins.isEmpty, pl)
     val got = q().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == withPrefixOff(
       q().collect().map(r => (r.getLong(0), r.getLong(1))).toSet))
@@ -310,8 +311,8 @@ class RangeJoinRewriteSpec extends SparkSpec {
         "CAST(sum(CAST(pp AS DECIMAL(18,2))) AS DOUBLE) AS s FROM " +
         "(SELECT iid AS id2, p AS pp FROM rj_pts JOIN rj_ivs " +
         "ON p >= lo AND p <= hi) GROUP BY id2")
-    val pl = plan(q())
-    assert(pl.contains("RangeAggPrefix") && !pl.contains("Join"), pl)
+    val pl = PlanShape(q())
+    assert(pl.has[RangeAggPrefixExec] && pl.joins.isEmpty, pl)
     assert(q().columns.toSeq == Seq("id2", "cnt", "s"))
     val got = rows(q())
     assert(got == withPrefixOff(rows(q())) && got.nonEmpty)
@@ -320,7 +321,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
       "SELECT id2, count(*) AS cnt FROM " +
         "(SELECT iid + 1 AS id2, p FROM rj_pts JOIN rj_ivs " +
         "ON p >= lo AND p <= hi) GROUP BY id2")
-    assert(!plan(qc()).contains("RangeAggPrefix"))
+    assert(!PlanShape(qc()).has[RangeAggPrefixExec])
   }
 
   test("count(DISTINCT pt) declines the prefix form (duplicate-key semantics)") {
@@ -329,7 +330,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = points
       .join(intervals, col("p") >= col("lo") && col("p") <= col("hi"))
       .groupBy("iid").agg(countDistinct(col("p")).as("d"))
-    assert(!plan(q()).contains("RangeAggPrefix"))
+    assert(!PlanShape(q()).has[RangeAggPrefixExec])
     // and the duplicate-key case is exactly why: two instances of one
     // key with overlapping bands must count shared values ONCE
     val dup = Seq((20L, 0.0, 30.0), (20L, 10.0, 50.0)).toDF("iid", "lo", "hi")
@@ -348,7 +349,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
       .join(intervals, col("p") >= col("lo") && col("p") <= col("hi"))
       .groupBy((col("iid") % 7).as("g"))
       .agg(count(lit(1)).as("cnt"))
-    assert(!plan(qExpr()).contains("RangeAggPrefix"))
+    assert(!PlanShape(qExpr()).has[RangeAggPrefixExec])
     assert(rows2(qExpr()) == withPrefixOff(rows2(qExpr())))
     // LEFT OUTER band join: unmatched intervals survive with nulls —
     // not inner-join-over-band semantics; the rewrite must not touch it
@@ -356,7 +357,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
       .join(intervals, col("p") >= col("lo") && col("p") <= col("hi"),
         "left_outer")
       .groupBy("pid").agg(count(col("iid")).as("cnt"))
-    assert(!plan(qOuter()).contains("RangeAggPrefix"))
+    assert(!PlanShape(qOuter()).has[RangeAggPrefixExec])
     assert(rows2(qOuter()) == withPrefixOff(rows2(qOuter())))
   }
 
@@ -365,7 +366,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
 
   test("spark.graft.rangeJoin.aggPrefix=false disables the agg rewrite") {
     withPrefixOff {
-      assert(!plan(aggOverBand(points, intervals)).contains("RangeAggPrefix"))
+      assert(!PlanShape(aggOverBand(points, intervals)).has[RangeAggPrefixExec])
     }
   }
 
@@ -396,9 +397,9 @@ class RangeJoinRewriteSpec extends SparkSpec {
 
   test("keyed band join (equi + band) plans the keyed prefix, matches join truth") {
     val df = keyedAgg(events, sessions)
-    val p = plan(df)
-    assert(p.contains("RangeAggPrefix"), p)
-    assert(!p.contains("Join"), p)
+    val p = PlanShape(df)
+    assert(p.has[RangeAggPrefixExec], p)
+    assert(p.joins.isEmpty, p)
     val got = rows3n(df)
     assert(got == withPrefixOff(rows3n(keyedAgg(events, sessions))))
     // cross-key isolation: u2's ts=5 event must NOT count into u1's
@@ -419,7 +420,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = ev.join(se, col("ek") === col("sk") &&
         col("ts") >= col("lo") && col("ts") <= col("hi"))
       .groupBy("sid").agg(count(lit(1)).as("cnt"))
-    assert(plan(q()).contains("RangeAggPrefix"))
+    assert(PlanShape(q()).has[RangeAggPrefixExec])
     val got = rows2(q())
     assert(got == withPrefixOff(rows2(q())))
     // null = null never matches (sid 2 drops); NaN = NaN matches
@@ -437,7 +438,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = ev.join(se, col("r") === col("sr") && col("g") === col("sg") &&
         col("ts") >= col("lo") && col("ts") <= col("hi"))
       .groupBy("sid").agg(count(lit(1)).as("cnt"))
-    assert(plan(q()).contains("RangeAggPrefix"))
+    assert(PlanShape(q()).has[RangeAggPrefixExec])
     val got = rows2(q())
     assert(got == withPrefixOff(rows2(q())))
     assert(got == Set((10L, 1L), (30L, 1L))) // (a,2) band misses; (b,2) empty
@@ -447,7 +448,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = events.join(sessions, col("euser") === col("suser") &&
         col("ts") >= col("lo") && col("ts") <= col("hi"))
       .groupBy("suser").agg(count(lit(1)).as("cnt"))
-    assert(plan(q()).contains("RangeAggPrefix"))
+    assert(PlanShape(q()).has[RangeAggPrefixExec])
     val got = q().collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got == withPrefixOff(
       q().collect().map(r => (r.getString(0), r.getLong(1))).toSet))
@@ -462,7 +463,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def qPt() = events.join(sessions, col("euser") === col("suser") &&
         col("ts") >= col("lo") && col("ts") <= col("hi"))
       .groupBy("euser").agg(count(lit(1)).as("cnt"))
-    assert(plan(qPt()).contains("RangeAggPrefix"), plan(qPt()))
+    assert(PlanShape(qPt()).has[RangeAggPrefixExec], PlanShape(qPt()))
     val got = qPt().collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got == withPrefixOff(
       qPt().collect().map(r => (r.getString(0), r.getLong(1))).toSet))
@@ -488,7 +489,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def qNs() = events.join(sessions, col("euser") <=> col("suser") &&
         col("ts") >= col("lo") && col("ts") <= col("hi"))
       .groupBy("sid").agg(count(lit(1)).as("cnt"))
-    assert(!plan(qNs()).contains("RangeAggPrefix"))
+    assert(!PlanShape(qNs()).has[RangeAggPrefixExec])
     assert(rows2(qNs()) == withPrefixOff(rows2(qNs())))
   }
 
@@ -500,7 +501,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
         |JOIN r18_sessions s
         |  ON e.euser = s.suser AND e.ts BETWEEN s.lo AND s.hi
         |GROUP BY sid""".stripMargin)
-    assert(plan(q()).contains("RangeAggPrefix"), plan(q()))
+    assert(PlanShape(q()).has[RangeAggPrefixExec], PlanShape(q()))
     assert(rows2(q()) == withPrefixOff(rows2(q())))
   }
 
@@ -522,7 +523,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
           col("ts") >= col("lo") && col("ts") <= col("hi"))
         .groupBy("sid").agg(count(lit(1)).as("cnt"),
           sum(col("amount")).as("s"))
-      assert(plan(q()).contains("RangeAggPrefix"))
+      assert(PlanShape(q()).has[RangeAggPrefixExec])
       assert(rows3n(q()) == withPrefixOff(rows3n(q())), s"seed=$seed")
     }
   }
@@ -537,9 +538,9 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = pts.join(ivs, col("k") >= col("lo") && col("k") <= col("hi"))
       .groupBy("iid")
       .agg(min(col("amount")).as("mn"), max(col("amount")).as("mx"))
-    val p = plan(q())
-    assert(p.contains("RangeValueExtrema"), p)
-    assert(!p.toLowerCase.contains("nestedloop"), p)
+    val p = PlanShape(q())
+    assert(p.has[RangeValueExtremaExec], p)
+    assert(!p.has[BroadcastNestedLoopJoinExec], p)
     val got = q().collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSet
     val truth = withPrefixOff(q().collect()
@@ -556,8 +557,8 @@ class RangeJoinRewriteSpec extends SparkSpec {
       .toDF("iid", "lo", "hi")
     def q() = pts.join(ivs, col("k") >= col("lo") && col("k") <= col("hi"))
       .groupBy("iid").agg(max(col("amount")).as("mx"))
-    val p = plan(q())
-    assert(p.contains("RangeValueExtrema") && p.contains("RangeAggPrefix"), p)
+    val p = PlanShape(q())
+    assert(p.has[RangeValueExtremaExec] && p.has[RangeAggPrefixExec], p)
     val got = q().collect()
       .map(r => (r.getLong(0), Option(r.get(1)))).toMap
     val truth = withPrefixOff(q().collect()
@@ -576,7 +577,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def keyedQ() = pts.join(ivs, col("pk") === col("ik") &&
         col("k") >= col("lo") && col("k") <= col("hi"))
       .groupBy("iid").agg(max(col("amount")).as("mx"))
-    assert(plan(keyedQ()).contains("RangeValueExtrema"), plan(keyedQ()))
+    assert(PlanShape(keyedQ()).has[RangeValueExtremaExec], PlanShape(keyedQ()))
     assert(keyedQ().collect().map(r => (r.getLong(0), r.getDouble(1)))
       .toSet == Set((100L, 20.0), (200L, 99.0)))
     // floating pt: NaN points would need the operator's data probe —
@@ -586,15 +587,15 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def dq() = dpts.join(divs,
         col("k") >= col("lo") && col("k") <= col("hi"))
       .groupBy("iid").agg(max(col("amount")).as("mx"))
-    assert(!plan(dq()).contains("RangeValueExtrema"))
+    assert(!PlanShape(dq()).has[RangeValueExtremaExec])
     // mixed count + extrema: neither rewrite owns it — join stands,
     // answer still correct
     def mixedQ() = pts.join(ivs, col("pk") === col("ik") &&
         col("k") >= col("lo") && col("k") <= col("hi"))
       .groupBy("iid")
       .agg(count(lit(1)).as("c"), max(col("amount")).as("mx"))
-    assert(!plan(mixedQ()).contains("RangeValueExtrema") &&
-      !plan(mixedQ()).contains("RangeAggPrefix"))
+    assert(!PlanShape(mixedQ()).has[RangeValueExtremaExec] &&
+      !PlanShape(mixedQ()).has[RangeAggPrefixExec])
     assert(mixedQ().collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ==
       Set((100L, 2L, 20.0), (200L, 1L, 99.0)))
@@ -605,13 +606,13 @@ class RangeJoinRewriteSpec extends SparkSpec {
     val ivs = Seq((10L, 0, 6), (20L, 6, 9)).toDF("iid", "lo", "hi")
     def q() = pts.join(ivs, col("k") >= col("lo") && col("k") <= col("hi"))
       .groupBy("iid").agg(min(col("score")).as("mn"))
-    assert(plan(q()).contains("RangeValueExtrema"))
+    assert(PlanShape(q()).has[RangeValueExtremaExec])
     val got = q().collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got == Set((10L, -7), (20L, 42))) // IntegerType preserved
     def strictQ() = pts.join(ivs,
         col("k") > col("lo") && col("k") <= col("hi"))
       .groupBy("iid").agg(min(col("score")).as("mn"))
-    assert(!plan(strictQ()).contains("RangeValueExtrema"))
+    assert(!PlanShape(strictQ()).has[RangeValueExtremaExec])
     assert(strictQ().collect().map(r => (r.getLong(0), r.getInt(1)))
       .toSet == Set((10L, -7), (20L, 42)))
   }
@@ -639,10 +640,10 @@ class RangeJoinRewriteSpec extends SparkSpec {
     val b = bIvRaw.filter(col("blo") <= col("bhi"))
     def q() = a.join(b, col("alo") <= col("bhi") && col("blo") <= col("ahi"))
       .groupBy("aid").agg(count(lit(1)).as("overlap_cnt"))
-    val p = plan(q())
-    assert("RangeAggPrefix".r.findAllIn(p).size >= 3, p)
-    assert(!p.contains("BroadcastNestedLoopJoin") &&
-      !p.contains("CartesianProduct"), p)
+    val p = PlanShape(q())
+    assert(p.of[RangeAggPrefixExec].size >= 3, p)
+    assert(!p.has[BroadcastNestedLoopJoinExec] &&
+      !p.has[CartesianProductExec], p)
     val got = rows2(q())
     assert(got == withPrefixOff(rows2(q())))
     assert(got == Set((1L, 6L), (4L, 2L))) // hand-checked (RangeAggSpec)
@@ -668,14 +669,14 @@ class RangeJoinRewriteSpec extends SparkSpec {
     // the raw join REALLY matches the inverted row...
     assert(rows2(naive()) == Set((7L, 1L)))
     // ...so the rewrite must leave the unfiltered shape alone
-    assert(!plan(naive()).contains("RangeAggPrefix"), plan(naive()))
+    assert(!PlanShape(naive()).has[RangeAggPrefixExec], PlanShape(naive()))
     // ...and the filtered shape (which DOES rewrite) answers the
     // different, filtered question
     def filtered() = a.filter(col("alo") <= col("ahi"))
       .join(b.filter(col("blo") <= col("bhi")),
         col("alo") <= col("bhi") && col("blo") <= col("ahi"))
       .groupBy("aid").agg(count(lit(1)).as("c"))
-    assert(plan(filtered()).contains("RangeAggPrefix"), plan(filtered()))
+    assert(PlanShape(filtered()).has[RangeAggPrefixExec], PlanShape(filtered()))
     assert(rows2(filtered()).isEmpty)
   }
 
@@ -688,9 +689,9 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def q() = a.join(b, col("ak") === col("bk") &&
         col("alo") <= col("bhi") && col("blo") <= col("ahi"))
       .groupBy("aid").agg(count(lit(1)).as("c"))
-    val p = plan(q())
-    assert("RangeAggPrefix".r.findAllIn(p).size >= 3, p)
-    assert(p.contains("_graft_k0"), p) // keys lead the range sorts
+    val p = PlanShape(q())
+    assert(p.of[RangeAggPrefixExec].size >= 3, p)
+    assert(p.rangeShuffles("_graft_k0").nonEmpty, p) // keys lead the range sorts
     val got = rows2(q())
     assert(got == withPrefixOff(rows2(q())))
     assert(got == Set((1L, 2L)))
@@ -702,15 +703,15 @@ class RangeJoinRewriteSpec extends SparkSpec {
     def strictQ() = a.join(b,
         col("alo") < col("bhi") && col("blo") < col("ahi"))
       .groupBy("aid").agg(count(lit(1)).as("c"))
-    assert(!plan(strictQ()).contains("RangeAggPrefix"))
+    assert(!PlanShape(strictQ()).has[RangeAggPrefixExec])
     def globalQ() = a.join(b,
         col("alo") <= col("bhi") && col("blo") <= col("ahi"))
       .agg(count(lit(1)).as("c"))
-    assert(!plan(globalQ()).contains("RangeAggPrefix"))
+    assert(!PlanShape(globalQ()).has[RangeAggPrefixExec])
     def sumQ() = a.join(b,
         col("alo") <= col("bhi") && col("blo") <= col("ahi"))
       .groupBy("aid").agg(sum(col("bhi")).as("s"))
-    assert(!plan(sumQ()).contains("RangeAggPrefix"))
+    assert(!PlanShape(sumQ()).has[RangeAggPrefixExec])
     // and each decline still answers correctly through the join
     assert(rows2(strictQ()).nonEmpty &&
       globalQ().collect().head.getLong(0) > 0)
@@ -725,7 +726,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
         |JOIN (SELECT * FROM r19_biv WHERE blo <= bhi) b
         |  ON a.alo <= b.bhi AND b.blo <= a.ahi
         |GROUP BY a.aid""".stripMargin)
-    assert(plan(q()).contains("RangeAggPrefix"), plan(q()))
+    assert(PlanShape(q()).has[RangeAggPrefixExec], PlanShape(q()))
     assert(rows2(q()) == Set((1L, 6L), (4L, 2L)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{PlanShape, SparkSpec}
 import graft.ops.Relational
 import org.apache.spark.sql.functions._
 
@@ -83,7 +83,7 @@ class TopKPerGroupSpec extends SparkSpec {
 
   test("partial phase: map-side cap slashes shuffle volume, result identical") {
     // 20k rows, 4 groups, k=3, 8 mappers: the partial exec may shuffle
-    // at most k*groups*mappers = 96 rows; single-phase shuffles all 20k
+    // at most k*groups*mappers = 96 rows
     // localCheckpoint so the repartition's own 20k-row shuffle happens
     // ONCE here and the listener below sees only the top-k exchange
     val big = spark.range(20000)
@@ -91,33 +91,22 @@ class TopKPerGroupSpec extends SparkSpec {
         (col("id") % 4).cast("string").as("event_type"),
         (col("id") * 48271 % 997).cast("double").as("value"))
       .repartition(8).localCheckpoint(true)
-    def measured(partialOn: Boolean): (Seq[String], Long) =
-      graft.core.Util.withConfs(spark,
-        Seq("spark.graft.topk.partialEnabled" -> partialOn.toString)) {
-        val (rows, records, _) =
-          graft.core.Util.measureShuffleWrites(spark) {
-            TopKPerGroup(big, Seq("event_type"),
-                Seq(("value", false), ("event_id", true)), k = 3)
-              .orderBy(col("event_type"), desc("value"), col("event_id"))
-              .collect().map(_.toString).toSeq
-          }
-        (rows, records)
-      }
-    val (rowsOn, shuffledOn) = measured(partialOn = true)
-    val (rowsOff, shuffledOff) = measured(partialOn = false)
-    assert(rowsOn == rowsOff)                 // semilattice: exact
-    assert(rowsOn.size == 12)                 // 4 groups x k=3
-    // the off run shuffles the full 20k; on caps at k*groups*mappers
-    // (+ the tiny post-topk rows feeding the final orderBy)
-    assert(shuffledOff >= 20000L, s"off=$shuffledOff")
-    assert(shuffledOn <= 200L, s"on=$shuffledOn")
-    val planOn = {
-      spark.conf.set("spark.graft.topk.partialEnabled", "true")
-      try TopKPerGroup(big, Seq("event_type"),
-        Seq(("value", false), ("event_id", true)), k = 3)
-        .queryExecution.executedPlan.toString
-      finally spark.conf.unset("spark.graft.topk.partialEnabled")
+    def topK = TopKPerGroup(big, Seq("event_type"),
+      Seq(("value", false), ("event_id", true)), k = 3)
+    val (rows, shuffled, _) = graft.core.Util.measureShuffleWrites(spark) {
+      topK.orderBy(col("event_type"), desc("value"), col("event_id"))
+        .collect().map(_.toString).toSeq
     }
-    assert(planOn.contains("TopKPerGroupPartial"), planOn)
+    // driver-side brute force over the same rows: top-3 per group
+    val expected = big.collect().toSeq.groupBy(_.getString(1)).toSeq
+      .sortBy(_._1).flatMap { case (_, rs) =>
+        rs.sortBy(r => (-r.getDouble(2), r.getLong(0))).take(3)
+      }.map(_.toString)
+    assert(rows == expected)
+    assert(rows.size == 12)                   // 4 groups x k=3
+    // the cap is k*groups*mappers (+ the tiny post-topk rows feeding
+    // the final orderBy)
+    assert(shuffled <= 200L, s"shuffled=$shuffled")
+    assert(PlanShape(topK).of[TopKPerGroupExec].exists(_.partial), PlanShape(topK))
   }
 }
