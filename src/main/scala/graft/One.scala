@@ -1,6 +1,4 @@
 package graft
-import java.nio.file.{Files, Paths}
-import graft.core.Util.jsonString
 
 /** Dev harness: dump ONE query's result + its oracle SQL in the Verify
   * layout, so `tools/check_oracle.py <out> <sfDir>` can gate a single
@@ -12,9 +10,7 @@ object One {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     SparkEntry.queries(name)(spark, sfDir)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-    val sql = SparkEntry.oracleSql.get(name)
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      sql.map(s => s"{${jsonString(name)}: ${jsonString(s)}}").getOrElse("{}"))
+    Verify.writeOracleSql(outDir, SparkEntry.oracleSql.get(name).map(name -> _))
     spark.stop()
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 import graft.core.Tables
+import graft.core.Util.withConfs
 import graft.ops.Relational
 import graft.text.{Clean, Filters, TextStats}
 import graft.ml.{Tfidf, ClusterStats}
@@ -245,21 +246,9 @@ object SparkEntry {
         .cast("long").as("lang_dist"))
   }
 
-  /** Scope a session conf to `body` (set → run → restore), so an
-    * opt-in rule's effect never leaks into other queries. */
-  private def withConf[T](s: SparkSession, key: String, value: String)
-                         (body: => T): T = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** Scope the DedupComputeRewrite conf to `body`. */
   def withDedupCompute[T](s: SparkSession)(body: => T): T =
-    withConf(s, "spark.graft.dedupCompute.enabled", "true")(body)
+    withConfs(s, Seq("spark.graft.dedupCompute.enabled" -> "true"))(body)
 
   /** j3c's naive projection, PRE-checkpoint, shared with PlanShapeSpec (the
     * cmsBuild precedent) so the plan gate can prove the auto-mode
@@ -298,7 +287,7 @@ object SparkEntry {
 
   /** Scope the RangeJoinRewrite width conf to `body`. */
   def withRangeJoinWidth[T](s: SparkSession, w: String)(body: => T): T =
-    withConf(s, "spark.graft.rangeJoin.binWidth", w)(body)
+    withConfs(s, Seq("spark.graft.rangeJoin.binWidth" -> w))(body)
 
   /** Scope the aggregate-over-band-join prefix rewrite OFF: j7 exists
     * to differentially gate the PAIR-JOIN operator against DuckDB's
@@ -308,7 +297,7 @@ object SparkEntry {
     * gates. The rewrite staying ON for j7b/j7e is the product behavior;
     * this scope is only for frames whose CONTRACT is the join. */
   def withAggPrefixOff[T](s: SparkSession)(body: => T): T =
-    withConf(s, "spark.graft.rangeJoin.aggPrefix", "false")(body)
+    withConfs(s, Seq("spark.graft.rangeJoin.aggPrefix" -> "false"))(body)
 
   /** The CMS sketch-build aggregate of llm_cms_counts, BEFORE its
     * driver-side head(): shared with PlanShapeSpec so the plan gate covers
@@ -605,7 +594,7 @@ object SparkEntry {
     // plan, parity vs the shuffled path, and the mismatched-layout
     // fallback; the DuckDB twin regenerates both grids.
     "s20_spj_join" -> ((s, dir) =>
-      graft.core.Util.withConfs(s, Seq(
+      withConfs(s, Seq(
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -1105,7 +1094,7 @@ object SparkEntry {
     // REWRITTEN plan's rows — a dropped/duplicated row through the
     // join-back dies here.
     "j3c_dedup_auto_cost" -> ((s, dir) =>
-      graft.core.Util.withConfs(s, Seq("spark.sql.cbo.enabled" -> "true")) {
+      withConfs(s, Seq("spark.sql.cbo.enabled" -> "true")) {
         j3cAutoProjection(s).orderBy("id").localCheckpoint(true)
       }),
     "j4_eps_self_join" -> ((s, dir) => {

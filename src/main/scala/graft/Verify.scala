@@ -4,6 +4,15 @@ import graft.core.Util.jsonString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Write `sqls` (query name → oracle SQL) as `outDir/oracle_sql.json`,
+    * the one writer behind Verify, DumpOracle and One. */
+  def writeOracleSql(outDir: String, sqls: Iterable[(String, String)]): Unit = {
+    val json = sqls
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = graft.core.Tables.session("graft-verify", "4")
@@ -21,10 +30,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
 }

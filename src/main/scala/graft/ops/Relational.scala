@@ -121,8 +121,11 @@ object Relational {
     * one-row-per-column output. Only the modal value still needs its
     * own narrow groupBy per STRING column (a per-value count cannot
     * ride a global agg), shuffling one (value, count) pair per
-    * distinct value. Described columns must be distinct (the shared
-    * pass aliases stats by column name).
+    * distinct value.
+    *
+    * Contract: `cols` must be distinct — the shared pass aliases stats
+    * by column name — and a duplicate name throws
+    * `IllegalArgumentException` before any job runs.
     *
     * SCALE BOUNDARY (exact percentiles): the three quartiles come from ONE
     * `percentile(col, array(0.25,0.5,0.75))` aggregate — a single shared

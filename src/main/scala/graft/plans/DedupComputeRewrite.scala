@@ -169,9 +169,8 @@ object DedupComputeRewrite extends Rule[LogicalPlan] {
   // string length of the key columns, one column-pruned pass over
   // `child` — under tight eligibility so the probe itself can't become
   // the regression:
-  //  * `spark.graft.dedupCompute.probe` on (default) and not already
-  //    inside a probe (thread-local — the probe's own optimization
-  //    would otherwise recurse);
+  //  * not already inside a probe (thread-local — the probe's own
+  //    optimization would otherwise recurse);
   //  * `child` is a scan-shaped subtree (leaf/Filter/Project only):
   //    probing a join or aggregate would RUN it, doubling the work the
   //    gate is supposed to save;
@@ -181,13 +180,12 @@ object DedupComputeRewrite extends Rule[LogicalPlan] {
   //    save — ANALYZE or the conf force remain the warehouse-scale
   //    levers;
   //  * the candidate aliases contain a kernel class with measured WIN
-  //    potential — by default only the quadratic graft_seq_ratio
-  //    kernel; ScalaUDF probing is OPT-IN via `probeUdfs` (see
-  //    probeWorthy: default-on UDF probing taxed every ml/multimodal
-  //    query, measured +1.7 s on m8_lsa), and the linear regexp/JSON
-  //    classes lost at every measured dup factor, so spending a probe
-  //    scan on them would be pure overhead — they keep requiring
-  //    ANALYZE'd stats.
+  //    potential — only the quadratic graft_seq_ratio kernel; never a
+  //    ScalaUDF (see probeWorthy: UDF probing taxed every
+  //    ml/multimodal query, measured +1.7 s on m8_lsa), and the linear
+  //    regexp/JSON classes lost at every measured dup factor, so
+  //    spending a probe scan on them would be pure overhead — they
+  //    keep requiring ANALYZE'd stats.
   // Results are cached per (canonicalized child, key names) so the
   // optimizer's fixpoint re-runs and repeated queries over the same
   // relation don't re-scan.
@@ -209,33 +207,22 @@ object DedupComputeRewrite extends Rule[LogicalPlan] {
     case _ => true
   }
 
-  /** ScalaUDF probing is OPT-IN (`spark.graft.dedupCompute.probeUdfs`):
-    * spark.ml pipelines and renderer helpers wrap nearly every
-    * transform in a UDF over a near-unique key, so default-on UDF
-    * probing taxed EVERY ml/multimodal query with a probe scan that
-    * always declined (measured +1.7 s on m8_lsa, +1.5 s on
-    * mm_audio_features at sf0.1 — r14 bench sweep). The quadratic
-    * graft_seq_ratio kernel — the one measured-WIN class — stays
-    * probe-worthy by default. */
-  private def probeWorthy(aliases: Seq[Alias]): Boolean = {
-    val udfsOk = conf.getConfString(
-      "spark.graft.dedupCompute.probeUdfs", "false").toBoolean
-    aliases.exists(_.child.exists {
-      case _: graft.expr.GraftSeqRatio => true
-      case _: ScalaUDF => udfsOk
-      case _ => false
-    })
-  }
+  /** Only the quadratic graft_seq_ratio kernel — the one measured-WIN
+    * class — is probe-worthy. A ScalaUDF never is: spark.ml pipelines
+    * and renderer helpers wrap nearly every transform in a UDF over a
+    * near-unique key, so UDF probing taxed EVERY ml/multimodal query
+    * with a probe scan that always declined (measured +1.7 s on m8_lsa,
+    * +1.5 s on mm_audio_features at sf0.1 — r14 bench sweep). */
+  private def probeWorthy(aliases: Seq[Alias]): Boolean =
+    aliases.exists(_.child.exists(_.isInstanceOf[graft.expr.GraftSeqRatio]))
 
   private def probeInputs(child: LogicalPlan, refs: AttributeSet,
                           aliases: Seq[Alias])
       : Option[(Double, Double, Map[ExprId, Double])] = {
-    val enabled = conf.getConfString(
-      "spark.graft.dedupCompute.probe", "true").toBoolean
     val maxBytes = conf.getConfString(
       "spark.graft.dedupCompute.probeMaxBytes", (1L << 30).toString).toLong
     val keys = refs.toSeq.sortBy(_.name)
-    if (!enabled || probing.get() || !probeWorthy(aliases) ||
+    if (probing.get() || !probeWorthy(aliases) ||
         !scanShaped(child) || keys.map(_.name).distinct.size != keys.size ||
         child.stats.sizeInBytes > maxBytes) return None
     val spark = org.apache.spark.sql.classic.SparkSession.getActiveSession

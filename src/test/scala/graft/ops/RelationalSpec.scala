@@ -70,6 +70,15 @@ class RelationalSpec extends SparkSpec {
     assert(r.getDouble(3) == 1.0 && r.getDouble(4) == 4.0)
   }
 
+  test("describeAll: duplicate column names throw IllegalArgumentException") {
+    val e = intercept[IllegalArgumentException] {
+      Relational.describeAll(sales, Seq("v", "k", "v"))
+    }
+    assert(e.getMessage.contains("duplicate columns"))
+    // distinct names describe one row per column
+    assert(Relational.describeAll(sales, Seq("k", "v")).count() == 2)
+  }
+
   test("skewSafeJoin equals the plain join result") {
     val dim = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "dimv")
     val plain = sales.join(dim, "k").select("k", "g", "v", "dimv")

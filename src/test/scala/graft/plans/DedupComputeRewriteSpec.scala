@@ -245,17 +245,12 @@ class DedupComputeRewriteSpec extends SparkSpec {
     spark.conf.set("spark.graft.dedupCompute.probeMaxBytes", "1")
     try assert(!optimized(win).contains("Join"))
     finally spark.conf.unset("spark.graft.dedupCompute.probeMaxBytes")
-    // probe off restores the conservative decline
-    spark.conf.set("spark.graft.dedupCompute.probe", "false")
-    try assert(!optimized(win).contains("Join"))
-    finally spark.conf.unset("spark.graft.dedupCompute.probe")
-    // ScalaUDF probing is OPT-IN: default-off (spark.ml wraps every
-    // transform in a UDF over a near-unique key — default-on probing
-    // taxed every ml/multimodal query, the r14 bench finding), and the
-    // documented probeUdfs escape hatch must genuinely re-enable it.
-    // The UDF fixture needs 20k rows of ~4.8KB text for the 5µs+20ns/B
-    // UDF estimate to clear the 1.2s fixed cost — at that size the
-    // default-off decline is the point being pinned
+    // a ScalaUDF is never probe-worthy (spark.ml wraps every transform
+    // in a UDF over a near-unique key — UDF probing taxed every
+    // ml/multimodal query, the r14 bench finding). The UDF fixture
+    // needs 20k rows of ~4.8KB text for the 5µs+20ns/B UDF estimate to
+    // clear the 1.2s fixed cost — at that size the decline is the
+    // point being pinned
     val udfP = probeRoot.resolve("udocs").toString
     spark.range(20000).selectExpr("id",
       "repeat(concat('tok', cast(id % 10 as string), ' '), 600) AS text")
@@ -264,11 +259,6 @@ class DedupComputeRewriteSpec extends SparkSpec {
     val heavy = udf { s: String => s.length } // interpreted, "expensive"
     def udfProj = udfTbl.select(col("id"), heavy(col("text")).as("r"))
     assert(!optimized(udfProj).contains("Join"), optimized(udfProj))
-    spark.conf.set("spark.graft.dedupCompute.probeUdfs", "true")
-    try {
-      val plan = optimized(udfProj)
-      assert(plan.contains("Join") && plan.contains("Aggregate"), plan)
-    } finally spark.conf.unset("spark.graft.dedupCompute.probeUdfs")
     } finally graft.core.Util.deleteRecursively(probeRoot)
   }
 
