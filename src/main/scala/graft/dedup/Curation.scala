@@ -194,25 +194,9 @@ object Curation {
     val cc =
       if (edgeSample.length <= smallGraphEdgeCap) {
         edgePairs.unpersist(blocking = false)
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        // union by MIN root: every union hangs the larger root under the
-        // smaller, so each tree's root is the min id ever merged into it
-        edgeSample.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        val labelDf = spark.createDataset(
-            parent.keysIterator.map(id => (id, find(id))).toSeq)
-          .toDF("doc_id", "_gx_gid")
+        val uf = new graft.core.MinRootUnionFind
+        edgeSample.foreach { case (a, b) => uf.add(a); uf.add(b); uf.union(a, b) }
+        val labelDf = spark.createDataset(uf.labels).toDF("doc_id", "_gx_gid")
         allIds.select(col(idCol).cast("long").as("doc_id"))
           .join(broadcast(labelDf), Seq("doc_id"), "left")
           .select(col("doc_id"),

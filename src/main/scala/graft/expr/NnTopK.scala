@@ -81,50 +81,10 @@ case class NnTopK(vec: Expression, mat: Expression, k: Int)
     if (v0 == null) return null
     val v = VecKernels.asDoubles(v0.asInstanceOf[ArrayData],
       isFloatArray(vec.dataType))
-    val m = matrix.length
-    val kk = math.min(k, m)
-    if (kk == 0) return new GenericArrayData(Array.empty[Any])
-    // bounded max-heap on (dist, idx): root = current worst of the best k
-    val hd = new Array[Double](kk)
-    val hi = new Array[Int](kk)
-    var size = 0
-    def worse(d1: Double, i1: Int, d2: Double, i2: Int): Boolean =
-      d1 > d2 || (d1 == d2 && i1 > i2)
-    var r = 0
-    while (r < m) {
-      val d = VecKernels.l2Dist(v, matrix(r))
-      if (size < kk) {
-        var c = size; hd(c) = d; hi(c) = r; size += 1
-        while (c > 0 && worse(hd(c), hi(c), hd((c - 1) / 2), hi((c - 1) / 2))) {
-          val p = (c - 1) / 2
-          val td = hd(c); hd(c) = hd(p); hd(p) = td
-          val ti = hi(c); hi(c) = hi(p); hi(p) = ti
-          c = p
-        }
-      } else if (worse(hd(0), hi(0), d, r)) {
-        hd(0) = d; hi(0) = r
-        var c = 0
-        var done = false
-        while (!done) {
-          val l = 2 * c + 1; val rr = 2 * c + 2
-          var w = c
-          if (l < kk && worse(hd(l), hi(l), hd(w), hi(w))) w = l
-          if (rr < kk && worse(hd(rr), hi(rr), hd(w), hi(w))) w = rr
-          if (w == c) done = true
-          else {
-            val td = hd(c); hd(c) = hd(w); hd(w) = td
-            val ti = hi(c); hi(c) = hi(w); hi(w) = ti
-            c = w
-          }
-        }
-      }
-      r += 1
-    }
-    // heap -> ascending (dist, idx)
-    val order = (0 until size).sortBy(i => (hd(i), hi(i)))
-    new GenericArrayData(order.map { i =>
-      new GenericInternalRow(Array[Any](hi(i), hd(i)))
-    }.toArray[Any])
+    val (idx, dist) = VecKernels.topK(v, matrix, k)
+    new GenericArrayData(Array.tabulate[Any](idx.length) { i =>
+      new GenericInternalRow(Array[Any](idx(i), dist(i)))
+    })
   }
 
   override protected def withNewChildrenInternal(

@@ -119,20 +119,26 @@ object ScaleGates {
     * real one-pass exact cost on the payer and memo reads on the rest
     * (the flagshipStatsCache pattern). */
   def annGateReset(spark: SparkSession): Unit = annCtxCache.synchronized {
-    Option(annCtxCache.get(spark)).foreach { m =>
-      m.values.foreach(c => c.corpus.unpersist(blocking = false))
-      m.clear()
-    }
+    Option(annCtxCache.get(spark)).foreach(dropAnnCtxs(spark, _))
   }
 
   /** Session-agnostic reset for Bench's hook (which only has the query
     * name): drops every session's memo. */
   def annGateResetAll(): Unit = annCtxCache.synchronized {
     import scala.jdk.CollectionConverters._
-    annCtxCache.values.asScala.foreach { m =>
+    annCtxCache.asScala.foreach { case (s, m) => dropAnnCtxs(s, m) }
+  }
+
+  /** Clears one session's memo, unpersisting its cached corpora only
+    * while the session's context is alive: a stopped context's block
+    * manager is gone (unpersist throws a NullPointerException there),
+    * and its cached blocks went with it. */
+  private def dropAnnCtxs(spark: SparkSession,
+      m: scala.collection.mutable.Map[(String, Long, Int, Int), AnnGateCtx])
+      : Unit = {
+    if (!spark.sparkContext.isStopped)
       m.values.foreach(c => c.corpus.unpersist(blocking = false))
-      m.clear()
-    }
+    m.clear()
   }
 
   /** Memoized shared gate context — see [[AnnGateCtx]]. `dirKey` keys

@@ -2,8 +2,10 @@ package graft.ml
 
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vectors}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import scala.collection.mutable
 
 /** M5 DBSCAN — the reference's single genuinely custom algorithm
@@ -11,9 +13,12 @@ import scala.collection.mutable
   * word2vec_dbscan_approach.ipynb:223-233, :30081-30092). Labels: 0..C-1
   * clusters, −1 noise.
   *
-  * Two paths sharing semantics:
+  * Paths sharing semantics:
   *  - [[exact]]: driver-side textbook DBSCAN for parity testing (n ≤ ~2e4;
   *    the reference scale is n≈2.8e3).
+  *  - [[local]]: [[distributed]]'s exact contract (LSH recall included)
+  *    computed on the driver for a point set already collected there —
+  *    the flagship's reference-scale route, no Spark job.
   *  - [[distributed]]: ε-neighborhood self-join via
   *    BucketedRandomProjectionLSH.approxSimilarityJoin → core filter
   *    (|N_ε| ≥ minPts) → connected components over core–core edges →
@@ -126,10 +131,7 @@ object Dbscan {
                               denseBucketCap: Int = 16384,
                               denseChunk: Int = 2048): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(pts.sparkSession)
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setBucketLength(bucketLength).setNumHashTables(numHashTables)
-      .setSeed(42L)
+    val lsh = bucketLsh(bucketLength, numHashTables)
     // the vector is flattened to a plain double array ONCE per input
     // row, BEFORE the hash-table explode, so the per-CANDIDATE distance
     // verify — the quadratic part of a hot bucket — runs the codegen'd
@@ -347,6 +349,15 @@ object Dbscan {
     coldEdges.unionByName(denseEdges).distinct()
   }
 
+  /** The seed-42 LSH every ε-edge route buckets with: (features) →
+    * (hashes), one 1-element vector floor(proj/bucketLength) per table. */
+  private def bucketLsh(bucketLength: Double,
+                        numHashTables: Int): BucketedRandomProjectionLSH =
+    new BucketedRandomProjectionLSH()
+      .setInputCol("features").setOutputCol("hashes")
+      .setBucketLength(bucketLength).setNumHashTables(numHashTables)
+      .setSeed(42L)
+
   /** Blocked verify of one dense-bucket chunk pair: emits every ordered
     * ε-pair (a, b) AND (b, a) between `ra` and `rb` (rows of
     * struct(id: long, farr: array<double>, hvals: array<double>)) under
@@ -466,38 +477,9 @@ object Dbscan {
       joined.as[(Long, Long)].limit(smallGraphEdgeCap + 1).collect()
     if (edgeSample.length <= smallGraphEdgeCap) {
       joined.unpersist(blocking = false)
-      // degree = ε-neighbor count + 1 (self counts once, matching
-      // |N_ε(p)| ≥ minPts with p ∈ N_ε(p)); ids absent from the edge
-      // relation stay absent, exactly as the distributed groupBy does
-      val deg = mutable.Map.empty[Long, Int]
-      edgeSample.foreach { case (a, _) => deg(a) = deg.getOrElse(a, 0) + 1 }
-      val coreIds = deg.collect { case (a, d) if d + 1 >= minPts => a }.toSet
-      val parent = mutable.Map.empty[Long, Long] ++ coreIds.map(i => i -> i)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      // union by MIN root: the representative is the min core member id,
-      // matching GraphX connectedComponents' vertex labeling exactly
-      edgeSample.foreach { case (a, b) =>
-        if (coreIds(a) && coreIds(b)) {
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-      }
-      val labels = mutable.Map.empty[Long, Long]
-      coreIds.foreach(c => labels(c) = find(c))
-      // border points: any non-core point with a core ε-neighbor joins
-      // that cluster (lowest label for determinism)
-      edgeSample.foreach { case (a, b) =>
-        if (!coreIds(a) && coreIds(b)) {
-          val l = find(b)
-          labels(a) = math.min(labels.getOrElse(a, Long.MaxValue), l)
-        }
-      }
+      // the pair relation holds both orientations of every ε-edge
+      val labels = labelByEdges(minPts,
+        f => edgeSample.foreach { case (a, b) => f(a, b) })
       val labelDf = spark.createDataset(labels.toSeq).toDF("id", "label")
       // broadcast join onto the full id set; no checkpoint needed — the
       // lineage is one scan plus a local relation, nothing cached
@@ -549,6 +531,77 @@ object Dbscan {
       .localCheckpoint(true)
     borderLabels.unpersist(blocking = false)
     result
+  }
+
+  /** The DBSCAN label policy over an ε-edge relation, shared by
+    * [[distributed]]'s small-graph route and [[local]] so the two cannot
+    * drift apart. `forEachEdge` must walk every ε-edge in BOTH
+    * orientations, (a, b) and (b, a); it is called three times (degrees;
+    * core–core unions; border attach). degree = ε-neighbor count + 1
+    * (self counts once, matching |N_ε(p)| ≥ minPts with p ∈ N_ε(p)); ids
+    * with no edge stay absent, exactly as the distributed groupBy does.
+    * A core point's label is the min core id of its core–core component
+    * (union by MIN root, GraphX connectedComponents' vertex labeling); a
+    * border point takes its lowest core-neighbour label. Returns labels
+    * for core and border ids only; every other id is noise (−1). */
+  private def labelByEdges(minPts: Int,
+      forEachEdge: ((Long, Long) => Unit) => Unit): mutable.Map[Long, Long] = {
+    val deg = mutable.Map.empty[Long, Int]
+    forEachEdge((a, _) => deg(a) = deg.getOrElse(a, 0) + 1)
+    val coreIds = deg.collect { case (a, d) if d + 1 >= minPts => a }.toSet
+    val uf = new graft.core.MinRootUnionFind
+    coreIds.foreach(uf.add)
+    forEachEdge((a, b) => if (coreIds(a) && coreIds(b)) uf.union(a, b))
+    val labels = mutable.Map.empty[Long, Long] ++ uf.labels
+    forEachEdge { (a, b) =>
+      if (!coreIds(a) && coreIds(b))
+        labels(a) = math.min(labels.getOrElse(a, Long.MaxValue), uf.find(b))
+    }
+    labels
+  }
+
+  /** [[distributed]]'s labels for a point set already on the driver
+    * (the flagship's reference-scale route), computed without a job.
+    * Same contract, at distributed()'s default bucket length 2.0: an
+    * ε-edge joins two distinct ids that share a bucket of the same
+    * seed-42 LSH in some table (fitted and applied on a local relation
+    * of the points in `spark`, which Spark evaluates on the driver), pass
+    * [[epsEdges]]' band prefilter, and lie strictly within ε
+    * (VecKernels.l2Sq < ε²); the labels follow [[labelByEdges]]. The
+    * edge test is recomputed on each of its scans of the pairs instead
+    * of kept as an edge list, so memory stays O(n) even when ε connects
+    * every pair. Ids must be unique. Returns labels aligned to `ids`. */
+  def local(spark: SparkSession, ids: Array[Long], pts: Array[Array[Double]],
+            eps: Double, minPts: Int, numHashTables: Int = 3): Array[Long] = {
+    val n = ids.length
+    if (n == 0) return Array.empty[Long]
+    val bucketLength = 2.0
+    val rel = spark.createDataFrame(
+      java.util.Arrays.asList(pts.map(p => Row(Vectors.dense(p))): _*),
+      StructType(Seq(StructField("features", SQLDataTypes.VectorType))))
+    val hv = bucketLsh(bucketLength, numHashTables).fit(rel).transform(rel)
+      .select("hashes").collect()
+      .map(_.getSeq[org.apache.spark.ml.linalg.Vector](0).map(_(0)).toArray)
+    val eps2 = eps * eps
+    val band = math.ceil(eps / bucketLength + 1) - 1
+    def edge(i: Int, j: Int): Boolean = {
+      val hi = hv(i); val hj = hv(j)
+      var shared = false
+      var inBand = true
+      var t = 0
+      while (t < numHashTables) {
+        if (hi(t) == hj(t)) shared = true
+        if (math.abs(hi(t) - hj(t)) > band) inBand = false
+        t += 1
+      }
+      shared && inBand && ids(i) != ids(j) &&
+        graft.expr.VecKernels.l2Sq(pts(i), pts(j)) < eps2
+    }
+    val labels = labelByEdges(minPts, f =>
+      for (i <- 0 until n; j <- i + 1 until n if edge(i, j)) {
+        f(ids(i), ids(j)); f(ids(j), ids(i))
+      })
+    ids.map(labels.getOrElse(_, -1L))
   }
 
   /** Sample-based DBSCAN (the DBSCAN++ pattern) — the bounded-cost scale

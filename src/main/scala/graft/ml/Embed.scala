@@ -94,6 +94,38 @@ object Embed {
       .orderBy("i")
   }
 
+  /** Driver form of `collectCurve(knnDistanceCurve(…, k))` for a point
+    * set already on the driver (the flagship's reference-scale route,
+    * n ≤ curveCap, well under collectCurve's decimation threshold): no
+    * job, O(n²·d) kernel work. Each row's k nearest distances
+    * (self included) come from the same heap-select kernel the
+    * graft_nn_topk expression runs; each rank column is sorted
+    * ascending, and curve[i] sums the ranks' i-th values in rank order
+    * before dividing. Ties are irrelevant here: a row's k smallest
+    * distances and a column's sorted values do not depend on which
+    * tied point the (dist, id) order would pick. The distributed avg()
+    * sums in shuffle-arrival order, so the two forms agree to the last
+    * few ulps, not bit for bit. */
+  def knnCurve(pts: Array[Array[Double]], k: Int): Array[Double] = {
+    val n = pts.length
+    val kk = math.min(k, n)
+    // k ≤ 2 keeps the 2nd-NN column alone, as knnDistanceCurve does
+    val ranks = if (k > 2) 0 until kk else 1 until math.min(kk, 2)
+    val cols = ranks.map(_ => new Array[Double](n))
+    var r = 0
+    while (r < n) {
+      val dist = graft.expr.VecKernels.topK(pts(r), pts, kk)._2
+      ranks.indices.foreach(c => cols(c)(r) = dist(ranks(c)))
+      r += 1
+    }
+    cols.foreach(java.util.Arrays.sort)
+    Array.tabulate(if (ranks.isEmpty) 0 else n) { i =>
+      var s = 0.0
+      cols.foreach(c => s += c(i))
+      s / ranks.length
+    }
+  }
+
   /** Scale path for M3: candidate pairs come from the banded
     * random-hyperplane LSH join instead of the n² cross join, then the
     * same rank/column-sort/row-mean. Approximate exactly where ANN is:

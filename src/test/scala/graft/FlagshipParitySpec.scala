@@ -133,4 +133,41 @@ class FlagshipParitySpec extends SparkSpec {
       f"ε=1e-3 should mark most docs noise, got noise frac $noiseFrac%.3f")
     tight.unpersist()
   }
+
+  test("driver route (n <= curveCap): rows and schema equal the distributed " +
+    "stage chain at sf0.001") {
+    import graft.ml.{Dbscan, Embed, Kneedle, VectorOps}
+    import graft.text.Clean
+    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text")
+    val got = SparkEntry.flagshipLabels(docs0)
+    // the chain flagshipLabels ran before its driver route, stage by stage:
+    // knnDistanceCurve → collectCurve → Kneedle → Dbscan.distributed → join
+    val toks = docs0
+      .select(col("doc_id"), Clean.cleanMessage(col("text")).as("text"))
+      .select(col("doc_id"), col("text"),
+        Clean.tokenizeTreebankish(lower(col("text"))).as("tokens"))
+      .filter(size(col("tokens")) > 0)
+    val model = Embed.word2vec(toks, "tokens", vectorSize = 16, maxIter = 1)
+    val vecs = Embed.sentence2vec(model, toks, "tokens")
+      .select(col("doc_id"), col("text"),
+        VectorOps.toArray(col("sent_vec")).as("v"))
+      .cache()
+    val n = vecs.count()
+    assert(n > 0 && n <= 2000L, s"sf0.001 must take the driver route, n=$n")
+    val curve = Embed.collectCurve(
+      Embed.knnDistanceCurve(vecs, "doc_id", "v", Embed.defaultK(n)))
+    val eps = Kneedle.epsilonSearch(curve).getOrElse(curve(curve.length / 2))
+    val labels = Dbscan.distributed(vecs.select(col("doc_id"),
+        VectorOps.toMlVector(col("v")).as("features")),
+      "doc_id", "features", eps = math.max(eps, 1e-3), minPts = 5)
+    val want = vecs.join(labels, "doc_id").select("doc_id", "text", "label")
+    assert(got.schema == want.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().sortBy(_.getAs[Number](0).longValue).toSeq
+    val wantRows = rows(want)
+    assert(rows(got) == wantRows)
+    assert(wantRows.exists(_.getLong(2) >= 0L)) // the fixture clusters
+    vecs.unpersist()
+  }
 }

@@ -13,6 +13,28 @@ class DbscanSpec extends SparkSpec {
     (0 until 10).map(i => (100L + i, Array(50.0 + i * 0.1, 0.0))) ++
     Seq((999L, Array(500.0, 500.0)))
 
+  // two 8-dim gaussian clusters whose tails approach ε = 0.55, plus a
+  // sparse sub-density bridge between them. 8-dim (not 2): in low
+  // dimensions few random projections already separate everything and
+  // LSH recall cannot fail; at the registered workload's geometry
+  // (64-dim embeddings) LSH genuinely drops edges
+  private lazy val borderHeavy: Seq[(Long, Array[Double])] = {
+    val dim = 8
+    val rng = new scala.util.Random(7)
+    def blob(cx: Double, n: Int, base: Long): Seq[(Long, Array[Double])] =
+      (0 until n).map { i =>
+        val a = Array.fill(dim)(rng.nextGaussian() * 0.35)
+        a(0) += cx
+        (base + i, a)
+      }
+    val bridge = (0 until 20).map { i =>
+      val a = Array.fill(dim)(rng.nextDouble() * 0.5)
+      a(0) = 2.0 + rng.nextDouble() * 2.0
+      (5000L + i, a)
+    }
+    blob(0.0, 150, 0L) ++ blob(6.0, 150, 1000L) ++ bridge
+  }
+
   test("exact DBSCAN finds 2 clusters + 1 noise") {
     val labels = Dbscan.exact(pts.map(_._2).toArray, eps = 0.5, minPts = 3)
     assert(labels.count(_ == -1) == 1)
@@ -174,23 +196,7 @@ class DbscanSpec extends SparkSpec {
     // the data where a dropped bucket-join edge flips border labels or
     // splits a cluster. Same knobs as the registered m5_dbscan_dist
     // config (bucketLength 2.0, numHashTables 3, minPts 5).
-    // 8-dim (not 2): in low dimensions few random projections already
-    // separate everything and the gate cannot fail; at the registered
-    // workload's geometry (64-dim embeddings) LSH genuinely drops edges
-    val dim = 8
-    val rng = new scala.util.Random(7)
-    def blob(cx: Double, n: Int, base: Long): Seq[(Long, Array[Double])] =
-      (0 until n).map { i =>
-        val a = Array.fill(dim)(rng.nextGaussian() * 0.35)
-        a(0) += cx
-        (base + i, a)
-      }
-    val bridge = (0 until 20).map { i =>
-      val a = Array.fill(dim)(rng.nextDouble() * 0.5)
-      a(0) = 2.0 + rng.nextDouble() * 2.0
-      (5000L + i, a)
-    }
-    val all = blob(0.0, 150, 0L) ++ blob(6.0, 150, 1000L) ++ bridge
+    val all = borderHeavy
     val eps = 0.55 // near the NN-distance scale: the eps-graph is SPARSE,
                    // so one dropped LSH edge can demote cores / flip labels
     val fdf = all.map { case (id, a) => (id, Vectors.dense(a)) }
@@ -215,6 +221,47 @@ class DbscanSpec extends SparkSpec {
     info(f"distributed-vs-exact ARI (3 tables, registered): $ari%.4f; " +
       f"degraded 1-table: $ariDegraded%.4f")
     assert(ari >= 0.85, s"distributed-vs-exact ARI = $ari (floor 0.85)")
+  }
+
+  test("local DBSCAN labels equal distributed labels (blob and border-heavy fixtures)") {
+    // the driver route keeps distributed()'s whole contract, LSH recall
+    // included: on the border-heavy fixture, where 1-3 tables drop real
+    // ε-edges, the labels must still match id for id
+    def check(data: Seq[(Long, Array[Double])], eps: Double, minPts: Int,
+              tables: Int): Unit = {
+      val df = data.map { case (id, a) => (id, Vectors.dense(a)) }
+        .toDF("id", "features")
+      val dist = Dbscan.distributed(df, "id", "features", eps = eps,
+          minPts = minPts, numHashTables = tables)
+        .as[(Long, Long)].collect().toMap
+      val local = Dbscan.local(spark, data.map(_._1).toArray,
+        data.map(_._2).toArray, eps = eps, minPts = minPts, numHashTables = tables)
+      assert(data.map(_._1).zip(local).toMap == dist)
+      assert(local.exists(_ >= 0) && dist.values.exists(_ >= 0))
+    }
+    check(pts, eps = 0.5, minPts = 3, tables = 3)
+    Seq(1, 3).foreach(t => check(borderHeavy, eps = 0.55, minPts = 5, tables = t))
+    assert(Dbscan.local(spark, Array.empty, Array.empty, eps = 1.0,
+      minPts = 3).isEmpty)
+  }
+
+  test("knnCurve equals collectCurve(knnDistanceCurve) on the m3_knn_curve input") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .filter(col("vec_id") < 300)
+    val vecs = emb.select("embedding").collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    def q(x: Double): Double = math.round(x * 1e6) / 1e6
+    // k = 17 is m3_knn_curve's; k = 2 takes the 2nd-NN-column branch
+    Seq(17, 2).foreach { k =>
+      val dist = Embed.collectCurve(
+        Embed.knnDistanceCurve(emb, "vec_id", "embedding", k))
+      val local = Embed.knnCurve(vecs, k)
+      assert(local.length == 300 && dist.length == 300)
+      local.zip(dist).foreach { case (a, b) =>
+        assert(math.abs(a - b) <= 1e-12 * math.abs(b), s"k=$k: $a vs $b")
+      }
+      assert(local.map(q).sameElements(dist.map(q)))
+    }
   }
 
   test("sampled DBSCAN: full-sample run equals exact; sub-sample keeps blobs") {
