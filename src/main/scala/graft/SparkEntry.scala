@@ -370,16 +370,21 @@ object SparkEntry {
     *    Measured (r7): the full-corpus fit was the flagship's ONLY
     *    remaining linear-heavy stage — 259 of its 277 s at the ×100
     *    corpus was the embed stage (m1_m2 probe, exponent ~1.0).
+    *  - the cleaned and tokenized frame is cached BEFORE the blank guard
+    *    and filled by one aggregate that reads both n0 (all rows, gating
+    *    the fit cap and the pair's at-fixture branch) and n (rows with
+    *    tokens — exactly the rows sentence2vec embeds), so no other
+    *    count runs.
     *  - at or under `curveCap` embedded docs (the reference's own
     *    scale: 589 distinct of 2.8k messages, which the reference
-    *    clusters in memory with sklearn and daal4py) the cached vectors
-    *    are collected ONCE and the kNN curve (Embed.knnCurve), Kneedle ε
-    *    and DBSCAN (Dbscan.local) run on the driver: O(n²·d) kernel work
-    *    and no job, where the distributed stage functions cost ~15 tiny
-    *    Spark jobs whose scheduling was the flagship's largest layer.
-    *    Both driver functions keep the distributed contracts
-    *    (collectCurve(knnDistanceCurve(…)), Dbscan.distributed), so the
-    *    labels are the ones the distributed chain gives.
+    *    clusters in memory with sklearn and daal4py) the sentence2vec
+    *    output is collected ONCE — bounded, since n ≤ curveCap is
+    *    already known — and the kNN curve (Embed.knnCurve), Kneedle ε,
+    *    exact DBSCAN (Dbscan.local) and, in [[flagshipStats]], the
+    *    cluster stats (ClusterStats.local) run as driver arithmetic: the
+    *    route is one token-cache fill, the w2v fit and one collect. The
+    *    curve keeps collectCurve(knnDistanceCurve(…))'s contract, and
+    *    exact ε-edges are the reference's own (daal4py) DBSCAN semantics.
     *  - ε is a GLOBAL statistic (the knee of the sorted kNN-distance
     *    curve), so past `curveCap` points the curve is computed on a
     *    seeded uniform sample: cost O(n) + O(cap²), with the cross join
@@ -402,19 +407,29 @@ object SparkEntry {
                                     curveCap: Long = 2000L,
                                     fitCap: Long = 20000L,
                                     epsOverride: Option[Double] = None)
-      : DataFrame = {
+      : DataFrame = flagshipFit(docs0, curveCap, fitCap, epsOverride).labeled
+
+  /** One flagship fit: n0 (all input rows), the labeled (doc_id, text,
+    * label) frame, and on the driver route the same rows as driver
+    * arrays (ids, texts, labels). */
+  private final case class FlagshipFit(n0: Long, labeled: DataFrame,
+      onDriver: Option[(Array[Long], Array[String], Array[Long])])
+
+  private def flagshipFit(docs0: DataFrame, curveCap: Long = 2000L,
+                          fitCap: Long = 20000L,
+                          epsOverride: Option[Double] = None): FlagshipFit = {
     val docs = docs0
       .select(col("doc_id"), Clean.cleanMessage(col("text")).as("text"))
-    // cached: the clean+tokenize chain is consumed ~3× (w2v vocab pass,
-    // w2v sentence build, sentence2vec) — released once vecs is
-    // materialized below
-    val toks = docs.select(col("doc_id"), col("text"),
+    // cached: the clean+tokenize chain is read by the counts, the w2v
+    // vocab pass, the w2v sentence build and sentence2vec — released
+    // once the labels are on the driver or checkpointed
+    val tokenized = docs.select(col("doc_id"), col("text"),
         Clean.tokenizeTreebankish(lower(col("text"))).as("tokens"))
-      .filter(size(col("tokens")) > 0)
       .cache()
-    // pre-clean count gating the fit cap (on pinnedDocs this runs the
-    // pinned repartition, a small shuffle job)
-    val n0 = docs0.count()
+    val nonEmpty = size(col("tokens")) > 0
+    val counts = tokenized.agg(count(lit(1)), count(when(nonEmpty, 1))).head()
+    val (n0, n) = (counts.getLong(0), counts.getLong(1))
+    val toks = tokenized.filter(nonEmpty)
     val fitToks =
       if (n0 > fitCap)
         toks.sample(withReplacement = false, fitCap.toDouble / n0, seed = 43L)
@@ -424,30 +439,31 @@ object SparkEntry {
     val vecs = graft.ml.Embed.sentence2vec(model, toks, "tokens")
       .select(col("doc_id"), col("text"),
         graft.ml.VectorOps.toArray(col("sent_vec")).as("v"))
-      .cache()
-    val n = vecs.count()
-    toks.unpersist()
     def knee(curve: Array[Double]): Double =
       graft.ml.Kneedle.epsilonSearch(curve).getOrElse(curve(curve.length / 2))
     if (n <= curveCap) {
-      // driver route: one bounded collect, then curve, ε and DBSCAN as
-      // driver arithmetic; the labeled rows return as a local relation
-      // with the distributed join's schema (label is non-null there too)
-      val rows = vecs.limit(curveCap.toInt + 1).collect()
-      vecs.unpersist()
+      // driver route: one collect of n ≤ curveCap rows, then curve, ε and
+      // DBSCAN as driver arithmetic; the labeled rows return as a local
+      // relation with the distributed join's schema (label non-null there
+      // too)
+      val rows = vecs.collect()
+      tokenized.unpersist()
       val ids = rows.map(_.getAs[Number](0).longValue)
+      val texts = rows.map(_.getString(1))
       val pts = rows.map(_.getSeq[Double](2).toArray)
       val eps = epsOverride.getOrElse(
         knee(graft.ml.Embed.knnCurve(pts, graft.ml.Embed.defaultK(n))))
-      val labels = graft.ml.Dbscan.local(vecs.sparkSession, ids, pts,
-        eps = math.max(eps, 1e-3), minPts = 5)
+      val labels = graft.ml.Dbscan.local(ids, pts, eps = math.max(eps, 1e-3),
+        minPts = 5)
       val schema = vecs.select("doc_id", "text").schema
         .add("label", org.apache.spark.sql.types.LongType, nullable = false)
-      return vecs.sparkSession.createDataFrame(
+      val labeled = vecs.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows.zip(labels).map { case (r, l) =>
           org.apache.spark.sql.Row(r.get(0), r.get(1), l) }: _*),
         schema)
+      return FlagshipFit(n0, labeled, Some((ids, texts, labels)))
     }
+    vecs.cache()
     val eps = epsOverride.getOrElse {
       val curveInput = vecs.sample(withReplacement = false,
         curveCap.toDouble / n, seed = 42L)
@@ -464,35 +480,45 @@ object SparkEntry {
       sampleCap = curveCap.toInt)
     // materialize the result (lineage truncated, storage auto-cleaned by
     // the ContextCleaner once unreferenced), then release the pipeline
-    // cache — repeated invocations must not accumulate executor storage
+    // caches — repeated invocations must not accumulate executor storage
     val out = vecs.join(labels, "doc_id").select("doc_id", "text", "label")
       .localCheckpoint(true)
     vecs.unpersist()
-    out
+    tokenized.unpersist()
+    FlagshipFit(n0, out, None)
   }
 
   /** The flagship pair (m_flagship_w2v_dbscan / m_flagship_shape) share
     * ONE pinned fit: same pinned input → same labels (the determinism
     * argument m7_m9 rests on), so running the w2v→kneedle→DBSCAN chain
-    * twice per suite bought nothing. The stats frame is tiny (one row
-    * per cluster) and localCheckpoint'ed, so the memo holds no lineage
-    * or executor storage — only the few materialized rows. Keyed by the
-    * SESSION OBJECT in a WeakHashMap (a checkpointed frame is
+    * twice per suite bought nothing. The memo holds the fit's n0 (the
+    * pair's at-fixture gate: pinnedDocs has one row per document) and
+    * the stats frame — tiny (one row per cluster), a local relation on
+    * the driver route and localCheckpoint'ed past it, so it holds no
+    * lineage or executor storage, only the few materialized rows. Keyed
+    * by the SESSION OBJECT in a WeakHashMap (a checkpointed frame is
     * session-bound; the earlier identity-hash string key could collide
     * across sessions and pinned dead sessions for the JVM lifetime),
     * dir inside. */
   private val flagshipStatsCache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]())
-  private def flagshipStats(s: SparkSession, dir: String): DataFrame =
+      scala.collection.mutable.Map[String, (Long, DataFrame)]]())
+  private def flagshipStats(s: SparkSession, dir: String): (Long, DataFrame) =
     flagshipStatsCache.synchronized {
       val perDir = Option(flagshipStatsCache.get(s)).getOrElse {
-        val m = scala.collection.mutable.Map.empty[String, DataFrame]
+        val m = scala.collection.mutable.Map.empty[String, (Long, DataFrame)]
         flagshipStatsCache.put(s, m); m
       }
-      perDir.getOrElseUpdate(dir,
-        ClusterStats.stats(flagshipLabels(pinnedDocs(s, dir)),
-          "label", "text", "doc_id").localCheckpoint(true))
+      perDir.getOrElseUpdate(dir, {
+        val fit = flagshipFit(pinnedDocs(s, dir))
+        val st = fit.onDriver match {
+          case Some((ids, texts, labels)) =>
+            ClusterStats.local(s, ids, texts, labels)
+          case None => ClusterStats.stats(fit.labeled, "label", "text",
+            "doc_id").localCheckpoint(true)
+        }
+        (fit.n0, st)
+      })
     }
 
   /** Off-fixture flagship gate: (total docs labeled, shape flag). The
@@ -516,11 +542,10 @@ object SparkEntry {
   /** Bench hook, called before every TIMED run: the flagship pair share
     * one fit via [[flagshipStatsCache]], so without a reset min-of-2
     * would stamp `m_flagship_shape`'s second run — a memo read, ~ms —
-    * as the query's cost and erase the w2v→kneedle→DBSCAN pipeline from
-    * the official record entirely (the closing sweep only catches
-    * slower-than-median, never cached-fast). Dropping the memo before
-    * each run of the pair's FIT-PAYER (`m_flagship_shape`, which sorts
-    * and therefore runs first in both Verify and Bench) keeps its
+    * as the query's cost (min-of-2 keeps the faster run) and erase the
+    * w2v→kneedle→DBSCAN pipeline from the record. Dropping the memo
+    * before each run of the pair's FIT-PAYER (`m_flagship_shape`, which
+    * sorts and therefore runs first in both Verify and Bench) keeps its
     * stamped time the real pipeline cost, while `m_flagship_w2v_dbscan`
     * stamps the memo read — the suite total records fit-once + read,
     * exactly what one suite pass pays. */
@@ -3616,8 +3641,8 @@ object SparkEntry {
     // recipe, closing the repo's last no_oracle row.
     "m_flagship_w2v_dbscan" -> ((s, dir) => {
       import s.implicits._
-      val st = flagshipStats(s, dir)
-      if (graft.gates.ScaleGates.atFixture(t(s, dir, "documents")))
+      val (n0, st) = flagshipStats(s, dir)
+      if (n0 == graft.gates.ScaleGates.FixtureRows)
         st.select(col("label").cast("long").as("label"), col("n"),
             col("first_msg"),
             (round(col("mean_len") * 1e6) / 1e6).as("mean_len"),
@@ -3653,16 +3678,16 @@ object SparkEntry {
     // this projection remains because it is the reference's
     // actually-recorded surface (cluster size + first message).
     // COST ASYMMETRY BY DESIGN: `m_flagship_shape` sorts FIRST in the
-    // suite's alphabetical order, so IT pays the whole fit (~7 s at
-    // sf0.1) and `m_flagship_w2v_dbscan` reads the memo (~0.07 s) —
+    // suite's alphabetical order, so IT pays the whole fit and
+    // `m_flagship_w2v_dbscan` reads the memo (milliseconds) —
     // benchReset only clears the memo before the fit-payer. If a
     // future rename/reorder swaps which query runs first, the ~100x
     // time swap between the pair is the memo relocating, not a
     // regression: the PAIR TOTAL is the number to compare.
     "m_flagship_shape" -> ((s, dir) => {
       import s.implicits._
-      val st = flagshipStats(s, dir)
-      if (graft.gates.ScaleGates.atFixture(t(s, dir, "documents")))
+      val (n0, st) = flagshipStats(s, dir)
+      if (n0 == graft.gates.ScaleGates.FixtureRows)
         st.select(col("label").cast("long").as("label"),
             col("n").as("n_docs"), col("first_msg"))
           .orderBy("label")

@@ -25,7 +25,7 @@ object Tables {
       try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       catch { case _: Exception => }
     }
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     // The events fixture carries TIMESTAMP(NANOS) which Spark reads only as
     // long (nanosAsLong); normalize to a session-TZ-free timestamp so query
     // semantics match engines that read nanos natively.
@@ -36,6 +36,40 @@ object Tables {
       df.withColumn("ts",
         timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
     else df
+  }
+
+  /** Inferred parquet schemas per session, keyed on (path, mtime,
+    * length, nanosAsLong). `spark.read.parquet(path)` runs a
+    * schema-inference job (~30-40 ms) on every call — 10 per eda-stream
+    * pass — while `.schema(memo)` reads the same relation without one.
+    * The key changes when the file is rewritten or the conf that shapes
+    * the inferred ts type flips; only plain files are memoized (a
+    * directory's own mtime and length miss in-place rewrites of its
+    * parts). Held on the session OBJECT in a WeakHashMap (the
+    * [[registeredFor]] precedent), so dead sessions don't pin. */
+  private val schemaMemo = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      Map[(String, Long, Long, String), StructType]]())
+
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)
+      if (st.isFile) Some((path, st.getModificationTime, st.getLen,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")))
+      else None
+    } catch { case _: Exception => None }
+    key.flatMap(k => Option(schemaMemo.get(spark)).flatMap(_.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => schemaMemo.synchronized {
+          val memo = Option(schemaMemo.get(spark)).getOrElse(Map.empty)
+          schemaMemo.put(spark, memo + (k -> df.schema))
+        })
+        df
+    }
   }
 
   /** Register all tables as temp views (for spark.sql entry points).

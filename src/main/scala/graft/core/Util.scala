@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Small shared utilities that had started to be re-derived inline
   * (r12 review): conf scoping, JSON string escaping, filesystem
-  * recursive delete, and the shuffle-write meter used by specs.
+  * recursive delete, the shuffle-write meter used by specs, and the
+  * job counter of graft.One and the job-budget specs.
   */
 object Util {
 
@@ -89,5 +90,24 @@ object Util {
       }
       (r, records.get, bytes.get)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Run `body` under a fresh job group and count the Spark jobs it
+    * started, through the status tracker rather than a listener of our
+    * own. The tracker is fed by the listener bus, so the count is re-read
+    * until two reads 50 ms apart agree. Returns (result, seconds, jobs). */
+  def jobsIn[A](spark: SparkSession, label: String)(body: => A)
+      : (A, Double, Int) = {
+    val sc = spark.sparkContext
+    val group = s"$label-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, label)
+    val t0 = System.nanoTime()
+    val r = try body finally sc.clearJobGroup()
+    val secs = (System.nanoTime() - t0) / 1e9
+    def jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    var last = -1
+    var now = jobs
+    while (now != last) { Thread.sleep(50); last = now; now = jobs }
+    (r, secs, now)
   }
 }

@@ -1,8 +1,9 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.text.Clean
 
 /** Cluster-output operators (SURVEY.md §2.4 A13/A14, §2.6 O5) — how every
@@ -59,6 +60,61 @@ object ClusterStats {
     when(col("n") < 2, lit(null).cast("double"))
       .otherwise(sqrt(greatest((sq - s * s / n) / (n - lit(1.0)), lit(0.0))))
   }
+
+  /** [[stats]] over (id, message, label) rows already on the driver (the
+    * flagship's reference-scale route), as a local relation: no job. Each
+    * row equals [[stats]]' bit for bit because it repeats the same exact
+    * arithmetic — code-point `length`, [[Clean.fuzzRatio]]'s formula over
+    * graft.expr.Lev.dist, the decimal(18,6) HALF_UP cast through Spark's
+    * own Decimal, exact decimal sums, the same double formulas, and the
+    * (mean_similarity, label) order. The schema is [[stats]]' over a
+    * non-null long label. Ids must be unique and messages non-null. */
+  def local(spark: SparkSession, ids: Array[Long], msgs: Array[String],
+            labels: Array[Long]): DataFrame = {
+    def codePoints(m: String): Int = m.codePointCount(0, m.length)
+    val rows = ids.indices.groupBy(labels(_)).toSeq.map { case (label, idx) =>
+      val first = msgs(idx.minBy(ids(_)))
+      val lb = codePoints(first)
+      var lenSum, lenSqSum = 0L
+      var fuzzSum, fuzzSqSum = java.math.BigDecimal.ZERO
+      idx.foreach { i =>
+        val la = codePoints(msgs(i))
+        lenSum += la
+        lenSqSum += la.toLong * la
+        val ratio =
+          if (la + lb == 0) 100.0
+          else 100.0 * (la + lb - graft.expr.Lev.dist(msgs(i), first)) / (la + lb)
+        val fuzz = Decimal(ratio)
+        fuzz.changePrecision(18, 6) // Cast's HALF_UP rounding
+        val f = fuzz.toJavaBigDecimal
+        fuzzSum = fuzzSum.add(f)
+        fuzzSqSum = fuzzSqSum.add(f.multiply(f))
+      }
+      val n = idx.length.toLong
+      val fs = Decimal(fuzzSum).toDouble
+      Row(label, n, first, lenSum.toDouble / n,
+        localSampleStd(lenSum.toDouble, lenSqSum.toDouble, n),
+        fs / n, localSampleStd(fs, Decimal(fuzzSqSum).toDouble, n))
+    }.sortBy(r => (r.getDouble(5), r.getLong(0)))(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("label", LongType, nullable = false),
+      StructField("n", LongType, nullable = false),
+      StructField("first_msg", StringType),
+      StructField("mean_len", DoubleType),
+      StructField("std_len", DoubleType),
+      StructField("mean_similarity", DoubleType),
+      StructField("std_similarity", DoubleType))))
+  }
+
+  /** [[sampleStd]] on the driver: `greatest` keeps its first argument
+    * unless the second is strictly greater, hence `v < 0.0`. */
+  private def localSampleStd(s: Double, sq: Double, n: Long): java.lang.Double =
+    if (n < 2) null
+    else {
+      val v = (sq - s * s / n) / (n - 1.0)
+      math.sqrt(if (v < 0.0) 0.0 else v)
+    }
 
   /** A14 cluster membership listing: ordered member messages per label. */
   def members(df: DataFrame, labelCol: String, msgCol: String,

@@ -2,10 +2,8 @@ package graft.ml
 
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.linalg.{SQLDataTypes, Vectors}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
 import scala.collection.mutable
 
 /** M5 DBSCAN — the reference's single genuinely custom algorithm
@@ -560,45 +558,23 @@ object Dbscan {
     labels
   }
 
-  /** [[distributed]]'s labels for a point set already on the driver
-    * (the flagship's reference-scale route), computed without a job.
-    * Same contract, at distributed()'s default bucket length 2.0: an
-    * ε-edge joins two distinct ids that share a bucket of the same
-    * seed-42 LSH in some table (fitted and applied on a local relation
-    * of the points in `spark`, which Spark evaluates on the driver), pass
-    * [[epsEdges]]' band prefilter, and lie strictly within ε
-    * (VecKernels.l2Sq < ε²); the labels follow [[labelByEdges]]. The
-    * edge test is recomputed on each of its scans of the pairs instead
-    * of kept as an edge list, so memory stays O(n) even when ε connects
-    * every pair. Ids must be unique. Returns labels aligned to `ids`. */
-  def local(spark: SparkSession, ids: Array[Long], pts: Array[Array[Double]],
-            eps: Double, minPts: Int, numHashTables: Int = 3): Array[Long] = {
+  /** Exact DBSCAN for a point set already on the driver (the flagship's
+    * reference-scale route, like the reference's in-memory daal4py run),
+    * computed without a job. An ε-edge joins two distinct ids that lie
+    * strictly within ε (VecKernels.l2Sq < ε²) — every such pair, with no
+    * LSH bucketing, so the LSH recall caveat of [[distributed]] does not
+    * apply here; the labels follow [[labelByEdges]] (min core id per
+    * cluster, min core-neighbour label for border points). The edge test
+    * is recomputed on each of its scans of the pairs instead of kept as
+    * an edge list, so memory stays O(n) even when ε connects every
+    * pair. Ids must be unique. Returns labels aligned to `ids`. */
+  def local(ids: Array[Long], pts: Array[Array[Double]], eps: Double,
+            minPts: Int): Array[Long] = {
     val n = ids.length
-    if (n == 0) return Array.empty[Long]
-    val bucketLength = 2.0
-    val rel = spark.createDataFrame(
-      java.util.Arrays.asList(pts.map(p => Row(Vectors.dense(p))): _*),
-      StructType(Seq(StructField("features", SQLDataTypes.VectorType))))
-    val hv = bucketLsh(bucketLength, numHashTables).fit(rel).transform(rel)
-      .select("hashes").collect()
-      .map(_.getSeq[org.apache.spark.ml.linalg.Vector](0).map(_(0)).toArray)
     val eps2 = eps * eps
-    val band = math.ceil(eps / bucketLength + 1) - 1
-    def edge(i: Int, j: Int): Boolean = {
-      val hi = hv(i); val hj = hv(j)
-      var shared = false
-      var inBand = true
-      var t = 0
-      while (t < numHashTables) {
-        if (hi(t) == hj(t)) shared = true
-        if (math.abs(hi(t) - hj(t)) > band) inBand = false
-        t += 1
-      }
-      shared && inBand && ids(i) != ids(j) &&
-        graft.expr.VecKernels.l2Sq(pts(i), pts(j)) < eps2
-    }
     val labels = labelByEdges(minPts, f =>
-      for (i <- 0 until n; j <- i + 1 until n if edge(i, j)) {
+      for (i <- 0 until n; j <- i + 1 until n
+           if ids(i) != ids(j) && graft.expr.VecKernels.l2Sq(pts(i), pts(j)) < eps2) {
         f(ids(i), ids(j)); f(ids(j), ids(i))
       })
     ids.map(labels.getOrElse(_, -1L))

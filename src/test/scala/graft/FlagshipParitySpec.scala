@@ -170,4 +170,19 @@ class FlagshipParitySpec extends SparkSpec {
     assert(wantRows.exists(_.getLong(2) >= 0L)) // the fixture clusters
     vecs.unpersist()
   }
+
+  test("job budget: one m_flagship_shape body on sf0.01 runs at most 12 " +
+    "Spark jobs") {
+    // the reference-scale route is one token-cache fill, the w2v fit and
+    // one collect; the curve, ε, DBSCAN, cluster stats and the
+    // at-fixture gate are driver arithmetic over that collect
+    val dir = sfDir.stripSuffix("sf0.001") + "sf0.01"
+    SparkEntry.benchReset("m_flagship_shape")
+    val (df, _, jobs) = graft.core.Util.jobsIn(spark, "m_flagship_shape") {
+      SparkEntry.queries("m_flagship_shape")(spark, dir)
+    }
+    info(s"m_flagship_shape body on sf0.01: $jobs jobs")
+    assert(jobs <= 12, s"m_flagship_shape body ran $jobs jobs (budget 12)")
+    assert(df.collect().length >= 2)
+  }
 }

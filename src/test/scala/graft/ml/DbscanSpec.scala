@@ -223,26 +223,37 @@ class DbscanSpec extends SparkSpec {
     assert(ari >= 0.85, s"distributed-vs-exact ARI = $ari (floor 0.85)")
   }
 
-  test("local DBSCAN labels equal distributed labels (blob and border-heavy fixtures)") {
-    // the driver route keeps distributed()'s whole contract, LSH recall
-    // included: on the border-heavy fixture, where 1-3 tables drop real
-    // ε-edges, the labels must still match id for id
-    def check(data: Seq[(Long, Array[Double])], eps: Double, minPts: Int,
-              tables: Int): Unit = {
-      val df = data.map { case (id, a) => (id, Vectors.dense(a)) }
-        .toDF("id", "features")
-      val dist = Dbscan.distributed(df, "id", "features", eps = eps,
-          minPts = minPts, numHashTables = tables)
-        .as[(Long, Long)].collect().toMap
-      val local = Dbscan.local(spark, data.map(_._1).toArray,
-        data.map(_._2).toArray, eps = eps, minPts = minPts, numHashTables = tables)
-      assert(data.map(_._1).zip(local).toMap == dist)
-      assert(local.exists(_ >= 0) && dist.values.exists(_ >= 0))
+  test("local DBSCAN labels equal exact labels (blob and border-heavy fixtures)") {
+    // exact ε-edges: the core points fall into exact()'s clusters, each
+    // named by its min core id; every other point takes its lowest
+    // core-neighbour label, and is noise exactly when exact() says so
+    def check(data: Seq[(Long, Array[Double])], eps: Double,
+              minPts: Int): Unit = {
+      val ids = data.map(_._1).toArray
+      val pts = data.map(_._2).toArray
+      val local = Dbscan.local(ids, pts, eps = eps, minPts = minPts)
+      val (exact, core) = Dbscan.exactWithCore(pts, eps, minPts)
+      val cores = ids.indices.filter(core(_))
+      def partition(label: Int => Long) =
+        cores.groupBy(label).values.map(_.toSet).toSet
+      assert(partition(local(_)) == partition(exact(_).toLong))
+      cores.groupBy(local(_)).foreach { case (l, idx) =>
+        assert(l == idx.map(ids(_)).min)
+      }
+      def near(i: Int, j: Int): Boolean =
+        pts(i).zip(pts(j)).map { case (x, y) => (x - y) * (x - y) }.sum <
+          eps * eps
+      ids.indices.filterNot(core(_)).foreach { i =>
+        val coreNbrs = cores.filter(near(i, _))
+        assert(local(i) ==
+          (if (coreNbrs.isEmpty) -1L else coreNbrs.map(local(_)).min))
+        assert((exact(i) == -1) == coreNbrs.isEmpty)
+      }
+      assert(local.exists(_ >= 0) && local.exists(_ == -1L))
     }
-    check(pts, eps = 0.5, minPts = 3, tables = 3)
-    Seq(1, 3).foreach(t => check(borderHeavy, eps = 0.55, minPts = 5, tables = t))
-    assert(Dbscan.local(spark, Array.empty, Array.empty, eps = 1.0,
-      minPts = 3).isEmpty)
+    check(pts, eps = 0.5, minPts = 3)
+    check(borderHeavy, eps = 0.55, minPts = 5)
+    assert(Dbscan.local(Array.empty, Array.empty, eps = 1.0, minPts = 3).isEmpty)
   }
 
   test("knnCurve equals collectCurve(knnDistanceCurve) on the m3_knn_curve input") {
