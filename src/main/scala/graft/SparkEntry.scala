@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 import graft.core.Tables
-import graft.core.Util.withConfs
+import graft.core.Util.{deleteRecursively, scratchDir, withConfs}
 import graft.ops.Relational
 import graft.text.{Clean, Filters, TextStats}
 import graft.ml.{Tfidf, ClusterStats}
@@ -42,14 +42,6 @@ object SparkEntry {
     ClusterStats.stats(clustered, "cluster", "text", "doc_id")
   }
 
-  /** Bounded streaming runs pay per-micro-batch per-partition state-store
-    * overhead (a delta + commit file per HDFS-backed store instance per
-    * batch): 32 shuffle partitions means 32 store instances doing file
-    * I/O for a few thousand keys. Scope the streaming query to a small
-    * state partitioning (the partition count is pinned into the query's
-    * offset log at start, so this only affects the stream), restore after.
-    * On a real cluster the same knob is sized to key cardinality, not
-    * core count. */
   /** Watermark-ready event time for the streamed events fixture,
     * whatever unit the parquet carries: TIMESTAMP(NANOS) arrives as a
     * long under nanosAsLong (→ exact integer div to micros — the double
@@ -65,42 +57,61 @@ object SparkEntry {
       case _ => stream
     }
 
-  private def withStreamShuffle[T](s: SparkSession, n: Int = 4)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  /** Bounded streaming runs pay per-micro-batch per-partition state-store
+    * overhead (a delta + commit file per HDFS-backed store instance per
+    * batch): 32 shuffle partitions means 32 store instances doing file
+    * I/O for a few thousand keys. Every st* stream starts under this
+    * small state partitioning (the partition count is pinned into the
+    * query's offset log at start, so it only affects the stream). On a
+    * real cluster the same knob is sized to key cardinality, not core
+    * count. */
+  private val streamShuffle = Seq("spark.sql.shuffle.partitions" -> "4")
+
+  /** Link dirs of [[fixtureStream]], one per (sf dir, table). */
+  private val fixtureLinks = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), String]()
+
+  /** A file-source stream over the fixture `dir/table.parquet`, read with
+    * the raw parquet schema (the events ts stays as the parquet carries
+    * it; see [[streamEventTs]]). The file source monitors a DIRECTORY, so
+    * the fixture is exposed through a symlink in a scratch dir made once
+    * per (dir, table); the schema comes from [[Tables.readParquet]]'s
+    * memo, so a warm session starts the stream without a job. */
+  private[graft] def fixtureStream(s: SparkSession, dir: String,
+                                   table: String): DataFrame = {
+    val file = s"$dir/$table.parquet"
+    val linkDir = fixtureLinks.computeIfAbsent((dir, table), _ => {
+      val d = scratchDir(s"fixture_${table}_")
+      Files.createSymbolicLink(d.resolve(s"$table.parquet"),
+        java.nio.file.Paths.get(file).toAbsolutePath)
+      d.toString
+    })
+    s.readStream.schema(Tables.readParquet(s, file).schema).parquet(linkDir)
   }
 
-  /** Drain a COMPLETE-mode streaming aggregation through a uniquely-named
-    * memory sink under AvailableNow and return the projected result,
-    * localCheckpoint'ed; the temp view is dropped so S7's catalog listing
-    * stays deterministic. Shared by st1/st10. */
-  private def drainCompleteStream(s: SparkSession, tag: String,
-                                  agg: DataFrame)
-                                 (project: DataFrame => DataFrame)
-      : DataFrame = {
-    val qname =
-      tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = agg.writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    // finally-drop: Verify catches per-query Throwables and continues,
-    // so a view leaked on failure would surface in the catalog listing
-    // (S7) later in the SAME run as a random-named extra row
-    try {
-      q.awaitTermination()
-      project(s.table(qname)).localCheckpoint(true)
-    } finally s.catalog.dropTempView(qname)
-  }
+  /** Run `df` to a uniquely named memory sink in output `mode` under
+    * AvailableNow and [[streamShuffle]], wait for it, and return
+    * `project(drained)` localCheckpoint'ed — the checkpoint is what lets
+    * the sink's temp view go before the body returns. The view is
+    * dropped in `finally`: Verify catches per-query Throwables and
+    * continues, so a view leaked on failure would surface in the catalog
+    * listing (S7) later in the SAME run as a random-named extra row. */
+  private[graft] def drain(s: SparkSession, tag: String, df: DataFrame,
+                           mode: String)
+                          (project: DataFrame => DataFrame): DataFrame =
+    withConfs(s, streamShuffle) {
+      val qname =
+        tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q = df.writeStream.format("memory").queryName(qname)
+        .outputMode(mode)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try {
+        q.awaitTermination()
+        project(s.table(qname)).localCheckpoint(true)
+      } finally s.catalog.dropTempView(qname)
+    }
 
-  /** The documents table with the pinned partitioning the hash-oracled
-    * iterative-fit queries (m7_m9, m_flagship_shape) rely on: a fixed
-    * hash repartition + in-partition sort makes float-sum order — the
-    * only environment leak in a seeded fit — independent of CPU count
-    * and session config. 8 partitions, not more: fewer fixed partitions
-    * measured FASTER at sf0.1 (each fit iteration schedules one task
-    * per partition). */
   /** CDC chunk rows (doc_id, chunk_idx, start, len, chunk_md5) shared by
     * the llm_cdc_* queries — the graft_cdc_cuts ends array exploded into
     * per-chunk spans with md5 content hashes. Package-visible un-sorted
@@ -129,36 +140,16 @@ object SparkEntry {
           .as("chunk_md5"))
   }
 
+  /** The documents table with the pinned partitioning the hash-oracled
+    * iterative-fit queries (m7_m9, m_flagship_shape) rely on: a fixed
+    * hash repartition + in-partition sort makes float-sum order — the
+    * only environment leak in a seeded fit — independent of CPU count
+    * and session config. 8 partitions, not more: fewer fixed partitions
+    * measured FASTER at sf0.1 (each fit iteration schedules one task
+    * per partition). */
   private def pinnedDocs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").select("doc_id", "text")
       .repartition(8, col("doc_id")).sortWithinPartitions("doc_id")
-
-  /** Shared scaffold of the documents-table streaming queries (st3-st5):
-    * symlink the fixture into a fresh temp dir (a parquet file source
-    * needs a directory), readStream with the batch schema, run the
-    * transform to an append-mode memory sink under AvailableNow, and
-    * return the drained table ordered + localCheckpoint'ed (the temp
-    * view is dropped so S7's catalog listing stays deterministic). One
-    * place owns the contract; the per-query bodies are just the
-    * transform. */
-  private def streamDocuments(s: SparkSession, dir: String, tag: String,
-                              orderCol: String)
-                             (transform: DataFrame => DataFrame): DataFrame = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val streamDir = Files.createTempDirectory(s"graft_$tag")
-    Files.createSymbolicLink(streamDir.resolve("documents.parquet"),
-      java.nio.file.Paths.get(s"$dir/documents.parquet").toAbsolutePath)
-    val stream = s.readStream.schema(schema).parquet(streamDir.toString)
-    val qname = tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = transform(stream).writeStream.format("memory").queryName(qname)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = s.table(qname).orderBy(orderCol).localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    out
-  }
 
   /** The REST fixture grid's state/prio aggregate, regenerated from
     * scratch — shared by the batch (s16_rest_v2) and streaming
@@ -172,19 +163,14 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
-  /** st10 writes a real parquet copy of the wire-format topic (unlike the
-    * symlink scaffold above, the envelope columns don't exist in the
+  /** st10 writes a real parquet copy of the wire-format topic (unlike
+    * [[fixtureStream]]'s symlink, the envelope columns don't exist in the
     * fixture) — memoize it per input dir so repeated Verify/Bench
-    * invocations in one JVM reuse a single copy, and delete it at JVM
-    * exit so runs don't accumulate temp data on disk. */
+    * invocations in one JVM reuse a single copy under the scratch root. */
   private val st10TopicDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val s17Sinks = new java.util.concurrent.ConcurrentHashMap[
     String, graft.sources.v2.RestFixture.Sink]()
-  private def deleteRecursivelyOnExit(root: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      graft.core.Util.deleteRecursively(root)
-    }))
 
   /** Whitespace tokens of the documents table (the corpus test fixture). */
   private def docTokens(s: SparkSession, dir: String): DataFrame =
@@ -590,13 +576,13 @@ object SparkEntry {
     "s2_multiline_json" -> ((s, dir) => {
       val rows = t(s, dir, "documents").filter(col("doc_id") < 5)
         .select("doc_id", "lang").orderBy("doc_id").toJSON.collect()
-      val path = Files.createTempDirectory("graft_s2").resolve("pages.json")
+      val path = scratchDir("s2_").resolve("pages.json")
       Files.writeString(path, s"""[{"results":[${rows.mkString(",")}]}]""")
       Sources.flattenPages(Sources.readMultilineJson(s, path.toString))
         .select("doc_id", "lang").orderBy("doc_id")
     }),
     "s3_s6_json_roundtrip" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s6").resolve("docs").toString
+      val tmp = scratchDir("s6_").resolve("docs").toString
       Sources.writeJson(t(s, dir, "documents").select("doc_id", "lang"), tmp)
       Sources.readJsonLines(s, tmp)
         .groupBy("lang").agg(count(lit(1)).as("cnt")).orderBy("lang")
@@ -605,9 +591,10 @@ object SparkEntry {
     // bucketBy(8, orderkey) once, then the join plans with NO shuffle of
     // either side (BucketedJoinSpec pins the no-Exchange plan; here the
     // ORACLE pins the answer). Tables are dropped after the eager
-    // materialization so S7's catalog listing stays deterministic
+    // materialization so S7's catalog listing stays deterministic; their
+    // data stays under the scratch root until the JVM exits
     "s10_bucketed_join" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s10")
+      val tmp = scratchDir("s10_")
       Sources.writeBucketed(
         t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
         "graft_bk_orders", tmp.resolve("o").toString, "o_orderkey", 8)
@@ -753,7 +740,7 @@ object SparkEntry {
     // null-filled union from the source table, so both the merge AND the
     // null-filling are hash-gated
     "s11_schema_merge" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s11")
+      val tmp = scratchDir("s11_")
       val docs = t(s, dir, "documents")
       // narrow shard: even docs, 2 columns
       Sources.writeJson(docs.filter(col("doc_id") % 2 === 0)
@@ -776,7 +763,7 @@ object SparkEntry {
     // them (the default split-mid-row mode is only safe for data proven
     // newline-free, which this roundtrip must not assume)
     "s9_csv_roundtrip" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s9").resolve("docs").toString
+      val tmp = scratchDir("s9_").resolve("docs").toString
       val src = t(s, dir, "documents").select("doc_id", "source", "text")
       Sources.writeCsv(src, tmp)
       Sources.readCsv(s, tmp, src.schema, multiLine = true)
@@ -793,7 +780,7 @@ object SparkEntry {
     // Spark write. The oracle runs the same box on the ORIGINAL table,
     // so the clustered roundtrip is lossless by hash
     "s12_zorder_scan" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s12").resolve("z").toString
+      val tmp = scratchDir("s12_").resolve("z").toString
       Sources.writeZOrdered(
         t(s, dir, "events").select("event_id", "user_id", "value"),
         tmp, "user_id", "value", nFiles = 16, bits = 8)
@@ -909,7 +896,7 @@ object SparkEntry {
     // reader because the column isn't in the files). Oracle reads the
     // original table, so partition-value round-tripping is hash-gated
     "s15_partitioned_scan" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s15").resolve("ev").toString
+      val tmp = scratchDir("s15_").resolve("ev").toString
       Sources.writePartitionedParquet(
         t(s, dir, "events").select("event_id", "event_type", "value"),
         tmp, Seq("event_type"))
@@ -923,7 +910,7 @@ object SparkEntry {
     // post-read filter must reach the ORC reader, plan-audited); the
     // oracle reads the ORIGINAL table so any roundtrip loss hash-fails
     "s14_orc_roundtrip" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s14").resolve("li").toString
+      val tmp = scratchDir("s14_").resolve("li").toString
       t(s, dir, "lineitem")
         .select("l_orderkey", "l_quantity", "l_returnflag")
         .write.mode("overwrite").orc(tmp)
@@ -940,7 +927,7 @@ object SparkEntry {
     // the twin reads the parquet original, so any write- or parse-side
     // corruption (escaping, type coercion) breaks the hash.
     "s18_xml_roundtrip" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s18").resolve("sup").toString
+      val tmp = scratchDir("s18_").resolve("sup").toString
       val sup = t(s, dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey")
       sup.write.mode("overwrite").option("rowTag", "supplier")
@@ -950,7 +937,7 @@ object SparkEntry {
         .orderBy("s_suppkey")
     }),
     "s5_text_scan" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s5").resolve("log").toString
+      val tmp = scratchDir("s5_").resolve("log").toString
       // a text-file row IS a line: embedded newlines would split one row
       // into several on the write/read roundtrip, so they are replaced at
       // write time (the oracle mirrors the same replace + trailing-ws trim)
@@ -3704,22 +3691,14 @@ object SparkEntry {
     // availableNow-style bounded run: same aggregation as the batch twin,
     // so it gets a REAL correctness row (the streaming plan must produce
     // the batch answer).
-    "st1_stream_hourly" -> ((s, dir) => withStreamShuffle(s) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+    "st1_stream_hourly" -> ((s, dir) => {
       // watermarks require TIMESTAMP (not NTZ); session is UTC so the
       // wall-clock matches — NTZ conversion happens on the output side
-      // the file stream source monitors a DIRECTORY; expose the single
-      // parquet fixture through a temp dir symlink
-      val streamDir = Files.createTempDirectory("graft_st1")
-      Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-      val stream = streamEventTs(
-        s.readStream.schema(schema).parquet(streamDir.toString))
-      val agg = stream
+      val agg = streamEventTs(fixtureStream(s, dir, "events"))
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
-      drainCompleteStream(s, "st1", agg)(
+      drain(s, "st1", agg, "complete")(
         _.select(col("window.start").cast("timestamp_ntz").as("hour"),
             col("event_type"), col("cnt"))
           .orderBy("hour", "event_type"))
@@ -3732,33 +3711,19 @@ object SparkEntry {
     // event-time timeout implements, so the streaming plan must produce
     // the batch answer. Closure needs post-watermark no-data batches,
     // which AvailableNow runs (same machinery st1/sessionizeOnClose use).
-    "st2_sessionize" -> ((s, dir) => withStreamShuffle(s) {
+    "st2_sessionize" -> ((s, dir) => {
       import s.implicits._
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = Files.createTempDirectory("graft_st2")
-      Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-      val stream = streamEventTs(
-          s.readStream.schema(schema).parquet(streamDir.toString))
+      val stream = streamEventTs(fixtureStream(s, dir, "events"))
         .select(pmod(col("event_id"), lit(50L)).as("userId"), col("ts"))
         .as[graft.streaming.StreamIngest.TimedEvent]
       val sessions = graft.streaming.StreamIngest.sessionizeGaps(
         stream, gapMs = 30L * 60 * 1000)
-      val qname = "st2_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sessions.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.table(qname)
-        .select(col("userId").as("user_id"),
-          col("sessionStartMs").as("session_start_ms"),
-          col("nEvents").as("n_events"),
-          col("durationMs").as("duration_ms"))
-        .orderBy("user_id", "session_start_ms")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(qname)
-      out
+      drain(s, "st2", sessions.toDF(), "append")(
+        _.select(col("userId").as("user_id"),
+            col("sessionStartMs").as("session_start_ms"),
+            col("nEvents").as("n_events"),
+            col("durationMs").as("duration_ms"))
+          .orderBy("user_id", "session_start_ms"))
     }),
 
     // keyed MERGE: every 100th order gets a doubled totalprice "update"
@@ -3819,14 +3784,12 @@ object SparkEntry {
     // normalized fingerprints emitted exactly once across micro-batches;
     // the batch DISTINCT is the oracle (dedup-in-flight must lose
     // nothing and invent nothing)
-    "st3_stream_dedup" -> ((s, dir) => withStreamShuffle(s) {
-      streamDocuments(s, dir, "st3", "fingerprint") { stream =>
-        graft.streaming.StreamIngest.streamingDedup(
-          stream.select(graft.text.TextStats.fingerprintMd5(col("text"))
-            .as("fingerprint")),
-          Seq("fingerprint"))
-      }
-    }),
+    "st3_stream_dedup" -> ((s, dir) =>
+      drain(s, "st3", graft.streaming.StreamIngest.streamingDedup(
+          fixtureStream(s, dir, "documents")
+            .select(graft.text.TextStats.fingerprintMd5(col("text"))
+              .as("fingerprint")),
+          Seq("fingerprint")), "append")(_.orderBy("fingerprint"))),
 
     // streaming decontamination AT INGEST — the extra virtue of the
     // scan-kernel form: it is a stateless per-row projection (the eval
@@ -3834,12 +3797,11 @@ object SparkEntry {
     // rides Structured Streaming unchanged — no state store, no
     // watermark, append mode. Real pipelines decontaminate on arrival;
     // the batch twin (llm_decontaminate's oracle) gates exactness.
-    "st4_stream_decontaminate" -> ((s, dir) => withStreamShuffle(s) {
-      val evalDocs = s.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") % 97 === 0)
-      streamDocuments(s, dir, "st4", "doc_id") { stream =>
-        Curation.decontaminateScan(stream, evalDocs, "doc_id", "text", n = 8)
-      }
+    "st4_stream_decontaminate" -> ((s, dir) => {
+      val evalDocs = t(s, dir, "documents").filter(col("doc_id") % 97 === 0)
+      drain(s, "st4", Curation.decontaminateScan(
+          fixtureStream(s, dir, "documents"), evalDocs, "doc_id", "text",
+          n = 8), "append")(_.orderBy("doc_id"))
     }),
 
     // streaming MinHash NEAR-dedup at ingest: stateful LSH-bucket
@@ -3847,11 +3809,10 @@ object SparkEntry {
     // an earlier-seen doc; kept set = docs minus flagged. Same banding/
     // verify math as llm_near_dedup, so the exact all-pairs DuckDB twin
     // gates it (id-ordered arrival == the batch nearDedup drop policy)
-    "st6_stream_near_dedup" -> ((s, dir) => withStreamShuffle(s) {
-      val hits = streamDocuments(s, dir, "st6", "id") { stream =>
-        graft.streaming.StreamIngest.streamingNearDup(
-          stream, "doc_id", "text", threshold = 0.3).toDF()
-      }
+    "st6_stream_near_dedup" -> ((s, dir) => {
+      val hits = drain(s, "st6", graft.streaming.StreamIngest
+          .streamingNearDup(fixtureStream(s, dir, "documents"), "doc_id",
+            "text", threshold = 0.3).toDF(), "append")(_.orderBy("id"))
       val docs = t(s, dir, "documents")
       // past sf1: the full streaming pass still runs; only the sampled
       // docs' kept-status is emitted (matching the sampled twin)
@@ -3872,13 +3833,8 @@ object SparkEntry {
     // what the watermark contract prevents at 100 TB/day). The batch
     // twin is the plain interval self-join, so the oracle gates the
     // streamed answer exactly.
-    "st7_stream_join" -> ((s, dir) => withStreamShuffle(s) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = Files.createTempDirectory("graft_st7")
-      Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-      def src() = streamEventTs(
-        s.readStream.schema(schema).parquet(streamDir.toString))
+    "st7_stream_join" -> ((s, dir) => {
+      def src() = streamEventTs(fixtureStream(s, dir, "events"))
       val clicks = src().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("ts").as("click_ts"))
@@ -3891,20 +3847,11 @@ object SparkEntry {
         col("user_id") === col("buy_user") &&
           col("buy_ts") >= col("click_ts") &&
           col("buy_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
-      val qname = "st7_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.table(qname)
-        .select(col("click_id"), col("buy_id"), col("user_id"),
-          ((unix_micros(col("buy_ts")) - unix_micros(col("click_ts")))
-            / lit(1000L)).cast("long").as("delay_ms"))
-        .orderBy("click_id", "buy_id")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(qname)
-      out
+      drain(s, "st7", joined, "append")(
+        _.select(col("click_id"), col("buy_id"), col("user_id"),
+            ((unix_micros(col("buy_ts")) - unix_micros(col("click_ts")))
+              / lit(1000L)).cast("long").as("delay_ms"))
+          .orderBy("click_id", "buy_id"))
     }),
 
     // STREAM-STATIC enrichment join — the dimension-attach every event
@@ -3914,29 +3861,16 @@ object SparkEntry {
     // join form that costs nothing extra at 100 TB/day. Raw enriched
     // rows land in the sink; the per-segment rollup is batch, so the
     // plain batch join twin gates the whole path exactly
-    "st8_stream_enrich" -> ((s, dir) => withStreamShuffle(s) {
+    "st8_stream_enrich" -> ((s, dir) => {
       val dim = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = Files.createTempDirectory("graft_st8")
-      Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-      val stream = s.readStream.schema(schema).parquet(streamDir.toString)
+      val stream = fixtureStream(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("c_mktsegment"))
-      val qname = "st8_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = stream.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.table(qname)
-        .groupBy("c_mktsegment").agg(count(lit(1)).as("cnt"))
-        .orderBy("c_mktsegment")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(qname)
-      out
+      drain(s, "st8", stream, "append")(
+        _.groupBy("c_mktsegment").agg(count(lit(1)).as("cnt"))
+          .orderBy("c_mktsegment"))
     }),
 
     // st9: WATERMARK LATE-DATA DROP + checkpoint restart — the streaming
@@ -3949,48 +3883,52 @@ object SparkEntry {
     // suffix (kept). The append-mode hourly counts therefore equal the
     // plain batch hourly counts over each original event ONCE, for every
     // window the final watermark has closed — exactly what the twin
-    // computes. Deterministic because batch boundaries are the two runs
-    "st9_stream_late_drop" -> ((s, dir) => withStreamShuffle(s) {
-      val base = Files.createTempDirectory("graft_st9")
-      val inDir = base.resolve("in"); Files.createDirectories(inDir)
-      val outDir = base.resolve("out").toString
-      val ckpt = base.resolve("ckpt").toString
-      val ts = streamEventTs(s.read.parquet(s"$dir/events.parquet"))
-        .select(col("event_id"), col("ts"))
-      def addBatch(df: DataFrame, tag: String): Unit = {
-        val tmp = base.resolve(s"stage_$tag")
-        df.write.parquet(tmp.toString)
-        // Files.list holds an open DirectoryStream — close it or leak
-        // one fd per call in the long-lived suite JVM
-        val listing = Files.list(tmp)
-        try {
-          var i = 0
-          listing.filter(_.getFileName.toString.endsWith(".parquet"))
-            .forEach { p =>
-              Files.move(p, inDir.resolve(s"$tag-$i.parquet")); i += 1
-            }
-        } finally listing.close()
-      }
-      val sch = ts.schema
-      def runOnce(): Unit = {
-        val q = s.readStream.schema(sch).parquet(inDir.toString)
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour")).agg(count(lit(1)).as("cnt"))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      addBatch(ts.filter(col("ts") < lit("2024-01-21")), "b1")
-      runOnce()
-      addBatch(ts.filter(col("ts") >= lit("2024-01-21"))
-        .unionByName(ts.filter(col("ts") < lit("2024-01-06"))), "b2")
-      runOnce()
-      s.read.parquet(outDir)
-        .select(col("window.start").cast("timestamp_ntz").as("hour"),
-          col("cnt"))
-        .orderBy("hour").localCheckpoint(true)
+    // computes. Deterministic because batch boundaries are the two runs.
+    // The per-call dir is deleted before the body returns: the result is
+    // localCheckpoint'ed, so nothing reads the written files afterwards.
+    "st9_stream_late_drop" -> ((s, dir) => {
+      val base = scratchDir("st9_")
+      try withConfs(s, streamShuffle) {
+        val inDir = base.resolve("in"); Files.createDirectories(inDir)
+        val outDir = base.resolve("out").toString
+        val ckpt = base.resolve("ckpt").toString
+        val ts = streamEventTs(Tables.readParquet(s, s"$dir/events.parquet"))
+          .select(col("event_id"), col("ts"))
+        def addBatch(df: DataFrame, tag: String): Unit = {
+          val tmp = base.resolve(s"stage_$tag")
+          df.write.parquet(tmp.toString)
+          // Files.list holds an open DirectoryStream — close it or leak
+          // one fd per call in the long-lived suite JVM
+          val listing = Files.list(tmp)
+          try {
+            var i = 0
+            listing.filter(_.getFileName.toString.endsWith(".parquet"))
+              .forEach { p =>
+                Files.move(p, inDir.resolve(s"$tag-$i.parquet")); i += 1
+              }
+          } finally listing.close()
+        }
+        val sch = ts.schema
+        def runOnce(): Unit = {
+          val q = s.readStream.schema(sch).parquet(inDir.toString)
+            .withWatermark("ts", "1 hour")
+            .groupBy(window(col("ts"), "1 hour")).agg(count(lit(1)).as("cnt"))
+            .writeStream.format("parquet").option("path", outDir)
+            .option("checkpointLocation", ckpt).outputMode("append")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+        }
+        addBatch(ts.filter(col("ts") < lit("2024-01-21")), "b1")
+        runOnce()
+        addBatch(ts.filter(col("ts") >= lit("2024-01-21"))
+          .unionByName(ts.filter(col("ts") < lit("2024-01-06"))), "b2")
+        runOnce()
+        s.read.parquet(outDir)
+          .select(col("window.start").cast("timestamp_ntz").as("hour"),
+            col("cnt"))
+          .orderBy("hour").localCheckpoint(true)
+      } finally deleteRecursively(base)
     }),
 
     // Kafka-wire ingest (the FRONT of the reference's Kafka->HDFS pipe,
@@ -4006,7 +3944,7 @@ object SparkEntry {
     // contract) with per-partition offsets; the oracle re-derives the
     // full (hour, partition, count, max-offset) surface relationally,
     // so both the payload decode AND the envelope must be right.
-    "st10_kafka_ingest" -> ((s, dir) => withStreamShuffle(s) {
+    "st10_kafka_ingest" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       val part = pmod(col("user_id"), lit(4L)).cast("int")
       val wire = ev.select(
@@ -4021,9 +3959,7 @@ object SparkEntry {
         col("ts").cast("timestamp").as("timestamp"),
         lit(0).as("timestampType"))
       val topicDir = st10TopicDirs.computeIfAbsent(dir, _ => {
-        val streamDir = Files.createTempDirectory("graft_st10")
-        deleteRecursivelyOnExit(streamDir)
-        val p = streamDir.resolve("topic").toString
+        val p = scratchDir("st10_").resolve("topic").toString
         wire.coalesce(2).write.mode("overwrite").parquet(p)
         p
       })
@@ -4036,7 +3972,7 @@ object SparkEntry {
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"), col("kafka_partition"))
         .agg(count(lit(1)).as("cnt"), max(col("kafka_offset")).as("max_off"))
-      drainCompleteStream(s, "st10", agg)(
+      drain(s, "st10", agg, "complete")(
         _.select(col("window.start").cast("timestamp_ntz").as("hour"),
             col("kafka_partition").cast("long").as("kafka_partition"),
             col("cnt"), col("max_off"))
@@ -4051,7 +3987,7 @@ object SparkEntry {
     // drain over the fixed grid is hash-gated by the same
     // generate_series twin as the batch path — the stream and the batch
     // scan MUST agree on the whole table
-    "st11_rest_stream" -> ((s, dir) => withStreamShuffle(s) {
+    "st11_rest_stream" -> ((s, dir) => {
       val fx = graft.sources.v2.RestFixture(5000L, 250)
       val stream = s.readStream.format("graft.sources.v2.RestSource")
         .schema(org.apache.spark.sql.types.StructType.fromDDL(
@@ -4060,7 +3996,7 @@ object SparkEntry {
         .option("pagesPerTask", 4).load()
       val agg = stream.groupBy("state")
         .agg(count(lit(1)).as("cnt"), sum(col("prio")).as("sum_prio"))
-      drainCompleteStream(s, "st11", agg)(_.orderBy("state"))
+      drain(s, "st11", agg, "complete")(_.orderBy("state"))
     }),
 
     // Streaming-state OBSERVABILITY: Spark 4's state-store reader
@@ -4072,27 +4008,21 @@ object SparkEntry {
     // pipelines (inspect, validate, or seed state without replaying the
     // stream); here it proves our checkpoints are readable artifacts,
     // not black boxes.
-    "st12_statestore_read" -> ((s, dir) => withStreamShuffle(s) {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val streamDir = Files.createTempDirectory("graft_st12")
-      deleteRecursivelyOnExit(streamDir)
-      Files.createSymbolicLink(streamDir.resolve("documents.parquet"),
-        java.nio.file.Paths.get(s"$dir/documents.parquet").toAbsolutePath)
-      val ckpt = Files.createTempDirectory("graft_st12_ckpt")
-      deleteRecursivelyOnExit(ckpt)
-      val dedup = s.readStream.schema(schema).parquet(streamDir.toString)
-        .select(graft.text.TextStats.fingerprintMd5(col("text"))
-          .as("fingerprint"))
-        .dropDuplicates("fingerprint")
-      val qname =
-        "st12_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = dedup.writeStream.format("memory").queryName(qname)
-        .outputMode("append").option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally s.catalog.dropTempView(qname)
-      s.read.format("statestore").option("path", ckpt.toString).load()
+    // Only the checkpoint is read back, lazily, so the sink is noop and
+    // the checkpoint dir is left to the scratch root's exit hook.
+    "st12_statestore_read" -> ((s, dir) => {
+      val ckpt = scratchDir("st12_ckpt_").toString
+      withConfs(s, streamShuffle) {
+        fixtureStream(s, dir, "documents")
+          .select(graft.text.TextStats.fingerprintMd5(col("text"))
+            .as("fingerprint"))
+          .dropDuplicates("fingerprint")
+          .writeStream.format("noop").outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start().awaitTermination()
+      }
+      s.read.format("statestore").option("path", ckpt).load()
         .select(col("key.fingerprint").as("fingerprint"))
         .orderBy("fingerprint")
     }),
@@ -4104,29 +4034,13 @@ object SparkEntry {
     // frontier), so the one-batch drain equals the batch GROUP BY and
     // the twin gates it exactly; the scale story is RocksDB's — state
     // bounded by |users| lives off-heap with changelog checkpoints.
-    "st13_tws_profile" -> ((s, dir) => withStreamShuffle(s) {
-      graft.streaming.Tws.withRocksDb(s) {
-        import s.implicits._
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
-        val streamDir = Files.createTempDirectory("graft_st13")
-        deleteRecursivelyOnExit(streamDir)
-        Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-        val ev = s.readStream.schema(schema).parquet(streamDir.toString)
-          .select(col("user_id"), col("event_id"))
-          .as[graft.streaming.Tws.UserEvent]
-        val qname =
-          "st13_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.Tws.userProfiles(ev).toDF()
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val out = s.table(qname).orderBy("user_id").localCheckpoint(true)
-        s.catalog.dropTempView(qname)
-        out
-      }
+    "st13_tws_profile" -> ((s, dir) => graft.streaming.Tws.withRocksDb(s) {
+      import s.implicits._
+      val ev = fixtureStream(s, dir, "events")
+        .select(col("user_id"), col("event_id"))
+        .as[graft.streaming.Tws.UserEvent]
+      drain(s, "st13", graft.streaming.Tws.userProfiles(ev).toDF(),
+        "update")(_.orderBy("user_id"))
     }),
 
     // st13's operator with state SEEDED from a batch table
@@ -4137,96 +4051,47 @@ object SparkEntry {
     // ALL events — restricted to keys the stream touched, because
     // handleInitialState never emits (the documented Update-mode
     // contract; the twin's HAVING mirrors it).
-    "st14_tws_bootstrap" -> ((s, dir) => withStreamShuffle(s) {
-      graft.streaming.Tws.withRocksDb(s) {
-        import s.implicits._
-        val isHist = col("event_id") % 4 === 0
-        val history = t(s, dir, "events").filter(isHist)
-          .groupBy("user_id")
-          .agg(count(lit(1)).as("cnt"),
-            min("event_id").as("min_event_id"),
-            max("event_id").as("max_event_id"))
-          .as[graft.streaming.Tws.UserProfile]
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
-        val streamDir = Files.createTempDirectory("graft_st14")
-        deleteRecursivelyOnExit(streamDir)
-        Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-        val ev = s.readStream.schema(schema).parquet(streamDir.toString)
-          .filter(!isHist)
-          .select(col("user_id"), col("event_id"))
-          .as[graft.streaming.Tws.UserEvent]
-        val qname =
-          "st14_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.Tws.userProfilesFrom(ev, history).toDF()
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val out = s.table(qname).orderBy("user_id").localCheckpoint(true)
-        s.catalog.dropTempView(qname)
-        out
-      }
+    "st14_tws_bootstrap" -> ((s, dir) => graft.streaming.Tws.withRocksDb(s) {
+      import s.implicits._
+      val isHist = col("event_id") % 4 === 0
+      val history = t(s, dir, "events").filter(isHist)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("cnt"),
+          min("event_id").as("min_event_id"),
+          max("event_id").as("max_event_id"))
+        .as[graft.streaming.Tws.UserProfile]
+      val ev = fixtureStream(s, dir, "events")
+        .filter(!isHist)
+        .select(col("user_id"), col("event_id"))
+        .as[graft.streaming.Tws.UserEvent]
+      drain(s, "st14", graft.streaming.Tws.userProfilesFrom(ev, history)
+        .toDF(), "update")(_.orderBy("user_id"))
     }),
 
     // ListState: per-user most-recent-3 buffer (the third typed-state
     // kind after st13's ValueState and st6's grouped map-state) — the
     // top-N merge is order-invariant, so the one-batch drain equals the
     // batch window-rank pivot the twin computes
-    "st15_tws_lastn" -> ((s, dir) => withStreamShuffle(s) {
-      graft.streaming.Tws.withRocksDb(s) {
-        import s.implicits._
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
-        val streamDir = Files.createTempDirectory("graft_st15")
-        deleteRecursivelyOnExit(streamDir)
-        Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-        val ev = s.readStream.schema(schema).parquet(streamDir.toString)
-          .select(col("user_id"), col("event_id"))
-          .as[graft.streaming.Tws.UserEvent]
-        val qname =
-          "st15_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.Tws.lastNEvents(ev).toDF()
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val out = s.table(qname).orderBy("user_id").localCheckpoint(true)
-        s.catalog.dropTempView(qname)
-        out
-      }
+    "st15_tws_lastn" -> ((s, dir) => graft.streaming.Tws.withRocksDb(s) {
+      import s.implicits._
+      val ev = fixtureStream(s, dir, "events")
+        .select(col("user_id"), col("event_id"))
+        .as[graft.streaming.Tws.UserEvent]
+      drain(s, "st15", graft.streaming.Tws.lastNEvents(ev).toDF(),
+        "update")(_.orderBy("user_id"))
     }),
 
     // MapState: per-user event-type dictionary (completes the typed-
     // state trio: ValueState st13 / ListState st15 / MapState here) —
     // count-sum per sub-key is a commutative monoid, so the one-batch
     // drain equals the batch two-key GROUP BY the twin computes
-    "st16_tws_typecounts" -> ((s, dir) => withStreamShuffle(s) {
-      graft.streaming.Tws.withRocksDb(s) {
-        import s.implicits._
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
-        val streamDir = Files.createTempDirectory("graft_st16")
-        deleteRecursivelyOnExit(streamDir)
-        Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-        val ev = s.readStream.schema(schema).parquet(streamDir.toString)
-          .select(col("user_id"), col("event_type"))
-          .as[graft.streaming.Tws.TypedEvent]
-        val qname =
-          "st16_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.Tws.typeCounts(ev).toDF()
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val out = s.table(qname).orderBy("user_id", "event_type")
-          .localCheckpoint(true)
-        s.catalog.dropTempView(qname)
-        out
-      }
+    "st16_tws_typecounts" -> ((s, dir) => graft.streaming.Tws.withRocksDb(s) {
+      import s.implicits._
+      val ev = fixtureStream(s, dir, "events")
+        .select(col("user_id"), col("event_type"))
+        .as[graft.streaming.Tws.TypedEvent]
+      drain(s, "st16", graft.streaming.Tws.typeCounts(ev).toDF(),
+        "update")(_.orderBy("user_id", "event_type"))
     }),
 
     // st17: the TIMER face of transformWithState — event-time
@@ -4240,35 +4105,18 @@ object SparkEntry {
     // ms-floor fire predicate (expiry_ms <= watermark_ms, non-strict —
     // TwsTimerSpec's boundary case), so both close paths are
     // hash-gated, including WHICH path closed each row (closed_by)
-    "st17_tws_sessions" -> ((s, dir) => withStreamShuffle(s) {
-      graft.streaming.Tws.withRocksDb(s) {
-        import s.implicits._
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
-        val streamDir = Files.createTempDirectory("graft_st17")
-        deleteRecursivelyOnExit(streamDir)
-        Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-        val ev = s.readStream.schema(schema).parquet(streamDir.toString)
-          .filter(col("ts").isNotNull && col("user_id").isNotNull)
-          // ntz → instant under the session's UTC zone: same wall-µs
-          // the twin's epoch_us reads, and the type watermarks require
-          .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
-          .withWatermark("ts", "0 seconds")
-          .as[graft.streaming.Tws.SessionEvent]
-        val qname =
-          "st17_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.Tws
-          .sessionTimeout(ev, gapMs = 12L * 3600 * 1000).toDF()
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val out = s.table(qname).orderBy("user_id", "start_us")
-          .localCheckpoint(true)
-        s.catalog.dropTempView(qname)
-        out
-      }
+    "st17_tws_sessions" -> ((s, dir) => graft.streaming.Tws.withRocksDb(s) {
+      import s.implicits._
+      val ev = fixtureStream(s, dir, "events")
+        .filter(col("ts").isNotNull && col("user_id").isNotNull)
+        // ntz → instant under the session's UTC zone: same wall-µs
+        // the twin's epoch_us reads, and the type watermarks require
+        .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
+        .withWatermark("ts", "0 seconds")
+        .as[graft.streaming.Tws.SessionEvent]
+      drain(s, "st17", graft.streaming.Tws
+          .sessionTimeout(ev, gapMs = 12L * 3600 * 1000).toDF(), "append")(
+        _.orderBy("user_id", "start_us"))
     }),
 
     // st19: the BUILT-IN session_window aggregation (SPARK-10816,
@@ -4282,22 +4130,15 @@ object SparkEntry {
     // AvailableNow drain = every session closed, so the plain batch
     // lag+cumsum twin gates it with no watermark-closure HAVING.
     // Emitted end = max(ts) + gap (the window end, not the last event).
-    "st19_session_window" -> ((s, dir) => withStreamShuffle(s) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = Files.createTempDirectory("graft_st19")
-      deleteRecursivelyOnExit(streamDir)
-      Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-      val stream = streamEventTs(
-        s.readStream.schema(schema).parquet(streamDir.toString))
-      val agg = stream
+    "st19_session_window" -> ((s, dir) => {
+      val agg = streamEventTs(fixtureStream(s, dir, "events"))
         // % 5, denser than st2's % 50: ~21 min median intra-user delta
         // vs the 30 min gap → real window MERGING (5.7 events/session
         // at sf0.01), not a degenerate one-event-one-session stream
         .select((col("event_id") % 5).as("user_id"), col("ts"))
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
-      drainCompleteStream(s, "st19", agg)(
+      drain(s, "st19", agg, "complete")(
         _.select(col("user_id"),
             unix_millis(col("session_window.start")).as("start_ms"),
             unix_millis(col("session_window.end")).as("end_ms"),
@@ -4314,27 +4155,23 @@ object SparkEntry {
     // double-apply; StreamSpec drives the multi-batch + idempotency
     // story through MemoryStream). The drained view must equal the
     // plain batch GROUP BY — the materialized-view invariant.
-    "st20_foreachbatch_upsert" -> ((s, dir) => withStreamShuffle(s) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = Files.createTempDirectory("graft_st20")
-      deleteRecursivelyOnExit(streamDir)
-      Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-      val view = Files.createTempDirectory("graft_st20_view")
-        .resolve("view").toString
-      deleteRecursivelyOnExit(java.nio.file.Paths.get(view).getParent)
-      val ckpt = Files.createTempDirectory("graft_st20_ck")
-      deleteRecursivelyOnExit(ckpt)
-      val agg = s.readStream.schema(schema).parquet(streamDir.toString)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double").as("sum_value"))
-      val q = graft.streaming.StreamIngest.foreachBatchUpsert(
-        agg, Seq("user_id"), view, ckpt.toString)
-      q.awaitTermination()
-      s.read.parquet(view).orderBy("user_id").localCheckpoint(true)
+    // The view and checkpoint go before the body returns: the result is
+    // localCheckpoint'ed, so nothing reads them afterwards.
+    "st20_foreachbatch_upsert" -> ((s, dir) => {
+      val base = scratchDir("st20_")
+      try withConfs(s, streamShuffle) {
+        val view = base.resolve("view").toString
+        val agg = fixtureStream(s, dir, "events")
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("cnt"),
+            sum(col("value")
+              .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
+              .cast("double").as("sum_value"))
+        graft.streaming.StreamIngest.foreachBatchUpsert(
+          agg, Seq("user_id"), view, base.resolve("ckpt").toString)
+          .awaitTermination()
+        s.read.parquet(view).orderBy("user_id").localCheckpoint(true)
+      } finally deleteRecursively(base)
     }),
 
     // st18: dropDuplicatesWithinWatermark — st3's dedup with BOUNDED
@@ -4346,44 +4183,26 @@ object SparkEntry {
     // drain admits each key once, so the batch DISTINCT gates it; only
     // the key columns are emitted (which physical row survives is
     // arrival-order dependent, the key set is not).
-    "st18_dedup_within_wm" -> ((s, dir) => withStreamShuffle(s) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = Files.createTempDirectory("graft_st18")
-      deleteRecursivelyOnExit(streamDir)
-      Files.createSymbolicLink(streamDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-      val ev = s.readStream.schema(schema).parquet(streamDir.toString)
+    "st18_dedup_within_wm" -> ((s, dir) => {
+      val ev = fixtureStream(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           col("ts").cast("timestamp").as("ts"))
         .withWatermark("ts", "1 hour")
-      val deduped = graft.streaming.StreamIngest.streamingDedup(
-        ev, Seq("user_id", "event_type"), withinWatermark = true)
-      val qname =
-        "st18_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = deduped.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.table(qname).orderBy("user_id", "event_type")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(qname)
-      out
+      drain(s, "st18", graft.streaming.StreamIngest.streamingDedup(
+          ev, Seq("user_id", "event_type"), withinWatermark = true),
+        "append")(_.orderBy("user_id", "event_type"))
     }),
 
     // streaming quality FILTER at ingest — the most common streaming
     // curation op, same stateless-kernel argument as st4: the composed
     // quality/language predicate is pure codegen'd per-row work, so the
     // batch llm_quality_filter twin gates the streaming answer exactly
-    "st5_stream_quality_filter" -> ((s, dir) => withStreamShuffle(s) {
-      streamDocuments(s, dir, "st5", "doc_id") { stream =>
-        stream
+    "st5_stream_quality_filter" -> ((s, dir) =>
+      drain(s, "st5", fixtureStream(s, dir, "documents")
           .withColumn("quality", TextStats.qualityScore(col("text")))
           .withColumn("lang_pred", TextStats.langId(col("text")))
           .filter(col("quality") >= 0.7 && col("lang_pred") === "en")
-          .select("doc_id", "quality")
-      }
-    }),
+          .select("doc_id", "quality"), "append")(_.orderBy("doc_id"))),
 
     // ---- SQL surface: the same portable ANSI string runs on both
     // engines (spark.sql over registered views IS the oracle SQL) ------
@@ -6331,9 +6150,10 @@ object SparkEntry {
     // INDEPENDENT exact DBSCAN: ε-pairs (strict <), degree≥minPts cores,
     // connected components via recursive min-label propagation (UNION
     // dedups; labels decrease monotonically → fixpoint), border points
-    // take the min core-neighbor label, −1 noise — the same semantics
-    // Dbscan.exactOnFrame implements, derived in pure SQL so the gate is
-    // a genuine cross-engine check of the clustering itself
+    // take the min core-neighbor label, −1 noise — Dbscan.local's label
+    // policy, which Dbscan.exactOnFrame runs (so the labels do not depend
+    // on row arrival order), derived in pure SQL so the gate is a genuine
+    // cross-engine check of the clustering itself
     "m5_dbscan" -> (
       "WITH RECURSIVE " +
         "e AS (SELECT vec_id AS id, embedding FROM embeddings WHERE vec_id < 300), " +

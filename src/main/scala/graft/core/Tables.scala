@@ -46,12 +46,15 @@ object Tables {
     * the inferred ts type flips; only plain files are memoized (a
     * directory's own mtime and length miss in-place rewrites of its
     * parts). Held on the session OBJECT in a WeakHashMap (the
-    * [[registeredFor]] precedent), so dead sessions don't pin. */
+    * [[registeredFor]] precedent), so dead sessions don't pin.
+    * [[readParquet]] is also where SparkEntry's fixture streams take
+    * their raw schema from. */
   private val schemaMemo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       Map[(String, Long, Long, String), StructType]]())
 
-  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def readParquet(spark: SparkSession, path: String)
+      : DataFrame = {
     val key = try {
       val p = new org.apache.hadoop.fs.Path(path)
       val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Small shared utilities that had started to be re-derived inline
   * (r12 review): conf scoping, JSON string escaping, filesystem
-  * recursive delete, the shuffle-write meter used by specs, and the
+  * recursive delete, the per-JVM scratch root, the shuffle-write meter
+  * used by specs, and the
   * job counter of graft.One and the job-budget specs.
   */
 object Util {
@@ -47,6 +48,25 @@ object Util {
           .foreach(java.nio.file.Files.deleteIfExists(_))
       } finally walk.close()
     }
+
+  /** The JVM's one scratch root, created on first use under the system
+    * temp dir and deleted by the single shutdown hook registered with it.
+    * Everything a query writes for its own use (stream link dirs,
+    * checkpoints, round-trip copies read lazily after the body returns)
+    * lives below it, so nothing outlives the JVM and no hook is added
+    * per call. */
+  private[graft] lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_scratch")
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => deleteRecursively(root)))
+    root
+  }
+
+  /** A new, empty directory `tag<random>` under [[scratchRoot]]. A caller
+    * whose output no longer reads it may delete it early; otherwise it
+    * goes when the JVM exits. */
+  def scratchDir(tag: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchRoot, tag)
 
   /** Drop a managed table AND clear its (possibly orphaned) warehouse
     * directory. A fresh session's catalog doesn't know tables a

@@ -14,9 +14,10 @@ import scala.collection.mutable
   * Paths sharing semantics:
   *  - [[exact]]: driver-side textbook DBSCAN for parity testing (n ≤ ~2e4;
   *    the reference scale is n≈2.8e3).
-  *  - [[local]]: [[distributed]]'s exact contract (LSH recall included)
+  *  - [[local]]: exact ε-edges under [[distributed]]'s label policy,
   *    computed on the driver for a point set already collected there —
-  *    the flagship's reference-scale route, no Spark job.
+  *    the flagship's reference-scale route and [[exactOnFrame]], no
+  *    Spark job.
   *  - [[distributed]]: ε-neighborhood self-join via
   *    BucketedRandomProjectionLSH.approxSimilarityJoin → core filter
   *    (|N_ε| ≥ minPts) → connected components over core–core edges →
@@ -40,9 +41,9 @@ object Dbscan {
   def exact(points: Array[Array[Double]], eps: Double, minPts: Int): Array[Int] =
     exactWithCore(points, eps, minPts)._1
 
-  /** As [[exact]], additionally returning the core-point mask (needed for
-    * cross-path label renumbering: the distributed path labels clusters
-    * by min CORE member id). */
+  /** As [[exact]], additionally returning the core-point mask ([[sampled]]
+    * renames each cluster by its min CORE member id, as the distributed
+    * path labels clusters). */
   def exactWithCore(points: Array[Array[Double]], eps: Double,
                     minPts: Int): (Array[Int], Array[Boolean]) = {
     val n = points.length
@@ -670,7 +671,11 @@ object Dbscan {
   }
 
   /** Helper: exact path over a DataFrame, for parity tests and reference-
-    * scale runs. Collects (id, vec) to the driver — guarded. */
+    * scale runs. Collects (id, vec) to the driver — guarded — and labels
+    * them with [[local]], so the labels do not depend on the order the
+    * rows arrive in: min core id per cluster, and a border point within ε
+    * of cores of two clusters takes the lower label. Ids must be
+    * unique. */
   def exactOnFrame(df: DataFrame, idCol: String, vecCol: String,
                    eps: Double, minPts: Int, maxN: Int = 20000): DataFrame = {
     val spark = df.sparkSession
@@ -683,16 +688,7 @@ object Dbscan {
       case f: Float => f.toDouble
       case d: Double => d
     }.toArray)
-    val (labels, core) = exactWithCore(pts, eps, minPts)
-    // renumber clusters by min CORE member id — matching distributed(),
-    // where the GraphX component id is the min core vertex and border
-    // points attach to it (a border point can have the lowest raw id)
-    val byCluster = ids.indices.filter(labels(_) >= 0).groupBy(labels(_))
-    val renum = byCluster.map { case (c, idxs) =>
-      c -> idxs.filter(core(_)).map(ids(_)).min
-    }
-    spark.createDataset(ids.zip(labels).toSeq.map { case (id, l) =>
-      (id, if (l < 0) -1L else renum(l))
-    }).toDF(idCol, "label")
+    spark.createDataset(ids.zip(local(ids, pts, eps, minPts)).toSeq)
+      .toDF(idCol, "label")
   }
 }

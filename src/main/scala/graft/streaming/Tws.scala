@@ -348,18 +348,10 @@ object Tws {
   /** transformWithState requires the RocksDB state store provider; set it
     * (plus changelog checkpointing, the production-shape config) for the
     * duration of `body` and restore the previous provider after. */
-  def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val logKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = s.conf.getOption(key)
-    val prevLog = s.conf.getOption(logKey)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(logKey, "true")
-    try body finally {
-      prev.fold(s.conf.unset(key))(s.conf.set(key, _))
-      prevLog.fold(s.conf.unset(logKey))(s.conf.set(logKey, _))
-    }
-  }
+  def withRocksDb[T](s: SparkSession)(body: => T): T =
+    graft.core.Util.withConfs(s, Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true"))(body)
 }

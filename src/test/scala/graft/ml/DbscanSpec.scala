@@ -256,6 +256,29 @@ class DbscanSpec extends SparkSpec {
     assert(Dbscan.local(Array.empty, Array.empty, eps = 1.0, minPts = 3).isEmpty)
   }
 
+  test("exactOnFrame: a border point between two clusters gets the same " +
+    "label in either row order, equal to local's") {
+    // clusters {0..3} and {20..23}, minPts 4; point 10 lies within ε of
+    // core 3 and of core 20 only, so it is a border point of both
+    val a = Seq(0.0, 0.01, 0.02, 0.3).zipWithIndex
+      .map { case (x, i) => (i.toLong, Array(x)) }
+    val b = Seq(2.1, 2.4, 2.41, 2.42).zipWithIndex
+      .map { case (x, i) => (20L + i, Array(x)) }
+    val border = Seq((10L, Array(1.2)))
+    val ids = (a ++ border ++ b).map(_._1).toArray
+    val expected = ids.zip(Dbscan.local(ids, (a ++ border ++ b).map(_._2)
+      .toArray, eps = 0.95, minPts = 4)).toMap
+    assert(expected(10L) == 0L && expected(21L) == 20L)
+    // the higher-id cluster first, then the lower-id one first
+    Seq(b ++ border ++ a, a ++ border ++ b).foreach { rows =>
+      val got = Dbscan.exactOnFrame(
+        rows.map { case (id, v) => (id, v.toSeq) }.toDF("id", "vec"),
+        "id", "vec", eps = 0.95, minPts = 4)
+        .as[(Long, Long)].collect().toMap
+      assert(got == expected)
+    }
+  }
+
   test("knnCurve equals collectCurve(knnDistanceCurve) on the m3_knn_curve input") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") < 300)
