@@ -194,9 +194,11 @@ object Curation {
     val cc =
       if (edgeSample.length <= smallGraphEdgeCap) {
         edgePairs.unpersist(blocking = false)
-        val uf = new graft.core.MinRootUnionFind
-        edgeSample.foreach { case (a, b) => uf.add(a); uf.add(b); uf.union(a, b) }
-        val labelDf = spark.createDataset(uf.labels).toDF("doc_id", "_gx_gid")
+        val (ids, as, bs) = graft.core.MinRootUnionFind.index(edgeSample)
+        val uf = new graft.core.MinRootUnionFind(ids.length)
+        as.indices.foreach(e => uf.union(as(e), bs(e)))
+        val labelDf = spark.createDataset(ids.indices.map(i =>
+          (ids(i), ids(uf.find(i))))).toDF("doc_id", "_gx_gid")
         allIds.select(col(idCol).cast("long").as("doc_id"))
           .join(broadcast(labelDf), Seq("doc_id"), "left")
           .select(col("doc_id"),

@@ -4,108 +4,38 @@ import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 
 /** M5 DBSCAN — the reference's single genuinely custom algorithm
   * (daal4py dbscan(minObservations=5, epsilon), run at ε=20/minPts=5,
-  * word2vec_dbscan_approach.ipynb:223-233, :30081-30092). Labels: 0..C-1
-  * clusters, −1 noise.
+  * word2vec_dbscan_approach.ipynb:223-233, :30081-30092). A point is a
+  * core when its ε-neighbourhood (STRICT dist < ε, as the LSH join keeps
+  * dist < threshold — a documented delta vs the textbook ≤ that only
+  * boundary-exact pairs, measure-zero on real embeddings, can see; the
+  * point itself included) holds ≥ minPts points. Labels: a cluster is
+  * named by its min core id, −1 is noise.
   *
-  * Paths sharing semantics:
-  *  - [[exact]]: driver-side textbook DBSCAN for parity testing (n ≤ ~2e4;
-  *    the reference scale is n≈2.8e3).
-  *  - [[local]]: exact ε-edges under [[distributed]]'s label policy,
-  *    computed on the driver for a point set already collected there —
+  * Every driver route labels through ONE array-indexed policy,
+  * [[labelIndices]]: core–core components by a min-root union-find, a
+  * border point takes its lowest core-neighbour label.
+  *  - [[local]]: exact ε-edges over a point set already on the driver —
   *    the flagship's reference-scale route and [[exactOnFrame]], no
   *    Spark job.
-  *  - [[distributed]]: ε-neighborhood self-join via
-  *    BucketedRandomProjectionLSH.approxSimilarityJoin → core filter
-  *    (|N_ε| ≥ minPts) → connected components over core–core edges →
-  *    border points attach to any core neighbor's cluster. Scales as the
-  *    LSH join does (bucketed, never all-pairs). Cluster ids are
-  *    renumbered by min member id for determinism, noise = −1.
-  *    CC routes by ε-graph size: an edge relation under
+  *  - [[distributed]]: LSH ε-self-join ([[epsEdges]]) → the same policy
+  *    on the driver while the edge relation fits under
   *    `smallGraphEdgeCap` (probed with limit(cap+1), so the collect is
-  *    bounded before it happens) is labeled by a driver union-find —
-  *    the reference-scale regime, where per-job scheduling overhead
-  *    otherwise dominates; a larger graph runs GraphX Pregel CC.
+  *    bounded before it happens) — the reference-scale regime, where
+  *    per-job scheduling overhead otherwise dominates; a larger graph
+  *    runs GraphX Pregel CC under the same label rule.
+  *  - [[sampled]]: DBSCAN++ — the policy on a bounded sample, then every
+  *    point attaches to its nearest sampled core within ε.
   */
 object Dbscan {
 
-  /** Driver-exact DBSCAN. `points` indexed by position; returns labels
-    * aligned to input order, noise = −1, clusters numbered in discovery
-    * order. ε-neighborhood uses STRICT `dist < eps` to match the
-    * distributed path (approxSimilarityJoin keeps dist < threshold) —
-    * documented delta vs the textbook `<=`; boundary-exact pairs are
-    * measure-zero on real embeddings. */
-  def exact(points: Array[Array[Double]], eps: Double, minPts: Int): Array[Int] =
-    exactWithCore(points, eps, minPts)._1
-
-  /** As [[exact]], additionally returning the core-point mask ([[sampled]]
-    * renames each cluster by its min CORE member id, as the distributed
-    * path labels clusters). */
-  def exactWithCore(points: Array[Array[Double]], eps: Double,
-                    minPts: Int): (Array[Int], Array[Boolean]) = {
-    val n = points.length
-    val labels = Array.fill(n)(-2) // -2 unvisited, -1 noise
-    val core = new Array[Boolean](n)
-    val eps2 = eps * eps
-    def dist2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    def neighbors(i: Int): mutable.ArrayBuffer[Int] = {
-      val out = mutable.ArrayBuffer.empty[Int]
-      var j = 0
-      while (j < n) { if (dist2(points(i), points(j)) < eps2) out += j; j += 1 }
-      out // includes i itself, as in the standard formulation
-    }
-    var cluster = -1
-    var i = 0
-    while (i < n) {
-      if (labels(i) == -2) {
-        val ni = neighbors(i)
-        if (ni.length < minPts) labels(i) = -1
-        else {
-          cluster += 1
-          labels(i) = cluster
-          core(i) = true
-          val queue = mutable.Queue[Int](ni.toSeq: _*)
-          while (queue.nonEmpty) {
-            val q = queue.dequeue()
-            if (labels(q) == -1) labels(q) = cluster // border: claim noise
-            if (labels(q) == -2) {
-              labels(q) = cluster
-              val nq = neighbors(q)
-              if (nq.length >= minPts) { core(q) = true; queue.enqueueAll(nq) }
-            }
-          }
-        }
-      }
-      i += 1
-    }
-    (labels, core)
-  }
-
-  /** Distributed DBSCAN. Input: (id: Long, features: ml Vector). Output:
-    * (id, label) with label = min core-member id per cluster (stable,
-    * partition-independent), −1 for noise.
-    *
-    * APPROXIMATE RECALL: the ε-self-join is LSH-bucketed, so true
-    * ε-neighbors can be missed (false negatives only — distances are
-    * verified exactly post-bucket). Missed edges undercount degrees and can
-    * drop core–core links, so labels match [[exact]] only probabilistically
-    * on boundary-dense data. `numHashTables` is the recall knob: each extra
-    * table is another independent chance for a near pair to share a bucket
-    * (more recall, more join cost). Parity with exact() is asserted on
-    * separated blobs in the spec; raise numHashTables when clusters sit
-    * near the ε boundary. */
   /** The ε-edge relation (a, b): distinct ordered pairs of DISTINCT
     * points within strict Euclidean eps of each other — the HAND-ROLLED
     * LSH bucket join with approxSimilarityJoin's semantics (explode
     * hash tables, equi-join on (table, hashValue), exact Euclidean
-    * verify, STRICT < eps — exact() matches). Two deliberate
+    * verify, STRICT < eps — [[local]] matches). Two deliberate
     * differences in SHAPE vs the ml version, both scale wins:
     *  - the candidate-pair dedup (a pair can collide in several hash
     *    tables) runs on bare (a, b) LONGS after projecting ids away —
@@ -137,7 +67,7 @@ object Dbscan {
     // graft_l2_sq kernel inside whole-stage codegen instead of a
     // ScalaUDF (the same interpreted-vs-kernel trade every other hot
     // path in this repo makes). ε-compare stays in SQUARED form:
-    // bit-identical to exact()'s dist² < ε², where a rounded sqrt could
+    // bit-identical to [[local]]'s dist² < ε², where a rounded sqrt could
     // flip an ultra-marginal boundary pair.
     val hashed = lsh.fit(pts).transform(pts)
       .select(col("id"),
@@ -438,6 +368,23 @@ object Dbscan {
     }
   }
 
+  /** Distributed DBSCAN. Input: (id: Long, features: ml Vector). Output:
+    * (id, label) with label = min core-member id per cluster (stable,
+    * partition-independent), −1 for noise.
+    *
+    * APPROXIMATE RECALL: the ε-self-join is LSH-bucketed, so true
+    * ε-neighbors can be missed (false negatives only — distances are
+    * verified exactly post-bucket). Missed edges undercount degrees and can
+    * drop core–core links, so labels match [[local]] only probabilistically
+    * on boundary-dense data. `numHashTables` is the recall knob: each extra
+    * table is another independent chance for a near pair to share a bucket
+    * (more recall, more join cost). Parity with [[local]] is asserted on
+    * separated blobs in the spec; raise numHashTables when clusters sit
+    * near the ε boundary.
+    *
+    * An id with no ε-edge is noise on both CC routes, also at minPts ≤ 1,
+    * where exact DBSCAN (and [[local]]) would make it a singleton cluster:
+    * that is the documented result for this degenerate input. */
   def distributed(df: DataFrame, idCol: String, featuresCol: String,
                   eps: Double, minPts: Int,
                   bucketLength: Double = 2.0,
@@ -476,10 +423,13 @@ object Dbscan {
       joined.as[(Long, Long)].limit(smallGraphEdgeCap + 1).collect()
     if (edgeSample.length <= smallGraphEdgeCap) {
       joined.unpersist(blocking = false)
-      // the pair relation holds both orientations of every ε-edge
-      val labels = labelByEdges(minPts,
-        f => edgeSample.foreach { case (a, b) => f(a, b) })
-      val labelDf = spark.createDataset(labels.toSeq).toDF("id", "label")
+      // the pair relation holds both orientations of every ε-edge; ids
+      // with no edge stay out of the policy, as on the GraphX route
+      val (ids, as, bs) = graft.core.MinRootUnionFind.index(edgeSample)
+      val (labels, _) = labelIndices(ids.length, minPts,
+        f => as.indices.foreach(e => f(as(e), bs(e))))
+      val labelDf = spark.createDataset(ids.indices.filter(labels(_) >= 0)
+        .map(i => (ids(i), ids(labels(i))))).toDF("id", "label")
       // broadcast join onto the full id set; no checkpoint needed — the
       // lineage is one scan plus a local relation, nothing cached
       // remains (and LAZY: the caller's action pays for it)
@@ -532,53 +482,69 @@ object Dbscan {
     result
   }
 
-  /** The DBSCAN label policy over an ε-edge relation, shared by
-    * [[distributed]]'s small-graph route and [[local]] so the two cannot
-    * drift apart. `forEachEdge` must walk every ε-edge in BOTH
-    * orientations, (a, b) and (b, a); it is called three times (degrees;
-    * core–core unions; border attach). degree = ε-neighbor count + 1
-    * (self counts once, matching |N_ε(p)| ≥ minPts with p ∈ N_ε(p)); ids
-    * with no edge stay absent, exactly as the distributed groupBy does.
-    * A core point's label is the min core id of its core–core component
-    * (union by MIN root, GraphX connectedComponents' vertex labeling); a
-    * border point takes its lowest core-neighbour label. Returns labels
-    * for core and border ids only; every other id is noise (−1). */
-  private def labelByEdges(minPts: Int,
-      forEachEdge: ((Long, Long) => Unit) => Unit): mutable.Map[Long, Long] = {
-    val deg = mutable.Map.empty[Long, Int]
-    forEachEdge((a, _) => deg(a) = deg.getOrElse(a, 0) + 1)
-    val coreIds = deg.collect { case (a, d) if d + 1 >= minPts => a }.toSet
-    val uf = new graft.core.MinRootUnionFind
-    coreIds.foreach(uf.add)
-    forEachEdge((a, b) => if (coreIds(a) && coreIds(b)) uf.union(a, b))
-    val labels = mutable.Map.empty[Long, Long] ++ uf.labels
+  /** The one DBSCAN label policy, over point indices `0 until n`.
+    * `forEachEdge` must walk every ε-edge in BOTH orientations, (a, b) and
+    * (b, a); it is called three times (degrees; core–core unions; border
+    * attach). A point is a core when its edge count + 1 ≥ minPts (self
+    * counts once, |N_ε(p)| ≥ minPts with p ∈ N_ε(p)), so at minPts ≤ 1 a
+    * point with no edge is a core of its own. A core's label is the min
+    * index of its core–core component (union by MIN root, GraphX
+    * connectedComponents' vertex labeling); a border point takes its
+    * lowest core-neighbour label; every other point is noise (−1).
+    * Callers number indices in ascending id order, so a label is the
+    * index of the cluster's min core id. Returns (labels, core mask). */
+  private def labelIndices(n: Int, minPts: Int,
+      forEachEdge: ((Int, Int) => Unit) => Unit): (Array[Int], Array[Boolean]) = {
+    val deg = new Array[Int](n)
+    forEachEdge((a, _) => deg(a) += 1)
+    val core = deg.map(_ + 1 >= minPts)
+    val uf = new graft.core.MinRootUnionFind(n)
+    forEachEdge((a, b) => if (core(a) && core(b)) uf.union(a, b))
+    val labels = Array.tabulate(n)(i => if (core(i)) uf.find(i) else -1)
     forEachEdge { (a, b) =>
-      if (!coreIds(a) && coreIds(b))
-        labels(a) = math.min(labels.getOrElse(a, Long.MaxValue), uf.find(b))
+      if (!core(a) && core(b) && (labels(a) < 0 || labels(b) < labels(a)))
+        labels(a) = labels(b)
     }
-    labels
+    (labels, core)
   }
 
   /** Exact DBSCAN for a point set already on the driver (the flagship's
     * reference-scale route, like the reference's in-memory daal4py run),
-    * computed without a job. An ε-edge joins two distinct ids that lie
+    * computed without a job. An ε-edge joins two distinct points that lie
     * strictly within ε (VecKernels.l2Sq < ε²) — every such pair, with no
     * LSH bucketing, so the LSH recall caveat of [[distributed]] does not
-    * apply here; the labels follow [[labelByEdges]] (min core id per
+    * apply here; the labels follow [[labelIndices]] (min core id per
     * cluster, min core-neighbour label for border points). The edge test
     * is recomputed on each of its scans of the pairs instead of kept as
     * an edge list, so memory stays O(n) even when ε connects every
     * pair. Ids must be unique. Returns labels aligned to `ids`. */
   def local(ids: Array[Long], pts: Array[Array[Double]], eps: Double,
-            minPts: Int): Array[Long] = {
-    val n = ids.length
+            minPts: Int): Array[Long] = localWithCore(ids, pts, eps, minPts)._1
+
+  /** As [[local]], also returning the core mask aligned to `ids`. */
+  private def localWithCore(ids: Array[Long], pts: Array[Array[Double]],
+      eps: Double, minPts: Int): (Array[Long], Array[Boolean]) = {
+    val order = ids.indices.sortBy(ids(_)).toArray // index k ↔ k-th least id
+    val p = order.map(pts)
     val eps2 = eps * eps
-    val labels = labelByEdges(minPts, f =>
-      for (i <- 0 until n; j <- i + 1 until n
-           if ids(i) != ids(j) && graft.expr.VecKernels.l2Sq(pts(i), pts(j)) < eps2) {
-        f(ids(i), ids(j)); f(ids(j), ids(i))
-      })
-    ids.map(labels.getOrElse(_, -1L))
+    val (labels, core) = labelIndices(p.length, minPts, { f =>
+      var i = 0
+      while (i < p.length) {
+        var j = i + 1
+        while (j < p.length) {
+          if (graft.expr.VecKernels.l2Sq(p(i), p(j)) < eps2) { f(i, j); f(j, i) }
+          j += 1
+        }
+        i += 1
+      }
+    })
+    val outLabels = new Array[Long](ids.length)
+    val outCore = new Array[Boolean](ids.length)
+    order.indices.foreach { k =>
+      outLabels(order(k)) = if (labels(k) < 0) -1L else ids(order(labels(k)))
+      outCore(order(k)) = core(k)
+    }
+    (outLabels, outCore)
   }
 
   /** Sample-based DBSCAN (the DBSCAN++ pattern) — the bounded-cost scale
@@ -624,14 +590,9 @@ object Dbscan {
       case d: Double => d
     }.toArray)
     val scaledMinPts = math.max(1, math.round(minPts * frac).toInt)
-    val (labels, core) = exactWithCore(pts, eps, scaledMinPts)
-    val byCluster = ids.indices.filter(labels(_) >= 0).groupBy(labels(_))
-    val renum = byCluster.map { case (c, idxs) =>
-      c -> idxs.filter(core(_)).map(ids(_)).min
-    }
-    val cores = ids.indices.filter(core(_)).map { i =>
-      (renum(labels(i)), pts(i).toSeq)
-    }
+    // a core's label is already its component's min core id
+    val (labels, core) = localWithCore(ids, pts, eps, scaledMinPts)
+    val cores = ids.indices.filter(core(_)).map(i => (labels(i), pts(i).toSeq))
     // identical core VECTORS carry identical labels (distance 0 < eps and
     // both core => same cluster), and templated corpora collapse many
     // cores onto few distinct sentence vectors — dedupe so the attach

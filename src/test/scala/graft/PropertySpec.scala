@@ -56,17 +56,18 @@ class PropertySpec extends SparkSpec {
   test("property: DBSCAN exact labels are permutation-invariant") {
     val pts = (0 until 30).map(i =>
       Array((i % 3) * 10.0 + (i % 5) * 0.01, (i % 3) * 10.0)).toArray
-    val l1 = graft.ml.Dbscan.exact(pts, eps = 0.5, minPts = 3)
-    // permute input, map labels back: partition must be identical
+    val ids = pts.indices.map(_.toLong).toArray
+    val l1 = graft.ml.Dbscan.local(ids, pts, eps = 0.5, minPts = 3)
+    // permute input (ids travel with their points), map labels back:
+    // labels are min core ids, so they must be identical, not just the
+    // partition
     val perm = scala.util.Random.shuffle(pts.indices.toList).toArray
-    val l2raw = graft.ml.Dbscan.exact(perm.map(pts), eps = 0.5, minPts = 3)
-    val l2 = new Array[Int](pts.length)
+    val l2raw = graft.ml.Dbscan.local(perm.map(ids), perm.map(pts),
+      eps = 0.5, minPts = 3)
+    val l2 = new Array[Long](pts.length)
     perm.zipWithIndex.foreach { case (orig, pos) => l2(orig) = l2raw(pos) }
-    def partition(ls: Array[Int]) =
-      ls.zipWithIndex.filter(_._1 >= 0).groupBy(_._1)
-        .values.map(_.map(_._2).toSet).toSet
-    assert(partition(l1) == partition(l2))
-    assert(l1.zip(l2).forall { case (a, b) => (a == -1) == (b == -1) })
+    assert(l1.sameElements(l2))
+    assert(l1.distinct.count(_ >= 0) == 3)
   }
 
   test("property: more-similar strings share more minhash components") {

@@ -4,8 +4,48 @@ import graft.SparkSpec
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
 
+/** The independent reference the driver label policy is checked
+  * against: textbook DBSCAN by breadth-first expansion, with strict
+  * dist < ε (the library's edge rule). Returns labels aligned to input
+  * order, clusters numbered in discovery order, −1 noise, and the core
+  * mask; a border point goes to the first cluster that reaches it. */
+object DbscanSpec {
+  def bfs(points: Array[Array[Double]], eps: Double,
+          minPts: Int): (Array[Int], Array[Boolean]) = {
+    val n = points.length
+    val labels = Array.fill(n)(-2) // -2 unvisited
+    val core = new Array[Boolean](n)
+    def neighbors(i: Int): Seq[Int] = (0 until n).filter { j =>
+      points(i).zip(points(j)).map { case (x, y) => (x - y) * (x - y) }
+        .sum < eps * eps
+    } // includes i itself
+    var cluster = -1
+    for (i <- 0 until n if labels(i) == -2) {
+      val ni = neighbors(i)
+      if (ni.length < minPts) labels(i) = -1
+      else {
+        cluster += 1
+        labels(i) = cluster
+        core(i) = true
+        val queue = scala.collection.mutable.Queue(ni: _*)
+        while (queue.nonEmpty) {
+          val q = queue.dequeue()
+          if (labels(q) == -1) labels(q) = cluster // border: claim noise
+          if (labels(q) == -2) {
+            labels(q) = cluster
+            val nq = neighbors(q)
+            if (nq.length >= minPts) { core(q) = true; queue.enqueueAll(nq) }
+          }
+        }
+      }
+    }
+    (labels, core)
+  }
+}
+
 class DbscanSpec extends SparkSpec {
   import spark.implicits._
+  import DbscanSpec.bfs
 
   // two well-separated blobs + one far outlier
   private val pts: Seq[(Long, Array[Double])] =
@@ -36,7 +76,7 @@ class DbscanSpec extends SparkSpec {
   }
 
   test("exact DBSCAN finds 2 clusters + 1 noise") {
-    val labels = Dbscan.exact(pts.map(_._2).toArray, eps = 0.5, minPts = 3)
+    val (labels, _) = bfs(pts.map(_._2).toArray, eps = 0.5, minPts = 3)
     assert(labels.count(_ == -1) == 1)
     assert(labels.distinct.count(_ >= 0) == 2)
     assert(labels.last == -1)
@@ -224,15 +264,16 @@ class DbscanSpec extends SparkSpec {
   }
 
   test("local DBSCAN labels equal exact labels (blob and border-heavy fixtures)") {
-    // exact ε-edges: the core points fall into exact()'s clusters, each
-    // named by its min core id; every other point takes its lowest
-    // core-neighbour label, and is noise exactly when exact() says so
+    // exact ε-edges: the core points fall into the BFS reference's
+    // clusters, each named by its min core id; every other point takes
+    // its lowest core-neighbour label, and is noise exactly when the
+    // reference says so
     def check(data: Seq[(Long, Array[Double])], eps: Double,
               minPts: Int): Unit = {
       val ids = data.map(_._1).toArray
       val pts = data.map(_._2).toArray
       val local = Dbscan.local(ids, pts, eps = eps, minPts = minPts)
-      val (exact, core) = Dbscan.exactWithCore(pts, eps, minPts)
+      val (exact, core) = bfs(pts, eps, minPts)
       val cores = ids.indices.filter(core(_))
       def partition(label: Int => Long) =
         cores.groupBy(label).values.map(_.toSet).toSet
@@ -279,6 +320,19 @@ class DbscanSpec extends SparkSpec {
     }
   }
 
+  test("local and exactOnFrame: an isolated point at minPts = 1 is its own cluster") {
+    // |N_ε(p)| counts p itself, so at minPts = 1 every point is a core;
+    // a point with no ε-neighbour forms a singleton cluster (textbook
+    // DBSCAN, daal4py), also next to a real cluster
+    assert(Dbscan.local(Array(7L), Array(Array(0.0, 0.0)), eps = 1.0,
+      minPts = 1).sameElements(Array(7L)))
+    val rows = Seq((7L, Seq(0.0, 0.0)), (3L, Seq(9.0, 9.0)),
+      (5L, Seq(9.1, 9.0)))
+    val got = Dbscan.exactOnFrame(rows.toDF("id", "vec"), "id", "vec",
+      eps = 1.0, minPts = 1).as[(Long, Long)].collect().toMap
+    assert(got == Map(7L -> 7L, 3L -> 3L, 5L -> 3L))
+  }
+
   test("knnCurve equals collectCurve(knnDistanceCurve) on the m3_knn_curve input") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") < 300)
@@ -307,6 +361,14 @@ class DbscanSpec extends SparkSpec {
     val exactDf = Dbscan.exactOnFrame(df, "id", "vec", eps = 0.5, minPts = 3)
       .as[(Long, Long)].collect().toMap
     assert(full == exactDf)
+    // and the reference's partition and noise set
+    val (ref, _) = bfs(pts.map(_._2).toArray, eps = 0.5, minPts = 3)
+    val ids = pts.map(_._1)
+    def partition(label: Long => Long) = ids.filter(label(_) >= 0)
+      .groupBy(label).values.map(_.toSet).toSet
+    val refOf = ids.zip(ref.map(_.toLong)).toMap
+    assert(partition(full) == partition(refOf))
+    assert(ids.filter(full(_) == -1L) == ids.filter(refOf(_) == -1L))
     // sub-sampled: dense blobs (300 pts each) survive; partition matches
     val blobs = (0 until 300).map(i => (i.toLong, Seq(i % 10 * 0.1, 0.0))) ++
       (0 until 300).map(i => (1000L + i, Seq(50.0 + i % 10 * 0.1, 0.0))) ++

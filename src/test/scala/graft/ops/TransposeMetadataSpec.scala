@@ -32,7 +32,7 @@ class TransposeMetadataSpec extends SparkSpec {
   }
 
   test("_metadata.row_index sum is split-invariant; file_name real") {
-    val dir = java.nio.file.Files.createTempDirectory("meta").toString
+    val dir = graft.core.Util.scratchDir("meta").toString
     // two files of known sizes: 100 and 50 rows
     spark.range(100).withColumn("f", lit(0))
       .union(spark.range(50).withColumn("f", lit(1)))

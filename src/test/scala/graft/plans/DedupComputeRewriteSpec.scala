@@ -24,7 +24,7 @@ class DedupComputeRewriteSpec extends SparkSpec {
   // LocalRelation is constant-folded by ConvertToLocalRelation before
   // any rewrite could be observed
   private lazy val docsPath: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_dcr")
+    val p = graft.core.Util.scratchDir("graft_dcr")
       .resolve("docs").toString
     ((0 until 60).map(i => (i.toLong, s"code_${i % 3}")) :+
       (60L, null.asInstanceOf[String])).toDF("id", "code")
@@ -205,7 +205,7 @@ class DedupComputeRewriteSpec extends SparkSpec {
     graft.expr.GraftFunctions.ensureRegistered(spark)
     // NO ANALYZE, NO cbo: the shape the catalog-stats gate could never
     // see — the bounded probe job supplies (n, d, avgLen) instead
-    val probeRoot = java.nio.file.Files.createTempDirectory("graft_dcr_probe")
+    val probeRoot = graft.core.Util.scratchDir("graft_dcr_probe")
     val p = probeRoot.resolve("docs").toString
     try {
     spark.range(10000).selectExpr(
@@ -263,7 +263,7 @@ class DedupComputeRewriteSpec extends SparkSpec {
   }
 
   test("per-row JSON parsing counts as expensive and rewrites") {
-    val p = java.nio.file.Files.createTempDirectory("graft_dcr_json")
+    val p = graft.core.Util.scratchDir("graft_dcr_json")
       .resolve("ev").toString
     (0 until 80).map(i => (i.toLong, s"""{"k": ${i % 4}}"""))
       .toDF("id", "props").write.mode("overwrite").parquet(p)

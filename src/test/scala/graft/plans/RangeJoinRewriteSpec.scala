@@ -623,7 +623,7 @@ class RangeJoinRewriteSpec extends SparkSpec {
   // observe the validity proof (same trick as DedupComputeRewriteSpec)
 
   private def viaParquet(df: DataFrame, name: String): DataFrame = {
-    val p = java.nio.file.Files.createTempDirectory("graft_ovl")
+    val p = graft.core.Util.scratchDir("graft_ovl")
       .resolve(name).toString
     df.write.mode("overwrite").parquet(p)
     spark.read.parquet(p)

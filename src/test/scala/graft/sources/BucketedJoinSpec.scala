@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed x bucketed equi-join: SortMergeJoin, zero Exchange") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bkspec")
+    val tmp = graft.core.Util.scratchDir("graft_bkspec")
     Sources.writeBucketed(
       spark.read.parquet(s"$sfDir/orders.parquet")
         .select("o_orderkey", "o_totalprice"),

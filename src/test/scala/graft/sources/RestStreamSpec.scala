@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import graft.SparkSpec
 import graft.sources.v2.{RestFixture, RestMicroBatchStream, RestOffset, RestRangePartition}
 import org.apache.spark.sql.functions._
@@ -37,7 +36,7 @@ class RestStreamSpec extends SparkSpec {
 
   test("tails the API incrementally across checkpointed restarts") {
     val fx = RestFixture.growable(300L, 50)
-    val base = Files.createTempDirectory("graft_rest_stream")
+    val base = graft.core.Util.scratchDir("graft_rest_stream")
     val ckpt = base.resolve("ckpt").toString
     val out = base.resolve("out").toString
     // first drain: everything available at start (offset lands page-aligned)

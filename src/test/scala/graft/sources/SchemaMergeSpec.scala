@@ -12,7 +12,7 @@ class SchemaMergeSpec extends SparkSpec {
   import spark.implicits._
 
   test("disjoint-subset shards union-merge; missing columns null-fill") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sm")
+    val tmp = graft.core.Util.scratchDir("graft_sm")
     Sources.writeJson(Seq((1L, "a")).toDF("id", "only_a"),
       tmp.resolve("a").toString)
     Sources.writeJson(Seq((2L, 9L)).toDF("id", "only_b"),
@@ -26,7 +26,7 @@ class SchemaMergeSpec extends SparkSpec {
   }
 
   test("subset-of-superset shards (the day-shard vs full-file shape)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sm2")
+    val tmp = graft.core.Util.scratchDir("graft_sm2")
     // narrow shard holds a strict subset of the wide shard's columns
     Sources.writeJson(Seq((1L, "s1")).toDF("id", "src"),
       tmp.resolve("narrow").toString)
@@ -42,7 +42,7 @@ class SchemaMergeSpec extends SparkSpec {
   }
 
   test("explicit merged schema skips inference, same null-filling") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sm3")
+    val tmp = graft.core.Util.scratchDir("graft_sm3")
     Sources.writeJson(Seq((1L, "x")).toDF("id", "a"),
       tmp.resolve("p1").toString)
     Sources.writeJson(Seq((2L, 5L)).toDF("id", "b"),

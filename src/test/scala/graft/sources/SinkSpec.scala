@@ -24,7 +24,7 @@ class SinkSpec extends SparkSpec {
       (6L, "üñïçødé – em—dash"),
       (7L, ""))
     val df = rows.toDF("id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_csv")
+    val out = graft.core.Util.scratchDir("graft_csv")
       .resolve("t").toString
     Sources.writeCsv(df, out)
     val back = Sources.readCsv(spark, out, df.schema)
@@ -41,7 +41,7 @@ class SinkSpec extends SparkSpec {
     import spark.implicits._
     val rows = Seq((1L, "line1\nline2"), (2L, "plain"))
     val df = rows.toDF("id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_csvnl")
+    val out = graft.core.Util.scratchDir("graft_csvnl")
       .resolve("t").toString
     Sources.writeCsv(df, out)
     val multi = Sources.readCsv(spark, out, df.schema, multiLine = true)
@@ -60,7 +60,7 @@ class SinkSpec extends SparkSpec {
   test("writePartitionedParquet: directory layout, pruning, bounded files") {
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select("event_id", "event_type", "value")
-    val out = java.nio.file.Files.createTempDirectory("graft_partwrite")
+    val out = graft.core.Util.scratchDir("graft_partwrite")
     Sources.writePartitionedParquet(events, out.toString,
       Seq("event_type"), maxRecordsPerFile = 100L)
     // layout: one directory per event_type value
@@ -83,11 +83,11 @@ class SinkSpec extends SparkSpec {
 
   test("compactParquet: many small files become few, rows preserved") {
     val events = spark.read.parquet(s"$sfDir/events.parquet")
-    val scattered = java.nio.file.Files.createTempDirectory("graft_scatter")
+    val scattered = graft.core.Util.scratchDir("graft_scatter")
     events.repartition(64).write.mode("overwrite")
       .parquet(scattered.toString)
     assert(listParquet(scattered).size >= 32)
-    val compacted = java.nio.file.Files.createTempDirectory("graft_compact")
+    val compacted = graft.core.Util.scratchDir("graft_compact")
     val n = Sources.compactParquet(spark, scattered.toString,
       compacted.toString)
     val files = listParquet(compacted)

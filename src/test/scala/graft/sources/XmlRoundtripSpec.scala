@@ -16,7 +16,7 @@ class XmlRoundtripSpec extends SparkSpec {
       (3L, "  leading and trailing  kept?no: xml trims attr not elem  "),
       (4L, "]]> cdata-closer & <?pi?>"))
     val df = rows.toDF("id", "txt")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_xmlspec")
+    val tmp = graft.core.Util.scratchDir("graft_xmlspec")
       .resolve("t").toString
     df.write.mode("overwrite").option("rowTag", "r").format("xml").save(tmp)
     val back = spark.read.option("rowTag", "r").schema(df.schema)

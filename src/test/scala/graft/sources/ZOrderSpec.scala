@@ -58,7 +58,7 @@ class ZOrderSpec extends SparkSpec {
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("user_id"), col("value")).na.drop()
     val n = ev.count()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder")
+    val tmp = graft.core.Util.scratchDir("graft_zorder")
     // one-row-group files: pruning granularity == file granularity here
     Sources.writeZOrdered(ev, tmp.resolve("z").toString,
       "user_id", "value", nFiles = 16, bits = 8)

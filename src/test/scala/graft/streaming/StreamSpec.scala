@@ -77,9 +77,9 @@ class StreamSpec extends SparkSpec {
 
   test("file-source json stream ingests the error filter path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_stream_chk").toString
+    val dir = graft.core.Util.scratchDir("graft_stream").toString
+    val out = graft.core.Util.scratchDir("graft_stream_out").toString
+    val chk = graft.core.Util.scratchDir("graft_stream_chk").toString
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "event_id LONG, event_type STRING")
     java.nio.file.Files.writeString(
@@ -250,7 +250,7 @@ class StreamSpec extends SparkSpec {
 
   test("fromKafkaCompatible streams the exact wire schema from files") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kwire")
+    val dir = graft.core.Util.scratchDir("graft_kwire")
     Seq((Array[Byte]('a'), """{"id":1,"ts":"2024-01-01 00:00:00"}"""
         .getBytes("UTF-8"), "t", 0, 0L,
         Timestamp.valueOf("2024-01-01 00:00:01"), 0))
@@ -323,8 +323,8 @@ class StreamSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Double)]
-    val dir = java.nio.file.Files.createTempDirectory("fbu").toString + "/v"
-    val ckpt = java.nio.file.Files.createTempDirectory("fbu_ck").toString
+    val dir = graft.core.Util.scratchDir("fbu").toString + "/v"
+    val ckpt = graft.core.Util.scratchDir("fbu_ck").toString
     val agg = mem.toDF.toDF("user_id", "value")
       .groupBy("user_id")
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))

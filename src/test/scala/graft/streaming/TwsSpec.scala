@@ -127,8 +127,7 @@ class TwsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_twsspec_ckpt").toString
+    val ckpt = graft.core.Util.scratchDir("graft_twsspec_ckpt").toString
     val q = mem.toDF().toDF("k").dropDuplicates("k")
       .writeStream.format("memory").queryName("tws_dedup")
       .outputMode("append").option("checkpointLocation", ckpt).start()
