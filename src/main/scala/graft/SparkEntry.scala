@@ -357,20 +357,28 @@ object SparkEntry {
     *    remaining linear-heavy stage — 259 of its 277 s at the ×100
     *    corpus was the embed stage (m1_m2 probe, exponent ~1.0).
     *  - the cleaned and tokenized frame is cached BEFORE the blank guard
-    *    and filled by one aggregate that reads both n0 (all rows, gating
-    *    the fit cap and the pair's at-fixture branch) and n (rows with
-    *    tokens — exactly the rows sentence2vec embeds), so no other
-    *    count runs.
+    *    and read by ONE bounded probe, `limit(curveCap + 1).collect()`,
+    *    which also fills the token cache the w2v fit reads. When the
+    *    probe holds ≤ curveCap rows it is the whole input: n0 (all rows,
+    *    gating the fit cap and the pair's at-fixture branch) and n (rows
+    *    with tokens — exactly the rows sentence2vec embeds) come from it,
+    *    and no count runs. Past it one aggregate reads both counts.
     *  - at or under `curveCap` embedded docs (the reference's own
     *    scale: 589 distinct of 2.8k messages, which the reference
-    *    clusters in memory with sklearn and daal4py) the sentence2vec
-    *    output is collected ONCE — bounded, since n ≤ curveCap is
-    *    already known — and the kNN curve (Embed.knnCurve), Kneedle ε,
-    *    exact DBSCAN (Dbscan.local) and, in [[flagshipStats]], the
-    *    cluster stats (ClusterStats.local) run as driver arithmetic: the
-    *    route is one token-cache fill, the w2v fit and one collect. The
-    *    curve keeps collectCurve(knnDistanceCurve(…))'s contract, and
-    *    exact ε-edges are the reference's own (daal4py) DBSCAN semantics.
+    *    clusters in memory with sklearn and daal4py) the token rows are
+    *    on the driver (the probe's, or one bounded collect when blank
+    *    rows push n0 past the cap), and the sentence vectors
+    *    (Embed.sentence2vecLocal, bit-identical to the transform), the
+    *    kNN curve (Embed.knnCurve), Kneedle ε, exact DBSCAN
+    *    (Dbscan.local) and, in [[flagshipStats]], the cluster stats
+    *    (ClusterStats.local) run as driver arithmetic: the route is one
+    *    bounded probe and the w2v fit. The curve keeps
+    *    collectCurve(knnDistanceCurve(…))'s contract, and exact ε-edges
+    *    are the reference's own (daal4py) DBSCAN semantics.
+    *  - degenerate inputs: under minPts (5) non-blank docs no point can
+    *    be core, so every doc is noise (−1) without a fit — the label
+    *    DBSCAN gives at any ε — and an all-blank or empty input gives
+    *    an empty labeled frame.
     *  - ε is a GLOBAL statistic (the knee of the sorted kNN-distance
     *    curve), so past `curveCap` points the curve is computed on a
     *    seeded uniform sample: cost O(n) + O(cap²), with the cross join
@@ -397,58 +405,81 @@ object SparkEntry {
 
   /** One flagship fit: n0 (all input rows), the labeled (doc_id, text,
     * label) frame, and on the driver route the same rows as driver
-    * arrays (ids, texts, labels). */
-  private final case class FlagshipFit(n0: Long, labeled: DataFrame,
-      onDriver: Option[(Array[Long], Array[String], Array[Long])])
+    * arrays (ids, texts, labels). On that route the frame is a local
+    * relation built on first use: [[flagshipStats]] reads the arrays
+    * only. */
+  private final class FlagshipFit(val n0: Long, mkLabeled: () => DataFrame,
+      val onDriver: Option[(Array[Long], Array[String], Array[Long])]) {
+    lazy val labeled: DataFrame = mkLabeled()
+  }
 
   private def flagshipFit(docs0: DataFrame, curveCap: Long = 2000L,
                           fitCap: Long = 20000L,
                           epsOverride: Option[Double] = None): FlagshipFit = {
+    val minPts = 5
     val docs = docs0
       .select(col("doc_id"), Clean.cleanMessage(col("text")).as("text"))
-    // cached: the clean+tokenize chain is read by the counts, the w2v
-    // vocab pass, the w2v sentence build and sentence2vec — released
-    // once the labels are on the driver or checkpointed
+    // cached: the clean+tokenize chain is read by the probe, the w2v
+    // vocab pass and the w2v sentence build (and past the cap by the
+    // counts and sentence2vec) — released once the labels are on the
+    // driver or checkpointed
     val tokenized = docs.select(col("doc_id"), col("text"),
         Clean.tokenizeTreebankish(lower(col("text"))).as("tokens"))
       .cache()
     val nonEmpty = size(col("tokens")) > 0
-    val counts = tokenized.agg(count(lit(1)), count(when(nonEmpty, 1))).head()
-    val (n0, n) = (counts.getLong(0), counts.getLong(1))
+    // one bounded probe: at reference scale it holds every row (n0 and n
+    // without a counts job) and fills the token cache the fit reads
+    val probe = tokenized.limit((curveCap + 1).toInt).collect()
+    val (n0, n) =
+      if (probe.length <= curveCap)
+        (probe.length.toLong, probe.count(_.getSeq[String](2).nonEmpty).toLong)
+      else {
+        val counts =
+          tokenized.agg(count(lit(1)), count(when(nonEmpty, 1))).head()
+        (counts.getLong(0), counts.getLong(1))
+      }
     val toks = tokenized.filter(nonEmpty)
-    val fitToks =
+    def fitModel() = graft.ml.Embed.word2vec(
       if (n0 > fitCap)
         toks.sample(withReplacement = false, fitCap.toDouble / n0, seed = 43L)
-      else toks
-    val model = graft.ml.Embed.word2vec(fitToks, "tokens", vectorSize = 16,
-      maxIter = 1)
-    val vecs = graft.ml.Embed.sentence2vec(model, toks, "tokens")
-      .select(col("doc_id"), col("text"),
-        graft.ml.VectorOps.toArray(col("sent_vec")).as("v"))
+      else toks,
+      "tokens", vectorSize = 16, maxIter = 1)
     def knee(curve: Array[Double]): Double =
       graft.ml.Kneedle.epsilonSearch(curve).getOrElse(curve(curve.length / 2))
     if (n <= curveCap) {
-      // driver route: one collect of n ≤ curveCap rows, then curve, ε and
-      // DBSCAN as driver arithmetic; the labeled rows return as a local
-      // relation with the distributed join's schema (label non-null there
-      // too)
-      val rows = vecs.collect()
-      tokenized.unpersist()
+      // driver route: the n ≤ curveCap token rows on the driver, then
+      // sentence vectors, curve, ε and DBSCAN as driver arithmetic; the
+      // labeled rows return as a local relation with the distributed
+      // join's schema (label non-null there too)
+      val rows =
+        if (probe.length <= curveCap) probe.filter(_.getSeq[String](2).nonEmpty)
+        else toks.collect()
       val ids = rows.map(_.getAs[Number](0).longValue)
-      val texts = rows.map(_.getString(1))
-      val pts = rows.map(_.getSeq[Double](2).toArray)
-      val eps = epsOverride.getOrElse(
-        knee(graft.ml.Embed.knnCurve(pts, graft.ml.Embed.defaultK(n))))
-      val labels = graft.ml.Dbscan.local(ids, pts, eps = math.max(eps, 1e-3),
-        minPts = 5)
-      val schema = vecs.select("doc_id", "text").schema
+      val labels =
+        // under minPts rows no point is core, so DBSCAN at any ε marks
+        // every one noise: no fit (w2v needs a non-empty vocabulary) and
+        // no curve (k ≤ 2 over one point has no 2nd-NN column)
+        if (n < minPts) Array.fill(rows.length)(-1L)
+        else {
+          val pts = graft.ml.Embed.sentence2vecLocal(fitModel(),
+            rows.map(_.getSeq[String](2)).toSeq)
+          val eps = epsOverride.getOrElse(
+            knee(graft.ml.Embed.knnCurve(pts, graft.ml.Embed.defaultK(n))))
+          graft.ml.Dbscan.local(ids, pts, eps = math.max(eps, 1e-3),
+            minPts = minPts)
+        }
+      tokenized.unpersist()
+      val schema = tokenized.select("doc_id", "text").schema
         .add("label", org.apache.spark.sql.types.LongType, nullable = false)
-      val labeled = vecs.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows.zip(labels).map { case (r, l) =>
-          org.apache.spark.sql.Row(r.get(0), r.get(1), l) }: _*),
-        schema)
-      return FlagshipFit(n0, labeled, Some((ids, texts, labels)))
+      return new FlagshipFit(n0, () => docs.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows.zip(labels).map { case (r, l) =>
+            org.apache.spark.sql.Row(r.get(0), r.get(1), l) }: _*),
+          schema),
+        Some((ids, rows.map(_.getString(1)), labels)))
     }
+    val vecs = graft.ml.Embed.sentence2vec(fitModel(), toks, "tokens")
+      .select(col("doc_id"), col("text"),
+        graft.ml.VectorOps.toArray(col("sent_vec")).as("v"))
     vecs.cache()
     val eps = epsOverride.getOrElse {
       val curveInput = vecs.sample(withReplacement = false,
@@ -462,7 +493,7 @@ object SparkEntry {
           maxN = (curveCap * 2).toInt)))
     }
     val labels = graft.ml.Dbscan.sampled(vecs.select(col("doc_id"), col("v")),
-      "doc_id", "v", eps = math.max(eps, 1e-3), minPts = 5,
+      "doc_id", "v", eps = math.max(eps, 1e-3), minPts = minPts,
       sampleCap = curveCap.toInt)
     // materialize the result (lineage truncated, storage auto-cleaned by
     // the ContextCleaner once unreferenced), then release the pipeline
@@ -471,7 +502,7 @@ object SparkEntry {
       .localCheckpoint(true)
     vecs.unpersist()
     tokenized.unpersist()
-    FlagshipFit(n0, out, None)
+    new FlagshipFit(n0, () => out, None)
   }
 
   /** The flagship pair (m_flagship_w2v_dbscan / m_flagship_shape) share
@@ -546,11 +577,16 @@ object SparkEntry {
     if (name == "llm_ann_topk") graft.gates.ScaleGates.annGateResetAll()
   }
 
+  /** ScaleGates.nearDupStride of the documents table's row count, read
+    * from its parquet footer (no job). */
+  private def docStride(s: SparkSession, dir: String): Long =
+    graft.gates.ScaleGates.nearDupStride(Tables.rowCount(s, dir, "documents"))
+
   /** Stride-sampled documents for the per-doc winnow dumps (full table
     * through sf1; doc_id % stride past it — see winnowCte scaladoc). */
   private def winnowSampledDocs(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val stride = graft.gates.ScaleGates.nearDupStride(docs.count())
+    val stride = docStride(s, dir)
     if (stride == 1L) docs else docs.filter(col("doc_id") % stride === 0)
   }
 
@@ -1050,8 +1086,9 @@ object SparkEntry {
     "f16_hof_map" -> ((s, dir) => {
       val toks = array_distinct(
         graft.text.Clean.splitWs(lower(col("text"))))
-      // fanOut: per-row map-building HOFs are the whole cost
-      Tables.fanOut(t(s, dir, "documents"), col("doc_id"))
+      // fanOut: per-row map-building HOFs are the whole cost (by range:
+      // the output sorts on doc_id first)
+      Tables.fanOutByRange(t(s, dir, "documents"), col("doc_id"))
         .where(trim(col("text")) =!= "")
         .select(col("doc_id"),
           map_from_arrays(toks, transform(toks, t => length(t)))
@@ -1593,17 +1630,20 @@ object SparkEntry {
         .orderBy("doc_id", "token")),
     "a10_idf" -> ((s, dir) => {
       val toks = docTokens(s, dir)
-      Tfidf.docFreqIdf(toks, "doc_id", "tokens", toks.count())
+      Tfidf.docFreqIdf(toks, "doc_id", "tokens",
+        Tables.rowCount(s, dir, "documents"))
         .orderBy("token")
     }),
     "a11_tfidf" -> ((s, dir) => {
       val toks = docTokens(s, dir)
-      Tfidf.tfidf(toks, "doc_id", "tokens", toks.count())
+      Tfidf.tfidf(toks, "doc_id", "tokens",
+        Tables.rowCount(s, dir, "documents"))
         .orderBy("doc_id", "token")
     }),
     "a12_df_prune" -> ((s, dir) => {
       val toks = docTokens(s, dir)
-      Tfidf.pruneVocab(toks, "doc_id", "tokens", toks.count())
+      Tfidf.pruneVocab(toks, "doc_id", "tokens",
+        Tables.rowCount(s, dir, "documents"))
         .orderBy("token")
     }),
     // similarity columns 1e-6-quantized in BOTH engines (r14): the fuzz
@@ -1671,7 +1711,8 @@ object SparkEntry {
       val est = docs.groupBy("source")
         .agg(hll_sketch_estimate(
           hll_sketch_agg(col("text"), lit(12))).as("n_est"))
-      if (graft.gates.ScaleGates.atFixture(docs)) est.orderBy("source")
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents"))
+        est.orderBy("source")
       else {
         // off-fixture the estimate drifts inside the sketch bound
         // (lgK=12 → rsd ~1.6%; sf1 measured −0.84%) — emit the exact
@@ -1770,7 +1811,7 @@ object SparkEntry {
           expr("theta_sketch_estimate(theta_union(sc, sp))").as("u_either"),
           expr("theta_sketch_estimate(theta_difference(sc, sp))")
             .as("u_click_only"))
-      if (graft.gates.ScaleGates.atFixture(ev,
+      if (graft.gates.ScaleGates.atFixture(s, dir, "events",
           graft.gates.ScaleGates.FixtureEvents)) sketch
       else {
         // off-fixture the retained-sample estimates drift inside the
@@ -2167,7 +2208,8 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val ratios = docs.select(col("doc_id"),
         call_function("graft_deflate_ratio", col("text")).as("deflate_ratio"))
-      if (graft.gates.ScaleGates.atFixture(docs)) ratios.orderBy("doc_id")
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents"))
+        ratios.orderBy("doc_id")
       else {
         // off-fixture: the kernel runs over three FIXED probe strings
         // whose deflated sizes are scale-invariant cross-derived
@@ -2333,7 +2375,7 @@ object SparkEntry {
     // implementation of the same greedy (scores 1e-6-quantized)
     "llm_mmr_rerank" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val n = emb.count()
+      val n = Tables.rowCount(s, dir, "embeddings")
       // the min-id row's vector: identical to vec_id=0 at the fixture
       // (ids start at 0 there), and — unlike a hardcoded id — defined
       // on ANY corpus; the gate's brute-force top-1 uses the same query
@@ -2356,7 +2398,7 @@ object SparkEntry {
     // has no SQL twin) — recall@10 vs the float path spec-gated ≥ 0.9
     "llm_cosine_topk_i8" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val n = emb.count()
+      val n = Tables.rowCount(s, dir, "embeddings")
       if (n == graft.gates.ScaleGates.FixtureRows) {
         val quant = Similarity.quantizeInt8(
           emb, "vec_id", "embedding", withScale = false)
@@ -2434,7 +2476,7 @@ object SparkEntry {
     // random-collision-dominated (spec-gated identical pair set)
     "llm_simhash_neardup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val stride = graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = docStride(s, dir)
       val pairs = Dedup.simHashNearDup(docs, "doc_id", "text",
         maxHamming = 6, bands = 8, combine = 2)
       // past sf1: full banded run, output compared on sampled endpoints
@@ -2446,7 +2488,7 @@ object SparkEntry {
     }),
     "llm_simhash_neardup_sampled" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val stride = 3L * graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = 3L * docStride(s, dir)
       Dedup.simHashNearDup(docs, "doc_id", "text",
           maxHamming = 6, bands = 8, combine = 2)
         .filter(col("id_a") % stride === 0 || col("id_b") % stride === 0)
@@ -2458,7 +2500,7 @@ object SparkEntry {
     // blocked DuckDB recompute stays inside the oracle watchdog
     "llm_near_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val stride = graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = docStride(s, dir)
       val pairs = Dedup.nearDupPairs(docs, "doc_id", "text",
         threshold = 0.3)
       (if (stride == 1L) pairs
@@ -2471,14 +2513,14 @@ object SparkEntry {
     // the gate stays watchdog-safe at any scale
     "llm_near_dedup_sampled" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val stride = 3L * graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = 3L * docStride(s, dir)
       Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.3)
         .filter(col("id_a") % stride === 0 || col("id_b") % stride === 0)
         .orderBy("id_a", "id_b")
     }),
     "llm_ann_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val n = emb.count()
+      val n = Tables.rowCount(s, dir, "embeddings")
       // 12 bands × 3 bits: the recall-gated config — SimilaritySpec
       // measures mean recall@10 = 0.95 vs brute force on the fixture
       def ann(q: Seq[Float]) = Similarity.annTopK(emb, "vec_id",
@@ -2495,7 +2537,7 @@ object SparkEntry {
     }),
     "llm_ivf_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val n = emb.count()
+      val n = Tables.rowCount(s, dir, "embeddings")
       // nprobe=4 of nlist=8: the recall-gated config — SimilaritySpec
       // measures mean recall@10 = 0.92 vs brute force on the fixture
       def qvec(qid: Long) = emb.filter(col("vec_id") === qid)
@@ -2534,7 +2576,7 @@ object SparkEntry {
     // float brute-force path)
     "llm_pq_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val n = emb.count()
+      val n = Tables.rowCount(s, dir, "embeddings")
       if (n == graft.gates.ScaleGates.FixtureRows) {
         val (encoded, books) = Similarity.pqIndex(emb, "vec_id",
           "embedding", m = 8, ksub = 32)
@@ -2572,7 +2614,7 @@ object SparkEntry {
       import s.implicits._
       val docs = t(s, dir, "documents")
       val approxDf = Relational.distinctCountApprox(docs, "text")
-      if (graft.gates.ScaleGates.atFixture(docs)) approxDf
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents")) approxDf
       else {
         // off-fixture: the HLL estimate checked against the exact
         // distinct count (which DuckDB recomputes live) — within 3x the
@@ -2596,7 +2638,7 @@ object SparkEntry {
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
-      val n = emb.count()
+      val n = Tables.rowCount(s, dir, "embeddings")
       // k ∝ n off-fixture (n/k ≈ 1000, the published SemDeDup cell
       // sizing): with FIXED k the per-cell pair work grows n²/k —
       // measured ×9.4 super-linear at ×10→×100 (161 s at sf10) vs
@@ -2764,7 +2806,7 @@ object SparkEntry {
     "llm_quality_classifier" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val n = docs.count()
+      val n = Tables.rowCount(s, dir, "documents")
       val labels = Filters.gopherRules(docs, "doc_id", "text")
         .select(col("doc_id"), col("keep").cast("double").as("label"))
       val toks = docs.select(col("doc_id"),
@@ -2861,8 +2903,9 @@ object SparkEntry {
     // by the stride (31)
     "llm_winnow_fingerprint" -> ((s, dir) =>
       // fanOut here, NOT in winnowSampledDocs: llm_winnow_kr_core shares
-      // the helper and pins a zero-Exchange plan (PlanShapeSpec gate)
-      Tables.fanOut(winnowSampledDocs(s, dir), col("doc_id"))
+      // the helper and pins a zero-Exchange plan (PlanShapeSpec gate);
+      // by range, so the doc_id-led sort adds no second exchange
+      Tables.fanOutByRange(winnowSampledDocs(s, dir), col("doc_id"))
         .select(col("doc_id"),
           explode(call_function("graft_winnow",
             col("text"), lit(8), lit(4))).as("fp"))
@@ -2872,7 +2915,7 @@ object SparkEntry {
     // closed per-position polynomial form (winnowKrSql), plus
     // WinnowSpec's guarantee + brute-force parity
     "llm_winnow_kr_fingerprint" -> ((s, dir) =>
-      Tables.fanOut(winnowSampledDocs(s, dir), col("doc_id"))
+      Tables.fanOutByRange(winnowSampledDocs(s, dir), col("doc_id"))
         .select(col("doc_id"),
         explode(call_function("graft_winnow_kr",
           col("text"), lit(8), lit(4))).as("fp"))
@@ -2884,7 +2927,7 @@ object SparkEntry {
     // live formula (3 × live), so the twin scales like its parent
     "llm_winnow_fingerprint_sampled" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val stride = 3L * graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = 3L * docStride(s, dir)
       docs.filter(col("doc_id") % stride === 0).select(col("doc_id"),
         explode(call_function("graft_winnow",
           col("text"), lit(8), lit(4))).as("fp"))
@@ -2893,7 +2936,7 @@ object SparkEntry {
     // forced-stride-3 gate of the KR dump's sampling arm (same pattern)
     "llm_winnow_kr_fingerprint_sampled" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val stride = 3L * graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = 3L * docStride(s, dir)
       docs.filter(col("doc_id") % stride === 0).select(col("doc_id"),
         explode(call_function("graft_winnow_kr",
           col("text"), lit(8), lit(4))).as("fp"))
@@ -2929,7 +2972,7 @@ object SparkEntry {
       // group ids depend on global connectivity, so past sf1 the
       // operator runs on the induced sampled sub-corpus (both engine
       // and twin) rather than filtering full output — see dupGroupsSql
-      val stride = graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = docStride(s, dir)
       val sampled = if (stride == 1L) docs
         else docs.filter(col("doc_id") % stride === 0)
       val pairs = Dedup.nearDupPairs(sampled, "doc_id", "text",
@@ -2941,7 +2984,7 @@ object SparkEntry {
     // composes with the live formula past sf1, like the pair gate)
     "llm_dup_groups_sampled" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val stride = 3L * graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = 3L * docStride(s, dir)
       val sampled = docs.filter(col("doc_id") % stride === 0)
       val pairs = Dedup.nearDupPairs(sampled, "doc_id", "text",
         threshold = 0.3)
@@ -3057,7 +3100,7 @@ object SparkEntry {
       val approx = scored.groupBy("source")
         .agg(approx_percentile(col("q"),
           array(lit(0.25), lit(0.5), lit(0.75)), lit(10000)).as("qs"))
-      if (graft.gates.ScaleGates.atFixture(docs))
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents"))
         approx.select(col("source"),
             round(element_at(col("qs"), 1), 6).as("q25"),
             round(element_at(col("qs"), 2), 6).as("q50"),
@@ -3239,7 +3282,7 @@ object SparkEntry {
     "mm_image_phash" -> ((s, dir) => {
       val base = Multimodal.imagePhash(Multimodal.decodeImage(
         SynthAssets.images(mmDocs(s, dir), "doc_id")))
-      if (graft.gates.ScaleGates.atFixture(t(s, dir, "documents")))
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents"))
         base.select(col("asset_id"), col("meta.mime").as("mime"),
             col("meta.width").as("width"), col("meta.height").as("height"),
             col("phash"))
@@ -3264,7 +3307,7 @@ object SparkEntry {
     "mm_image_resize" -> ((s, dir) => {
       val base = Multimodal.decodeImage(Multimodal.resizeImage(
         SynthAssets.images(mmDocs(s, dir), "doc_id"), 16, 12))
-      if (graft.gates.ScaleGates.atFixture(t(s, dir, "documents")))
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents"))
         base.select(col("asset_id"), col("meta.mime").as("mime"),
             col("meta.width").as("width"), col("meta.height").as("height"),
             length(col("payload")).as("png_bytes"))
@@ -3287,7 +3330,7 @@ object SparkEntry {
     "mm_audio_features" -> ((s, dir) => {
       val base = Multimodal.audioFeatures(Multimodal.decodeAudio(
         SynthAssets.audios(mmDocs(s, dir), "doc_id")))
-      if (graft.gates.ScaleGates.atFixture(t(s, dir, "documents")))
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents"))
         base.select(col("asset_id"), col("meta.mime").as("mime"),
             col("meta.duration_ms").as("duration_ms"),
             size(col("features")).as("dim"),
@@ -3388,7 +3431,7 @@ object SparkEntry {
       import s.implicits._
       val orders = t(s, dir, "orders")
       val approx = Relational.quantiles(orders, "o_totalprice")
-      if (graft.gates.ScaleGates.atFixture(orders,
+      if (graft.gates.ScaleGates.atFixture(s, dir, "orders",
           graft.gates.ScaleGates.FixtureOrders)) approx
       else {
         // off-fixture: per-percentile rank-error check vs the exact
@@ -3437,8 +3480,9 @@ object SparkEntry {
     // tokens US-joined (array cells don't hash in the comparator)
     "f7_tokenize_full" -> ((s, dir) =>
       // fanOut: the ~30-rule regex cascade per row is the whole cost —
-      // single-task on the unsplittable fixture file otherwise
-      Tables.fanOut(t(s, dir, "documents"), col("doc_id"))
+      // single-task on the unsplittable fixture file otherwise; by range,
+      // so the doc_id sort reuses the exchange
+      Tables.fanOutByRange(t(s, dir, "documents"), col("doc_id"))
         .select(col("doc_id"),
           array_join(Clean.tokenizeTreebankFull(col("text")), "")
             .as("tokens"))
@@ -3457,7 +3501,8 @@ object SparkEntry {
       val pairs = a.join(b, "doc_id")
         .select(col("doc_id"),
           Clean.fuzzRatioExact(col("text"), col("text_b")).as("fuzz"))
-      if (graft.gates.ScaleGates.atFixture(d)) pairs.orderBy("doc_id")
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents"))
+        pairs.orderBy("doc_id")
       else {
         // off-fixture (difflib parity has no SQL twin): the pair count
         // is cross-engine (the twin mirrors the adjacent-id join); the
@@ -3468,7 +3513,7 @@ object SparkEntry {
         val stats = pairs.agg(count(lit(1)).as("n"),
           sum(when(col("fuzz") >= 0 && col("fuzz") <= 100, 0L)
             .otherwise(1L)).as("oob")).head()
-        val nDocs = d.count()
+        val nDocs = Tables.rowCount(s, dir, "documents")
         val stride = math.max(1L, nDocs / 200)
         val selfOk = d.filter(col("doc_id") % stride === 0)
           .select(Clean.fuzzRatioExact(col("text"), col("text")).as("r"))
@@ -3487,7 +3532,7 @@ object SparkEntry {
       val approx = graft.ml.Embed.knnDistanceCurveApprox(
         sample, "vec_id", "embedding", k = 17)
         .withColumn("curve", round(col("curve") * 1e6) / 1e6)
-      if (graft.gates.ScaleGates.atFixture(t(s, dir, "embeddings"))) approx
+      if (graft.gates.ScaleGates.atFixture(s, dir, "embeddings")) approx
       else {
         // off-fixture: per-point tolerance vs the EXACT curve (the
         // m3_knn_curve sibling's computation on the same sample) — the
@@ -3544,7 +3589,8 @@ object SparkEntry {
         graft.ml.VectorOps.toMlVector(col("embedding")).as("features"))
       val labels = graft.ml.Dbscan.distributed(emb, "vec_id", "features",
         eps = 1.2, minPts = 5)
-      if (graft.gates.ScaleGates.atFixture(all)) labels.orderBy("vec_id")
+      if (graft.gates.ScaleGates.atFixture(s, dir, "embeddings"))
+        labels.orderBy("vec_id")
       // off-fixture: ARI vs the exact driver DBSCAN on the same sample
       else graft.gates.ScaleGates.dbscanAriGate(
         raw.select("vec_id", "embedding"), "vec_id", "embedding",
@@ -3566,7 +3612,7 @@ object SparkEntry {
       val clustered = graft.ml.TextPipeline.clusterDocuments(
         pinnedDocs(s, dir), "text", k = 5, nInit = 1)
       val sizes = clustered.groupBy("cluster").agg(count(lit(1)).as("n_docs"))
-      if (graft.gates.ScaleGates.atFixture(t(s, dir, "documents")))
+      if (graft.gates.ScaleGates.atFixture(s, dir, "documents"))
         sizes.withColumn("size_rank", row_number().over(
             org.apache.spark.sql.expressions.Window.orderBy(desc("n_docs"))))
           .select(col("size_rank").cast("long").as("size_rank"),
@@ -3816,7 +3862,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       // past sf1: the full streaming pass still runs; only the sampled
       // docs' kept-status is emitted (matching the sampled twin)
-      val stride = graft.gates.ScaleGates.nearDupStride(docs.count())
+      val stride = docStride(s, dir)
       val kept = docs.select(col("doc_id"))
         .join(hits.select(col("id").as("doc_id")), Seq("doc_id"),
           "left_anti")

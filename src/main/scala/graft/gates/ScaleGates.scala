@@ -41,8 +41,12 @@ object ScaleGates {
   /** Events-table fixture count at sf0.01 (a23_theta_sets). */
   val FixtureEvents = 10000L
 
-  def atFixture(df: DataFrame, expected: Long = FixtureRows): Boolean =
-    df.count() == expected
+  /** True when table `name` under `dir` holds `expected` rows — the
+    * live count, read from its parquet footer
+    * (graft.core.Tables.rowCount: no Spark job). */
+  def atFixture(spark: SparkSession, dir: String, name: String,
+                expected: Long = FixtureRows): Boolean =
+    graft.core.Tables.rowCount(spark, dir, name) == expected
 
   /** 1.0 when the measured metric clears `floor`, else the measurement
     * itself (1e-4-rounded so the mismatch is readable in the compare

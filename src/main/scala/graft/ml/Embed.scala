@@ -33,6 +33,36 @@ object Embed {
                    tokensCol: String): DataFrame =
     model.transform(df.filter(size(col(tokensCol)) > 0))
 
+  /** Driver form of [[sentence2vec]] for token lists already on the
+    * driver (the flagship's reference-scale route): no job, and the
+    * same vectors bit for bit as `toArray` of Word2VecModel.transform
+    * (Spark 4.1.2's UDF): each in-vocabulary token's vector is summed
+    * as doubles in token order, OOV tokens skipped, then the sum is
+    * multiplied by 1.0 / tokens.size — OOV tokens count in the size.
+    * An empty list gives the zero vector. The word vectors come from
+    * `model.getVectors`, a local relation, so reading them runs no job
+    * either. */
+  def sentence2vecLocal(model: Word2VecModel,
+                        tokens: Seq[Seq[String]]): Array[Array[Double]] = {
+    val d = model.getVectorSize
+    val vocab = model.getVectors.collect().iterator.map(r =>
+      r.getString(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray)
+      .toMap
+    tokens.iterator.map { sentence =>
+      val sum = new Array[Double](d)
+      sentence.foreach(w => vocab.get(w).foreach { v =>
+        var i = 0
+        while (i < d) { sum(i) += v(i); i += 1 }
+      })
+      if (sentence.nonEmpty) {
+        val scale = 1.0 / sentence.size
+        var i = 0
+        while (i < d) { sum(i) *= scale; i += 1 }
+      }
+      sum
+    }.toArray
+  }
+
   /** The reference's k convention for the distance curve:
     * k = round(sqrt(n)) (word2vec_dbscan_approach.ipynb:28782). */
   def defaultK(n: Long): Int = math.max(2, math.round(math.sqrt(n.toDouble)).toInt)

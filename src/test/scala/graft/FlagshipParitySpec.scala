@@ -171,18 +171,36 @@ class FlagshipParitySpec extends SparkSpec {
     vecs.unpersist()
   }
 
-  test("job budget: one m_flagship_shape body on sf0.01 runs at most 12 " +
+  test("degenerate inputs: no rows or all blank give an empty labeled " +
+    "frame; under minPts non-blank docs every doc is noise") {
+    def labels(texts: Seq[String]): Seq[(Long, Long)] =
+      SparkEntry.flagshipLabels(texts.zipWithIndex
+          .map { case (txt, id) => (id.toLong, txt) }.toDF("doc_id", "text"))
+        .select(col("doc_id"), col("label")).as[(Long, Long)].collect()
+        .sortBy(_._1).toSeq
+    assert(labels(Seq.empty).isEmpty)
+    assert(labels(Seq("   ", "", "  \t ")).isEmpty)
+    assert(labels(Seq("transfer failed at line 7")) == Seq((0L, -1L)))
+    // 4 non-blank docs < minPts = 5; the blank one is guarded out
+    assert(labels(Seq("transfer failed at line 7", "   ",
+        "transfer failed at line 7", "checksum mismatch on replica",
+        "disk quota exceeded")) ==
+      Seq((0L, -1L), (2L, -1L), (3L, -1L), (4L, -1L)))
+  }
+
+  test("job budget: one m_flagship_shape body on sf0.01 runs at most 6 " +
     "Spark jobs") {
-    // the reference-scale route is one token-cache fill, the w2v fit and
-    // one collect; the curve, ε, DBSCAN, cluster stats and the
-    // at-fixture gate are driver arithmetic over that collect
+    // the reference-scale route is one bounded probe (which also fills
+    // the token cache) and the w2v fit; the sentence vectors, curve, ε,
+    // DBSCAN, cluster stats and the at-fixture gate are driver
+    // arithmetic over the probe's rows
     val dir = sfDir.stripSuffix("sf0.001") + "sf0.01"
     SparkEntry.benchReset("m_flagship_shape")
     val (df, _, jobs) = graft.core.Util.jobsIn(spark, "m_flagship_shape") {
       SparkEntry.queries("m_flagship_shape")(spark, dir)
     }
     info(s"m_flagship_shape body on sf0.01: $jobs jobs")
-    assert(jobs <= 12, s"m_flagship_shape body ran $jobs jobs (budget 12)")
+    assert(jobs <= 6, s"m_flagship_shape body ran $jobs jobs (budget 6)")
     assert(df.collect().length >= 2)
   }
 }

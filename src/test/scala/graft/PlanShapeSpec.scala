@@ -256,6 +256,18 @@ class PlanShapeSpec extends SparkSpec {
       "no join operator anywhere" -> noJoin)
   }
 
+  // the doc_id-sorted fan-out sites: the range fan-out is the sort's own
+  // exchange, so the per-row kernel runs in one map stage (a hash
+  // fan-out under the sort made two exchanges, each running it)
+  Seq("llm_winnow_fingerprint", "llm_winnow_kr_fingerprint",
+      "f7_tokenize_full", "f16_hof_map").foreach { name =>
+    test(s"$name: one Exchange, range-partitioned on doc_id, at sf0.001") {
+      checks(PlanShape(SparkEntry.queries(name)(spark, sfDir)))(
+        "exactly one Exchange" -> (_.of[Exchange].size == 1),
+        "range-partitioned on doc_id" -> (_.rangeShuffles("doc_id").size == 1))
+    }
+  }
+
   test("llm_winnow_kr_core: rolling-hash kernel, zero shuffle") {
     audit(q("llm_winnow_kr_core"))(
       "native graft_winnow_kr in plan" ->

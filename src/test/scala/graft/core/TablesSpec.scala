@@ -6,7 +6,8 @@ import graft.SparkSpec
 
 /** [[Tables.table]]'s parquet schema memo: a repeat read infers nothing
   * (no job), and a file rewritten at the same path is read with its new
-  * schema. */
+  * schema. [[Tables.rowCount]]: a footer count equal to `count()`, with
+  * no job, no memo and a `count()` fallback for directories. */
 class TablesSpec extends SparkSpec {
 
   test("table: a second read runs 0 jobs; a rewrite at the same path " +
@@ -32,6 +33,40 @@ class TablesSpec extends SparkSpec {
       assert(rewritten.schema == region.schema)
       assert(rewritten.schema != cold.schema)
       assert(rewritten.count() == region.count())
+    } finally Util.deleteRecursively(dir)
+  }
+
+  test("rowCount equals count() on all 10 tables at sf0.001 and sf0.01, " +
+    "and runs no job") {
+    for (sf <- Seq("sf0.001", "sf0.01"); name <- Tables.names) {
+      val dir = sfDir.stripSuffix("sf0.001") + sf
+      val (n, _, jobs) = Util.jobsIn(spark, "rowCount") {
+        Tables.rowCount(spark, dir, name)
+      }
+      assert(jobs == 0, s"$sf/$name: rowCount ran $jobs jobs")
+      assert(n == Tables.table(spark, dir, name).count(), s"$sf/$name")
+    }
+  }
+
+  test("rowCount falls back to count() on a Spark-written directory, and " +
+    "counts a file rewritten in place afresh") {
+    val dir = Files.createTempDirectory("graft_rowcount")
+    try {
+      spark.range(37).toDF("doc_id").repartition(3)
+        .write.parquet(dir.resolve("parts.parquet").toString)
+      val (parts, _, jobs) = Util.jobsIn(spark, "rowCountDir") {
+        Tables.rowCount(spark, dir.toString, "parts")
+      }
+      assert(parts == 37L)
+      assert(jobs >= 1, "a directory is counted by a job")
+      val path = dir.resolve("documents.parquet")
+      Files.copy(Paths.get(s"$sfDir/documents.parquet"), path)
+      assert(Tables.rowCount(spark, dir.toString, "documents") ==
+        Tables.rowCount(spark, sfDir, "documents"))
+      Files.copy(Paths.get(s"$sfDir/region.parquet"), path,
+        StandardCopyOption.REPLACE_EXISTING)
+      assert(Tables.rowCount(spark, dir.toString, "documents") ==
+        spark.read.parquet(s"$sfDir/region.parquet").count())
     } finally Util.deleteRecursively(dir)
   }
 }

@@ -22,10 +22,9 @@ class ScaleGatesSpec extends SparkSpec {
   }
 
   test("atFixture keys on the live row count") {
-    val df = spark.range(500).toDF("id")
-    assert(ScaleGates.atFixture(df))
-    assert(!ScaleGates.atFixture(df.limit(499)))
-    assert(ScaleGates.atFixture(df.limit(100), expected = 100L))
+    assert(ScaleGates.atFixture(spark, sfDir, "documents")) // 500 rows
+    assert(!ScaleGates.atFixture(spark, sfDir, "nation")) // 25 rows
+    assert(ScaleGates.atFixture(spark, sfDir, "nation", expected = 25L))
   }
 
   test("annRecallGateBatched: perfect recall on a corpus the LSH config " +

@@ -89,6 +89,42 @@ class PipelineSpec extends SparkSpec {
     assert(curve.map(_._2).sliding(2).forall(p => p.head <= p.last + 1e-12))
   }
 
+  test("sentence2vecLocal is bit-identical to sentence2vec (the transform), " +
+    "OOV tokens included, and runs no job") {
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val dir = sfDir.stripSuffix("sf0.001") + sf
+      val toks = spark.read.parquet(s"$dir/documents.parquet")
+        .select($"doc_id", graft.text.Clean.tokenizeTreebankish(lower(
+          graft.text.Clean.cleanMessage($"text"))).as("tokens"))
+        .filter(size($"tokens") > 0)
+      // full vocabulary, and a fit on the first doc alone: the rest of
+      // the corpus then carries tokens the model has never seen
+      for ((fitOn, what) <- Seq((toks, "full fit"),
+          (toks.orderBy("doc_id").limit(1), "subset fit"))) {
+        val model = Embed.word2vec(fitOn, "tokens", vectorSize = 16,
+          maxIter = 1)
+        val want = Embed.sentence2vec(model, toks, "tokens")
+          .select($"tokens", VectorOps.toArray($"sent_vec").as("v"))
+          .collect()
+        val vocab = model.getVectors.collect().map(_.getString(0)).toSet
+        val sentences = want.map(_.getSeq[String](0)).toSeq
+        if (what == "subset fit")
+          assert(sentences.exists(_.exists(t => !vocab.contains(t))),
+            s"$sf: the subset fit must leave OOV tokens")
+        val (got, _, jobs) = graft.core.Util.jobsIn(spark, "s2vLocal") {
+          Embed.sentence2vecLocal(model, sentences)
+        }
+        assert(jobs == 0, s"$sf $what: sentence2vecLocal ran $jobs jobs")
+        def bits(v: Seq[Double]) = v.map(java.lang.Double.doubleToRawLongBits)
+        assert(got.length == want.length)
+        want.indices.foreach { i =>
+          assert(bits(got(i).toSeq) == bits(want(i).getSeq[Double](1)),
+            s"$sf $what: row $i differs")
+        }
+      }
+    }
+  }
+
   test("knnDistanceCurve refuses to collect past maxN (driver-matrix guard)") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(30)
     val e = intercept[IllegalArgumentException] {
