@@ -241,30 +241,25 @@ object SparkEntry {
     * rewrite actually FIRED inside the registry query — the hash gate
     * alone can't tell a fired rewrite from a declined one (both return
     * the same rows; that equality is the rewrite's contract). The
-    * catalog fixture is built + ANALYZEd ONCE per session (the
-    * flagshipStats memo precedent): the fixture is the query's INPUT,
+    * catalog fixture is built + ANALYZEd ONCE per session (on
+    * SessionMemo, untagged): the fixture is the query's INPUT,
     * like a parquet dir, so a timed run must not pay the write —
     * min-of-2 then stamps the projection itself. Caller scopes cbo
     * on. The reference is LONG ("w " × 500): kernel cost is per
     * char-PAIR, so a short ref would (correctly) decline the gate. */
-  private val j3cBuilt = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
   def j3cAutoProjection(s: SparkSession): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(s)
-    j3cBuilt.synchronized {
-      if (!Option(j3cBuilt.get(s)).exists(_.booleanValue)) {
-        // a FRESH session's catalog doesn't know the table, but a
-        // previous JVM's warehouse dir survives — saveAsTable then
-        // fails with LOCATION_ALREADY_EXISTS. Drop what the catalog
-        // knows, then clear any orphaned location.
-        graft.core.Util.dropTableAndLocation(s, "graft_j3c_docs")
-        s.range(10000).selectExpr("id",
-          "repeat('w ', 500 + 25 * cast(id % 10 AS int)) AS text")
-          .write.mode("overwrite").saveAsTable("graft_j3c_docs")
-        s.sql("ANALYZE TABLE graft_j3c_docs COMPUTE STATISTICS " +
-          "FOR COLUMNS text")
-        j3cBuilt.put(s, java.lang.Boolean.TRUE)
-      }
+    graft.core.SessionMemo[Unit](s, "j3cAutoProjection") {
+      // a FRESH session's catalog doesn't know the table, but a
+      // previous JVM's warehouse dir survives — saveAsTable then
+      // fails with LOCATION_ALREADY_EXISTS. Drop what the catalog
+      // knows, then clear any orphaned location.
+      graft.core.Util.dropTableAndLocation(s, "graft_j3c_docs")
+      s.range(10000).selectExpr("id",
+        "repeat('w ', 500 + 25 * cast(id % 10 AS int)) AS text")
+        .write.mode("overwrite").saveAsTable("graft_j3c_docs")
+      s.sql("ANALYZE TABLE graft_j3c_docs COMPUTE STATISTICS " +
+        "FOR COLUMNS text")
     }
     s.table("graft_j3c_docs")
       .select(col("id"), call_function("graft_seq_ratio",
@@ -512,30 +507,19 @@ object SparkEntry {
     * pair's at-fixture gate: pinnedDocs has one row per document) and
     * the stats frame — tiny (one row per cluster), a local relation on
     * the driver route and localCheckpoint'ed past it, so it holds no
-    * lineage or executor storage, only the few materialized rows. Keyed
-    * by the SESSION OBJECT in a WeakHashMap (a checkpointed frame is
-    * session-bound; the earlier identity-hash string key could collide
-    * across sessions and pinned dead sessions for the JVM lifetime),
-    * dir inside. */
-  private val flagshipStatsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, (Long, DataFrame)]]())
+    * lineage or executor storage, only the few materialized rows;
+    * `m_flagship_shape` pays for the fit. */
   private def flagshipStats(s: SparkSession, dir: String): (Long, DataFrame) =
-    flagshipStatsCache.synchronized {
-      val perDir = Option(flagshipStatsCache.get(s)).getOrElse {
-        val m = scala.collection.mutable.Map.empty[String, (Long, DataFrame)]
-        flagshipStatsCache.put(s, m); m
+    graft.core.SessionMemo(s, ("flagshipStats", dir),
+        resetBy = "m_flagship_shape") {
+      val fit = flagshipFit(pinnedDocs(s, dir))
+      val st = fit.onDriver match {
+        case Some((ids, texts, labels)) =>
+          ClusterStats.local(s, ids, texts, labels)
+        case None => ClusterStats.stats(fit.labeled, "label", "text",
+          "doc_id").localCheckpoint(true)
       }
-      perDir.getOrElseUpdate(dir, {
-        val fit = flagshipFit(pinnedDocs(s, dir))
-        val st = fit.onDriver match {
-          case Some((ids, texts, labels)) =>
-            ClusterStats.local(s, ids, texts, labels)
-          case None => ClusterStats.stats(fit.labeled, "label", "text",
-            "doc_id").localCheckpoint(true)
-        }
-        (fit.n0, st)
-      })
+      (fit.n0, st)
     }
 
   /** Off-fixture flagship gate: (total docs labeled, shape flag). The
@@ -556,26 +540,12 @@ object SparkEntry {
     (total, if (ok) 1.0 else 0.0)
   }
 
-  /** Bench hook, called before every TIMED run: the flagship pair share
-    * one fit via [[flagshipStatsCache]], so without a reset min-of-2
-    * would stamp `m_flagship_shape`'s second run — a memo read, ~ms —
-    * as the query's cost (min-of-2 keeps the faster run) and erase the
-    * w2v→kneedle→DBSCAN pipeline from the record. Dropping the memo
-    * before each run of the pair's FIT-PAYER (`m_flagship_shape`, which
-    * sorts and therefore runs first in both Verify and Bench) keeps its
-    * stamped time the real pipeline cost, while `m_flagship_w2v_dbscan`
-    * stamps the memo read — the suite total records fit-once + read,
-    * exactly what one suite pass pays. */
-  def benchReset(name: String): Unit = {
-    if (name == "m_flagship_shape") flagshipStatsCache.clear()
-    // the ANN gate family shares one memoized exact top-k table
-    // (ScaleGates.annCtx); resetting before each timed run of the
-    // alphabetically-FIRST member (which therefore runs first in both
-    // Verify and Bench) makes it the payer: its stamp is the real
-    // one-pass exact cost, the other four stamp memo reads — the suite
-    // total records exactly what one sweep pays
-    if (name == "llm_ann_topk") graft.gates.ScaleGates.annGateResetAll()
-  }
+  /** Bench hook, called before every TIMED run of `name`: drops the
+    * shared memos that query pays for (`SessionMemo.reset(name)`), so
+    * its stamp is the real build cost while the family members that run
+    * after it stamp memo reads — the suite total records exactly what one
+    * pass pays. A query that pays for nothing drops nothing. */
+  def benchReset(name: String): Unit = graft.core.SessionMemo.reset(name)
 
   /** ScaleGates.nearDupStride of the documents table's row count, read
     * from its parquet footer (no job). */

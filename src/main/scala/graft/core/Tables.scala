@@ -38,63 +38,53 @@ object Tables {
     else df
   }
 
-  /** Inferred parquet schemas per session, keyed on (path, mtime,
-    * length, nanosAsLong). `spark.read.parquet(path)` runs a
-    * schema-inference job (~30-40 ms) on every call — 10 per eda-stream
-    * pass — while `.schema(memo)` reads the same relation without one.
-    * The key changes when the file is rewritten or the conf that shapes
-    * the inferred ts type flips; only plain files are memoized (a
-    * directory's own mtime and length miss in-place rewrites of its
-    * parts). Held on the session OBJECT in a WeakHashMap (the
-    * [[registeredFor]] precedent), so dead sessions don't pin.
-    * [[readParquet]] is also where SparkEntry's fixture streams take
-    * their raw schema from. */
-  private val schemaMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      Map[(String, Long, Long, String), StructType]]())
-
+  /** Reads with the session's memoized inferred schema, keyed on
+    * (path, mtime, length, nanosAsLong). `spark.read.parquet(path)` runs
+    * a schema-inference job (~30-40 ms) on every call — 10 per
+    * eda-stream pass — while `.schema(memo)` reads the same relation
+    * without one. The key changes when the file is rewritten or the conf
+    * that shapes the inferred ts type flips; only plain files are
+    * memoized (a directory's own mtime and length miss in-place rewrites
+    * of its parts). [[readParquet]] is also where SparkEntry's fixture
+    * streams take their raw schema from. */
   private[graft] def readParquet(spark: SparkSession, path: String)
       : DataFrame = {
     val key = try {
       val p = new org.apache.hadoop.fs.Path(path)
       val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getFileStatus(p)
-      if (st.isFile) Some((path, st.getModificationTime, st.getLen,
+      if (st.isFile) Some(("schema", path, st.getModificationTime, st.getLen,
         spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")))
       else None
     } catch { case _: Exception => None }
-    key.flatMap(k => Option(schemaMemo.get(spark)).flatMap(_.get(k))) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        key.foreach(k => schemaMemo.synchronized {
-          val memo = Option(schemaMemo.get(spark)).getOrElse(Map.empty)
-          schemaMemo.put(spark, memo + (k -> df.schema))
-        })
-        df
+    key match {
+      case Some(k) => spark.read.schema(
+        SessionMemo(spark, k)(spark.read.parquet(path).schema)).parquet(path)
+      case None => spark.read.parquet(path)
     }
   }
 
   /** Register all tables as temp views (for spark.sql entry points).
-    * Memoized per (session, dir) — r20: 16 query bodies call this, and
-    * each un-memoized call re-resolved all 10 parquet footers and
-    * re-bound 10 views (~0.3-0.5 s per sql_* query at sf0.1, measured
-    * as the bulk of those queries' wall). A view is a lazy name→plan
-    * binding, not data: every query still computes from parquet. Keyed
-    * on the session OBJECT in a WeakHashMap (the flagshipStatsCache
-    * precedent) with the dir as the value, so a dir switch re-registers
-    * and dead sessions don't pin. `force` re-binds unconditionally —
+    * Memoized per session as the bound dir — r20: 16 query bodies call
+    * this, and each un-memoized call re-resolved all 10 parquet footers
+    * and re-bound 10 views (~0.3-0.5 s per sql_* query at sf0.1,
+    * measured as the bulk of those queries' wall). A view is a lazy
+    * name→plan binding, not data: every query still computes from
+    * parquet. A dir switch or a dropped view (a session-catalog lookup:
+    * no job, no listing) re-binds; `force` re-binds unconditionally —
     * for callers that shadowed a view and need the fixture back. */
-  private val registeredFor = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
   def registerAll(spark: SparkSession, sfDir: String,
-                  force: Boolean = false): Unit =
-    registeredFor.synchronized {
-      if (force || registeredFor.get(spark) != sfDir) {
+                  force: Boolean = false): Unit = {
+    val bound = SessionMemo(spark, "registerAll")(
+      new java.util.concurrent.atomic.AtomicReference[String]())
+    bound.synchronized {
+      if (force || bound.get != sfDir ||
+          names.exists(spark.sessionState.catalog.getRawTempView(_).isEmpty)) {
         names.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
-        registeredFor.put(spark, sfDir)
+        bound.set(sfDir)
       }
     }
+  }
 
   /** Exact row count of a bare table without a Spark job: a plain
     * parquet file answers from its footer (the sum of its row groups'

@@ -158,8 +158,10 @@ object Curation {
     * document gets the id of its duplicate CLUSTER (connected component,
     * labeled by the component's min doc id — so keep_id = group_id keeps
     * exactly one doc per group) and the group size. Docs in no pair are
-    * their own singleton group. Pair ids must come from `allIds` (every
-    * caller builds pairs as a self-join of the same id set).
+    * their own singleton group. Pair ids should come from `allIds` (every
+    * caller builds pairs as a self-join of the same id set); an id that
+    * does not still joins its endpoints' component, but gets no row and
+    * is not counted in `group_size`, on both CC routes.
     *
     * Pairs come from any candidate generator — exact Jaccard at test
     * scale, [[Dedup.nearDupPairs]] (banded LSH) at corpus scale.
@@ -191,6 +193,7 @@ object Curation {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val edgeSample =
       edgePairs.as[(Long, Long)].limit(smallGraphEdgeCap + 1).collect()
+    val docIds = allIds.select(col(idCol).cast("long").as("doc_id"))
     val cc =
       if (edgeSample.length <= smallGraphEdgeCap) {
         edgePairs.unpersist(blocking = false)
@@ -199,17 +202,18 @@ object Curation {
         as.indices.foreach(e => uf.union(as(e), bs(e)))
         val labelDf = spark.createDataset(ids.indices.map(i =>
           (ids(i), ids(uf.find(i))))).toDF("doc_id", "_gx_gid")
-        allIds.select(col(idCol).cast("long").as("doc_id"))
-          .join(broadcast(labelDf), Seq("doc_id"), "left")
+        docIds.join(broadcast(labelDf), Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("_gx_gid"), col("doc_id")).as("group_id"))
       } else {
         val edgeRdd =
           edgePairs.as[(Long, Long)].rdd.map { case (a, b) => Edge(a, b, ()) }
-        val vertRdd = allIds.select(col(idCol).cast("long")).as[Long].rdd
-          .map(id => (id, ()))
+        val vertRdd = docIds.as[Long].rdd.map(id => (id, ()))
+        // an endpoint outside allIds is a vertex too and may label its
+        // component, but only allIds' rows are output (the driver rule)
         val r = Graph(vertRdd, edgeRdd).connectedComponents()
           .vertices.toDF("doc_id", "group_id") // group_id = min component id
+          .join(docIds, Seq("doc_id"), "left_semi")
         edgePairs.unpersist(blocking = false)
         r
       }

@@ -95,7 +95,7 @@ object ScaleGates {
     *  - `corpus`: the CACHED gate corpus (capped seeded sample past
     *    [[AnnGateCap]], the full frame below it). Callers build their
     *    approximate index over THIS frame and must not unpersist it —
-    *    the memo owns it for the session ([[annGateReset]] drops it).
+    *    the memo owns it for the session (a reset [[close]]s it).
     *  - `exact`: ordered exact cosine top-k per query id over the gate
     *    corpus, computed in ONE corpus pass for all `nq` queries (a
     *    10-row broadcast join + per-query top-k window, not 10 scans).
@@ -103,7 +103,8 @@ object ScaleGates {
   final case class AnnGateCtx(n: Long, gateN: Long, corpus: DataFrame,
                               qids: Seq[Long],
                               qvec: Map[Long, Seq[Float]],
-                              exact: Map[Long, Seq[Long]]) {
+                              exact: Map[Long, Seq[Long]])
+      extends AutoCloseable {
     /** The (q_id, q_vec) frame for batched approx paths. */
     def queryFrame(idCol: String, vecCol: String): DataFrame = {
       val spark = corpus.sparkSession
@@ -111,54 +112,19 @@ object ScaleGates {
       qids.map(q => (q, qvec(q))).toDF(idCol, vecCol)
         .withColumn(vecCol, col(vecCol).cast("array<float>"))
     }
-  }
 
-  private val annCtxCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, Long, Int, Int), AnnGateCtx]]())
-
-  /** Drops the memoized exact table (and its cached corpus) for the
-    * session — Bench calls this before each timed run of the family's
-    * alphabetically-first member so the official record stamps the
-    * real one-pass exact cost on the payer and memo reads on the rest
-    * (the flagshipStatsCache pattern). */
-  def annGateReset(spark: SparkSession): Unit = annCtxCache.synchronized {
-    Option(annCtxCache.get(spark)).foreach(dropAnnCtxs(spark, _))
-  }
-
-  /** Session-agnostic reset for Bench's hook (which only has the query
-    * name): drops every session's memo. */
-  def annGateResetAll(): Unit = annCtxCache.synchronized {
-    import scala.jdk.CollectionConverters._
-    annCtxCache.asScala.foreach { case (s, m) => dropAnnCtxs(s, m) }
-  }
-
-  /** Clears one session's memo, unpersisting its cached corpora only
-    * while the session's context is alive: a stopped context's block
-    * manager is gone (unpersist throws a NullPointerException there),
-    * and its cached blocks went with it. */
-  private def dropAnnCtxs(spark: SparkSession,
-      m: scala.collection.mutable.Map[(String, Long, Int, Int), AnnGateCtx])
-      : Unit = {
-    if (!spark.sparkContext.isStopped)
-      m.values.foreach(c => c.corpus.unpersist(blocking = false))
-    m.clear()
+    def close(): Unit = corpus.unpersist(blocking = false)
   }
 
   /** Memoized shared gate context — see [[AnnGateCtx]]. `dirKey` keys
-    * the memo (two fixture dirs can share a count). */
+    * the memo (two fixture dirs can share a count); the family's
+    * alphabetically-first member `llm_ann_topk` pays for the build. */
   def annCtx(emb: DataFrame, idCol: String, vecCol: String, dirKey: String,
              n: Long, nq: Int = 10, k: Int = 10,
              cap: Long = AnnGateCap): AnnGateCtx =
-    annCtxCache.synchronized {
-      val perKey = Option(annCtxCache.get(emb.sparkSession)).getOrElse {
-        val m = scala.collection.mutable.Map
-          .empty[(String, Long, Int, Int), AnnGateCtx]
-        annCtxCache.put(emb.sparkSession, m); m
-      }
-      perKey.getOrElseUpdate((s"$dirKey#$cap", n, nq, k),
-        buildAnnCtx(emb, idCol, vecCol, n, nq, k, cap))
-    }
+    graft.core.SessionMemo(emb.sparkSession,
+        ("annCtx", s"$dirKey#$cap", n, nq, k), resetBy = "llm_ann_topk")(
+      buildAnnCtx(emb, idCol, vecCol, n, nq, k, cap))
 
   private def buildAnnCtx(emb: DataFrame, idCol: String, vecCol: String,
                           n: Long, nq: Int, k: Int,

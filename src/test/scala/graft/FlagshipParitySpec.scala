@@ -195,12 +195,23 @@ class FlagshipParitySpec extends SparkSpec {
     // DBSCAN, cluster stats and the at-fixture gate are driver
     // arithmetic over the probe's rows
     val dir = sfDir.stripSuffix("sf0.001") + "sf0.01"
+    // fill the memo first, so the floor below shows the reset dropped it
+    SparkEntry.queries("m_flagship_shape")(spark, dir)
     SparkEntry.benchReset("m_flagship_shape")
     val (df, _, jobs) = graft.core.Util.jobsIn(spark, "m_flagship_shape") {
       SparkEntry.queries("m_flagship_shape")(spark, dir)
     }
     info(s"m_flagship_shape body on sf0.01: $jobs jobs")
     assert(jobs <= 6, s"m_flagship_shape body ran $jobs jobs (budget 6)")
+    // the floor: after the reset the body pays the probe and the fit
+    assert(jobs >= 2, s"m_flagship_shape body ran $jobs jobs after a reset")
     assert(df.collect().length >= 2)
+    // without a reset the second call reads the memo: no probe, no fit
+    val (again, _, warmJobs) = graft.core.Util.jobsIn(spark, "warm") {
+      SparkEntry.queries("m_flagship_shape")(spark, dir)
+    }
+    info(s"m_flagship_shape memo read: $warmJobs jobs")
+    assert(warmJobs <= jobs - 2, s"memo read ran $warmJobs of $jobs jobs")
+    assert(again.collect().toSeq == df.collect().toSeq)
   }
 }

@@ -6,8 +6,10 @@ import graft.SparkSpec
 
 /** [[Tables.table]]'s parquet schema memo: a repeat read infers nothing
   * (no job), and a file rewritten at the same path is read with its new
-  * schema. [[Tables.rowCount]]: a footer count equal to `count()`, with
-  * no job, no memo and a `count()` fallback for directories. */
+  * schema. [[Tables.registerAll]]: a dropped view is re-bound, and the
+  * memos survive a bench reset of an unrelated query.
+  * [[Tables.rowCount]]: a footer count equal to `count()`, with no job,
+  * no memo and a `count()` fallback for directories. */
 class TablesSpec extends SparkSpec {
 
   test("table: a second read runs 0 jobs; a rewrite at the same path " +
@@ -34,6 +36,33 @@ class TablesSpec extends SparkSpec {
       assert(rewritten.schema != cold.schema)
       assert(rewritten.count() == region.count())
     } finally Util.deleteRecursively(dir)
+  }
+
+  test("registerAll re-binds a dropped fixture view without force") {
+    Tables.registerAll(spark, sfDir)
+    spark.catalog.dropTempView("nation")
+    Tables.registerAll(spark, sfDir)
+    assert(spark.catalog.tableExists("nation"))
+    assert(spark.table("nation").count() ==
+      Tables.table(spark, sfDir, "nation").count())
+  }
+
+  test("benchReset of a query that pays for no memo keeps the schema and " +
+    "view memos: repeat reads and registerAll run 0 jobs") {
+    Tables.table(spark, sfDir, "orders")
+    Tables.registerAll(spark, sfDir)
+    val view = spark.sessionState.catalog.getRawTempView("orders")
+    graft.SparkEntry.benchReset("a3_value_counts")
+    val (_, _, readJobs) = Util.jobsIn(spark, "read") {
+      Tables.table(spark, sfDir, "orders")
+    }
+    val (_, _, registerJobs) = Util.jobsIn(spark, "register") {
+      Tables.registerAll(spark, sfDir)
+    }
+    assert(readJobs == 0 && registerJobs == 0)
+    // not re-bound: the same view plan object
+    assert(spark.sessionState.catalog.getRawTempView("orders").get eq
+      view.get)
   }
 
   test("rowCount equals count() on all 10 tables at sf0.001 and sf0.01, " +

@@ -108,6 +108,20 @@ class CurationSpec extends SparkSpec {
     assert(Seq(0L, 6L, 12L).forall(i => byId(i)._2 == i && byId(i)._4))
   }
 
+  test("dupGroups: a pair id outside allIds gets no row on either route") {
+    // 99 is no doc: it still links 1 and 2, but neither route emits it or
+    // counts it in group_size
+    val ids = (0L to 3L).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (2L, 99L)).toDF("id_a", "id_b")
+    def run(cap: Int) =
+      Curation.dupGroups(ids, pairs, "doc_id", smallGraphEdgeCap = cap)
+        .as[(Long, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+    val small = run(200000)
+    assert(small == Seq((0L, 0L, 1L, true), (1L, 1L, 2L, true),
+      (2L, 1L, 2L, false), (3L, 3L, 1L, true)))
+    assert(run(0) == small)
+  }
+
   test("tokenPack: exclusive-prefix shard assignment, docs never split") {
     // force several range partitions so the two-pass offsets are exercised
     val df = spark.range(0, 100).toDF("doc_id")

@@ -43,7 +43,7 @@ class ScaleGatesSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(out(-1L) == 1.0, s"recall flag: ${out(-1L)}")
     assert(out(-2L) == 40.0)
-    ScaleGates.annGateReset(spark)
+    graft.core.SessionMemo.reset("llm_ann_topk")
   }
 
   test("annCtx: the shared exact table matches per-qid brute force, is " +
@@ -85,7 +85,7 @@ class ScaleGatesSpec extends SparkSpec {
         q => capped.exact(q).toSet)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(frame(-1L) == 1.0 && frame(-2L) == 60.0)
-    ScaleGates.annGateReset(spark)
+    graft.core.SessionMemo.reset("llm_ann_topk")
   }
 
   test("dbscanAriGate: identical labelings score ARI 100; a corrupted " +
@@ -134,6 +134,6 @@ class ScaleGatesSpec extends SparkSpec {
       ctx, k = 5).collect()
       .map(r => (r.getInt(0), r.getDouble(2))).toMap
     assert(bad(-1) == 0.0)
-    ScaleGates.annGateReset(spark)
+    graft.core.SessionMemo.reset("llm_ann_topk")
   }
 }
