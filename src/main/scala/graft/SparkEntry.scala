@@ -116,10 +116,7 @@ object SparkEntry {
     * the llm_cdc_* queries — the graft_cdc_cuts ends array exploded into
     * per-chunk spans with md5 content hashes. Package-visible un-sorted
     * form for PlanShapeSpec's zero-exchange gate. */
-  private[graft] def cdcChunksCore(s: SparkSession, dir: String): DataFrame =
-    cdcChunks(s, dir)
-
-  private def cdcChunks(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def cdcChunks(s: SparkSession, dir: String): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(s)
     // deliberately NOT fanned out: llm_cdc_chunks pins a zero-Exchange
     // kernel-scan plan and llm_cdc_dedup pins "no text crosses an
@@ -1843,8 +1840,8 @@ object SparkEntry {
     // FIXED lang domain. Pinning the pivot values keeps it one pass —
     // Spark plans a single partial-agg shuffle with one count per pivot
     // cell (omitting the list adds a blocking distinct-scan to discover
-    // values, the same trap crosstabDiscover documents). Missing cells
-    // are 0-filled to match the conditional-aggregation twin
+    // values). Missing cells are 0-filled to match the
+    // conditional-aggregation twin
     "a17_pivot" -> ((s, dir) =>
       t(s, dir, "documents")
         .groupBy("source")
@@ -2424,7 +2421,7 @@ object SparkEntry {
         .select("id_l", "id_r", "cos_sim")
         .orderBy("id_l", "id_r")
     }),
-    // md5-derived token hashes (Dedup.md5Hash64) make these oracle-able:
+    // md5-derived token hashes (graft_simhash_md5) make these oracle-able:
     // the DuckDB twin re-derives every bit from the same md5 hex chars
     "llm_simhash" -> ((s, dir) =>
       Dedup.simHashFrame(t(s, dir, "documents"), "text")
@@ -2441,8 +2438,8 @@ object SparkEntry {
     // collisions. The r13 "16-bit saturation" hypothesis is REFUTED:
     // falseHits grew x22 for x10 rows while VERIFIED pairs grew x49 —
     // candidate cost tracks output (the j7 contract). 100 TB levers stay
-    // `maxBucketSize` + sharding; Dedup.simHashBandsFor keeps the
-    // recall-preserving ladder for corpora whose false hits ARE
+    // `maxBucketSize` + sharding; widening bands and combine together
+    // keeps recall for corpora whose false hits ARE
     // random-collision-dominated (spec-gated identical pair set)
     "llm_simhash_neardup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
@@ -2787,14 +2784,14 @@ object SparkEntry {
       // prob quantized 1e-6 (r10): absorbs any LBFGS aggregate-order ulp
       // so the golden-VALUES twin pins the model's scores stably
       if (n == graft.gates.ScaleGates.FixtureRows)
-        graft.ml.QualityClassifier.score(model, toks, "doc_id", "tokens")
+        graft.ml.QualityClassifier.score(model, toks, "doc_id")
           .withColumn("quality_prob", round(col("quality_prob") * 1e6) / 1e6)
           .orderBy("doc_id")
       else {
         // off-fixture: the QualityClassifierSpec held-out AUC gate at
         // the live scale + the corpus count the twin recomputes
         val heldOut = graft.ml.QualityClassifier.score(model,
-            toks.filter(col("doc_id") % 2 === 1), "doc_id", "tokens")
+            toks.filter(col("doc_id") % 2 === 1), "doc_id")
           .join(labels, "doc_id")
         val auc =
           new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
@@ -3726,7 +3723,7 @@ object SparkEntry {
     // the stream's max event time) — the exact closure rule the
     // event-time timeout implements, so the streaming plan must produce
     // the batch answer. Closure needs post-watermark no-data batches,
-    // which AvailableNow runs (same machinery st1/sessionizeOnClose use).
+    // which AvailableNow runs (same machinery st1 uses).
     "st2_sessionize" -> ((s, dir) => {
       import s.implicits._
       val stream = streamEventTs(fixtureStream(s, dir, "events"))
@@ -3824,7 +3821,7 @@ object SparkEntry {
     // matching (flatMapGroupsWithState) flags each doc that near-matches
     // an earlier-seen doc; kept set = docs minus flagged. Same banding/
     // verify math as llm_near_dedup, so the exact all-pairs DuckDB twin
-    // gates it (id-ordered arrival == the batch nearDedup drop policy)
+    // gates it (id-ordered arrival == llm_near_dedup's drop policy)
     "st6_stream_near_dedup" -> ((s, dir) => {
       val hits = drain(s, "st6", graft.streaming.StreamIngest
           .streamingNearDup(fixtureStream(s, dir, "documents"), "doc_id",
@@ -3955,11 +3952,12 @@ object SparkEntry {
     // (key/value binary + topic/partition/offset/timestamp envelope);
     // every stage past the source — JSON value decode with explicit
     // schema, unit-adaptive payload event time, envelope carry-through,
-    // windowed agg — is the same code fromKafka feeds. The fixture maps
-    // events onto 4 partitions keyed by user (Kafka's per-key ordering
-    // contract) with per-partition offsets; the oracle re-derives the
-    // full (hour, partition, count, max-offset) surface relationally,
-    // so both the payload decode AND the envelope must be right.
+    // windowed agg — is the same code a `format("kafka")` source would
+    // feed. The fixture maps events onto 4 partitions keyed by user
+    // (Kafka's per-key ordering contract) with per-partition offsets;
+    // the oracle re-derives the full (hour, partition, count,
+    // max-offset) surface relationally, so both the payload decode AND
+    // the envelope must be right.
     "st10_kafka_ingest" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       val part = pmod(col("user_id"), lit(4L)).cast("int")
@@ -7279,9 +7277,6 @@ object SparkEntry {
       "least(stophits / greatest(ntok, 1.0) * 4.0, 1.0)) / 4.0 AS quality " +
       "FROM t ORDER BY doc_id"
 
-  /** Oracle twin of Dedup.ngramJaccard(gram=3): jaccard over distinct
-    * char-3-gram shingles (hashes on the Spark side are collision-free at
-    * these sizes, so set cardinalities match the plain-string sets). */
   /** Oracle twin of Repetition.repetitionStats (topN=2, dupN=5). Word
     * n-grams via list_transform over 1-based positions; top gram picked by
     * ORDER BY cnt DESC, gram DESC — the same total order as Spark's
@@ -7556,7 +7551,7 @@ object SparkEntry {
     * past sf1 the forced twin scales like its parent — a flat k would
     * itself blow the watchdog at sf10 (measured: the simhash forced-3
     * twin is n²/3 there). */
-  private def nearDupPrmCte(forcedStride: Option[Long] = None): String = {
+  private def nearDupPrmCte(forcedStride: Option[Long]): String = {
     val live =
       s"CASE WHEN n > ${graft.gates.ScaleGates.NearDupFullCap} " +
         s"THEN greatest(n // ${graft.gates.ScaleGates.NearDupSampleTarget}, 1) " +
@@ -8028,6 +8023,9 @@ object SparkEntry {
       "WHERE bit_count(xor(a.simhash, b.simhash)) <= 6 " +
       "ORDER BY id_a, id_b"
 
+  /** Oracle twin of graft_ngram_jaccard(gram=3): jaccard over distinct
+    * char-3-gram shingles (hashes on the Spark side are collision-free at
+    * these sizes, so set cardinalities match the plain-string sets). */
   private def ngramJaccardSql: String = {
     def sh(side: String) =
       s"list_distinct(list_transform(generate_series(1, " +

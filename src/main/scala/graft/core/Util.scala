@@ -82,36 +82,6 @@ object Util {
     deleteRecursively(loc)
   }
 
-  /** Run `job` with a temporary listener summing shuffle WRITE volume,
-    * then spin until the async listener bus goes quiet (fixed sleeps
-    * race with stragglers — the r12 bitmap lesson). Returns
-    * (result, records, bytes). */
-  def measureShuffleWrites[A](spark: SparkSession)(job: => A)
-      : (A, Long, Long) = {
-    val records = new java.util.concurrent.atomic.AtomicLong
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = job
-      var last = -1L
-      var spins = 0
-      while (spins < 25 && records.get != last) {
-        last = records.get; spins += 1; Thread.sleep(200)
-      }
-      (r, records.get, bytes.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** Run `body` under a fresh job group and count the Spark jobs it
     * started, through the status tracker rather than a listener of our
     * own. The tracker is fed by the listener bus, so the count is re-read

@@ -552,21 +552,6 @@ object Curation {
 
   // ---- DSIR: data selection via importance resampling -----------------
 
-  /** Hashed-n-gram feature stream for DSIR: nonempty lowercase
-    * whitespace tokens plus their space-joined bigrams (Xie et al. 2023,
-    * arXiv:2302.03169 §3 — "hashed n-gram features", unigrams+bigrams). */
-  private def dsirGrams(textCol: Column): Column = {
-    val toks = filter(Clean.splitWs(lower(textCol)), t => t =!= "")
-    concat(toks, Repetition.wordNgrams(toks, 2))
-  }
-
-  /** Engine-portable feature bucket: the first 3 hex chars of md5 parse
-    * to exactly 12 bits, so `buckets` = 4096 gives a perfectly uniform
-    * assignment (any divisor of 4096 stays uniform via the mod). */
-  private def dsirBucket(gram: Column, buckets: Int): Column =
-    (conv(substring(md5(gram.cast("binary")), 1, 3), 16, 10)
-      .cast("int") % buckets)
-
   /** Per-bucket gram counts of one corpus, as a dense driver-side array
     * (`buckets` longs). The explode feeds a partial-aggregating groupBy
     * whose result set is at most `buckets` rows, so the shuffle carries

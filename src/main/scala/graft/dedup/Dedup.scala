@@ -145,25 +145,6 @@ object Dedup {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
-  /** Character-gram shingle hash array at fixed stride (bounded per-row
-    * work O(len/stride); stride 1 = every window). */
-  def shingleHashes(text: Column, gram: Int = 8, stride: Int = 1): Column = {
-    val norm = Clean.normWs(lower(text))
-    transform(
-      sequence(lit(1), greatest(length(norm) - (gram - 1), lit(1)), lit(stride)),
-      i => xxhash64(norm.substr(i, lit(gram))))
-  }
-
-  /** k-permutation MinHash signature. One xxhash64 pass builds the shingle
-    * hashes; each "permutation" p re-keys them with xxhash64(h, p) and
-    * takes the min — the standard one-pass k-minhash construction. */
-  def minHashSignature(text: Column, k: Int = 32, gram: Int = 8,
-                       stride: Int = 1): Column = {
-    val hs = shingleHashes(text, gram, stride)
-    transform(sequence(lit(0), lit(k - 1)),
-      p => array_min(transform(hs, h => xxhash64(h, p))))
-  }
-
   /** Banded LSH keys from a MinHash signature: one 64-bit bucket hash per
     * band (fold of the band's rows). Two docs collide on a band iff that
     * band of their signatures is identical. */
@@ -267,28 +248,6 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Near-dup dedup execution: drop every doc that near-matches a
-    * lower-id doc (greedy keep-first, the common corpus-dedup policy). */
-  def nearDedup(df: DataFrame, idCol: String, textCol: String,
-                threshold: Double = 0.8): DataFrame = {
-    val drop = nearDupPairs(df, idCol, textCol, threshold)
-      .select(col("id_b").as(idCol)).distinct()
-    df.join(drop, Seq(idCol), "left_anti")
-  }
-
-  /** Engine-portable 64-bit token hash: the first 16 hex chars of md5,
-    * assembled from two 32-bit `conv` parses so ANSI long arithmetic never
-    * overflows (an unsigned 64-bit parse can exceed Long.MaxValue). md5 is
-    * the one hash Spark and DuckDB share bit-for-bit — SimHash runs on it
-    * (not xxhash64) precisely so its queries carry a SQL oracle; the
-    * DuckDB twin parses the same hex chars digit-by-digit. */
-  def md5Hash64(t: Column): Column = {
-    val hex = md5(t.cast("binary"))
-    val hi = conv(substring(hex, 1, 8), 16, 10).cast("long")
-    val lo = conv(substring(hex, 9, 8), 16, 10).cast("long")
-    shiftleft(hi, 32).bitwiseOR(lo)
-  }
-
   /** 64-bit SimHash over whitespace tokens: per-bit majority vote of token
     * hashes, folded to a long. Shift amounts are Scala-level literals (the
     * bit loop is unrolled at plan-build time), so everything stays inside
@@ -307,50 +266,6 @@ object Dedup {
                    outCol: String = "simhash"): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
     df.withColumn(outCol, simHash64(col(textCol)))
-  }
-
-  /** SimHash near-dup pairs: candidates collide on at least one of the
-    * C(bands, combine) exact-match keys formed by concatenating `combine`
-    * of the `bands` (64/bands)-bit slices of the 64-bit simhash, then get
-    * verified by full hamming distance ≤ `maxHamming`. Same banded-join
-    * shape as MinHash LSH: per-bucket shuffle, never all-pairs.
-    *
-    * RECALL CONTRACT (pigeonhole): ≤ maxHamming flipped bits dirty at most
-    * maxHamming slices, so `maxHamming ≤ bands - combine` guarantees a
-    * fully-clean `combine`-subset of slices that both docs key on —
-    * FULL recall. `combine` trades explode fan-out (C(bands,combine) rows
-    * per doc — cheap) against bucket width (combine·64/bands key bits):
-    * wider keys shatter the hot buckets a clustered corpus produces under
-    * single-slice keys, and in-bucket candidate expansion is QUADRATIC, so
-    * combine=2 cuts candidate pairs ~3.4× on the synthetic corpus
-    * (6.76M → 1.98M, hottest bucket 1460 → 458 docs) at identical recall.
-    * This is Manku et al.'s multi-block permutation scheme (WWW'07)
-    * expressed as an explode + equi-join. */
-  /** Corpus-size-adaptive (bands, combine) for [[simHashNearDup]] at a
-    * fixed hamming radius. Each ladder step adds one band AND one
-    * combine slice, so `bands − combine` — and with it the pigeonhole
-    * full-recall guarantee `maxHamming ≤ bands − combine` — is
-    * PRESERVED while the bucket keys widen: for maxHamming = 6 the key
-    * grows 16 → 21 → 24 bits (combine·⌊64/bands⌋) and the per-doc
-    * explode fan-out stays modest (C(bands,combine) = 28 → 84 → 210).
-    * Slices are ⌊64/bands⌋ bits, so off-ladder band counts leave high
-    * bits uncovered — harmless for recall (an uncovered flipped bit
-    * dirties NO slice).
-    *
-    * WHEN TO USE (r14 measurement, PLANS.md calibration `simhashq`
-    * hit decomposition): wider keys prune RANDOM key-space collisions, not
-    * near-threshold pairs that share whole slices. On the
-    * duplication-heavy sf1 corpus (9,3) cut false candidate hits only
-    * 22% while tripling explode fan-out — a net wall-time LOSS — so the
-    * registered query keeps (8,2) and the 100 TB levers for clustered
-    * corpora remain `maxBucketSize` + sharding. Reach for the ladder
-    * when candidates are dominated by random collisions (high-entropy
-    * hash populations at very large n) — the pair set is
-    * keying-invariant either way (DedupSpec gates (8,2)==(9,3)==(10,4)
-    * == brute force). */
-  def simHashBandsFor(n: Long, maxHamming: Int = 6): (Int, Int) = {
-    val step = if (n <= 10000L) 0 else if (n <= 1000000L) 1 else 2
-    (maxHamming + 2 + step, 2 + step)
   }
 
   /** The banded keying of [[simHashNearDup]]: each row of `hashed`
@@ -373,6 +288,23 @@ object Dedup {
         col("bk.band").as("band"), col("bk.bucket").as("bucket"))
   }
 
+  /** SimHash near-dup pairs: candidates collide on at least one of the
+    * C(bands, combine) exact-match keys formed by concatenating `combine`
+    * of the `bands` (64/bands)-bit slices of the 64-bit simhash, then get
+    * verified by full hamming distance ≤ `maxHamming`. Same banded-join
+    * shape as MinHash LSH: per-bucket shuffle, never all-pairs.
+    *
+    * RECALL CONTRACT (pigeonhole): ≤ maxHamming flipped bits dirty at most
+    * maxHamming slices, so `maxHamming ≤ bands - combine` guarantees a
+    * fully-clean `combine`-subset of slices that both docs key on —
+    * FULL recall. `combine` trades explode fan-out (C(bands,combine) rows
+    * per doc — cheap) against bucket width (combine·64/bands key bits):
+    * wider keys shatter the hot buckets a clustered corpus produces under
+    * single-slice keys, and in-bucket candidate expansion is QUADRATIC, so
+    * combine=2 cuts candidate pairs ~3.4× on the synthetic corpus
+    * (6.76M → 1.98M, hottest bucket 1460 → 458 docs) at identical recall.
+    * This is Manku et al.'s multi-block permutation scheme (WWW'07)
+    * expressed as an explode + equi-join. */
   def simHashNearDup(df: DataFrame, idCol: String, textCol: String,
                      maxHamming: Int = 3, bands: Int = 8,
                      combine: Int = 1,
@@ -380,8 +312,7 @@ object Dedup {
                      maxBucketSize: Int = Int.MaxValue): DataFrame = {
     // bands need not divide 64: slices are ⌊64/bands⌋ bits from offset
     // b·bits, leaving ≤ bands−1 high bits unkeyed — recall is unharmed
-    // (an unkeyed flipped bit dirties no slice), and the non-dividing
-    // counts are what the adaptive ladder (simHashBandsFor) widens into
+    // (an unkeyed flipped bit dirties no slice)
     require(bands > 0 && 64 / bands >= 1)
     require(combine >= 1 && combine <= bands)
     require(maxHamming <= bands - combine,
@@ -436,26 +367,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Distinct char-gram shingle-hash set of an ALREADY-normalized column
-    * (pass an attribute, not a nested expression — see nearDupPairs). */
-  def shingleSet(norm: Column, gram: Int = 3): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(norm) - (gram - 1), lit(1))),
-      i => xxhash64(norm.substr(i, lit(gram)))))
-
-  /** n-gram Jaccard similarity between two pre-computed shingle sets:
-    * |A ∩ B| / |A ∪ B|. */
-  def jaccardOfSets(sa: Column, sb: Column): Column = {
-    val inter = size(array_intersect(sa, sb)).cast("double")
-    val union = size(sa) + size(sb) - inter
-    when(union === 0, lit(1.0)).otherwise(inter / union)
-  }
-
-  /** n-gram Jaccard similarity between two text columns (exact, pairwise):
-    * |A ∩ B| / |A ∪ B| over distinct char-gram shingle hashes — the
-    * native one-pass kernel (graft.expr.NgramJaccard), value-identical
-    * to `jaccardOfSets(shingleSet(a), shingleSet(b))` (spec-gated).
-    * Requires an engine session (GraftExtensions / ensureRegistered). */
   /** Exact repeated-substring stripping (the char-window form of Lee et
     * al. 2022, arXiv:2107.06499 ExactSubstr): any character covered by a
     * length-`win` window whose text occurs at least `minCount` times
@@ -517,8 +428,4 @@ object Dedup {
       .select(col("doc_id"), col("text_kept"),
         (col("n_orig") - length(col("text_kept"))).cast("long").as("n_removed"))
   }
-
-  def ngramJaccard(a: Column, b: Column, gram: Int = 3): Column =
-    call_function("graft_ngram_jaccard",
-      Clean.normWs(lower(a)), Clean.normWs(lower(b)), lit(gram))
 }

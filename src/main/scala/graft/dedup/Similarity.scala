@@ -561,6 +561,30 @@ object Similarity {
     (normed.select(col(idCol), col(vecCol), codes.as("codes")), books)
   }
 
+  /** The ADC score column of one query against the `codes` column: the
+    * query is L2-normalized, LUT(j)(i) = ⟨q̂_j, c_{j,i}⟩ is built
+    * driver-side per subspace j, and each row sums its m byte-indexed
+    * LUT entries (`element_at` over one literal per subspace). */
+  private def adcScore(books: Array[Array[Array[Double]]],
+                       query: Seq[Float]): Column = {
+    val m = books.length
+    val qa = query.map(_.toDouble).toArray
+    val qn = math.sqrt(qa.map(x => x * x).sum)
+    val qh = if (qn == 0.0) qa else qa.map(_ / qn)
+    val dsub = qh.length / m
+    val lut: Array[Array[Double]] = Array.tabulate(m) { j =>
+      books(j).map { c =>
+        var s = 0.0; var i = 0
+        while (i < dsub) { s += c(i) * qh(j * dsub + i); i += 1 }
+        s
+      }
+    }
+    (0 until m).map { j =>
+      element_at(typedlit(lut(j).toSeq),
+        col("codes").getItem(j).cast("int") + 1)
+    }.reduce(_ + _)
+  }
+
   /** PQ approximate top-k with exact rerank: asymmetric-distance (ADC)
     * scores come from a per-query lookup table — LUT(j)(i) = ⟨q̂_j,
     * c_{j,i}⟩, m·ksub floats computed once driver-side — so the corpus
@@ -574,25 +598,10 @@ object Similarity {
              idCol: String, vecCol: String, query: Seq[Float], k: Int,
              rerank: Int = 0): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(encoded.sparkSession)
-    val m = books.length
-    val qa = query.map(_.toDouble).toArray
-    val qn = math.sqrt(qa.map(x => x * x).sum)
-    val qh = if (qn == 0.0) qa else qa.map(_ / qn)
-    val dsub = qh.length / m
-    val lut: Array[Array[Double]] = Array.tabulate(m) { j =>
-      books(j).map { c =>
-        var s = 0.0; var i = 0
-        while (i < dsub) { s += c(i) * qh(j * dsub + i); i += 1 }
-        s
-      }
-    }
-    val adc = (0 until m).map { j =>
-      element_at(typedlit(lut(j).toSeq),
-        col("codes").getItem(j).cast("int") + 1)
-    }.reduce(_ + _)
     val rn = if (rerank > 0) rerank else 5 * k
     val q = array(query.map(v => lit(v)): _*)
-    encoded.select(col(idCol), col(vecCol), adc.as("adc_score"))
+    encoded.select(col(idCol), col(vecCol),
+        adcScore(books, query).as("adc_score"))
       .orderBy(desc("adc_score"), col(idCol)).limit(rn)
       .select(col(idCol), cosine(col(vecCol), q).as("cos_sim"))
       .orderBy(desc("cos_sim"), col(idCol)).limit(k)
@@ -615,27 +624,8 @@ object Similarity {
     import spark.implicits._
     graft.expr.GraftFunctions.ensureRegistered(spark)
     require(queries.nonEmpty, "pqTopKBatch: no queries")
-    val m = books.length
-    def lutOf(query: Seq[Float]): Array[Array[Double]] = {
-      val qa = query.map(_.toDouble).toArray
-      val qn = math.sqrt(qa.map(x => x * x).sum)
-      val qh = if (qn == 0.0) qa else qa.map(_ / qn)
-      val dsub = qh.length / m
-      Array.tabulate(m) { j =>
-        books(j).map { c =>
-          var s = 0.0; var i = 0
-          while (i < dsub) { s += c(i) * qh(j * dsub + i); i += 1 }
-          s
-        }
-      }
-    }
     val adcStructs = array(queries.map { case (qid, qv) =>
-      val lut = lutOf(qv)
-      val adc = (0 until m).map { j =>
-        element_at(typedlit(lut(j).toSeq),
-          col("codes").getItem(j).cast("int") + 1)
-      }.reduce(_ + _)
-      struct(lit(qid).as("q_id"), adc.as("adc_score"))
+      struct(lit(qid).as("q_id"), adcScore(books, qv).as("adc_score"))
     }: _*)
     val rn = if (rerank > 0) rerank else 5 * k
     val wAdc = Window.partitionBy("q_id")

@@ -158,9 +158,4 @@ object SeqRatio {
     }
     2.0 * matches / (la + lb)
   }
-
-  /** fuzzywuzzy's difflib path: `int(round(100 * ratio))` — Python 3
-    * round is banker's (`Math.rint`). */
-  def fuzzRatio100(a: String, b: String): Int =
-    Math.rint(100.0 * ratio(a, b)).toInt
 }

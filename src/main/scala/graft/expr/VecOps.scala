@@ -1,5 +1,6 @@
 package graft.expr
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -183,6 +184,18 @@ object VecKernels {
       while (i < f.length) { d(i) = f(i).toDouble; i += 1 }
       d
     } else arr.toDoubleArray()
+
+  /** Column `i` of a collected row, an array<float|double> cell, as
+    * double[] (float→double is exact). Any other element type is a
+    * caller error, reported by name. */
+  def cellDoubles(row: Row, i: Int): Array[Double] =
+    row.getSeq[Any](i).iterator.map {
+      case f: Float => f.toDouble
+      case d: Double => d
+      case other => throw new IllegalArgumentException(
+        "vector cells must hold float or double elements, got " +
+          (if (other == null) "null" else other.getClass.getName))
+    }.toArray
 
   private def checkLen(a: Array[Double], b: Array[Double]): Unit =
     if (a.length != b.length)

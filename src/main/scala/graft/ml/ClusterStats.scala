@@ -123,10 +123,4 @@ object ClusterStats {
       .agg(sort_array(collect_list(struct(col(idCol), col(msgCol))))
         .getField(msgCol).as("members"))
       .orderBy(col(labelCol))
-
-  /** A14 single-cluster filter form (`print_cluster`). */
-  def membersOf(df: DataFrame, labelCol: String, label: Int,
-                msgCol: String, idCol: String): DataFrame =
-    df.filter(col(labelCol) === label)
-      .select(col(idCol), col(msgCol)).orderBy(col(idCol))
 }

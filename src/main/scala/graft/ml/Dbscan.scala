@@ -571,7 +571,6 @@ object Dbscan {
               eps: Double, minPts: Int, sampleCap: Int = 2000,
               seed: Long = 42L): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
     graft.expr.GraftFunctions.ensureRegistered(spark)
     // cache: the input lineage is read four times (count, sample
     // collect, broadcast-attach scan, final id join) — without this an
@@ -585,10 +584,7 @@ object Dbscan {
       else base.sample(withReplacement = false, frac, seed)
     val rows = samp.collect()
     val ids = rows.map(_.getLong(0))
-    val pts = rows.map(_.getSeq[Any](1).map {
-      case f: Float => f.toDouble
-      case d: Double => d
-    }.toArray)
+    val pts = rows.map(graft.expr.VecKernels.cellDoubles(_, 1))
     val scaledMinPts = math.max(1, math.round(minPts * frac).toInt)
     // a core's label is already its component's min core id
     val (labels, core) = localWithCore(ids, pts, eps, scaledMinPts)
@@ -645,10 +641,7 @@ object Dbscan {
     require(rows.length <= maxN,
       s"exact DBSCAN capped at $maxN rows (got ${rows.length}); use distributed()")
     val ids = rows.map(_.getLong(0))
-    val pts = rows.map(r => r.getSeq[Any](1).map {
-      case f: Float => f.toDouble
-      case d: Double => d
-    }.toArray)
+    val pts = rows.map(graft.expr.VecKernels.cellDoubles(_, 1))
     spark.createDataset(ids.zip(local(ids, pts, eps, minPts)).toSeq)
       .toDF(idCol, "label")
   }

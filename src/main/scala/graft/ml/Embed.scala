@@ -107,10 +107,8 @@ object Embed {
       s"knnDistanceCurve rides the reference set as a plan literal and is " +
         s"capped at maxN=$maxN rows (got more); sample the input or use " +
         "knnDistanceCurveApprox at scale")
-    val mat: Seq[Seq[Double]] = ref.toSeq.map(_.getSeq[Any](1).map {
-      case f: Float => f.toDouble
-      case d: Double => d
-    })
+    val mat: Seq[Seq[Double]] =
+      ref.toSeq.map(graft.expr.VecKernels.cellDoubles(_, 1).toSeq)
     val topK = df.select(col(idCol).as("id_a"),
         posexplode(call_function("graft_nn_topk", col(vecCol),
           typedlit(mat), lit(k))))

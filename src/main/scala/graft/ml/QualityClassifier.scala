@@ -40,9 +40,10 @@ object QualityClassifier {
     new Pipeline().setStages(Array(tf, lr)).fit(labeled)
   }
 
-  /** Score a (id, tokens) frame: (idCol, quality_prob, quality_pred). */
-  def score(model: PipelineModel, docs: DataFrame, idCol: String,
-            tokensCol: String): DataFrame =
+  /** Score a frame holding `idCol` and the tokens column the model was
+    * fit on: (idCol, quality_prob, quality_pred). */
+  def score(model: PipelineModel, docs: DataFrame, idCol: String)
+      : DataFrame =
     model.transform(docs)
       .select(col(idCol),
         round(element_at(vector_to_array(col("probability")), 2), 6)

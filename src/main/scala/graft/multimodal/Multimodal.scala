@@ -1,8 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal columns: image/audio/video as opaque `binary` columns with
   * typed metadata, plus the Spark-side plumbing for decode / feature
@@ -27,31 +26,6 @@ object Multimodal {
     * executors that never touch this object's other statics). */
   @inline private[multimodal] def imageIoMemOnly(): Unit =
     javax.imageio.ImageIO.setUseCache(false)
-
-  /** Canonical multimodal schema: id + modality tag + payload + metadata. */
-  val schema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false), // image|audio|video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true))), nullable = true)))
-
-  /** Wrap a text/blob frame into the multimodal shape (payload = utf-8
-    * bytes) — the fixture generator for tests and demos. */
-  def fromText(df: DataFrame, idCol: String, textCol: String,
-               modality: String = "image"): DataFrame =
-    df.select(
-      col(idCol).cast("long").as("asset_id"),
-      lit(modality).as("modality"),
-      col(textCol).cast("binary").as("payload"),
-      struct(
-        lit("application/octet-stream").as("mime"),
-        lit(null).cast("int").as("width"),
-        lit(null).cast("int").as("height"),
-        lit(null).cast("long").as("duration_ms")).as("meta"))
 
   /** REAL image decode via `javax.imageio` (JDK-built-in: PNG, JPEG, GIF,
     * BMP, WBMP). Width / height come from the actual bytes; mime from
@@ -873,23 +847,4 @@ object Multimodal {
     }
     df.withColumn("features", fx(col("payload")))
   }
-
-  /** Frame sampling: split a (video) payload into `n` evenly-spaced
-    * fixed-size byte windows — the partition/batch shape of real frame
-    * sampling, with slicing as the stand-in decode. */
-  def frameSample(df: DataFrame, n: Int, frameBytes: Int = 64): DataFrame =
-    df.withColumn("frames",
-      when(col("payload").isNull, lit(null))
-        .otherwise(transform(sequence(lit(0), lit(n - 1)), k => {
-          val len = octet_length(col("payload"))
-          val step = greatest((len / n).cast("long"), lit(1L))
-          substring(col("payload"), (k.cast("long") * step + 1).cast("int"),
-            lit(frameBytes))
-        })))
-
-  /** Per-modality partition routing: repartition by modality so downstream
-    * per-modality decode stages are co-located (the real-cluster layout:
-    * image/audio/video executors hold only their modality's partitions). */
-  def partitionByModality(df: DataFrame, parts: Int): DataFrame =
-    df.repartition(parts, col("modality"))
 }

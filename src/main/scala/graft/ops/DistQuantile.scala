@@ -45,22 +45,11 @@ object DistQuantile {
   private final case class RankState(rank: Long, pred: Column,
                                      countBelow: Long, inBin: Long)
 
-  /** Exact values at the given 0-based ranks of the sorted non-null
-    * column. Driver memory: O(ranks × buckets) counters + one
-    * ≤ collectThreshold slice per distinct terminal bin. */
-  def valuesAtRanks(df: DataFrame, c: String, ranks: Seq[Long],
-                    buckets: Int = 4096, collectThreshold: Int = 100000,
-                    maxLevels: Int = 8): Map[Long, Double] = {
-    val (base, n, lo, hi) = headPass(df, c)
-    resolveRanks(base, c, n, lo, hi, ranks, buckets, collectThreshold,
-      maxLevels)
-  }
-
-  /** The one (count, min, max) pass every search starts from — shared by
-    * [[valuesAtRanks]] and [[quantiles]] so the probability → rank
-    * derivation doesn't pay its own full count pass (it used to: one
-    * count() job plus this head was two scans saying the same n). */
-  private def headPass(df: DataFrame, c: String)
+  /** The one (count, min, max) pass every search starts from: it also
+    * gives [[quantiles]] the n its probability → rank derivation needs,
+    * so no separate count pass runs. Returns (non-null values, n, min,
+    * max). */
+  private[graft] def headPass(df: DataFrame, c: String)
       : (DataFrame, Long, Double, Double) = {
     val v = col(c).cast("double")
     val base = df.select(v.as("v")).filter(v.isNotNull && !isnan(v))
@@ -71,10 +60,13 @@ object DistQuantile {
     (base, n, head.getDouble(1), head.getDouble(2))
   }
 
-  private def resolveRanks(base: DataFrame, c: String, n: Long,
-                           globalLo: Double, globalHi: Double,
-                           ranks: Seq[Long], buckets: Int,
-                           collectThreshold: Int, maxLevels: Int)
+  /** Exact values at the given 0-based ranks of the sorted non-null
+    * column. Driver memory: O(ranks × buckets) counters + one
+    * ≤ collectThreshold slice per distinct terminal bin. */
+  private[graft] def resolveRanks(base: DataFrame, c: String, n: Long,
+                                  globalLo: Double, globalHi: Double,
+                                  ranks: Seq[Long], buckets: Int,
+                                  collectThreshold: Int, maxLevels: Int)
       : Map[Long, Double] = {
     require(ranks.nonEmpty)
     ranks.foreach(r => require(r >= 0 && r < n, s"rank $r out of [0,$n)"))
@@ -173,7 +165,7 @@ object DistQuantile {
     resolved.toMap
   }
 
-  /** A6 quartiles via [[valuesAtRanks]] — exact `percentile` semantics
+  /** A6 quartiles via [[resolveRanks]] — exact `percentile` semantics
     * (index p·(n−1), linear interpolation), 1e-6-quantized like the
     * fixture-contract form, as a 1-row literal frame (the result of a
     * fully distributed computation; only O(1) values reach the driver).

@@ -48,38 +48,12 @@ object Relational {
     df.groupBy(col(rowKey)).pivot(colKey, colValues).count()
       .na.fill(0).orderBy(col(rowKey))
 
-  /** A5 crosstab with pandas-style value discovery: one extra distinct
-    * pass finds the pivot columns (capped — a pivot wider than `maxCols`
-    * is a misuse of crosstab, not a bigger crosstab), then the single
-    * pivot shuffle as above. */
-  def crosstabDiscover(df: DataFrame, rowKey: String, colKey: String,
-                       maxCols: Int = 10000): DataFrame = {
-    // drop null keys (pandas crosstab does; String.sorted would NPE)
-    val values = df.select(col(colKey).cast("string"))
-      .filter(col(colKey).isNotNull).distinct()
-      .limit(maxCols + 1).collect().map(_.getString(0)).sorted
-    require(values.length <= maxCols,
-      s"crosstab: more than $maxCols distinct values in $colKey")
-    crosstab(df, rowKey, colKey, values.toSeq)
-  }
-
   /** A6 describe (rucio_data_exploration.ipynb:607;
-    * rucio_data_access_HDFS.ipynb:2320-2325): count/mean/min/max
-    * (+ stddev) of one numeric column.
-    * mean is routed through exact decimal (see Tables.davg) by callers that
-    * need oracle parity. */
-  def describeNumeric(df: DataFrame, c: String): DataFrame =
-    df.agg(
-      count(col(c)).as("count"),
-      avg(col(c)).as("mean"),
-      stddev(col(c)).as("stddev"),
-      min(col(c)).as("min"),
-      max(col(c)).as("max"))
-
-  /** A6 describe, oracle-parity variant: count/mean/std/min/max where mean
-    * and std come from EXACT decimal sums (the input is 2-decimal money
-    * data) so the result is order-independent and identical across
-    * engines — a streaming stddev would not hash-match the oracle. */
+    * rucio_data_access_HDFS.ipynb:2320-2325): count/mean/std/min/max of
+    * one numeric column, where mean and std come from EXACT decimal sums
+    * (the input is 2-decimal money data) so the result is
+    * order-independent and identical across engines — a streaming stddev
+    * would not hash-match the oracle. */
   def describeExact(df: DataFrame, c: String): DataFrame = {
     import graft.core.Tables.dec
     val agg = df.agg(

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.StructType
 import scala.annotation.tailrec
 
@@ -230,44 +230,13 @@ object Sources {
       .parquet(path)
   }
 
-  /** Small-file compaction: rewrite a parquet directory into
-    * ⌈bytes / targetFileBytes⌉ files (plan-statistics estimate). Long-
-    * running ingest (streaming sinks, micro-batches, per-task writers)
-    * accretes thousands of small files whose per-file open/footer cost
-    * eventually dominates scans; periodic compaction is standard table
-    * maintenance. Returns the target file count. */
-  def compactParquet(spark: SparkSession, inPath: String, outPath: String,
-                     targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    val df = spark.read.parquet(inPath)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = ((bytes + targetFileBytes - 1) / targetFileBytes)
-      .max(1).min(10000).toInt
-    df.repartition(n).write.mode("overwrite").parquet(outPath)
-    n
-  }
-
-  /** One-pass JSON→Parquet ingest (SURVEY.md §4: JSON scans can't push
-    * predicates into the parser; converting once buys columnar reads,
-    * stats-based pruning and pushdown for every later query). Partition
-    * columns (e.g. day) become directory-level pruning. */
-  def convertJsonToParquet(spark: SparkSession, jsonGlob: String,
-                           outPath: String,
-                           partitionBy: Seq[String] = Nil): Unit = {
-    val w = spark.read.json(jsonGlob).write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(outPath)
-  }
-
   /** S7 catalog listing. */
   def catalogTables(spark: SparkSession): DataFrame =
     spark.catalog.listTables().toDF().select("name", "tableType", "isTemporary")
 
-  /** S8 collect-to-local bridge: head / full collect / sampled collect
-    * (`showDf`, rucio_data_access_HDFS.ipynb:1262-1294). The sample runs
-    * distributed; only the sampled slice crosses to the driver. */
+  /** S8 collect-to-local bridge (`showDf`,
+    * rucio_data_access_HDFS.ipynb:1262-1294): only the first `n` rows
+    * cross to the driver. */
   def headLocal(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] =
     df.head(n)
-  def sampleLocal(df: DataFrame, fraction: Double,
-                  seed: Long = 42L): Array[org.apache.spark.sql.Row] =
-    df.sample(withReplacement = false, fraction, seed).collect()
 }

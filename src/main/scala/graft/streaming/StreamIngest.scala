@@ -7,9 +7,10 @@ import org.apache.spark.sql.types.StructType
 
 /** Streaming ingestion path (SURVEY.md §2.10): the reference's batch
   * Kafka→HDFS archive scan (S3+P3+P1) re-expressed as Structured
-  * Streaming — file-source JSON with an explicit schema (streaming readers
-  * must not infer), event-time windowed counts with a watermark, and a
-  * mapGroupsWithState sessionizer for custom state.
+  * Streaming — a Kafka-wire-compatible source decoded with an explicit
+  * schema (streaming readers must not infer), event-time gap
+  * sessionization, exact and near-dup dedup at ingest, and a
+  * foreachBatch upsert sink.
   *
   * The clustering stages stay batch jobs over micro-batch output, exactly
   * as planned in the survey (post-parity extension, not reference
@@ -17,100 +18,7 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamIngest {
 
-  /** S3-streaming: watch a directory of JSON-lines files. */
-  def readJsonStream(spark: SparkSession, path: String,
-                     schema: StructType): DataFrame =
-    spark.readStream.schema(schema).json(path)
-
-  /** P3+P1 on the stream: filter error-ish event types and flatten. */
-  def errorEvents(stream: DataFrame, typeCol: String,
-                  errorTypes: Seq[String]): DataFrame =
-    stream.filter(col(typeCol).isin(errorTypes: _*))
-
-  /** Windowed error counts with a watermark: the streaming twin of the
-    * per-day/value_counts aggregations (A3/A4). */
-  def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
-                     window: String = "1 hour",
-                     watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window),
-        col(keyCol))
-      .agg(count(lit(1)).as("cnt"))
-
-  final case class SessionEvent(userId: Long, tsMs: Long)
-  final case class SessionState(n: Long, startMs: Long, lastMs: Long)
-  final case class SessionOut(userId: Long, nEvents: Long, durationMs: Long,
-                              closed: Boolean)
-
-  /** Custom stateful op: per-user sessionization with an idle gap, via
-    * mapGroupsWithState (processing-time timeout; pass gapMs <= 0 for
-    * NoTimeout — sessions then never auto-close, which is also what
-    * deterministic tests need, since a pending processing-time timeout
-    * keeps `processAllAvailable` from ever seeing an idle stream).
-    * Demonstrates the KeyValueGroupedDataset state API the engine exposes
-    * for operators windows/aggregations can't express. */
-  def sessionize(events: Dataset[SessionEvent], gapMs: Long)
-      : Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    val timeout = if (gapMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.userId)
-      .mapGroupsWithState[SessionState, SessionOut](timeout) {
-        case (userId, it, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            SessionOut(userId, s.n, s.lastMs - s.startMs, closed = true)
-          } else {
-            val evs = it.toSeq
-            val prev = state.getOption
-            val start = prev.map(_.startMs)
-              .getOrElse(evs.map(_.tsMs).min)
-            val last = (prev.map(_.lastMs).toSeq ++ evs.map(_.tsMs)).max
-            val n = prev.map(_.n).getOrElse(0L) + evs.size
-            state.update(SessionState(n, start, last))
-            if (gapMs > 0) state.setTimeoutDuration(gapMs)
-            SessionOut(userId, n, last - start, closed = false)
-          }
-      }
-  }
-
   final case class TimedEvent(userId: Long, ts: java.sql.Timestamp)
-
-  /** flatMapGroupsWithState variant: emit a session record ONLY when it
-    * closes (0 outputs while open, 1 when the event-time watermark passes
-    * the idle gap) — the shape for sinks that must see each session
-    * exactly once. EVENT-time timeout, not processing-time: closure is a
-    * function of the data (watermark), so replays and tests are
-    * deterministic. Append-mode compatible. */
-  def sessionizeOnClose(events: Dataset[TimedEvent], gapMs: Long,
-                        watermark: String = "0 seconds")
-      : Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        case (userId, it, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(userId, s.n, s.lastMs - s.startMs, closed = true))
-          } else {
-            val evs = it.toSeq
-            val ts = evs.map(_.ts.getTime)
-            val prev = state.getOption
-            val start = prev.map(_.startMs).getOrElse(ts.min)
-            val last = (prev.map(_.lastMs).toSeq ++ ts).max
-            val n = prev.map(_.n).getOrElse(0L) + evs.size
-            state.update(SessionState(n, start, last))
-            state.setTimeoutTimestamp(last + gapMs)
-            Iterator.empty
-          }
-      }
-  }
 
   final case class GapState(times: Seq[Long])
   final case class GapSession(userId: Long, sessionStartMs: Long,
@@ -223,7 +131,7 @@ object StreamIngest {
     * BEFORE it (within a micro-batch, "before" = ascending id — the
     * deterministic tiebreak). When arrival order is id-ordered (replays,
     * backfills, the AvailableNow harness) the flagged set equals the
-    * batch `nearDedup` drop set exactly — that is st6's DuckDB-oracled
+    * batch llm_near_dedup drop set exactly — that is st6's DuckDB-oracled
     * contract. Out-of-order production arrival keeps first-seen-wins,
     * the standard ingest-dedup relaxation (same trade
     * `dropDuplicatesWithinWatermark` makes for exact dedup).
@@ -319,30 +227,11 @@ object StreamIngest {
       StructField("timestampType", IntegerType)))
   }
 
-  /** Kafka ingest — the FRONT of the reference's production pipe
-    * (Kafka → HDFS archive, rucio_data_access_HDFS.ipynb:497: the
-    * archived records carry a `kafka_timestamp` field; this repo's file
-    * sources re-express only the post-archive scan). Returns the wire
-    * frame; feed it to [[decodeKafkaJson]].
-    *
-    * OFFLINE NOTE: the spark-sql-kafka connector jar and a broker are
-    * not present in this build sandbox, so this exact method cannot run
-    * under the test harness — `format("kafka")` resolves at runtime.
-    * Everything AFTER the source is exercised end-to-end through
-    * [[fromKafkaCompatible]], which emits the identical wire schema;
-    * the untested surface is this one format/option block. */
-  def fromKafka(spark: SparkSession, bootstrapServers: String,
-                subscribe: String,
-                startingOffsets: String = "earliest"): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", subscribe)
-      .option("startingOffsets", startingOffsets)
-      .load()
-
   /** File-backed Kafka-compatibility source: parquet files holding
-    * [[kafkaWireSchema]] rows (a broker-less replay of a topic archive).
-    * Downstream code cannot tell it from [[fromKafka]]. */
+    * [[kafkaWireSchema]] rows (a broker-less replay of a topic archive —
+    * the FRONT of the reference's Kafka → HDFS pipe,
+    * rucio_data_access_HDFS.ipynb:497). Downstream code cannot tell it
+    * from `readStream.format("kafka")`; feed it to [[decodeKafkaJson]]. */
   def fromKafkaCompatible(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(kafkaWireSchema).parquet(dir)
 
@@ -371,13 +260,6 @@ object StreamIngest {
       case None => parsed.withColumn("ts", col("kafka_ts"))
     }
   }
-
-  /** Sink helper: append stream to parquet with a checkpoint. */
-  def writeParquetStream(df: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream.outputMode(OutputMode.Append)
-      .format("parquet").option("path", path)
-      .option("checkpointLocation", checkpoint).start()
 
   /** One upsert of `changes` into the parquet view at `dir`: changed
     * keys replaced (anti-join pass, applyCdc's shape minus deletes),

@@ -213,44 +213,6 @@ object Tws {
         Encoders.product[TypeCount])
   }
 
-  /** Checkpoint MIGRATION: dedup keys recovered from an old operator's
-    * checkpoint (the statestore reader over a streaming dropDuplicates)
-    * seed this processor — the operator upgrades (e.g. to custom policy
-    * or TTL'd state) without replaying the stream. Seeded and
-    * already-seen keys are suppressed identically. */
-  class SeededDedupProcessor
-      extends StatefulProcessorWithInitialState[String, String, String,
-        String] {
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean]("seen",
-        Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInitialState(key: String, initial: String,
-                                    timerValues: TimerValues): Unit =
-      seen.update(true)
-
-    override def handleInputRows(key: String, rows: Iterator[String],
-                                 timerValues: TimerValues)
-        : Iterator[String] =
-      if (seen.exists()) Iterator.empty
-      else { seen.update(true); Iterator.single(key) }
-  }
-
-  /** Exactly-once key emission with the seen-set seeded from
-    * `seedKeys` — pair with the statestore reader to migrate a
-    * dropDuplicates checkpoint into this operator. */
-  def seededDedup(in: Dataset[String], seedKeys: Dataset[String])
-      : Dataset[String] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(identity)
-      .transformWithState(new SeededDedupProcessor,
-        TimeMode.None(), OutputMode.Update(),
-        seedKeys.groupByKey(identity),
-        Encoders.STRING, Encoders.STRING)
-  }
-
   /** Typed input for [[SessionTimeoutProcessor]]: the watermarked event
     * time rides along as a real timestamp (catalyst keeps µs precision
     * through the encoder roundtrip). */

@@ -151,10 +151,6 @@ object Bpe {
     * twin derive from this one value. */
   lazy val pinnedMerges: Seq[(String, String)] = trainFromFreqs(pinnedSeed, 40)
 
-  /** [[pinnedMerges]] in the kernel's `"x y"` wire form. */
-  lazy val pinnedMergesWire: Seq[String] =
-    pinnedMerges.map { case (x, y) => s"$x $y" }
-
   // ---- encode operators --------------------------------------------
 
   private def mergesLit(merges: Seq[(String, String)]) =

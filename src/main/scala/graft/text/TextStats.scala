@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines:
@@ -63,7 +63,6 @@ object TextStats {
     * Native single-pass form of the regex [A-Za-z]+|[0-9]|[^A-Za-z0-9\s],
     * per-CODEPOINT like the RE2 oracle (Java regexp_count counted 4-byte
     * codepoints twice — see TextKernels.bpeishCount). */
-  val BpeishRe = "[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"
   def tokenCountBpeish(text: Column): Column =
     call_function("graft_bpeish_count", text)
 
@@ -91,24 +90,4 @@ object TextStats {
     * whitespace-normalized text. Exact-dup detection key. */
   def fingerprintMd5(text: Column): Column =
     md5(Clean.normWs(lower(text)).cast("binary"))
-
-  /** Near-dup fingerprint over 8-gram character shingles at fixed stride:
-    * a 1-permutation MinHash via the native graft_minhash expression (one
-    * compiled byte pass — the interpreted transform form re-evaluated the
-    * normalization per element). One hash family only — use
-    * [[graft.dedup.Dedup.nearDupPairs]] for real banded-LSH dedup.
-    * Requires an engine session (GraftExtensions / ensureRegistered). */
-  def fingerprintShingle(text: Column, gram: Int = 8, stride: Int = 4): Column =
-    element_at(call_function("graft_minhash",
-      Clean.normWs(lower(text)), lit(1), lit(gram), lit(stride)), 1)
-
-  /** Full per-document stats frame (one scan, no shuffle). */
-  def documentStats(df: DataFrame, textCol: String): DataFrame =
-    df.select(
-      col("*"),
-      langId(col(textCol)).as("lang_pred"),
-      tokenCountWs(col(textCol)).as("n_tokens"),
-      tokenCountBpeish(col(textCol)).as("n_subwords"),
-      qualityScore(col(textCol)).as("quality"),
-      fingerprintMd5(col(textCol)).as("fingerprint"))
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.DistQuantile
 
@@ -11,6 +12,17 @@ import graft.ops.DistQuantile
   */
 class DistQuantileSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The exact values at `ranks`, with the refinement knobs the
+    * quartile API fixes left open so small inputs force deep searches. */
+  private def valuesAtRanks(df: DataFrame, c: String, ranks: Seq[Long],
+                            buckets: Int = 4096,
+                            collectThreshold: Int = 100000)
+      : Map[Long, Double] = {
+    val (base, n, lo, hi) = DistQuantile.headPass(df, c)
+    DistQuantile.resolveRanks(base, c, n, lo, hi, ranks, buckets,
+      collectThreshold, maxLevels = 8)
+  }
 
   private def exactViaBuiltin(values: Seq[Double]): (Double, Double, Double) = {
     val r = values.toDF("v")
@@ -27,7 +39,7 @@ class DistQuantileSpec extends SparkSpec {
     val idx = Seq(0.25, 0.5, 0.75).map(_ * (n - 1))
     val ranks = idx.flatMap(i =>
       Seq(math.floor(i).toLong, math.ceil(i).toLong)).distinct
-    val at = DistQuantile.valuesAtRanks(df, "v", ranks,
+    val at = valuesAtRanks(df, "v", ranks,
       buckets = buckets, collectThreshold = collectThreshold)
     val q = idx.map { i =>
       val lo = at(math.floor(i).toLong)
@@ -83,7 +95,7 @@ class DistQuantileSpec extends SparkSpec {
   test("infinite values fail fast with an actionable message") {
     val df = Seq(1.0, 2.0, Double.PositiveInfinity).toDF("v")
     val e = intercept[IllegalArgumentException] {
-      DistQuantile.valuesAtRanks(df, "v", Seq(1L))
+      valuesAtRanks(df, "v", Seq(1L))
     }
     assert(e.getMessage.contains("infinite"))
   }
@@ -91,7 +103,7 @@ class DistQuantileSpec extends SparkSpec {
   test("valuesAtRanks hits exact order statistics at the extremes") {
     val values = new scala.util.Random(15).shuffle((1 to 1000).toList)
       .map(_.toDouble)
-    val at = DistQuantile.valuesAtRanks(values.toDF("v"), "v",
+    val at = valuesAtRanks(values.toDF("v"), "v",
       Seq(0L, 499L, 999L), buckets = 32, collectThreshold = 16)
     assert(at(0L) == 1.0)
     assert(at(499L) == 500.0)

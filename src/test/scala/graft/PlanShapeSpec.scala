@@ -952,7 +952,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("llm_cdc_chunks core: kernel scan + generate, no join") {
-    audit(SparkEntry.cdcChunksCore(spark, dir))(
+    audit(SparkEntry.cdcChunks(spark, dir))(
       "native graft_cdc_cuts kernel in plan" -> (_.hasExpr[GraftCdcCuts]),
       "no ScalaUDF" -> noScalaUdf,
       "no join" -> noJoin,

@@ -1,7 +1,6 @@
 package graft.dedup
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._

@@ -53,12 +53,6 @@ class SeqRatioSpec extends SparkSpec {
     }
   }
 
-  test("fuzzRatio100 matches fuzzywuzzy's int(round(100*ratio))") {
-    truth.foreach { case (a, b, _, f) =>
-      assert(SeqRatio.fuzzRatio100(a, b) == f, s"fuzz100('$a','$b')")
-    }
-  }
-
   test("expression + Clean.fuzzRatioExact agree with the kernel") {
     GraftFunctions.ensureRegistered(spark)
     val df = truth.map { case (a, b, _, _) => (a, b) }.toDF("a", "b")

@@ -46,6 +46,30 @@ class TextKernelsSpec extends SparkSpec {
     length(concat_ws("", Clean.splitWs(text)))
   private def oldLetterTokens(text: Column): Column =
     size(filter(Clean.splitWs(text), t => t.rlike("[A-Za-z]")))
+  // the regex graft_bpeish_count replaced
+  private val BpeishRe = "[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"
+
+  /** Distinct char-gram shingle-hash set of an ALREADY-normalized column. */
+  private def shingleSet(norm: Column, gram: Int): Column =
+    array_distinct(transform(
+      sequence(lit(1), greatest(length(norm) - (gram - 1), lit(1))),
+      i => xxhash64(norm.substr(i, lit(gram)))))
+
+  /** |A ∩ B| / |A ∪ B| of two shingle sets (1.0 when both are empty). */
+  private def jaccardOfSets(sa: Column, sb: Column): Column = {
+    val inter = size(array_intersect(sa, sb)).cast("double")
+    val union = size(sa) + size(sb) - inter
+    when(union === 0, lit(1.0)).otherwise(inter / union)
+  }
+
+  /** The first 16 hex chars of md5 as a long, assembled from two 32-bit
+    * `conv` parses so ANSI long arithmetic never overflows. */
+  private def md5Hash64(t: Column): Column = {
+    val hex = md5(t.cast("binary"))
+    val hi = conv(substring(hex, 1, 8), 16, 10).cast("long")
+    val lo = conv(substring(hex, 9, 8), 16, 10).cast("long")
+    shiftleft(hi, 32).bitwiseOR(lo)
+  }
 
   private def assertParity(name: String, native: Column, old: Column): Unit = {
     val bad = docs.select($"doc_id", $"text", native.as("n"), old.as("o"))
@@ -92,7 +116,7 @@ class TextKernelsSpec extends SparkSpec {
     val bmp = docs.filter(!$"text".rlike("[\\x{10000}-\\x{10FFFF}]"))
     val bad = bmp.select($"doc_id",
         call_function("graft_bpeish_count", $"text").as("n"),
-        regexp_count($"text", lit(TextStats.BpeishRe)).as("o"))
+        regexp_count($"text", lit(BpeishRe)).as("o"))
       .filter($"n" =!= $"o").collect()
     assert(bad.isEmpty, s"bpeish diverges on ${bad.length} BMP rows")
     val emoji = Seq((0L, "a😀b 😀😀")).toDF("doc_id", "text")
@@ -102,7 +126,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("ngramJaccard kernel == shingleSet/array_intersect chain") {
-    import graft.dedup.Dedup
     // adjacent fixture pairs plus adversarial short/empty/multibyte pairs
     val pairs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select($"doc_id", Clean.normWs(lower($"text")).as("na"))
@@ -114,18 +137,16 @@ class TextKernelsSpec extends SparkSpec {
         .toDF("doc_id", "na", "nb"))
     val bad = pairs.select($"doc_id",
         call_function("graft_ngram_jaccard", $"na", $"nb", lit(3)).as("k"),
-        Dedup.jaccardOfSets(
-          Dedup.shingleSet($"na", 3), Dedup.shingleSet($"nb", 3)).as("o"))
+        jaccardOfSets(shingleSet($"na", 3), shingleSet($"nb", 3)).as("o"))
       .filter($"k" =!= $"o").collect()
     assert(bad.isEmpty,
       s"ngramJaccard diverges on ${bad.length} pairs: ${bad.take(3).mkString(";")}")
   }
 
   test("simHashMd5 kernel == the 64-fold md5 expression chain") {
-    import graft.dedup.Dedup
     // the pre-kernel interpreted form, reproduced verbatim
     def oldSimHash(text: Column): Column = {
-      val hs = transform(Clean.splitWs(lower(text)), t => Dedup.md5Hash64(t))
+      val hs = transform(Clean.splitWs(lower(text)), t => md5Hash64(t))
       val bits = (0 until 64).map { b =>
         val vote = aggregate(hs, lit(0L), (acc, h) =>
           acc + when(shiftright(h, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))

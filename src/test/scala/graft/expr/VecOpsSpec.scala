@@ -85,6 +85,17 @@ class VecOpsSpec extends SparkSpec {
     assert(n.isNullAt(0))
   }
 
+  test("cellDoubles widens float cells and names any other element type") {
+    import org.apache.spark.sql.Row
+    assert(VecKernels.cellDoubles(Row(7L, Seq(1.5f, -2f)), 1).toSeq ==
+      Seq(1.5, -2.0))
+    assert(VecKernels.cellDoubles(Row(Seq(0.25, 3.0)), 0).toSeq ==
+      Seq(0.25, 3.0))
+    val e = intercept[IllegalArgumentException](
+      VecKernels.cellDoubles(Row(Seq(1, 2)), 0))
+    assert(e.getMessage.contains("java.lang.Integer"), e.getMessage)
+  }
+
   test("length mismatch fails fast") {
     GraftFunctions.ensureRegistered(spark)
     val ex = intercept[Exception] {

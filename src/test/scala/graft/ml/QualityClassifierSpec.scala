@@ -23,7 +23,7 @@ class QualityClassifierSpec extends SparkSpec {
       labeled.filter($"doc_id" % 2 === 0), "tokens", "label")
     // held-out half: the classifier never saw these docs OR their labels
     val heldOut = QualityClassifier.score(
-        model, labeled.filter($"doc_id" % 2 === 1), "doc_id", "tokens")
+        model, labeled.filter($"doc_id" % 2 === 1), "doc_id")
       .join(labels, "doc_id")
     val auc = new BinaryClassificationEvaluator()
       .setRawPredictionCol("quality_prob").setLabelCol("label")
@@ -35,9 +35,9 @@ class QualityClassifierSpec extends SparkSpec {
     // determinism: refit from the same frame reproduces the probabilities
     val model2 = QualityClassifier.fit(
       labeled.filter($"doc_id" % 2 === 0), "tokens", "label")
-    val p1 = QualityClassifier.score(model, labeled, "doc_id", "tokens")
+    val p1 = QualityClassifier.score(model, labeled, "doc_id")
       .select("doc_id", "quality_prob").as[(Long, Double)].collect().toMap
-    val p2 = QualityClassifier.score(model2, labeled, "doc_id", "tokens")
+    val p2 = QualityClassifier.score(model2, labeled, "doc_id")
       .select("doc_id", "quality_prob").as[(Long, Double)].collect().toMap
     assert(p1 == p2)
     labeled.unpersist()

@@ -1,20 +1,35 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def assets = Multimodal.fromText(
-    Seq((1L, "hello world payload"), (2L, ""), (3L, "another binary blob"))
-      .toDF("id", "txt"), "id", "txt")
+  /** Wrap a text/blob frame into the multimodal shape (payload = utf-8
+    * bytes): the fixture builder the decoder cases below start from. */
+  private def fromText(df: DataFrame, idCol: String, textCol: String,
+                       modality: String = "image"): DataFrame =
+    df.select(
+      col(idCol).cast("long").as("asset_id"),
+      lit(modality).as("modality"),
+      col(textCol).cast("binary").as("payload"),
+      struct(
+        lit("application/octet-stream").as("mime"),
+        lit(null).cast("int").as("width"),
+        lit(null).cast("int").as("height"),
+        lit(null).cast("long").as("duration_ms")).as("meta"))
 
   test("fromText produces the canonical multimodal schema") {
+    val assets = fromText(
+      Seq((1L, "hello world payload"), (2L, ""), (3L, "another binary blob"))
+        .toDF("id", "txt"), "id", "txt")
     assert(assets.schema.fieldNames.toSeq ==
       Seq("asset_id", "modality", "payload", "meta"))
-    assert(assets.schema("payload").dataType ==
-      org.apache.spark.sql.types.BinaryType)
+    // the same columns and types as the assets the mm_* queries decode
+    val live = SynthAssets.images(Seq(1L).toDF("id"), "id")
+    assert(assets.schema.catalogString == live.schema.catalogString)
   }
 
   // --- minimal ISO-BMFF fixture builders (real box grammar, no codec) ---
@@ -62,7 +77,7 @@ class MultimodalSpec extends SparkSpec {
       (2L, mp4(1920, 1080, 90000, 90000 * 7, v1 = true)), // 7 s, v1 mvhd
       (3L, "definitely not a video".getBytes("UTF-8")),
       (4L, null.asInstanceOf[Array[Byte]]))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt",
         modality = "video")
       .drop("payload")
@@ -118,7 +133,7 @@ class MultimodalSpec extends SparkSpec {
       b
     }
     val rows = Seq((1L, truncated), (2L, lyingSize))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt",
         modality = "video")
       .drop("payload")
@@ -156,7 +171,7 @@ class MultimodalSpec extends SparkSpec {
       (4L, enc(scene(false), "png")), // different image
       (5L, "junk".getBytes("UTF-8")),
       (6L, null.asInstanceOf[Array[Byte]]))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt")
       .drop("payload")
       .join(rows.toDF("asset_id", "payload"), "asset_id")
@@ -192,7 +207,7 @@ class MultimodalSpec extends SparkSpec {
       (2L, enc(8, 8)),   // upscale path
       (3L, "junk".getBytes("UTF-8")),
       (4L, null.asInstanceOf[Array[Byte]]))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt")
       .drop("payload")
       .join(rows.toDF("asset_id", "payload"), "asset_id")
@@ -246,7 +261,7 @@ class MultimodalSpec extends SparkSpec {
       (3L, tone(4000, AudioFileFormat.Type.WAVE)),  // higher tone
       (4L, "junk".getBytes("UTF-8")),
       (5L, null.asInstanceOf[Array[Byte]]))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt",
         modality = "audio")
       .drop("payload")
@@ -312,7 +327,7 @@ class MultimodalSpec extends SparkSpec {
     val avi = mjpegAvi(Seq(f1, f2, f3), 64, 48)
     val rows = Seq((1L, avi), (2L, "not a container".getBytes("UTF-8")),
       (3L, null.asInstanceOf[Array[Byte]]))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt")
       .drop("payload")
       .join(rows.toDF("asset_id", "payload"), "asset_id")
@@ -343,7 +358,7 @@ class MultimodalSpec extends SparkSpec {
     val aviB = mjpegAvi(Seq(solidJpeg(0xC0C0C0), solidJpeg(0xF0F0F0)), 64, 48)
     val rows = Seq((1L, aviA), (2L, aviA2), (3L, aviB),
       (4L, "junk".getBytes("UTF-8")), (5L, null.asInstanceOf[Array[Byte]]))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt")
       .drop("payload")
       .join(rows.toDF("asset_id", "payload"), "asset_id")
@@ -372,7 +387,7 @@ class MultimodalSpec extends SparkSpec {
   test("decodeVideo reads AVI avih width/height/duration via the RIFF walker") {
     val avi = mjpegAvi(Seq(solidJpeg(0x102030)), 64, 48, usPerFrame = 40000)
     val rows = Seq((1L, avi))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt")
       .drop("payload")
       .join(rows.toDF("asset_id", "payload"), "asset_id")
@@ -459,17 +474,6 @@ class MultimodalSpec extends SparkSpec {
     assert(s2.toSeq == audioSizes.toSeq && y2.isEmpty)
   }
 
-  test("frameSample yields n frames per asset") {
-    val fr = Multimodal.frameSample(assets.filter($"asset_id" === 1), n = 4)
-      .select("frames").as[Seq[Array[Byte]]].head()
-    assert(fr.length == 4)
-  }
-
-  test("partitionByModality co-locates modalities") {
-    val parted = Multimodal.partitionByModality(assets, 2)
-    assert(parted.rdd.getNumPartitions == 2)
-  }
-
   test("decodeImage reads real PNG/JPEG dimensions from bytes") {
     def encode(w: Int, h: Int, fmt: String): Array[Byte] = {
       val img = new java.awt.image.BufferedImage(
@@ -484,7 +488,7 @@ class MultimodalSpec extends SparkSpec {
       (2L, encode(3, 5, "jpg")),
       (3L, "not an image at all".getBytes("UTF-8")),
       (4L, null.asInstanceOf[Array[Byte]]))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt")
       .drop("payload")
       .join(rows.toDF("asset_id", "payload"), "asset_id")
@@ -522,7 +526,7 @@ class MultimodalSpec extends SparkSpec {
       (2L, wav(16000f, 24000)), // 1500 ms
       (3L, "definitely not audio".getBytes("UTF-8")),
       (4L, null.asInstanceOf[Array[Byte]]))
-    val df = Multimodal.fromText(
+    val df = fromText(
         rows.map { case (id, _) => (id, "") }.toDF("id", "txt"), "id", "txt",
         modality = "audio")
       .drop("payload")

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** J5 as-of join semantics: latest right at-or-before each left, per
   * key; inclusive bound; null-extended lefts; name-collision guard. */

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Edge semantics of the bin-bucketed range join and the anti-join
   * (SparkEntry j6/j7 carry the DuckDB cross-engine oracles; these pin

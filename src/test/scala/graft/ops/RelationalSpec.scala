@@ -176,20 +176,6 @@ class RelationalSpec extends SparkSpec {
     info(f"quantile abs errors: ${q.zip(exact).map(p => math.abs(p._1 - p._2)).mkString(", ")} (bound ${eps + 1}%.1f)")
   }
 
-  test("typed Dataset loaders expose the fixed schemas") {
-    val docs = graft.core.Schemas.documents(spark, sfDir)
-    val first = docs.head()
-    assert(first.n_chars == first.text.length)
-    assert(graft.core.Schemas.embeddings(spark, sfDir).head().embedding.nonEmpty)
-  }
-
-  test("crosstabDiscover finds pivot values itself (pandas parity)") {
-    val auto = Relational.crosstabDiscover(sales, "k", "g").orderBy("k")
-    val explicit = Relational.crosstab(sales, "k", "g", Seq("x", "y")).orderBy("k")
-    assert(auto.columns.toSeq == explicit.columns.toSeq)
-    assert(auto.collect().toSeq == explicit.collect().toSeq)
-  }
-
   test("crosstab counts match groupBy pairs") {
     val ct = Relational.crosstab(sales, "k", "g", Seq("x", "y"))
       .orderBy("k").collect()

@@ -10,6 +10,30 @@ class TopKPerGroupSpec extends SparkSpec {
   private def events = spark.read.parquet(s"$sfDir/events.parquet")
     .select($"event_id", $"event_type", $"value")
 
+  /** Run `job` with a temporary listener summing shuffle-written
+    * records, then spin until the async listener bus goes quiet (fixed
+    * sleeps race with stragglers). Returns (result, records). */
+  private def measureShuffleWrites[A](job: => A): (A, Long) = {
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val m = te.taskMetrics
+        if (m != null) records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = job
+      var last = -1L
+      var spins = 0
+      while (spins < 25 && records.get != last) {
+        last = records.get; spins += 1; Thread.sleep(200)
+      }
+      (r, records.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("custom physical operator matches the window formulation exactly") {
     val native = TopKPerGroup(events, Seq("event_type"),
         Seq(("value", false), ("event_id", true)), k = 3)
@@ -93,7 +117,7 @@ class TopKPerGroupSpec extends SparkSpec {
       .repartition(8).localCheckpoint(true)
     def topK = TopKPerGroup(big, Seq("event_type"),
       Seq(("value", false), ("event_id", true)), k = 3)
-    val (rows, shuffled, _) = graft.core.Util.measureShuffleWrites(spark) {
+    val (rows, shuffled) = measureShuffleWrites {
       topK.orderBy(col("event_type"), desc("value"), col("event_id"))
         .collect().map(_.toString).toSeq
     }

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.sources.v2.{RestFixture, RestMicroBatchStream, RestOffset, RestRangePartition}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 

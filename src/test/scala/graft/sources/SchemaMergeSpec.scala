@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** S11 heterogeneous JSON ingestion: part-files with differing column

@@ -3,15 +3,9 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Partitioned-write + compaction sinks: the table-layout maintenance
-  * operators a long-lived 100-TB dataset needs. */
+/** CSV and partitioned-parquet sinks: the table-layout operators a
+  * long-lived 100-TB dataset needs. */
 class SinkSpec extends SparkSpec {
-
-  private def listParquet(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(dir).iterator().asScala
-      .filter(_.toString.endsWith(".parquet")).toSeq
-  }
 
   test("CSV roundtrip is lossless under commas, quotes, and unicode") {
     import spark.implicits._
@@ -79,20 +73,5 @@ class SinkSpec extends SparkSpec {
     val scanned = one.select(input_file_name()).distinct().collect()
       .map(_.getString(0))
     assert(scanned.forall(_.contains("event_type=click")))
-  }
-
-  test("compactParquet: many small files become few, rows preserved") {
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
-    val scattered = graft.core.Util.scratchDir("graft_scatter")
-    events.repartition(64).write.mode("overwrite")
-      .parquet(scattered.toString)
-    assert(listParquet(scattered).size >= 32)
-    val compacted = graft.core.Util.scratchDir("graft_compact")
-    val n = Sources.compactParquet(spark, scattered.toString,
-      compacted.toString)
-    val files = listParquet(compacted)
-    assert(files.size == n, s"expected $n files, got ${files.size}")
-    assert(files.size < 8) // tiny input → a handful of target files
-    assert(spark.read.parquet(compacted.toString).count() == events.count())
   }
 }

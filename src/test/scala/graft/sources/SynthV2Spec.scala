@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.sources.v2.{SynthScanBuilder, SynthPartition}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
-import org.apache.spark.sql.types.StructType
 
 /** The DSv2 source's two real capabilities: pushdown-driven partition
   * pruning and column pruning — plus end-to-end row parity. */

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The s18 oracle gates the supplier fixture; this spec gates the part
   * of the XML adapter the fixture can't reach — markup-significant and

@@ -7,95 +7,6 @@ import java.sql.Timestamp
 
 class StreamSpec extends SparkSpec {
 
-  test("windowed counts with watermark over a memory stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String)]
-    val df = mem.toDF.toDF("ts", "event_type")
-    val agg = StreamIngest.windowedCounts(df, "ts", "event_type",
-      window = "1 hour", watermark = "2 hours")
-    val q = agg.writeStream.format("memory").queryName("wc")
-      .outputMode("update").start()
-    try {
-      mem.addData(
-        (Timestamp.valueOf("2024-01-01 00:10:00"), "error"),
-        (Timestamp.valueOf("2024-01-01 00:20:00"), "error"),
-        (Timestamp.valueOf("2024-01-01 01:10:00"), "click"))
-      q.processAllAvailable()
-      val rows = spark.table("wc")
-        .select($"event_type", $"cnt").as[(String, Long)].collect().toMap
-      assert(rows("error") == 2L)
-      assert(rows("click") == 1L)
-    } finally q.stop()
-  }
-
-  test("sessionize: per-user counts and duration via mapGroupsWithState") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamIngest.SessionEvent]
-    val sessions = StreamIngest.sessionize(mem.toDS(), gapMs = 0)
-    val q = sessions.writeStream.format("memory").queryName("sess")
-      .outputMode("update").start()
-    try {
-      mem.addData(
-        StreamIngest.SessionEvent(1L, 1000L),
-        StreamIngest.SessionEvent(1L, 5000L),
-        StreamIngest.SessionEvent(2L, 2000L))
-      q.processAllAvailable()
-      val rows = spark.table("sess")
-        .as[StreamIngest.SessionOut].collect().map(s => s.userId -> s).toMap
-      assert(rows(1L).nEvents == 2L && rows(1L).durationMs == 4000L)
-      assert(rows(2L).nEvents == 1L && rows(2L).durationMs == 0L)
-      assert(!rows(1L).closed)
-    } finally q.stop()
-  }
-
-  test("sessionizeOnClose emits exactly once, when the watermark passes") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def t(ms: Long) = new java.sql.Timestamp(ms)
-    val mem = MemoryStream[StreamIngest.TimedEvent]
-    val sessions = StreamIngest.sessionizeOnClose(mem.toDS(), gapMs = 1000)
-    val q = sessions.writeStream.format("memory").queryName("sess_close")
-      .outputMode("append").start()
-    try {
-      mem.addData(StreamIngest.TimedEvent(7L, t(1000)),
-        StreamIngest.TimedEvent(7L, t(2500)))
-      q.processAllAvailable()
-      assert(spark.table("sess_close").isEmpty) // open session: no output
-      // a much-later event advances the event-time watermark past
-      // last(7) + gap -> user 7's session closes deterministically
-      mem.addData(StreamIngest.TimedEvent(8L, t(100000)))
-      q.processAllAvailable()
-      val closed = spark.table("sess_close")
-        .as[StreamIngest.SessionOut].collect()
-      assert(closed.exists(s => s.userId == 7L && s.nEvents == 2L &&
-        s.durationMs == 1500L && s.closed))
-      assert(!closed.exists(_.userId == 8L)) // still open
-    } finally q.stop()
-  }
-
-  test("file-source json stream ingests the error filter path") {
-    import spark.implicits._
-    val dir = graft.core.Util.scratchDir("graft_stream").toString
-    val out = graft.core.Util.scratchDir("graft_stream_out").toString
-    val chk = graft.core.Util.scratchDir("graft_stream_chk").toString
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id LONG, event_type STRING")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "part1.json"),
-      """{"event_id":1,"event_type":"error"}
-        |{"event_id":2,"event_type":"click"}
-        |{"event_id":3,"event_type":"error"}""".stripMargin)
-    val stream = StreamIngest.readJsonStream(spark, dir, schema)
-    val errs = StreamIngest.errorEvents(stream, "event_type", Seq("error"))
-    val q = StreamIngest.writeParquetStream(errs, out, chk)
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.read.parquet(out).select("event_id")
-      .as[Long].collect().sorted
-    assert(got.toSeq == Seq(1L, 3L))
-  }
-
   test("streamingDedup suppresses duplicates ACROSS micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -141,25 +141,5 @@ class TwsSpec extends SparkSpec {
       .select($"key.k").as[String].collect().sorted.toSeq
     assert(keys == Seq("a", "b", "c"),
       "state keys == distinct set across batches")
-
-    // full circle — MIGRATE that checkpoint into a new operator: the
-    // recovered key set seeds SeededDedupProcessor, so the upgraded
-    // dedup continues where dropDuplicates left off, without replay
-    val recovered = spark.read.format("statestore")
-      .option("path", ckpt).load().select($"key.k").as[String]
-    val mem2 = MemoryStream[String]
-    Tws.withRocksDb(spark) {
-      val q2 = Tws.seededDedup(mem2.toDS(), recovered).toDF("k")
-        .writeStream.format("memory").queryName("tws_migrated")
-        .outputMode("update").start()
-      try {
-        mem2.addData("b", "d", "d", "e")
-        q2.processAllAvailable()
-        val out = spark.table("tws_migrated")
-          .as[String].collect().sorted.toSeq
-        assert(out == Seq("d", "e"),
-          "migrated keys suppressed; only genuinely-new keys emit once")
-      } finally q2.stop()
-    }
   }
 }

@@ -5,13 +5,16 @@ import graft.SparkSpec
 import graft.expr.BpeModel
 
 class BpeSpec extends SparkSpec {
-  import spark.implicits._
 
   // hand-computable toy corpus: {"aaab"×3, "ab"×2}
   //   iter 1: (a,a)=6 > (a,b)=5            -> merge (a,a)
   //   iter 2: words [aa,a,b]×3 [a,b]×2: (a,b)=5 > (aa,a)=3 -> merge (a,b)
   //   iter 3: words [aa,ab]×3 [ab]×2: (aa,ab)=3            -> merge (aa,ab)
   private val toyFreqs = Seq("aaab" -> 3L, "ab" -> 2L)
+
+  // the pinned merges as a SQL array of the kernel's "x y" wire strings
+  private lazy val pinnedLit = Bpe.pinnedMerges
+    .map { case (x, y) => s"'$x $y'" }.mkString("array(", ",", ")")
 
   test("trainFromFreqs: golden merge sequence on the toy corpus") {
     assert(Bpe.trainFromFreqs(toyFreqs, 3) ===
@@ -80,10 +83,9 @@ class BpeSpec extends SparkSpec {
     assert(m.encode("the") === "the") // most frequent seed word is one piece
     // kernel through the registered SQL function agrees with the driver model
     graft.expr.GraftFunctions.ensureRegistered(spark)
-    val lit = Bpe.pinnedMergesWire.map(s => s"'$s'").mkString("array(", ",", ")")
     val words = Seq("the", "scan", "batch", "aaaaa", "customer")
     val got = spark.sql(
-      s"SELECT graft_bpe_encode(w, $lit) FROM VALUES ${
+      s"SELECT graft_bpe_encode(w, $pinnedLit) FROM VALUES ${
         words.map(w => s"('$w')").mkString(",")} AS t(w)")
       .collect().map(_.getString(0)).toSeq
     assert(got === words.map(m.encode))
@@ -92,14 +94,13 @@ class BpeSpec extends SparkSpec {
   test("count kernel: whitespace split parity and null/blank edges") {
     graft.expr.GraftFunctions.ensureRegistered(spark)
     val m = model(Bpe.pinnedMerges)
-    val lit = Bpe.pinnedMergesWire.map(s => s"'$s'").mkString("array(", ",", ")")
     def count(s: String): Any =
-      spark.sql(s"SELECT graft_bpe_count('$s', $lit)").collect()(0).get(0)
+      spark.sql(s"SELECT graft_bpe_count('$s', $pinnedLit)").collect()(0).get(0)
     assert(count("the scan") === m.pieceCount("the") + m.pieceCount("scan").toLong)
     assert(count("  the\\tscan\\n") === m.pieceCount("the") + m.pieceCount("scan").toLong)
     assert(count("") === 0L)
     assert(count("   ") === 0L)
-    assert(spark.sql(s"SELECT graft_bpe_count(CAST(NULL AS STRING), $lit)")
+    assert(spark.sql(s"SELECT graft_bpe_count(CAST(NULL AS STRING), $pinnedLit)")
       .collect()(0).isNullAt(0))
   }
 

@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Semantic gate for the char-trigram LM score (the exact-value gate is
   * the DuckDB oracle on llm_charlm_nll): fluent text under the training

@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class FiltersSpec extends SparkSpec {
   import spark.implicits._
