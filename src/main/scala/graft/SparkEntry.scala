@@ -160,6 +160,11 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
+  /** The fixture arms' one vector-search query: vec_id 0 and its vector. */
+  private def query0(emb: DataFrame): Seq[(Long, Seq[Float])] =
+    Seq(0L -> emb.filter(col("vec_id") === 0L)
+      .select("embedding").head().getSeq[Float](0))
+
   /** st10 writes a real parquet copy of the wire-format topic (unlike
     * [[fixtureStream]]'s symlink, the envelope columns don't exist in the
     * fixture) — memoize it per input dir so repeated Verify/Bench
@@ -2281,9 +2286,8 @@ object SparkEntry {
     }),
     "llm_cosine_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0)
-      Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
+      Similarity.bruteForceTopK(emb, "vec_id", "embedding", query0(emb), 10)
+        .drop("q_id")
     }),
     // lexical BM25 top-k — the sparse-retrieval partner of the dense
     // cosine top-k above (hybrid search = union of the two ranked lists).
@@ -2323,9 +2327,8 @@ object SparkEntry {
     // recomposes BOTH proven oracle pipelines and fuses them in SQL
     "llm_rrf_fusion" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0)
-      val dense = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 30)
+      val dense = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
+          query0(emb), 30)
         .select(col("vec_id").as("id"), col("cos_sim").as("score"))
       val lex = Tfidf.bm25TopK(docTokens(s, dir), "doc_id", "tokens",
           Seq("dup", "hash", "join"), 30)
@@ -2366,45 +2369,27 @@ object SparkEntry {
     "llm_cosine_topk_i8" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val n = Tables.rowCount(s, dir, "embeddings")
-      if (n == graft.gates.ScaleGates.FixtureRows) {
-        val quant = Similarity.quantizeInt8(
-          emb, "vec_id", "embedding", withScale = false)
-        val q = quant.filter(col("vec_id") === 0L)
-          .select("codes").head().getSeq[Byte](0)
-        Similarity.quantizedTopK(quant, "vec_id", "codes", q, 10)
-      }
+      if (n == graft.gates.ScaleGates.FixtureRows)
+        Similarity.quantizedTopK(
+            Similarity.quantizeInt8(emb, "vec_id", "embedding"),
+            "vec_id", "codes", query0(emb), 10)
+          .drop("q_id")
       // off-fixture: the SimilaritySpec recall gate at the live scale —
       // exact side from the SHARED memoized one-pass table, approx side
       // quantized over the (possibly capped) gate corpus and served by
-      // the BATCHED integer-MAC scan (one job for all 10 queries; the
-      // query codes come from the same graft_quantize_i8 kernel applied
-      // driver-side to the ctx's query vectors, so query and corpus
-      // quantize identically)
+      // one integer-MAC scan for all 10 queries
       else {
-        import s.implicits._
         val ctx = graft.gates.ScaleGates.annCtx(
           emb, "vec_id", "embedding", dir, n)
-        val quant = Similarity.quantizeInt8(
-          ctx.corpus, "vec_id", "embedding", withScale = false)
-        val qCodes = ctx.qids.map(q => (q, ctx.qvec(q)))
-          .toDF("q_id", "v")
-          .withColumn("v", col("v").cast("array<float>"))
-          .select(col("q_id"),
-            call_function("graft_quantize_i8", col("v")).as("codes"))
-          .collect().map(r => (r.getLong(0), r.getSeq[Byte](1))).toSeq
-        val approx = Similarity.quantizedTopKBatch(
-            quant, "vec_id", "codes", qCodes, 10)
-          .select(col("q_id"), col("vec_id").cast("long"))
-          .as[(Long, Long)].collect()
-          .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-        graft.gates.ScaleGates.recallFlagFrame(ctx,
-          q => approx.getOrElse(q, Set.empty))
+        graft.gates.ScaleGates.recallFlagFrame(ctx, Similarity.quantizedTopK(
+          Similarity.quantizeInt8(ctx.corpus, "vec_id", "embedding"),
+          "vec_id", "codes", ctx.queries, 10))
       }
     }),
     // embedding-cosine near-dup pairs, EXACT bounded form: scan × scan
     // with the fused native cosine kernel, threshold chosen where the
     // fixture has real pairs (its cosines top out ~0.5 — no planted
-    // embedding dups). The LSH path (annCosineJoin) is the scale variant
+    // embedding dups). The LSH path (annTopK) is the scale variant
     // for genuine near-dup regimes (cosine→1, where banding has recall);
     // at cosine 0.4 banding is the wrong tool and exact is the contract.
     "llm_cosine_neardup" -> ((s, dir) => {
@@ -2488,52 +2473,44 @@ object SparkEntry {
     "llm_ann_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val n = Tables.rowCount(s, dir, "embeddings")
-      // 12 bands × 3 bits: the recall-gated config — SimilaritySpec
-      // measures mean recall@10 = 0.95 vs brute force on the fixture
-      def ann(q: Seq[Float]) = Similarity.annTopK(emb, "vec_id",
-        "embedding", q, 10, bands = 12, bitsPerBand = 3)
-      def qvec(qid: Long) = emb.filter(col("vec_id") === qid)
-        .select("embedding").head().getSeq[Float](0)
-      if (n == graft.gates.ScaleGates.FixtureRows) ann(qvec(0L))
+      if (n == graft.gates.ScaleGates.FixtureRows)
+        Similarity.annTopK(emb, "vec_id", "embedding", query0(emb), 10)
+          .drop("q_id")
       // off-fixture: the SimilaritySpec recall gate at the live scale,
-      // all 10 query vectors batched through ONE LSH join over the gate
-      // corpus; exact side from the SHARED memoized one-pass table
-      else graft.gates.ScaleGates.annRecallGateBatched(
-        graft.gates.ScaleGates.annCtx(emb, "vec_id", "embedding", dir, n),
-        "vec_id", "embedding", bands = 12, bitsPerBand = 3)
+      // all 10 query vectors through ONE LSH join over the gate corpus;
+      // exact side from the SHARED memoized one-pass table
+      else {
+        val ctx = graft.gates.ScaleGates.annCtx(
+          emb, "vec_id", "embedding", dir, n)
+        graft.gates.ScaleGates.recallFlagFrame(ctx,
+          Similarity.annTopK(ctx.corpus, "vec_id", "embedding",
+            ctx.queries, 10))
+      }
     }),
     "llm_ivf_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val n = Tables.rowCount(s, dir, "embeddings")
       // nprobe=4 of nlist=8: the recall-gated config — SimilaritySpec
       // measures mean recall@10 = 0.92 vs brute force on the fixture
-      def qvec(qid: Long) = emb.filter(col("vec_id") === qid)
-        .select("embedding").head().getSeq[Float](0)
-      if (n == graft.gates.ScaleGates.FixtureRows) {
-        val (_, search) = Similarity.ivfIndex(emb, "vec_id", "embedding",
-          nlist = 8, cache = false, nprobe = 4)
-        search(qvec(0L))(10)
-      } else {
+      if (n == graft.gates.ScaleGates.FixtureRows)
+        Similarity.ivfTopK(emb, "vec_id", "embedding", query0(emb), 10,
+            nlist = 8, nprobe = 4)
+          .drop("q_id")
+      else {
         // off-fixture: IVF must be RETUNED as the corpus grows (the
         // faiss rule of thumb nlist ~ sqrt(n)); the fixture's 8/4 grid
         // measured recall 0.81 at 2000 vectors — a real scale finding,
         // answered by retuning, not by lowering the floor. Index built
         // over the gate corpus (nlist from ITS size), exact side from
-        // the SHARED memoized one-pass table, all 10 probes through ONE
-        // cell-keyed join (ivfTopKBatch)
-        import s.implicits._
+        // the SHARED memoized one-pass table, all 10 queries scored in
+        // one pass over the cell assignment
         val ctx = graft.gates.ScaleGates.annCtx(
           emb, "vec_id", "embedding", dir, n)
         val nlist = math.max(8,
           math.ceil(math.sqrt(ctx.gateN.toDouble)).toInt)
-        val approx = Similarity.ivfTopKBatch(ctx.corpus, "vec_id",
-            "embedding", ctx.qids.map(q => (q, ctx.qvec(q))), 10,
-            nlist = nlist, nprobe = (nlist + 1) / 2)
-          .select(col("q_id"), col("vec_id").cast("long"))
-          .as[(Long, Long)].collect()
-          .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
         graft.gates.ScaleGates.recallFlagFrame(ctx,
-          q => approx.getOrElse(q, Set.empty))
+          Similarity.ivfTopK(ctx.corpus, "vec_id", "embedding",
+            ctx.queries, 10, nlist = nlist, nprobe = (nlist + 1) / 2))
       }
     }),
     // product-quantized serving path: 8-byte codes (32× less than
@@ -2545,12 +2522,10 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val n = Tables.rowCount(s, dir, "embeddings")
       if (n == graft.gates.ScaleGates.FixtureRows) {
-        val (encoded, books) = Similarity.pqIndex(emb, "vec_id",
-          "embedding", m = 8, ksub = 32)
-        val q = emb.filter(col("vec_id") === 0L)
-          .select("embedding").head().getSeq[Float](0)
+        val (encoded, books) = Similarity.pqIndex(emb, "vec_id", "embedding")
         Similarity.pqTopK(encoded, books, "vec_id", "embedding",
-          q, 10, rerank = 100)
+            query0(emb), 10, rerank = 100)
+          .drop("q_id")
       } else {
         // off-fixture: the rerank depth must track the corpus (fixed
         // 100 covered 20% of the fixture but 5% at 2000 vectors —
@@ -2560,21 +2535,15 @@ object SparkEntry {
         // recall flag reports the measured value instead of silently
         // paying unbounded gate cost. Codebook fit + encode over the
         // gate corpus; exact side from the SHARED memoized table; all
-        // 10 ADC scans fused into ONE corpus pass (pqTopKBatch)
-        import s.implicits._
+        // 10 ADC scans fused into ONE corpus pass
         val ctx = graft.gates.ScaleGates.annCtx(
           emb, "vec_id", "embedding", dir, n)
-        val (encoded, books) = Similarity.pqIndex(ctx.corpus, "vec_id",
-          "embedding", m = 8, ksub = 32)
+        val (encoded, books) =
+          Similarity.pqIndex(ctx.corpus, "vec_id", "embedding")
         val depth = math.max(100, math.min(ctx.gateN / 5, 5000L).toInt)
-        val approx = Similarity.pqTopKBatch(encoded, books, "vec_id",
-            "embedding", ctx.qids.map(q => (q, ctx.qvec(q))), 10,
-            rerank = depth)
-          .select(col("q_id"), col("vec_id").cast("long"))
-          .as[(Long, Long)].collect()
-          .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
         graft.gates.ScaleGates.recallFlagFrame(ctx,
-          q => approx.getOrElse(q, Set.empty))
+          Similarity.pqTopK(encoded, books, "vec_id", "embedding",
+            ctx.queries, 10, rerank = depth))
       }
     }),
     "a2_distinct_approx" -> ((s, dir) => {

@@ -6,10 +6,15 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
-  * Brute-force cosine top-k is the exact baseline (one scan +
-  * TakeOrderedAndProject — no shuffle of the vectors themselves); the
-  * scale path buckets both sides with banded random-hyperplane LSH so the
-  * join touches only same-bucket candidates.
+  * Five vector indexes serve cosine top-k: exact ([[bruteForceTopK]]),
+  * int8 codes ([[quantizedTopK]]), banded LSH ([[annTopK]]), IVF cells
+  * ([[ivfTopK]]) and PQ codes with exact rerank ([[pqTopK]]). Each has
+  * ONE search function: it takes `(q_id, query vector)` pairs and
+  * returns `(q_id, <idCol>, cos_sim)`, top k per query. A single query
+  * is a batch of one. The top-k policy — the (cos_sim desc, id asc)
+  * tie-break and the plan — lives in one place, [[topKPerQuery]]: one
+  * query plans scan → TakeOrderedAndProject (a k-row result, no
+  * shuffle); more queries ride one corpus pass and a q_id window.
   */
 object Similarity {
 
@@ -30,16 +35,69 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     call_function("graft_cos_sim", a, b)
 
-  /** Exact brute-force cosine top-k against a literal query vector.
-    * Plans as scan → project → TakeOrderedAndProject: at 100 TB this is
-    * one pass over the vectors with a k-row result, no shuffle. */
+  // Fixed index parameters: every caller ran these values. LSH 12 bands
+  // × 3 bits is the recall-gated config (SimilaritySpec: mean recall@10
+  // 0.95 on the fixture, 8 × 4 measured 0.72); PQ splits d into 8
+  // subspaces of 32 centroids (8-byte codes) by 20 Lloyd rounds; every
+  // index fit samples at most FitCap rows, seeded from Seed. HotCap is
+  // the quadratic-join guard: the most rows an LSH bucket or a SemDeDup
+  // cell may hold and still be joined.
+  private val AnnBands = 12
+  private val AnnBitsPerBand = 3
+  private val HotCap = 100000
+  private val PqM = 8
+  private val PqKsub = 32
+  private val PqIters = 20
+  private val FitCap = 100000L
+  private val Seed = 42L
+
+  private def vecLit(q: Seq[Float]): Column = array(q.map(v => lit(v)): _*)
+
+  /** `(q_id, idCol, score [, keep…])`: every row of `df` scored by each
+    * query's column (an expression over `df`'s columns). One query is a
+    * plain projection; more ride ONE pass — a (q_id, score) struct per
+    * query, exploded per row — so n queries cost one scan, not n. */
+  private def perQuery(df: DataFrame, idCol: String,
+                       scores: Seq[(Long, Column)],
+                       score: String = "cos_sim",
+                       keep: Seq[String] = Nil): DataFrame = {
+    require(scores.nonEmpty, "no queries")
+    val carried = (idCol +: keep).map(col)
+    scores match {
+      case Seq((qid, s)) =>
+        df.select((lit(qid).as("q_id") +: carried) :+ s.as(score): _*)
+      case _ =>
+        val qs = array(scores.map { case (qid, s) =>
+          struct(lit(qid).as("q_id"), s.as(score))
+        }: _*)
+        df.select(carried :+ explode(qs).as("_q"): _*)
+          .select((col("_q.q_id") +: carried) :+ col(s"_q.$score"): _*)
+    }
+  }
+
+  /** The top-k policy of every index: per `q_id`, the `k` rows best by
+    * (`score` desc, `idCol` asc). One query plans orderBy + limit
+    * (TakeOrderedAndProject: no shuffle); more plan a q_id-partitioned
+    * row_number window (rewritten to TopKPerGroup). */
+  private def topKPerQuery(scored: DataFrame, idCol: String, score: String,
+                           k: Int, nQueries: Int): DataFrame = {
+    val order = Seq(desc(score), col(idCol))
+    if (nQueries == 1) scored.orderBy(order: _*).limit(k)
+    else scored
+      .withColumn("_rn",
+        row_number().over(Window.partitionBy("q_id").orderBy(order: _*)))
+      .filter(col("_rn") <= k).drop("_rn")
+  }
+
+  /** Exact brute-force cosine top-k. One query plans as scan → project →
+    * TakeOrderedAndProject: at 100 TB this is one pass over the vectors
+    * with a k-row result, no shuffle of the vectors themselves. */
   def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
-                     query: Seq[Float], k: Int): DataFrame = {
+                     queries: Seq[(Long, Seq[Float])], k: Int): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
-    val q = array(query.map(v => lit(v)): _*)
-    df.select(col(idCol), cosine(col(vecCol), q).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
+    topKPerQuery(perQuery(df, idCol, queries.map { case (qid, q) =>
+      qid -> cosine(col(vecCol), vecLit(q))
+    }), idCol, "cos_sim", k, queries.size)
   }
 
   /** Reciprocal-rank fusion of ranked retrieval lists (hybrid search:
@@ -95,10 +153,9 @@ object Similarity {
                 lambda: Double = 0.7): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
     require(k >= 1 && kCand >= k, s"need kCand >= k >= 1, got kCand=$kCand k=$k")
-    val q = array(query.map(v => lit(v)): _*)
     val cands = df
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"),
-        cosine(col(vecCol), q).as("q_sim"))
+        cosine(col(vecCol), vecLit(query)).as("q_sim"))
       .orderBy(desc("q_sim"), col("id"))
       .limit(kCand)
       .collect()
@@ -152,68 +209,38 @@ object Similarity {
   }
 
   /** Per-vector symmetric int8 quantization: codes = round(x/s) with
-    * s = max|x|/127, emitted as `array<tinyint>` (+ the scale, for
-    * callers that reconstruct magnitudes). 4× less storage/shuffle/cache
-    * than float32 — the standard embedding-serving trade. COSINE needs no
-    * dequantization at all (per-vector scales cancel), so quantized
-    * search is [[quantizedTopK]]'s integer kernel over the codes; recall
-    * vs float brute-force is spec-gated, not assumed (QuantizeSpec).
-    * All-zero vectors quantize to all-zero codes (scale 0 guard). */
-  def quantizeInt8(df: DataFrame, idCol: String, vecCol: String,
-                   withScale: Boolean = true): DataFrame = {
+    * s = max|x|/127, emitted as `array<tinyint>`. 4× less
+    * storage/shuffle/cache than float32 — the standard embedding-serving
+    * trade. COSINE needs no dequantization at all (per-vector scales
+    * cancel), so quantized search is [[quantizedTopK]]'s integer kernel
+    * over the codes; recall vs float brute-force is spec-gated, not
+    * assumed (SimilaritySpec). All-zero vectors quantize to all-zero
+    * codes (scale 0 guard). */
+  def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
     // codes come from the single-pass native kernel (the HOF transform
     // formulation paid interpreted per-element lambdas — it buried the
-    // downstream integer kernel, 5.1 s vs 0.77 s float at ×100); the
-    // scale column is optional metadata for magnitude reconstruction
-    val base = df.select(col(idCol),
-      call_function("graft_quantize_i8", col(vecCol)).as("codes"),
-      col(vecCol))
-    if (withScale)
-      base.select(col(idCol), col("codes"),
-        (array_max(transform(col(vecCol), x => abs(x))) / lit(127.0f))
-          .cast("float").as("q_scale"))
-    else base.select(col(idCol), col("codes"))
-  }
-
-  /** Exact brute-force cosine top-k over int8 codes — the same
-    * scan → TakeOrderedAndProject shape as [[bruteForceTopK]], but the
-    * scan reads 4×-smaller vectors and the kernel is integer MAC
-    * (graft_cos_sim_i8). Approximate only through quantization rounding
-    * (recall@10 spec-gated ≥ 0.9 vs the float path). */
-  def quantizedTopK(df: DataFrame, idCol: String, codesCol: String,
-                    queryCodes: Seq[Byte], k: Int): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
-    val q = array(queryCodes.map(v => lit(v)): _*)
+    // downstream integer kernel, 5.1 s vs 0.77 s float at ×100)
     df.select(col(idCol),
-        call_function("graft_cos_sim_i8", col(codesCol), q).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
+      call_function("graft_quantize_i8", col(vecCol)).as("codes"))
   }
 
-  /** Batched [[quantizedTopK]]: every query rides ONE corpus pass (the
-    * query codes are a foldable struct-array literal each row explodes
-    * over — same graft_cos_sim_i8 serving kernel), then top-k per query
-    * by a q_id-partitioned window. n separate quantizedTopK calls each
-    * pay a full scan + job; a 10-query batch at sf0.1 measured the
-    * difference as the dominant share of the i8 recall gate's wall.
-    * Returns (q_id, idCol, cos_sim), top-k per q_id. */
-  def quantizedTopKBatch(df: DataFrame, idCol: String, codesCol: String,
-                         queries: Seq[(Long, Seq[Byte])],
-                         k: Int): DataFrame = {
+  /** Exact brute-force cosine top-k over int8 codes — the same plans as
+    * [[bruteForceTopK]], but the scan reads 4×-smaller vectors and the
+    * kernel is integer MAC (graft_cos_sim_i8). The float queries are
+    * quantized on the driver by `VecKernels.quantizeI8`, the function
+    * the graft_quantize_i8 kernel calls, so query and corpus codes
+    * agree. Approximate only through quantization rounding (recall@10
+    * spec-gated ≥ 0.9 vs the float path). */
+  def quantizedTopK(df: DataFrame, idCol: String, codesCol: String,
+                    queries: Seq[(Long, Seq[Float])], k: Int): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
-    require(queries.nonEmpty, "quantizedTopKBatch: no queries")
-    val qlit = array(queries.map { case (qid, qc) =>
-      struct(lit(qid).as("q_id"),
-        array(qc.map(v => lit(v)): _*).as("q_codes"))
-    }: _*)
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), col(idCol))
-    df.select(col(idCol), explode(qlit).as("_q"), col(codesCol))
-      .select(col("_q.q_id").as("q_id"), col(idCol),
-        call_function("graft_cos_sim_i8", col(codesCol), col("_q.q_codes"))
-          .as("cos_sim"))
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
-      .select(col("q_id"), col(idCol), col("cos_sim"))
+    topKPerQuery(perQuery(df, idCol, queries.map { case (qid, q) =>
+      val codes = graft.expr.VecKernels
+        .quantizeI8(q.map(_.toDouble).toArray).toByteArray()
+      qid -> call_function("graft_cos_sim_i8", col(codesCol),
+        array(codes.toSeq.map(v => lit(v)): _*))
+    }), idCol, "cos_sim", k, queries.size)
   }
 
   /** Banded random-hyperplane LSH keys: `bands` keys of `bitsPerBand` sign
@@ -234,9 +261,6 @@ object Similarity {
     }: _*)
   }
 
-  /** Approximate cosine similarity join: bucket both sides with the same
-    * banded LSH, join per (band, bucket), verify exact cosine ≥ threshold.
-    * Returns (left id, right id, cos_sim) distinct pairs. */
   /** (id_<side> [, vec_<side>], band, bucket) band-keyed rows — the ONE
     * keying expression every banded consumer shares. `withVec = false`
     * keeps the stream id-only (~16 B/row) for consumers that re-attach
@@ -284,84 +308,81 @@ object Similarity {
       .dropDuplicates("id_a", "id_b")
   }
 
-  def annCosineJoin(left: DataFrame, right: DataFrame, idCol: String,
-                    vecCol: String, threshold: Double, bands: Int = 8,
-                    bitsPerBand: Int = 4,
-                    maxBucketSize: Int = 100000,
-                    excludeSelf: Boolean = true): DataFrame = {
-    // guard counted on the RIGHT side (the corpus in query-vs-corpus use)
-    val rightKeyed = rhpKeyed(right, idCol, vecCol, "r", bands, bitsPerBand,
+  /** Approximate nearest-neighbor top-k via banded LSH: the queries (a
+    * (q_id, vector) frame — the same bucketing expression both sides, so
+    * no driver-side hashing) join the corpus per (band, bucket), the
+    * distinct (query, candidate) pairs score by exact cosine. The
+    * hot-bucket guard is counted on the corpus side. A query whose
+    * buckets hold fewer than k candidates gets fewer than k rows: that
+    * is the ANN contract. A query's own row is a legitimate candidate
+    * when it is in the corpus (as in brute force). */
+  def annTopK(df: DataFrame, idCol: String, vecCol: String,
+              queries: Seq[(Long, Seq[Float])], k: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val qdf = queries.toDF(idCol, vecCol)
+      .withColumn(vecCol, col(vecCol).cast("array<float>"))
+    val corpus = rhpKeyed(df, idCol, vecCol, "r", AnnBands, AnnBitsPerBand,
       withVec = true)
-    val okBuckets = popOkBuckets(rightKeyed, maxBucketSize)
-    val cands = rhpKeyed(left, idCol, vecCol, "l", bands, bitsPerBand,
+    val scored = rhpKeyed(qdf, idCol, vecCol, "l", AnnBands, AnnBitsPerBand,
         withVec = true)
-      .join(rightKeyed.join(okBuckets, Seq("band", "bucket"), "left_semi"),
-        Seq("band", "bucket"))
-      .filter(if (excludeSelf) col("id_l") =!= col("id_r") else lit(true))
+      .join(corpus.join(popOkBuckets(corpus, HotCap),
+        Seq("band", "bucket"), "left_semi"), Seq("band", "bucket"))
       .select("id_l", "vec_l", "id_r", "vec_r")
       .dropDuplicates("id_l", "id_r")
-    cands
-      .withColumn("cos_sim", cosine(col("vec_l"), col("vec_r")))
-      .filter(col("cos_sim") >= threshold)
-      .select("id_l", "id_r", "cos_sim")
+      .select(col("id_l").as("q_id"), col("id_r").as(idCol),
+        cosine(col("vec_l"), col("vec_r")).as("cos_sim"))
+    topKPerQuery(scored, idCol, "cos_sim", k, queries.size)
+  }
+
+  /** The seeded ≤ `cap`-row sample an index fits on (the whole frame
+    * when it is smaller): one count job, then faiss practice — the fit
+    * trains on a sample, never on the corpus. */
+  private def fitSample(df: DataFrame, cap: Long): DataFrame = {
+    val n0 = df.count()
+    if (n0 > cap)
+      df.sample(withReplacement = false, cap.toDouble / n0, seed = Seed + 1)
+    else df
   }
 
   /** IVF (inverted-file) approximate top-k: partition vectors into nlist
-    * KMeans cells once (the "index"), then search only the nprobe cells
-    * whose centroids are nearest the query. The scale path when LSH recall
-    * is too coarse: cell assignment is one narrow column, candidates are
-    * nprobe/nlist of the data, and the final ranking is exact cosine.
-    * Returns (model to reuse, search function). */
-  def ivfIndex(df: DataFrame, idCol: String, vecCol: String,
-               nlist: Int = 16, seed: Long = 42L, cache: Boolean = true,
-               nprobe: Int = 0, fitCap: Long = 100000L)
-      : (DataFrame, Seq[Float] => Int => DataFrame) = {
+    * KMeans cells (the "index"), then score each query only against the
+    * `nprobe` cells whose centroids are nearest it (nlist/4 when 0 —
+    * more probed cells, higher recall, more data touched). The scale
+    * path when LSH recall is too coarse: cell assignment is one narrow
+    * column, candidates are nprobe/nlist of the data, and the final
+    * ranking is exact cosine. A row outside a query's probed cells
+    * scores null for it and drops. */
+  def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
+              queries: Seq[(Long, Seq[Float])], k: Int,
+              nlist: Int = 16, nprobe: Int = 0,
+              fitCap: Long = FitCap): DataFrame = {
     val (assigned, centroids) =
-      ivfFit(df, idCol, vecCol, nlist, seed, cache, fitCap)
-    val search: Seq[Float] => Int => DataFrame = q => k => {
-      // recall/cost knob: more probed cells → higher recall, more data
-      // touched; nlist/4 is the usual starting point
-      val np = if (nprobe > 0) nprobe else math.max(1, nlist / 4)
-      val cells = probeCells(centroids, q, np)
-      val qc = array(q.map(v => lit(v)): _*)
-      assigned.filter(col("_cell").isin(cells.toIndexedSeq: _*))
-        .select(col(idCol), cosine(col(vecCol), qc).as("cos_sim"))
-        .orderBy(desc("cos_sim"), col(idCol))
-        .limit(k)
-    }
-    (assigned, search)
+      ivfFit(df, idCol, vecCol, nlist, cache = false, fitCap)
+    val np = if (nprobe > 0) nprobe else math.max(1, nlist / 4)
+    val scored = perQuery(assigned, idCol, queries.map { case (qid, q) =>
+      qid -> when(col("_cell").isin(probeCells(centroids, q, np).toSeq: _*),
+        cosine(col(vecCol), vecLit(q)))
+    }).filter(col("cos_sim").isNotNull)
+    topKPerQuery(scored, idCol, "cos_sim", k, queries.size)
   }
 
-  /** The shared IVF build: capped seeded centroid fit + one full-corpus
-    * assignment pass. Centroid fit is capped to a seeded sample
-    * (Embed.word2vec / the standard IVF practice — faiss trains on
-    * ~max(10k·nlist, sample)): KMeans.fit is an iterative FULL scan per
-    * iteration, so an uncapped fit makes the index build the
-    * corpus-scale bottleneck. Cell ASSIGNMENT stays full-corpus — one
-    * linear transform pass. (fitCap = Long.MaxValue means explicitly
-    * uncapped: skip the sizing count entirely — the cap statically
-    * cannot bind.) Cache only when the caller will issue repeated
-    * searches — a cached frame with no owner to unpersist it leaks
-    * executor storage. */
+  /** The shared IVF build: a centroid fit on a seeded ≤ fitCap sample
+    * ([[fitSample]]: KMeans.fit is an iterative FULL scan per iteration,
+    * so an uncapped fit makes the index build the corpus-scale
+    * bottleneck) + one full-corpus assignment pass. Cache only when the
+    * caller reads the assignment more than once and unpersists it
+    * (SemDeDup) — a cached frame with no owner leaks executor storage. */
   private def ivfFit(df: DataFrame, idCol: String, vecCol: String,
-                     nlist: Int, seed: Long, cache: Boolean,
+                     nlist: Int, cache: Boolean,
                      fitCap: Long): (DataFrame, Array[Array[Double]]) = {
     val spark = df.sparkSession
     graft.expr.GraftFunctions.ensureRegistered(spark)
     val vecs = df.select(col(idCol), col(vecCol),
       graft.ml.VectorOps.toMlVector(col(vecCol)).as("_mlvec"))
-    val fitVecs =
-      if (fitCap == Long.MaxValue) vecs
-      else {
-        val n0 = vecs.count()
-        if (n0 > fitCap)
-          vecs.sample(withReplacement = false, fitCap.toDouble / n0,
-            seed = seed + 1)
-        else vecs
-      }
     val km = new org.apache.spark.ml.clustering.KMeans()
-      .setK(nlist).setSeed(seed).setFeaturesCol("_mlvec")
-      .setPredictionCol("_cell").fit(fitVecs)
+      .setK(nlist).setSeed(Seed).setFeaturesCol("_mlvec")
+      .setPredictionCol("_cell").fit(fitSample(vecs, fitCap))
     val assignedRaw = km.transform(vecs).drop("_mlvec")
     val assigned = if (cache) assignedRaw.cache() else assignedRaw
     (assigned, km.clusterCenters.map(_.toArray))
@@ -379,34 +400,6 @@ object Similarity {
     centroids.zipWithIndex.sortBy(p => d2(p._1)).take(np).map(_._2)
   }
 
-  /** Batched IVF search: builds the index once, routes EVERY query's
-    * probe list through ONE join keyed on the cell id — (q_id, cell)
-    * rows broadcast against the assignment, exact cosine inside the
-    * probed cells, top-k per query by window. n separate search() calls
-    * each pay a filter+scan job over the assignment; the batch pays one.
-    * Returns (q_id, idCol, cos_sim), top-k per q_id. */
-  def ivfTopKBatch(df: DataFrame, idCol: String, vecCol: String,
-                   queries: Seq[(Long, Seq[Float])], k: Int,
-                   nlist: Int = 16, nprobe: Int = 0, seed: Long = 42L,
-                   fitCap: Long = 100000L): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    require(queries.nonEmpty, "ivfTopKBatch: no queries")
-    val (assigned, centroids) =
-      ivfFit(df, idCol, vecCol, nlist, seed, cache = false, fitCap)
-    val np = if (nprobe > 0) nprobe else math.max(1, nlist / 4)
-    val probes = queries.flatMap { case (qid, q) =>
-      probeCells(centroids, q, np).map(c => (qid, c, q))
-    }.toDF("q_id", "_cell", "_qvec")
-      .withColumn("_qvec", col("_qvec").cast("array<float>"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), col(idCol))
-    assigned.join(broadcast(probes), Seq("_cell"))
-      .select(col("q_id"), col(idCol),
-        cosine(col(vecCol), col("_qvec")).as("cos_sim"))
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
-      .select(col("q_id"), col(idCol), col("cos_sim"))
-  }
-
   /** Semantic dedup — the SemDeDup pattern (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding space with a (sample-fit)
     * KMeans, then search for near-duplicate pairs ONLY within each
@@ -417,21 +410,19 @@ object Similarity {
     *
     * Scale shape: the pair search is a self-join KEYED ON THE CLUSTER id
     * — quadratic only within a cluster, never across the corpus; the
-    * centroid fit is the capped one-pass-assignment [[ivfIndex]] build.
-    * Clusters larger than `maxClusterSize` are EXCLUDED from the pair
-    * search (their members all stay keepers — the conservative direction
-    * for a dedup: nothing is dropped by an unverified pair), mirroring
-    * [[annCosineJoin]]'s hot-bucket guard; raise k (more, smaller
-    * clusters) rather than the cap when that triggers. Cross-cluster
-    * near-dup pairs are missed BY DESIGN — that is SemDeDup's documented
-    * recall trade (quality-gated against the exact all-pairs answer in
-    * SemanticDedupSpec, not assumed). */
+    * centroid fit is the capped one-pass-assignment [[ivfFit]] build.
+    * Clusters larger than HotCap rows are EXCLUDED from the pair search
+    * (their members all stay keepers — the conservative direction for a
+    * dedup: nothing is dropped by an unverified pair), mirroring
+    * [[annTopK]]'s hot-bucket guard; raise k (more, smaller clusters)
+    * when that triggers. Cross-cluster near-dup pairs are missed BY
+    * DESIGN — that is SemDeDup's documented recall trade (quality-gated
+    * against the exact all-pairs answer in SemanticDedupSpec, not
+    * assumed). */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-                    k: Int = 16, threshold: Double = 0.95,
-                    fitCap: Long = 100000L, maxClusterSize: Int = 100000,
-                    seed: Long = 42L): DataFrame = {
-    val (assigned, pairs) = semanticDedupPairs(df, idCol, vecCol, k,
-      threshold, fitCap, maxClusterSize, seed)
+                    k: Int = 16, threshold: Double = 0.95): DataFrame = {
+    val (assigned, pairs) =
+      semanticDedupPairs(df, idCol, vecCol, k, threshold)
     val groups = Curation.dupGroups(df.select(col(idCol)), pairs, idCol)
       .withColumnRenamed("doc_id", idCol)
     assigned.unpersist(blocking = false)
@@ -448,13 +439,12 @@ object Similarity {
     * all-pairs plan is exactly what the operator exists to avoid). */
   private[graft] def semanticDedupPairs(
       df: DataFrame, idCol: String, vecCol: String, k: Int,
-      threshold: Double, fitCap: Long, maxClusterSize: Int,
-      seed: Long): (DataFrame, DataFrame) = {
+      threshold: Double): (DataFrame, DataFrame) = {
     graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
-    val (assigned, _) = ivfIndex(df.select(col(idCol), col(vecCol)),
-      idCol, vecCol, nlist = k, seed = seed, cache = true, fitCap = fitCap)
+    val (assigned, _) = ivfFit(df.select(col(idCol), col(vecCol)),
+      idCol, vecCol, nlist = k, cache = true, FitCap)
     val okCells = assigned.groupBy("_cell")
-      .agg(count(lit(1)).as("_cn")).filter(col("_cn") <= maxClusterSize)
+      .agg(count(lit(1)).as("_cn")).filter(col("_cn") <= HotCap)
       .select("_cell")
     val inPlay = assigned.join(okCells, Seq("_cell"), "left_semi")
     def side(s: String) = inPlay.select(col("_cell"),
@@ -466,52 +456,12 @@ object Similarity {
     (assigned, pairs)
   }
 
-  /** Batched ANN top-k: every row of `queries` (idCol = query id,
-    * vecCol) rides ONE LSH join against the corpus — n separate
-    * [[annTopK]] calls each pay the full explode+join (measured +13.4 s
-    * for 10 calls at sf0.1 vs ~1.5 s batched, the r14 recall-gate
-    * finding). Returns (query_id, idCol, cos_sim), top-k per query by
-    * (cos_sim desc, id) — the same tie-break as the single-query form,
-    * which delegates here. */
-  def annTopKBatch(df: DataFrame, idCol: String, vecCol: String,
-                   queries: DataFrame, k: Int, bands: Int = 8,
-                   bitsPerBand: Int = 4): DataFrame =
-    // excludeSelf=false: the left side is the query frame, not the
-    // corpus — id-based self-exclusion would silently drop a legitimate
-    // corpus row sharing the query's id (and brute force includes the
-    // query's own row when it is in the corpus)
-    annCosineJoin(queries, df, idCol, vecCol, threshold = -1.0, bands,
-      bitsPerBand, excludeSelf = false)
-      .withColumn("_rk", row_number().over(Window.partitionBy("id_l")
-        .orderBy(desc("cos_sim"), col("id_r"))))
-      .filter(col("_rk") <= k)
-      .select(col("id_l").as("query_id"), col("id_r").as(idCol),
-        col("cos_sim"))
-
-  /** Approximate nearest-neighbor top-k for a query vector via the LSH
-    * join (query as a 1-row frame — same bucketing expression both sides,
-    * so no driver-side hashing is needed). Falls back to fewer than k rows
-    * when the buckets don't hold k candidates: that is the ANN contract. */
-  def annTopK(df: DataFrame, idCol: String, vecCol: String,
-              query: Seq[Float], k: Int, bands: Int = 8,
-              bitsPerBand: Int = 4): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val qdf = Seq((-1L, query)).toDF(idCol, vecCol)
-      .withColumn(vecCol, col(vecCol).cast("array<float>"))
-    annTopKBatch(df, idCol, vecCol, qdf, k, bands, bitsPerBand)
-      .select(col(idCol), col("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
-  }
-
   /** Product-quantization (PQ) codebooks + corpus encoding — the
     * memory-bound scale path past [[quantizeInt8]]: d float32 dims
-    * compress to `m` bytes per vector (d=64, m=8 → 32× less
-    * scan/cache/shuffle than float32, 4× less than int8), the regime
-    * where the 100 TB corpus' embedding table must live in executor
-    * storage for repeated serving (Jégou et al. 2011, the faiss `PQm`
-    * index).
+    * compress to 8 bytes per vector (d=64 → 32× less scan/cache/shuffle
+    * than float32, 4× less than int8), the regime where the 100 TB
+    * corpus' embedding table must live in executor storage for repeated
+    * serving (Jégou et al. 2011, the faiss `PQm` index).
     *
     * Fit is faiss practice: per-subspace Lloyd k-means over a seeded
     * driver-side sample (capped — the codebook is m·ksub·(d/m) floats of
@@ -526,33 +476,24 @@ object Similarity {
     * Returns (encoded frame: idCol, codes array<tinyint>[m], plus the
     * passed-through vector column for rerank, and the codebooks for
     * [[pqTopK]]). ksub ≤ 128 so codes fit signed bytes. */
-  def pqIndex(df: DataFrame, idCol: String, vecCol: String,
-              m: Int = 8, ksub: Int = 32, fitCap: Long = 100000L,
-              iters: Int = 20, seed: Long = 42L)
+  def pqIndex(df: DataFrame, idCol: String, vecCol: String)
       : (DataFrame, Array[Array[Array[Double]]]) = {
-    require(ksub >= 2 && ksub <= 128, s"ksub must be in [2,128], got $ksub")
     graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
     val normed = df.select(col(idCol), col(vecCol),
       normalized(col(vecCol)).as("_vn"))
-    // seeded capped sample for the fit (same sizing move as ivfIndex)
-    val n0 = normed.count()
-    val fitDf = if (n0 > fitCap)
-      normed.sample(withReplacement = false, fitCap.toDouble / n0,
-        seed = seed + 1)
-    else normed
-    val sample: Array[Array[Double]] = fitDf.select(col("_vn")).collect()
-      .map(_.getSeq[Double](0).toArray)
+    val sample: Array[Array[Double]] = fitSample(normed, FitCap)
+      .select(col("_vn")).collect().map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty, "pqIndex needs a non-empty input")
     val d = sample.head.length
-    require(d % m == 0, s"dim $d must be divisible by m=$m")
-    val dsub = d / m
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
+    require(d % PqM == 0, s"dim $d must be divisible by m=$PqM")
+    val dsub = d / PqM
+    val books: Array[Array[Array[Double]]] = Array.tabulate(PqM) { j =>
       lloyd(sample.map(v => java.util.Arrays.copyOfRange(v, j * dsub,
-        (j + 1) * dsub)), ksub, iters, seed + j)
+        (j + 1) * dsub)), PqKsub, PqIters, Seed + j)
     }
     // encode: per subspace, idx of the nearest sub-centroid (L2) — the
     // codebook rides the plan as one foldable literal per subspace
-    val codes = array((0 until m).map { j =>
+    val codes = array((0 until PqM).map { j =>
       element_at(call_function("graft_nn_topk",
           slice(col("_vn"), j * dsub + 1, dsub),
           typedlit(books(j).map(_.toSeq).toSeq), lit(1)), 1)
@@ -589,63 +530,38 @@ object Similarity {
     * scores come from a per-query lookup table — LUT(j)(i) = ⟨q̂_j,
     * c_{j,i}⟩, m·ksub floats computed once driver-side — so the corpus
     * scan does m byte-indexed table reads + adds per row against codes
-    * it never decodes. The ADC top `rerank` candidates (one
-    * TakeOrderedAndProject — no shuffle) then rerank by EXACT cosine on
-    * their full vectors, which caps the quantization-rounding recall
-    * loss (two-stage serving, the standard PQ deployment; recall@10 vs
-    * brute force is spec-gated, not assumed). */
+    * it never decodes. The ADC top `rerank` candidates (5k when 0) then
+    * rerank by EXACT cosine on their full vectors, which caps the
+    * quantization-rounding recall loss (two-stage serving, the standard
+    * PQ deployment; recall@10 vs brute force is spec-gated, not
+    * assumed). One query's candidates carry their vectors (two
+    * TakeOrderedAndProjects, no join); with more queries the ADC window
+    * runs over NARROW (q_id, id, adc) rows and the vectors re-attach by
+    * broadcast join for the candidates only, so the window never
+    * shuffles vector payloads. */
   def pqTopK(encoded: DataFrame, books: Array[Array[Array[Double]]],
-             idCol: String, vecCol: String, query: Seq[Float], k: Int,
+             idCol: String, vecCol: String,
+             queries: Seq[(Long, Seq[Float])], k: Int,
              rerank: Int = 0): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(encoded.sparkSession)
-    val rn = if (rerank > 0) rerank else 5 * k
-    val q = array(query.map(v => lit(v)): _*)
-    encoded.select(col(idCol), col(vecCol),
-        adcScore(books, query).as("adc_score"))
-      .orderBy(desc("adc_score"), col(idCol)).limit(rn)
-      .select(col(idCol), cosine(col(vecCol), q).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol)).limit(k)
-  }
-
-  /** Batched [[pqTopK]]: every query's ADC lookup table rides the SAME
-    * corpus pass as a foldable literal (one (q_id, adc) struct per
-    * query, exploded per row), ADC top-`rerank` per query by window
-    * over NARROW (q_id, id, adc) rows — the full vectors are
-    * re-attached only for the rerank candidates via a broadcast
-    * semi-join, so the window never shuffles vector payloads — then
-    * exact-cosine rerank to top-k. Same two-stage serving contract as
-    * the single-query form, one job instead of n.
-    * Returns (q_id, idCol, cos_sim), top-k per q_id. */
-  def pqTopKBatch(encoded: DataFrame, books: Array[Array[Array[Double]]],
-                  idCol: String, vecCol: String,
-                  queries: Seq[(Long, Seq[Float])], k: Int,
-                  rerank: Int = 0): DataFrame = {
     val spark = encoded.sparkSession
     import spark.implicits._
     graft.expr.GraftFunctions.ensureRegistered(spark)
-    require(queries.nonEmpty, "pqTopKBatch: no queries")
-    val adcStructs = array(queries.map { case (qid, qv) =>
-      struct(lit(qid).as("q_id"), adcScore(books, qv).as("adc_score"))
-    }: _*)
     val rn = if (rerank > 0) rerank else 5 * k
-    val wAdc = Window.partitionBy("q_id")
-      .orderBy(desc("adc_score"), col(idCol))
-    val cands = encoded
-      .select(col(idCol), explode(adcStructs).as("_q"))
-      .select(col("_q.q_id").as("q_id"), col(idCol),
-        col("_q.adc_score").as("adc_score"))
-      .withColumn("_rn", row_number().over(wAdc)).filter(col("_rn") <= rn)
-      .select(col("q_id"), col(idCol))
-    val qdf = queries.toDF("q_id", "_qvec")
-      .withColumn("_qvec", col("_qvec").cast("array<float>"))
-    val wCos = Window.partitionBy("q_id").orderBy(desc("cos_sim"), col(idCol))
-    broadcast(cands)
-      .join(encoded.select(col(idCol), col(vecCol)), Seq(idCol))
-      .join(broadcast(qdf), Seq("q_id"))
-      .select(col("q_id"), col(idCol),
-        cosine(col(vecCol), col("_qvec")).as("cos_sim"))
-      .withColumn("_rn", row_number().over(wCos)).filter(col("_rn") <= k)
-      .select(col("q_id"), col(idCol), col("cos_sim"))
+    val one = queries.size == 1
+    val cands = topKPerQuery(perQuery(encoded, idCol,
+        queries.map { case (qid, q) => qid -> adcScore(books, q) },
+        "adc_score", keep = if (one) Seq(vecCol) else Nil),
+      idCol, "adc_score", rn, queries.size)
+    val withVecs =
+      if (one) cands.withColumn("_qvec", vecLit(queries.head._2))
+      else broadcast(cands.select(col("q_id"), col(idCol)))
+        .join(encoded.select(col(idCol), col(vecCol)), Seq(idCol))
+        .join(broadcast(queries.toDF("q_id", "_qvec")
+          .withColumn("_qvec", col("_qvec").cast("array<float>"))),
+          Seq("q_id"))
+    topKPerQuery(withVecs.select(col("q_id"), col(idCol),
+        cosine(col(vecCol), col("_qvec")).as("cos_sim")),
+      idCol, "cos_sim", k, queries.size)
   }
 
   /** L2-normalize a float-array column (zero vectors pass through

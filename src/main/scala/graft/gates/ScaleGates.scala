@@ -96,23 +96,16 @@ object ScaleGates {
     *    [[AnnGateCap]], the full frame below it). Callers build their
     *    approximate index over THIS frame and must not unpersist it —
     *    the memo owns it for the session (a reset [[close]]s it).
+    *  - `queries`: the strided (q_id, vector) queries, in id order —
+    *    the input every index's top-k search takes.
     *  - `exact`: ordered exact cosine top-k per query id over the gate
-    *    corpus, computed in ONE corpus pass for all `nq` queries (a
-    *    10-row broadcast join + per-query top-k window, not 10 scans).
+    *    corpus, computed in ONE corpus pass for all `nq` queries
+    *    ([[Similarity.bruteForceTopK]]'s batch route, not 10 scans).
     */
   final case class AnnGateCtx(n: Long, gateN: Long, corpus: DataFrame,
-                              qids: Seq[Long],
-                              qvec: Map[Long, Seq[Float]],
+                              queries: Seq[(Long, Seq[Float])],
                               exact: Map[Long, Seq[Long]])
       extends AutoCloseable {
-    /** The (q_id, q_vec) frame for batched approx paths. */
-    def queryFrame(idCol: String, vecCol: String): DataFrame = {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      qids.map(q => (q, qvec(q))).toDF(idCol, vecCol)
-        .withColumn(vecCol, col(vecCol).cast("array<float>"))
-    }
-
     def close(): Unit = corpus.unpersist(blocking = false)
   }
 
@@ -131,17 +124,14 @@ object ScaleGates {
                           cap: Long): AnnGateCtx = {
     val spark = emb.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val base = emb.select(col(idCol), col(vecCol))
     // one job yields BOTH the strided query ids and their vectors
     // (sampleIds + a second vector-fetch scan was two)
     val stride = math.max(1L, n / nq)
-    val qrows = base.filter(col(idCol) % stride === 0)
+    val queries = base.filter(col(idCol) % stride === 0)
       .orderBy(col(idCol))
       .select(col(idCol).cast("long"), col(vecCol)).limit(nq)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq)
-    val qids = qrows.map(_._1).toSeq
-    val qvec = qrows.toMap
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq
     val gate =
       if (n <= cap) base
       else {
@@ -149,65 +139,49 @@ object ScaleGates {
         val mod = math.ceil(n.toDouble / cap).toLong
         base.filter(
           pmod(xxhash64(col(idCol).cast("long"), lit(42L)), lit(mod)) === 0 ||
-          col(idCol).isin(qids.map(Long.box): _*))
+          col(idCol).isin(queries.map(q => Long.box(q._1)): _*))
       }
     val corpus = gate.cache()
     // below the cap the gate corpus IS the corpus: skip the count job
     val gateN = if (n <= cap) n else corpus.count()
-    // ONE corpus pass scores every query: 10-row broadcast join, then
-    // top-k per q_id (the window shuffles n×nq (long,long,double) rows
-    // — 1M at the capped max, nothing like the 40 O(n·dim) scans the
-    // per-gate per-qid brute force paid in r14)
-    val qdf = qids.map(q => (q, qvec(q))).toDF("q_id", "q_vec")
-      .withColumn("q_vec", col("q_vec").cast("array<float>"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(desc("c"), col("cand"))
-    val exact = corpus.crossJoin(broadcast(qdf))
-      .select(col("q_id"), col(idCol).cast("long").as("cand"),
-        Similarity.cosine(col(vecCol), col("q_vec")).as("c"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("cand"))
-      .as[(Long, Int, Long)].collect()
+    // ONE corpus pass scores every query (the top-k window shuffles
+    // n×nq (long,long,double) rows — 1M at the capped max, nothing like
+    // the 40 O(n·dim) scans the per-gate per-qid brute force paid in r14).
+    // The window's rows arrive unordered: each query's k rows are put
+    // back in its (cos_sim desc, id) order, with SQL's -0.0 == 0.0
+    val exact = Similarity.bruteForceTopK(corpus, idCol, vecCol, queries, k)
+      .select(col("q_id"), col(idCol).cast("long"), col("cos_sim"))
+      .as[(Long, Long, Double)].collect()
       .groupBy(_._1).map { case (q, rs) =>
-        q -> rs.sortBy(_._2).map(_._3).toSeq
+        q -> rs.sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 && a._2 < b._2))
+          .map(_._2).toSeq
       }
-    AnnGateCtx(n, gateN, corpus, qids, qvec, exact.toMap)
+    AnnGateCtx(n, gateN, corpus, queries, exact)
   }
 
   /** Emits the gate frame in the ANN queries' (vec_id, cos_sim) schema
-    * from approximate result sets vs the ctx's shared exact table:
+    * from an index's top-k over `ctx.queries` — a (q_id, id, …) frame,
+    * every search function's output — vs the ctx's shared exact table:
     *   (-1, recall flag)   — self-check, 1.0 expected
     *   (-2, corpus count)  — cross-engine (DuckDB recomputes the count;
     *                         always the FULL count, capped gate or not)
     */
-  def recallFlagFrame(ctx: AnnGateCtx, approx: Long => Set[Long],
+  def recallFlagFrame(ctx: AnnGateCtx, approx: DataFrame,
                       floor: Double = 0.9): DataFrame = {
     val spark = ctx.corpus.sparkSession
     import spark.implicits._
-    val recalls = ctx.qids.map { qid =>
+    val got = approx.select(col("q_id"), col(approx.columns(1)).cast("long"))
+      .as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
+    val recalls = ctx.queries.map { case (qid, _) =>
       val exact = ctx.exact.getOrElse(qid, Seq.empty).toSet
       if (exact.isEmpty) 1.0
-      else approx(qid).intersect(exact).size.toDouble / exact.size
+      else got.getOrElse(qid, Set.empty).intersect(exact).size.toDouble /
+        exact.size
     }
     val mean = if (recalls.isEmpty) 0.0 else recalls.sum / recalls.size
     Seq((-1L, flag(mean, floor)), (-2L, ctx.n.toDouble))
       .toDF("vec_id", "cos_sim")
-  }
-
-  /** Batched LSH recall gate for the annTopK path: all `nq` query
-    * vectors ride ONE annCosineJoin against the (possibly capped) gate
-    * corpus — the PRODUCTION path, since annTopK delegates to the same
-    * batch form. Exact side comes from the shared memoized table. */
-  def annRecallGateBatched(ctx: AnnGateCtx, idCol: String, vecCol: String,
-                           bands: Int, bitsPerBand: Int,
-                           floor: Double = 0.9, k: Int = 10): DataFrame = {
-    val spark = ctx.corpus.sparkSession
-    import spark.implicits._
-    val approxAll = Similarity.annTopKBatch(ctx.corpus, idCol, vecCol,
-        ctx.queryFrame(idCol, vecCol), k, bands, bitsPerBand)
-      .select(col("query_id"), col(idCol)).as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-    recallFlagFrame(ctx, q => approxAll.getOrElse(q, Set.empty), floor)
   }
 
 
@@ -237,7 +211,7 @@ object ScaleGates {
     val top1 =
       if (ctx.gateN == ctx.n && ctx.exact.get(minId).exists(_.nonEmpty))
         ctx.exact(minId).head
-      else Similarity.bruteForceTopK(emb, idCol, vecCol, q, 1)
+      else Similarity.bruteForceTopK(emb, idCol, vecCol, Seq(minId -> q), 1)
         .select(col(idCol).cast("long")).as[Long].head()
     val ok = picks.length == k && ids.distinct.length == k &&
       inCorpus && picks.minBy(_._1)._2 == top1

@@ -164,9 +164,9 @@ object Embed {
                              k: Int, bands: Int = 12, bitsPerBand: Int = 3,
                              maxBucketSize: Int = 100000): DataFrame = {
     graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
-    // id-only candidate generation (r10): the earlier annCosineJoin form
-    // dragged both vector payloads (~1 KB/pair at 64 dims) through the
-    // bucket join AND the pair-dedup exchange, then computed a cosine the
+    // id-only candidate generation (r10): a vector-carrying pair join
+    // would drag both vector payloads (~1 KB/pair at 64 dims) through the
+    // bucket join AND the pair-dedup exchange, then compute a cosine the
     // curve discards. The shared Similarity generator keeps band keys
     // riding with the id alone (~16 B/row) under the same hot-bucket
     // guard; vectors join back exactly once — after dedup. Same

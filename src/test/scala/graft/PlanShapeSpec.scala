@@ -202,6 +202,14 @@ class PlanShapeSpec extends SparkSpec {
       "no interpreted HOF fold" -> noZipFold)
   }
 
+  for (name <- Seq("llm_cosine_topk_i8", "llm_ivf_topk", "llm_ann_topk"))
+    test(s"$name: one query plans TakeOrderedAndProject, no per-query window") {
+      audit(q(name))(
+        "TakeOrderedAndProject" -> toap,
+        "no Window / TopKPerGroup" ->
+          (p => noWindow(p) && !p.has[TopKPerGroupExec]))
+    }
+
   test("llm_pq_topk: kernel encode + ADC scan, no join") {
     audit(q("llm_pq_topk"))(
       "TakeOrderedAndProject (ADC/rerank top-k)" -> toap,
@@ -447,8 +455,7 @@ class PlanShapeSpec extends SparkSpec {
     val embDf = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding")
     val (assigned, pairs) = graft.dedup.Similarity.semanticDedupPairs(
-      embDf, "vec_id", "embedding", k = 16, threshold = 0.9,
-      fitCap = 100000L, maxClusterSize = 100000, seed = 42L)
+      embDf, "vec_id", "embedding", k = 16, threshold = 0.9)
     try audit(pairs)(
       "pair join keys on the cluster id (_cell hash exchange)" ->
         (_.hashShuffles("_cell").nonEmpty),

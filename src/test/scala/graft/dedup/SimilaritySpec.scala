@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -19,43 +20,55 @@ class SimilaritySpec extends SparkSpec {
   test("bruteForceTopK returns self first on the embeddings fixture") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val q = emb.filter($"vec_id" === 0).select("embedding").head().getSeq[Float](0)
-    val top = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 5)
-      .as[(Long, Double)].collect()
+    val top = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
+        Seq(0L -> q), 5)
+      .select("vec_id", "cos_sim").as[(Long, Double)].collect()
     assert(top.head._1 == 0L)
     assert(math.abs(top.head._2 - 1.0) < 1e-9)
     assert(top.map(_._2).sliding(2).forall(p => p.head >= p.last)) // sorted desc
   }
 
-  // Shared recall@10 harness: the quantitative quality gate for the two
-  // approximate search paths, measured over 10 fixture queries against
-  // the brute-force twin — the exact configs the llm_ann_topk /
-  // llm_ivf_topk registrations run (measured grid: ann 8/4 → 0.72,
-  // 12/3 → 0.95; ivf nprobe 2 → 0.72, 4 → 0.92).
-  private def recallAt10(emb: org.apache.spark.sql.DataFrame,
-                         approxOf: Seq[Float] => org.apache.spark.sql.DataFrame)
-      : Seq[Double] =
-    (0L until 10L).map { id =>
-      val q = emb.filter($"vec_id" === id).select("embedding").head().getSeq[Float](0)
-      val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
-        .select("vec_id").as[Long].collect().toSet
-      val approx = approxOf(q).select("vec_id").as[Long].collect().toSet
-      approx.intersect(exact).size / 10.0
+  private def queries(emb: DataFrame, ids: Seq[Long]): Seq[(Long, Seq[Float])] =
+    ids.map(id => id ->
+      emb.filter($"vec_id" === id).select("embedding").head().getSeq[Float](0))
+
+  /** (q_id → vec_id set) of a top-k frame. */
+  private def idSets(df: DataFrame): Map[Long, Set[Long]] =
+    df.select($"q_id", $"vec_id".cast("long")).as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
+
+  // Shared recall@10 harness: the quantitative quality gate for the
+  // approximate search paths, measured over 10 fixture queries (one
+  // batch) against the brute-force twin — the exact configs the
+  // llm_ann_topk / llm_ivf_topk / llm_pq_topk registrations run
+  // (measured grid: ann 8/4 → 0.72, 12/3 → 0.95; ivf nprobe 2 → 0.72,
+  // 4 → 0.92).
+  private def recallAt10(emb: DataFrame,
+                         approxOf: Seq[(Long, Seq[Float])] => DataFrame)
+      : Seq[Double] = {
+    val qs = queries(emb, 0L until 10L)
+    val exact = idSets(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, 10))
+    val approx = idSets(approxOf(qs))
+    qs.map { case (id, _) =>
+      approx.getOrElse(id, Set.empty).intersect(exact(id)).size / 10.0
     }
+  }
 
   test("int8 quantization: recall@10 >= 0.9 vs float brute force; guards") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val quant = Similarity.quantizeInt8(emb, "vec_id", "embedding").cache()
-    val queries = Seq(0L, 7L, 23L, 101L, 200L)
-    val recalls = queries.map { qid =>
-      val qf = emb.filter($"vec_id" === qid)
-        .select("embedding").head().getSeq[Float](0)
-      val qc = quant.filter($"vec_id" === qid)
+    val qs = queries(emb, Seq(0L, 7L, 23L, 101L, 200L))
+    // the driver-side query quantization is the kernel's: same codes
+    qs.foreach { case (qid, qf) =>
+      val kernel = quant.filter($"vec_id" === qid)
         .select("codes").head().getSeq[Byte](0)
-      val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", qf, 10)
-        .select("vec_id").as[Long].collect().toSet
-      val approx = Similarity.quantizedTopK(quant, "vec_id", "codes", qc, 10)
-        .select("vec_id").as[Long].collect().toSet
-      (exact intersect approx).size / 10.0
+      assert(graft.expr.VecKernels.quantizeI8(qf.map(_.toDouble).toArray)
+        .toByteArray().toSeq == kernel, s"qid=$qid")
+    }
+    val exact = idSets(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, 10))
+    val approx = idSets(Similarity.quantizedTopK(quant, "vec_id", "codes", qs, 10))
+    val recalls = qs.map { case (qid, _) =>
+      (exact(qid) intersect approx(qid)).size / 10.0
     }
     val mean = recalls.sum / recalls.size
     info(f"int8 quantized mean recall@10 on fixture: $mean%.3f")
@@ -71,8 +84,7 @@ class SimilaritySpec extends SparkSpec {
   test("annTopK mean recall@10 >= 0.9 on the fixture (production config 12/3)") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
     val rec = recallAt10(emb,
-      q => Similarity.annTopK(emb, "vec_id", "embedding", q, 10,
-        bands = 12, bitsPerBand = 3))
+      qs => Similarity.annTopK(emb, "vec_id", "embedding", qs, 10))
     val mean = rec.sum / rec.size
     info(f"annTopK bands=12 bits=3 mean recall@10 = $mean%.2f (min ${rec.min}%.2f)")
     assert(mean >= 0.9, f"mean recall@10 $mean%.2f < 0.9")
@@ -81,34 +93,30 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivf search mean recall@10 >= 0.9 on the fixture (nlist=8 nprobe=4)") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
-    val (idx, search) = Similarity.ivfIndex(emb, "vec_id", "embedding",
-      nlist = 8, nprobe = 4)
-    val rec = recallAt10(emb, q => search(q)(10))
+    val rec = recallAt10(emb, qs => Similarity.ivfTopK(emb, "vec_id",
+      "embedding", qs, 10, nlist = 8, nprobe = 4))
     val mean = rec.sum / rec.size
     info(f"ivf nlist=8 nprobe=4 mean recall@10 = $mean%.2f (min ${rec.min}%.2f)")
     assert(mean >= 0.9, f"mean recall@10 $mean%.2f < 0.9")
-    idx.unpersist()
     emb.unpersist()
   }
 
   test("pq ADC+rerank mean recall@10 >= 0.9 on the fixture (m=8 ksub=32 rerank=100)") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
-    val (encoded, books) = Similarity.pqIndex(emb, "vec_id", "embedding",
-      m = 8, ksub = 32)
+    val (encoded, books) = Similarity.pqIndex(emb, "vec_id", "embedding")
     val enc = encoded.cache()
     // codes are genuinely m bytes and within [0, ksub)
     val c0 = enc.filter($"vec_id" === 0).select("codes")
       .as[Seq[Byte]].head()
     assert(c0.length == 8 && c0.forall(b => b >= 0 && b < 32))
     val rec = recallAt10(emb,
-      q => Similarity.pqTopK(enc, books, "vec_id", "embedding", q, 10,
+      qs => Similarity.pqTopK(enc, books, "vec_id", "embedding", qs, 10,
         rerank = 100))
     val mean = rec.sum / rec.size
     info(f"pq m=8 ksub=32 rerank=100 mean recall@10 = $mean%.2f (min ${rec.min}%.2f)")
     assert(mean >= 0.9, f"mean recall@10 $mean%.2f < 0.9")
     // determinism: a second fit from the same seed reproduces the codes
-    val (encoded2, _) = Similarity.pqIndex(emb, "vec_id", "embedding",
-      m = 8, ksub = 32)
+    val (encoded2, _) = Similarity.pqIndex(emb, "vec_id", "embedding")
     assert(encoded2.filter($"vec_id" === 0).select("codes")
       .as[Seq[Byte]].head() == c0)
     enc.unpersist()
@@ -124,89 +132,73 @@ class SimilaritySpec extends SparkSpec {
     // so the recall knob compensates: one extra probed cell (nprobe 5 of
     // 8). Measured grid at cap=n/2: nprobe=4 → 0.85, nprobe=5 → 0.92.
     val n = emb.count()
-    val (idx, search) = Similarity.ivfIndex(emb, "vec_id", "embedding",
-      nlist = 8, nprobe = 5, fitCap = math.max(64L, n / 2))
-    val rec = recallAt10(emb, q => search(q)(10))
+    val rec = recallAt10(emb, qs => Similarity.ivfTopK(emb, "vec_id",
+      "embedding", qs, 10, nlist = 8, nprobe = 5,
+      fitCap = math.max(64L, n / 2)))
     val mean = rec.sum / rec.size
     info(f"ivf sampled-fit cap=n/2 nlist=8 nprobe=5 mean recall@10 = " +
       f"$mean%.2f (min ${rec.min}%.2f)")
     assert(mean >= 0.9, f"mean recall@10 $mean%.2f < 0.9")
-    idx.unpersist()
     emb.unpersist()
   }
 
-  test("batched serving forms (i8/ivf/pq) return exactly the per-query " +
-    "loop's rows — same ids, same scores, same tie order") {
+  test("every index's n-query route returns exactly its one-query " +
+    "route's rows — same ids, same scores, same tie order") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
-    val qids = Seq(0L, 7L, 23L, 101L, 200L)
-    val qvecs = qids.map(id => id ->
-      emb.filter($"vec_id" === id).select("embedding").head().getSeq[Float](0))
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    val qs = queries(emb, Seq(0L, 7L, 23L, 101L, 200L))
+    def rows(df: DataFrame): Seq[(Long, Double)] =
       df.select($"vec_id".cast("long"), $"cos_sim")
         .as[(Long, Double)].collect().toSeq
-    def batchRows(df: org.apache.spark.sql.DataFrame)
-        : Map[Long, Seq[(Long, Double)]] =
+    // the n-query route's rows per q_id, in the (cos_sim desc, id) order
+    // the one-query route's TakeOrderedAndProject returns them
+    def batchRows(df: DataFrame): Map[Long, Seq[(Long, Double)]] =
       df.select($"q_id", $"vec_id".cast("long"), $"cos_sim")
         .as[(Long, Long, Double)].collect().toSeq
         .groupBy(_._1).map { case (q, rs) =>
           q -> rs.map(r => (r._2, r._3))
             .sortBy { case (id, c) => (-c, id) }
         }
+    def sameRoutes(index: String)(search: Seq[(Long, Seq[Float])] => DataFrame): Unit = {
+      val batch = batchRows(search(qs))
+      assert(batch.keySet == qs.map(_._1).toSet, index)
+      qs.foreach { q =>
+        assert(batch(q._1) == rows(search(Seq(q))), s"$index qid=${q._1}")
+      }
+    }
+    sameRoutes("exact")(Similarity.bruteForceTopK(emb, "vec_id", "embedding", _, 10))
     // int8: same kernel, one pass
-    val quant = Similarity.quantizeInt8(
-      emb, "vec_id", "embedding", withScale = false).cache()
-    val qcodes = qids.map(id => id ->
-      quant.filter($"vec_id" === id).select("codes").head().getSeq[Byte](0))
-    val i8b = batchRows(Similarity.quantizedTopKBatch(
-      quant, "vec_id", "codes", qcodes, 10))
-    qcodes.foreach { case (qid, qc) =>
-      assert(i8b(qid) == rows(
-        Similarity.quantizedTopK(quant, "vec_id", "codes", qc, 10)),
-        s"i8 qid=$qid")
-    }
+    val quant = Similarity.quantizeInt8(emb, "vec_id", "embedding").cache()
+    sameRoutes("i8")(Similarity.quantizedTopK(quant, "vec_id", "codes", _, 10))
     quant.unpersist()
+    // lsh: same band keys, same hot-bucket guard
+    sameRoutes("lsh")(Similarity.annTopK(emb, "vec_id", "embedding", _, 10))
     // ivf: same seeded fit → same centroids → same probe sets
-    val (idx, search) = Similarity.ivfIndex(emb, "vec_id", "embedding",
-      nlist = 8, nprobe = 4)
-    val ivfb = batchRows(Similarity.ivfTopKBatch(emb, "vec_id",
-      "embedding", qvecs, 10, nlist = 8, nprobe = 4))
-    qvecs.foreach { case (qid, qv) =>
-      assert(ivfb(qid) == rows(search(qv)(10)), s"ivf qid=$qid")
-    }
-    idx.unpersist()
-    // pq: same books + encoded frame on both paths
-    val (encoded, books) = Similarity.pqIndex(emb, "vec_id", "embedding",
-      m = 8, ksub = 32)
+    sameRoutes("ivf")(Similarity.ivfTopK(emb, "vec_id", "embedding", _, 10,
+      nlist = 8, nprobe = 4))
+    // pq: same books + encoded frame on both routes
+    val (encoded, books) = Similarity.pqIndex(emb, "vec_id", "embedding")
     val enc = encoded.cache()
-    val pqb = batchRows(Similarity.pqTopKBatch(enc, books, "vec_id",
-      "embedding", qvecs, 10, rerank = 100))
-    qvecs.foreach { case (qid, qv) =>
-      assert(pqb(qid) == rows(Similarity.pqTopK(enc, books, "vec_id",
-        "embedding", qv, 10, rerank = 100)), s"pq qid=$qid")
-    }
+    sameRoutes("pq")(Similarity.pqTopK(enc, books, "vec_id", "embedding",
+      _, 10, rerank = 100))
     enc.unpersist()
     emb.unpersist()
   }
 
   test("ivfTopK: self is top hit; recall vs brute force reasonable") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val q = emb.filter($"vec_id" === 3).select("embedding").head().getSeq[Float](0)
-    val (_, search) = Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 4)
-    val top = search(q)(10).as[(Long, Double)].collect()
+    val qs = queries(emb, Seq(3L))
+    val top = Similarity.ivfTopK(emb, "vec_id", "embedding", qs, 10, nlist = 4)
+      .select("vec_id", "cos_sim").as[(Long, Double)].collect()
     assert(top.head._1 == 3L)
-    val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
-      .select("vec_id").as[Long].collect().toSet
-    assert(top.map(_._1).toSet.intersect(exact).size >= 3)
+    val exact = idSets(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, 10))
+    assert(top.map(_._1).toSet.intersect(exact(3L)).size >= 3)
   }
 
   test("annTopK recall vs brute force is reasonable on the fixture") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val q = emb.filter($"vec_id" === 7).select("embedding").head().getSeq[Float](0)
-    val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
-      .select("vec_id").as[Long].collect().toSet
-    val approx = Similarity.annTopK(emb, "vec_id", "embedding", q, 10,
-      bands = 12, bitsPerBand = 3)
-      .select("vec_id").as[Long].collect().toSet
+    val qs = queries(emb, Seq(7L))
+    val exact = idSets(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, 10))(7L)
+    val approx = idSets(Similarity.annTopK(emb, "vec_id", "embedding", qs, 10))(7L)
     // ANN contract: most of the true top-k in the candidate buckets
     assert(approx.intersect(exact).size >= 3,
       s"recall too low: ${approx.intersect(exact).size}/10")

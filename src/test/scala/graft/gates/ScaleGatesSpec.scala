@@ -27,8 +27,8 @@ class ScaleGatesSpec extends SparkSpec {
     assert(ScaleGates.atFixture(spark, sfDir, "nation", expected = 25L))
   }
 
-  test("annRecallGateBatched: perfect recall on a corpus the LSH config " +
-    "fully buckets; emits (-1, 1.0) and the cross-engine count row") {
+  test("recallFlagFrame over annTopK: perfect recall on a corpus the LSH " +
+    "config fully buckets; emits (-1, 1.0) and the cross-engine count row") {
     // 40 near-orthogonal-ish deterministic vectors: with 12 bands x 3
     // bits the join returns every candidate (tiny corpus, every pair
     // shares some band), so approx == brute force and recall == 1
@@ -38,8 +38,8 @@ class ScaleGatesSpec extends SparkSpec {
       .withColumn("embedding", col("embedding").cast("array<float>"))
     val ctx = ScaleGates.annCtx(emb, "vec_id", "embedding",
       dirKey = "spec-batched", n = 40L, nq = 5, k = 5)
-    val out = ScaleGates.annRecallGateBatched(ctx, "vec_id", "embedding",
-      bands = 12, bitsPerBand = 3, floor = 0.9, k = 5)
+    val out = ScaleGates.recallFlagFrame(ctx, graft.dedup.Similarity.annTopK(
+        ctx.corpus, "vec_id", "embedding", ctx.queries, 5), floor = 0.9)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(out(-1L) == 1.0, s"recall flag: ${out(-1L)}")
     assert(out(-2L) == 40.0)
@@ -55,11 +55,11 @@ class ScaleGatesSpec extends SparkSpec {
     val ctx = ScaleGates.annCtx(emb, "vec_id", "embedding",
       dirKey = "spec-ctx", n = 60L, nq = 4, k = 5)
     assert(ctx.n == 60L && ctx.gateN == 60L) // below the cap: uncapped
-    assert(ctx.qids.nonEmpty && ctx.qids.forall(ctx.qvec.contains))
+    assert(ctx.queries.nonEmpty)
     // the one-pass table == nq independent brute-force scans (order too)
-    ctx.qids.foreach { qid =>
+    ctx.queries.foreach { case q @ (qid, _) =>
       val bf = graft.dedup.Similarity.bruteForceTopK(
-          emb, "vec_id", "embedding", ctx.qvec(qid), 5)
+          emb, "vec_id", "embedding", Seq(q), 5)
         .select(col("vec_id").cast("long")).as[Long].collect().toSeq
       assert(ctx.exact(qid) == bf, s"qid=$qid: ${ctx.exact(qid)} vs $bf")
     }
@@ -68,7 +68,8 @@ class ScaleGatesSpec extends SparkSpec {
       dirKey = "spec-ctx", n = 60L, nq = 4, k = 5)
     assert(again eq ctx)
     // recallFlagFrame failure path: an approx side that always misses
-    val bad = ScaleGates.recallFlagFrame(ctx, _ => Set(-999L))
+    val bad = ScaleGates.recallFlagFrame(ctx,
+        ctx.queries.map(q => (q._1, -999L)).toDF("q_id", "vec_id"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(bad(-1L) == 0.0 && bad(-2L) == 60.0)
     // capped: the gate corpus shrinks to ~cap but every qid survives,
@@ -76,13 +77,14 @@ class ScaleGatesSpec extends SparkSpec {
     // still reports the FULL count
     val capped = ScaleGates.annCtx(emb, "vec_id", "embedding",
       dirKey = "spec-ctx-cap", n = 60L, nq = 4, k = 5, cap = 20L)
-    assert(capped.gateN < 60L && capped.gateN >= capped.qids.length)
+    assert(capped.gateN < 60L && capped.gateN >= capped.queries.length)
     val gateIds = capped.corpus.select(col("vec_id").cast("long"))
       .as[Long].collect().toSet
-    assert(capped.qids.forall(gateIds.contains))
+    assert(capped.queries.forall(q => gateIds.contains(q._1)))
     assert(capped.exact.values.forall(_.forall(gateIds.contains)))
     val frame = ScaleGates.recallFlagFrame(capped,
-        q => capped.exact(q).toSet)
+        capped.exact.toSeq.flatMap { case (q, ids) => ids.map(q -> _) }
+          .toDF("q_id", "vec_id"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(frame(-1L) == 1.0 && frame(-2L) == 60.0)
     graft.core.SessionMemo.reset("llm_ann_topk")
@@ -135,5 +137,23 @@ class ScaleGatesSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getDouble(2))).toMap
     assert(bad(-1) == 0.0)
     graft.core.SessionMemo.reset("llm_ann_topk")
+  }
+
+  test("off-fixture gate arms at sf0.1 take the live route: every flag " +
+    "row reads 1.0 and the count row 2000") {
+    val dir = sfDir.stripSuffix("sf0.001") + "sf0.1" // 2000 embeddings
+    try {
+      for (name <- Seq("llm_cosine_topk_i8", "llm_ann_topk", "llm_ivf_topk",
+          "llm_pq_topk")) {
+        val out = graft.SparkEntry.queries(name)(spark, dir).collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toMap
+        assert(out == Map(-1L -> 1.0, -2L -> 2000.0), s"$name: $out")
+      }
+      val mmr = graft.SparkEntry.queries("llm_mmr_rerank")(spark, dir)
+        .collect().map(r => (r.getInt(0), (r.getLong(1), r.getDouble(2))))
+        .toMap
+      assert(mmr == Map(-1 -> ((-1L, 1.0)), -2 -> ((2000L, 0.0))),
+        s"llm_mmr_rerank: $mmr")
+    } finally graft.core.SessionMemo.reset("llm_ann_topk")
   }
 }
