@@ -39,7 +39,8 @@ object Similarity {
   // × 3 bits is the recall-gated config (SimilaritySpec: mean recall@10
   // 0.95 on the fixture, 8 × 4 measured 0.72); PQ splits d into 8
   // subspaces of 32 centroids (8-byte codes) by 20 Lloyd rounds; every
-  // index fit samples at most FitCap rows, seeded from Seed. HotCap is
+  // index fit samples at most FitCap rows. The LSH hyperplanes, the fit
+  // sample and both k-means derive their seeds from Seed. HotCap is
   // the quadratic-join guard: the most rows an LSH bucket or a SemDeDup
   // cell may hold and still be joined.
   private val AnnBands = 12
@@ -248,11 +249,10 @@ object Similarity {
     * graft_rhp_bits expression (graft.expr.RhpBits — one compiled loop
     * instead of interpreted per-element lambdas). Vectors with cosine near
     * 1 agree on most sign bits, so they collide on ≥1 band w.h.p. */
-  def rhpBandKeys(vec: Column, bands: Int = 8, bitsPerBand: Int = 4,
-                  seed: Int = 42): Column = {
+  private def rhpBandKeys(vec: Column, bands: Int, bitsPerBand: Int): Column = {
     require(bands * bitsPerBand <= 64, "bands*bitsPerBand must be <= 64")
     val code = call_function("graft_rhp_bits", vec,
-      lit(bands * bitsPerBand), lit(seed))
+      lit(bands * bitsPerBand), lit(Seed.toInt))
     val mask = (1L << bitsPerBand) - 1
     array((0 until bands).map { b =>
       struct(
